@@ -184,6 +184,35 @@ def _preflight_load() -> dict:
     return snap
 
 
+# Measurement artifacts that do not make the tree dirty: the bench's own
+# outputs (bench_out.json, the appended BENCH_LOCAL_r* records) AND the
+# round record files (BENCH_r*/CORRECTNESS_r*/PERF_r*/VERIFY_r*,
+# VERDICT/ADVICE), which are written while a bench runs, so counting them
+# would mark exactly the records that matter dirty.  They live at the repo
+# root only: a source file in a subdirectory with a matching name is still
+# source.
+_ARTIFACTS = ("bench_out.json", "BENCH_LOCAL_r*", "BENCH_r*.json",
+              "CORRECTNESS_r*.json", "PERF_r*.json", "VERIFY_r*.json",
+              "ABTEST_*.json", "VERDICT.md", "ADVICE.md")
+
+
+def _is_artifact(raw: str) -> bool:
+    """Whether a ``git status --porcelain`` path (repo-root relative) is a
+    root-level measurement artifact."""
+    import fnmatch
+
+    # a rename entry ("old -> new") is an artifact only if both sides are:
+    # renaming a source file onto an artifact name still changes source
+    for p in raw.strip().split(" -> "):
+        p = p.strip()
+        if len(p) >= 2 and p[0] == '"' and p[-1] == '"':
+            p = p[1:-1]          # porcelain quotes special chars
+        # fnmatch's '*' also matches '/', so anchor to the root explicitly
+        if "/" in p or not any(fnmatch.fnmatch(p, pat) for pat in _ARTIFACTS):
+            return False
+    return True
+
+
 def _provenance() -> dict:
     """Stamp the record with the exact tree it measured: the git HEAD
     hash, whether the working tree is dirty, and the sha256 of the entry
@@ -198,26 +227,7 @@ def _provenance() -> dict:
         prov["git_head"] = subprocess.run(
             ["git", "rev-parse", "HEAD"], cwd=here, capture_output=True,
             text=True, timeout=10).stdout.strip()
-        # dirty = SOURCE differs from HEAD.  Measurement artifacts are
-        # excluded: the bench's own outputs (bench_out.json, the appended
-        # BENCH_LOCAL_r* records) AND the round driver's own record files
-        # (BENCH_r*/CORRECTNESS_r*/PERF_r*/VERIFY_r*, VERDICT/ADVICE) —
-        # the driver writes those while its bench runs, so counting them
-        # marked exactly the records that matter dirty (r11 driver record)
-        import fnmatch
-        artifacts = ("bench_out.json", "BENCH_LOCAL_r*", "BENCH_r*.json",
-                     "CORRECTNESS_r*.json", "PERF_r*.json", "VERIFY_r*.json",
-                     "ABTEST_*.json", "VERDICT.md", "ADVICE.md")
-
-        def _is_artifact(raw: str) -> bool:
-            p = raw.strip()
-            if " -> " in p:              # rename entry: judge the NEW path
-                p = p.split(" -> ", 1)[1].strip()
-            if len(p) >= 2 and p[0] == '"' and p[-1] == '"':
-                p = p[1:-1]              # porcelain quotes special chars
-            return any(fnmatch.fnmatch(os.path.basename(p), pat)
-                       for pat in artifacts)
-
+        # dirty = SOURCE differs from HEAD (see _is_artifact)
         status = [ln for ln in subprocess.run(
             ["git", "status", "--porcelain"], cwd=here, capture_output=True,
             text=True, timeout=10).stdout.splitlines()

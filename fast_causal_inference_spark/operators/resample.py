@@ -26,6 +26,8 @@ from pyspark.sql import functions as F
 from fast_causal_inference_spark.formula import parse_formula
 from fast_causal_inference_spark.operators.suffstats import (
     StatView,
+    check_distinct_arms,
+    keyed_stats,
     suffstat_agg_columns,
 )
 
@@ -407,6 +409,7 @@ def permutation(df: DataFrame, expr: str, index: str,
     node, base = parse_formula(expr)
     idx = F.col(index) if index.isidentifier() else F.expr(index)
     v0, v1 = treatment_values
+    check_distinct_arms(v0, v1)
     k = len(base)
     bcols = [f"__b{i}" for i in range(k)]
     notnull = None
@@ -419,23 +422,21 @@ def permutation(df: DataFrame, expr: str, index: str,
                        for i, e in enumerate(base)])
              .where(notnull)
              .cache())
-    view0 = StatView(k, "g0_")
-    view1 = StatView(k, "g1_")
-
-    # observed difference + arm sizes + total sums (one pass)
-    obs_row = sub.agg(*(suffstat_agg_columns(bcols, "g0_", F.col("__t") == 0)
-                        + suffstat_agg_columns(bcols, "g1_", F.col("__t") == 1))) \
-                 .select((view1.value(node) - view0.value(node)).alias("diff"),
-                         view0.n.alias("n0"), view1.n.alias("n1"),
-                         *[(view0.s(i) + view1.s(i)).alias(f"tot{i}")
-                           for i in range(k)]).collect()[0]
-    observed = (float(obs_row["diff"]) if obs_row["diff"] is not None
-                else float("nan"))
-    n0 = int(obs_row["n0"] or 0)
-    n1 = int(obs_row["n1"] or 0)
-    if n0 == 0 or n1 == 0:
+    # observed difference + arm sizes + total sums (one arm-keyed pass)
+    arms = {r["__key"]: r for r in
+            keyed_stats(sub, bcols, F.col("__t"))
+            .select("__key", "n", *[f"s{i}" for i in range(k)]).collect()}
+    if len(arms) < 2:
         raise ValueError("both arms must be non-empty")
-    tot = np.array([float(obs_row[f"tot{i}"]) for i in range(k)])
+    n0, n1 = (int(arms[a]["n"]) for a in (0, 1))
+    sums = [np.array([float(arms[a][f"s{i}"]) for i in range(k)])
+            for a in (0, 1)]
+    with np.errstate(divide="ignore", invalid="ignore"):
+        observed = (float(node.value(list(sums[1] / float(n1))))
+                    - float(node.value(list(sums[0] / float(n0)))))
+    if not math.isfinite(observed):
+        observed = float("nan")      # zero-denominator arm: undefined
+    tot = sums[0] + sums[1]
     n = n0 + n1
 
     reps = _permutation_replica_stats(sub, k, n1, permutation_num, seed) \

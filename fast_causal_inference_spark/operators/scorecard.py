@@ -6,11 +6,18 @@ sufficient-statistics pass over the events table, with multiplicity
 control applied across the metric family.
 
 Spark plan: all metric formulas are parsed TOGETHER so their component
-columns form one shared base; a single ``groupBy().agg()`` computes the
-per-arm count/sum/cross-product block for the union of components, and
-every metric's Welch/CUPED t-test is closed-form driver math on that one
-row — N metrics cost exactly one scan, like the reference's
-``ttests_2samp`` costs one scan for N alternatives.
+columns form one shared base; one arm-keyed pass (`suffstats.arm_stats`)
+filters the complete-case rows of the two arms and ``groupBy(arm)``
+computes the count/sum/cross-product block for the union of components
+with plain sums, and every metric's Welch/CUPED t-test is closed-form
+driver math on the two arm rows — N metrics cost exactly one scan, like
+the reference's ``ttests_2samp`` costs one scan for N alternatives.
+
+The arm key matters at this width: the union of components is often 10+
+columns, and the wide one-row form (both arms side by side, every sum
+wrapped in a per-arm ``CASE WHEN``) doubles the ~k²/2 aggregates and
+evaluates the CASE in each; the arm-keyed pass was 3.5× faster for a
+10-component scorecard (SCALE.md).
 """
 
 from __future__ import annotations
@@ -22,7 +29,7 @@ from pyspark.sql import functions as F
 from ..formula import parse_formulas
 from . import _ttest_core as core
 from .multiple_testing import adjust_pvalues
-from .suffstats import row_to_stats, suffstat_agg_columns
+from .suffstats import arm_stats
 
 __all__ = ["experiment_scorecard"]
 
@@ -48,15 +55,10 @@ def experiment_scorecard(df: DataFrame, metrics: dict, index: str,
     x_parts = [p.strip() for p in X.split("+")] if X else []
     nodes, base = parse_formulas(exprs + x_parts)
     ynodes, xnodes = nodes[:len(exprs)], nodes[len(exprs):]
-    k = len(base)
 
     idx = F.col(index) if index.isidentifier() else F.expr(index)
     v0, v1 = treatment_values
-    aggs = (suffstat_agg_columns(base, "g0_", idx == F.lit(v0))
-            + suffstat_agg_columns(base, "g1_", idx == F.lit(v1)))
-    row = df.groupBy().agg(*aggs).toPandas().iloc[0]
-    s0 = row_to_stats(row, k, "g0_")
-    s1 = row_to_stats(row, k, "g1_")
+    s0, s1 = arm_stats(df, base, idx, v0, v1)
 
     rows = []
     for name, ynode in zip(names, ynodes):

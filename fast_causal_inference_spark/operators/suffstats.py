@@ -7,12 +7,33 @@ plays the role of the UDAFs' update/merge/serialize cycle, stays inside
 whole-stage codegen, and shuffles only O(k²) doubles per group — which is what
 makes one pass over 100 TB feasible.
 
+Two aggregation shapes:
+
+* **Arm-keyed** (`arm_stats`, `keyed_stats`): the ungrouped two-arm readouts
+  (t-test family, scorecard, xexpt, permutation) compute the arm once per
+  row, drop incomplete rows in ONE filter, and ``groupBy(arm)`` with plain
+  sums — (k+1)(k+2)/2 aggregates, none conditional.  The per-arm statistics
+  come back to the driver as one small row per arm.  The arm key costs one
+  hash probe per row: for k = 10 the wide pass took 3.5× as long, at k = 1
+  the arm-keyed one is ~10% slower (SCALE.md).
+* **Wide conditional** (`suffstat_agg_columns` with ``cond``): both arms as
+  ``g0_``/``g1_`` columns of ONE row, each sum wrapped in
+  ``CASE WHEN arm AND complete``.  Twice the aggregates, each with a CASE,
+  but it is the shape the grouped, post-stratified and streaming paths
+  need: their ``mapInPandas``/``applyInPandas``/columnar (`StatView`)
+  finalizers see both arms of a report group on one row without a second
+  shuffle.
+
+Both shapes add the same values in the same per-partition order, so their
+statistics are bit-identical (see :func:`keyed_stats` for the one input
+shape where the order differs).
+
 Two finalization paths:
 
 * **Columnar** (`StatView`): means / covariances / delta-method variances are
   rendered back as Column expressions — zero driver involvement, works for
   millions of groups.
-* **Driver / pandas** (`rows_to_stats`): a collected Row (or pandas row) is
+* **Driver / pandas** (`row_to_stats`): a collected Row (or pandas row) is
   unpacked to numpy ``(n, means, cov)`` for finalizers that need matrix
   inverses (CUPED, OLS, …).
 """
@@ -22,7 +43,7 @@ from __future__ import annotations
 from dataclasses import dataclass
 
 import numpy as np
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from fast_causal_inference_spark.formula import Node
@@ -33,14 +54,39 @@ def _pair_name(prefix: str, i: int, j: int) -> str:
     return f"{prefix}c{i}_{j}"
 
 
+def _sum_columns(xs: list[Column], one: Column | None,
+                 prefix: str) -> list[Column]:
+    """(n, Σxᵢ, Σxᵢxⱼ) aggregates; ``one`` is the per-row weight (NULL
+    outside the rows to count) or None for plain unit weights."""
+    w = F.lit(1.0) if one is None else one
+    out = [F.sum(w).alias(f"{prefix}n")]
+    for i, x in enumerate(xs):
+        out.append(F.sum(x if one is None else one * x)
+                   .alias(f"{prefix}s{i}"))
+    for i in range(len(xs)):
+        for j in range(i, len(xs)):
+            xij = xs[i] * xs[j] if one is None else one * xs[i] * xs[j]
+            out.append(F.sum(xij).alias(_pair_name(prefix, i, j)))
+    return out
+
+
+def _complete(xs: list[Column], guard: Column | None = None) -> Column | None:
+    """``guard`` AND every x IS NOT NULL (None when there is nothing to test)."""
+    for x in xs:
+        nn = x.isNotNull()
+        guard = nn if guard is None else (guard & nn)
+    return guard
+
+
 def suffstat_agg_columns(base_exprs: list[str], prefix: str = "",
                          cond: Column | None = None,
                          weight: Column | None = None) -> list[Column]:
     """Aggregate columns for (n, Σxᵢ, Σxᵢxⱼ) of the given SQL expressions.
 
-    ``cond`` restricts the statistics to matching rows (used to compute both
-    treatment arms of a two-sample test in ONE pass — no second shuffle).
-    ``weight`` produces weighted sums (WLS; n becomes Σw).
+    ``cond`` restricts the statistics to matching rows (the wide two-arm
+    row of the grouped paths — see the module docstring; ungrouped
+    readouts use :func:`arm_stats`).  ``weight`` produces weighted sums
+    (WLS; n becomes Σw).
 
     Rows where any base expression is NULL are skipped entirely (n excluded
     too), matching the reference UDAFs which drop null inputs — otherwise
@@ -48,19 +94,40 @@ def suffstat_agg_columns(base_exprs: list[str], prefix: str = "",
     """
     xs = [F.expr(e).cast("double") for e in base_exprs]
     one: Column = F.lit(1.0) if weight is None else weight.cast("double")
-    guard: Column | None = cond
-    for x in xs:
-        nn = x.isNotNull()
-        guard = nn if guard is None else (guard & nn)
+    guard = _complete(xs, cond)
     if guard is not None:
         one = F.when(guard, one)
-    out = [F.sum(one).alias(f"{prefix}n")]
-    for i, x in enumerate(xs):
-        out.append(F.sum(one * x).alias(f"{prefix}s{i}"))
-    for i in range(len(xs)):
-        for j in range(i, len(xs)):
-            out.append(F.sum(one * xs[i] * xs[j]).alias(_pair_name(prefix, i, j)))
-    return out
+    return _sum_columns(xs, one, prefix)
+
+
+def keyed_stats(df: DataFrame, base_exprs: list[str], key: Column,
+                weight: Column | None = None) -> DataFrame:
+    """One (n, Σxᵢ, Σxᵢxⱼ) row per non-NULL ``key`` value (column
+    ``__key``), over the complete-case rows only.
+
+    The complete-case guard is a ``where``, not a CASE inside every
+    aggregate, so the sums are plain.  Each row holds exactly the values
+    of ``suffstat_agg_columns(base_exprs, cond=key == value, weight=…)``.
+    Order assumption: the filter can be pushed below the plan of ``df``;
+    over a round-robin ``repartition`` of a derived column that moves rows
+    between partitions, which regroups the float partials (low bits may
+    differ from the wide form).  Scans, parquet and cached inputs keep the
+    partition contents, and the results are bit-identical.
+    """
+    xs = [F.expr(e).cast("double") for e in base_exprs]
+    keep = _complete(xs, key.isNotNull())
+    one = None if weight is None else weight.cast("double")
+    return (df.where(keep).groupBy(key.alias("__key"))
+            .agg(*_sum_columns(xs, one, "")))
+
+
+def check_distinct_arms(v0, v1) -> None:
+    """Two-arm readouts need two different arm values: with v0 == v1 both
+    arms would count the same rows and report a silent zero effect."""
+    if v0 == v1:
+        raise ValueError(
+            f"treatment_values must name two different arms, got "
+            f"({v0!r}, {v1!r})")
 
 
 @dataclass
@@ -183,6 +250,26 @@ def row_to_stats(row, k: int, prefix: str = "") -> NumStats:
     cov = ((c - np.outer(s, s) / n) / (n - 1.0) if n > 1
            else np.full((k, k), np.nan))
     return NumStats(n=n, means=means, cov=cov)
+
+
+def arm_stats(df: DataFrame, base_exprs: list[str], idx: Column, v0, v1,
+              weight: Column | None = None) -> tuple[NumStats, NumStats]:
+    """Both arms' statistics in ONE arm-keyed pass (see the module
+    docstring): the arm is ``0`` where ``idx == v0`` and ``1`` where
+    ``idx == v1``, other rows drop out.  A missing arm comes back all-NaN,
+    like the NULL sums of the wide conditional row."""
+    check_distinct_arms(v0, v1)
+    arm = F.when(idx == F.lit(v0), 0).when(idx == F.lit(v1), 1)
+    rows = {r["__key"]: r
+            for r in keyed_stats(df, base_exprs, arm, weight).collect()}
+    k = len(base_exprs)
+    return tuple(row_to_stats(rows[a], k) if a in rows else _missing_arm(k)
+                 for a in (0, 1))
+
+
+def _missing_arm(k: int) -> NumStats:
+    return NumStats(n=float("nan"), means=np.full(k, np.nan),
+                    cov=np.full((k, k), np.nan))
 
 
 def _raw_cross(g: NumStats) -> np.ndarray:

@@ -1,10 +1,13 @@
 """t-test family: one/two-sample with CUPED, classic student/welch, z-test.
 
-Pattern (SURVEY.md §2.6): ONE native ``groupBy().agg()`` computes both arms'
-sufficient statistics in a single pass (conditional sums — no per-arm shuffle),
-then a vectorized Arrow finalizer turns the tiny aggregated relation
-(one row per report group) into estimates / stderr / t / p / CI. All row-scale
-work stays JVM-side; Python only ever sees O(#groups) rows.
+Pattern (SURVEY.md §2.6): ONE native aggregation computes both arms'
+sufficient statistics in a single pass.  Ungrouped readouts key it by arm
+(`suffstats.arm_stats`: plain sums, two small rows to the driver); grouped
+and post-stratified reports keep both arms on one row per group
+(conditional ``g0_``/``g1_`` sums — no per-arm shuffle), and a vectorized
+Arrow finalizer turns that tiny relation into estimates / stderr / t / p /
+CI. All row-scale work stays JVM-side; Python only ever sees O(#groups)
+rows.
 
 Behavioral parity targets (reference, /root/reference):
 ``ttest_1samp.h:215-250``, ``ttest_2samp.h:359-427``, ``ttest_common.h:42-241``.
@@ -24,6 +27,8 @@ from fast_causal_inference_spark.formula import parse_formulas
 from fast_causal_inference_spark import stats_distributions as dist
 from fast_causal_inference_spark.operators import _ttest_core as core
 from fast_causal_inference_spark.operators.suffstats import (
+    arm_stats,
+    check_distinct_arms,
     merge_stats,
     row_to_stats,
     suffstat_agg_columns,
@@ -57,10 +62,17 @@ def _finalize_local(spark, pdf: pd.DataFrame, finalize,
     return spark.createDataFrame(out[[f.name for f in schema.fields]], schema)
 
 
-def _result_schema(agged: DataFrame, group_cols: list[str],
+def _local_result(spark, rows: list[dict], schema: T.StructType) -> DataFrame:
+    """Spark frame of driver-finalized result rows (ungrouped readouts)."""
+    out = pd.DataFrame(rows, columns=[f.name for f in schema.fields])
+    return spark.createDataFrame(out, schema)
+
+
+def _result_schema(agged: DataFrame | None, group_cols: list[str],
                    fields: list[str], extra: list[T.StructField] | None = None
                    ) -> T.StructType:
-    keep = [f for f in agged.schema.fields if f.name in group_cols]
+    keep = ([f for f in agged.schema.fields if f.name in group_cols]
+            if group_cols else [])
     res = [T.StructField(n, T.DoubleType()) for n in fields]
     return T.StructType((extra or []) + keep + res)
 
@@ -87,6 +99,7 @@ def ttest_2samp(df: DataFrame, Y: str, index: str,
     costs one extra aggregation pass for the per-arm third central
     moments of the delta-method influence values.  Ungrouped only.
     """
+    check_distinct_arms(*treatment_values)
     if pse is not None:
         if edgeworth:
             raise ValueError("edgeworth is not supported with pse")
@@ -104,10 +117,26 @@ def ttest_2samp(df: DataFrame, Y: str, index: str,
 
     idx = F.col(index) if index.isidentifier() else F.expr(index)
     v0, v1 = treatment_values
+
+    if not group_cols:
+        s0, s1 = arm_stats(df, base, idx, v0, v1)
+        res = core.ttest_2samp_result(s0, s1, ynode, xnodes or None,
+                                      alternative, alpha)
+        if edgeworth:
+            # two-sided: the first-order Edgeworth term provably
+            # cancels (edgeworth_p returns the plain p), so skip the
+            # extra full-table third-moment pass entirely
+            gam = 0.0 if alternative == "two-sided" else \
+                _edgeworth_gamma(df, base, idx, v0, v1, s0, s1,
+                                 ynode, xnodes or None, res["stderr"])
+            res["p_value"] = core.edgeworth_p(res["t_stat"], gam,
+                                              alternative)
+        return _local_result(df.sparkSession, [res],
+                             _result_schema(None, [], _RESULT_2SAMP))
+
     aggs = (suffstat_agg_columns(base, "g0_", idx == F.lit(v0))
             + suffstat_agg_columns(base, "g1_", idx == F.lit(v1)))
-    agged = (df.groupBy(*group_cols) if group_cols else df.groupBy()).agg(*aggs)
-
+    agged = df.groupBy(*group_cols).agg(*aggs)
     schema = _result_schema(agged, group_cols, _RESULT_2SAMP)
 
     def finalize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -121,26 +150,6 @@ def ttest_2samp(df: DataFrame, Y: str, index: str,
                 rows.append({**{g: r[g] for g in group_cols}, **res})
             yield pd.DataFrame(rows, columns=[f.name for f in schema.fields])
 
-    if not group_cols:
-        if edgeworth:
-            r = agged.toPandas().iloc[0]
-            s0 = row_to_stats(r, k, "g0_")
-            s1 = row_to_stats(r, k, "g1_")
-            res = core.ttest_2samp_result(s0, s1, ynode, xnodes or None,
-                                          alternative, alpha)
-            # two-sided: the first-order Edgeworth term provably
-            # cancels (edgeworth_p returns the plain p), so skip the
-            # extra full-table third-moment pass entirely
-            gam = 0.0 if alternative == "two-sided" else \
-                _edgeworth_gamma(df, base, idx, v0, v1, s0, s1,
-                                 ynode, xnodes or None, res["stderr"])
-            res["p_value"] = core.edgeworth_p(res["t_stat"], gam,
-                                              alternative)
-            out = pd.DataFrame([res],
-                               columns=[f.name for f in schema.fields])
-            return df.sparkSession.createDataFrame(out, schema)
-        return _finalize_local(df.sparkSession, agged.toPandas(),
-                               finalize, schema)
     ensure_udf_serializable()
     return agged.mapInPandas(finalize, schema)
 
@@ -241,15 +250,10 @@ def edgeworth_components(df: DataFrame, Y: str, index: str,
     x_parts = _split_cuped(X)
     nodes, base = parse_formulas([Y] + x_parts)
     ynode, xnodes = nodes[0], nodes[1:]
-    k = len(base)
 
     idx = F.col(index) if index.isidentifier() else F.expr(index)
     v0, v1 = treatment_values
-    aggs = (suffstat_agg_columns(base, "g0_", idx == F.lit(v0))
-            + suffstat_agg_columns(base, "g1_", idx == F.lit(v1)))
-    r = df.groupBy().agg(*aggs).toPandas().iloc[0]
-    s0 = row_to_stats(r, k, "g0_")
-    s1 = row_to_stats(r, k, "g1_")
+    s0, s1 = arm_stats(df, base, idx, v0, v1)
     res = core.ttest_2samp_result(s0, s1, ynode, xnodes or None,
                                   alternative, alpha)
     mom = _edgeworth_moments(df, base, idx, v0, v1, s0, s1,
@@ -392,6 +396,7 @@ def ttests_2samp(df: DataFrame, Y: str, index: str,
     for a in alternatives:
         if a not in core.ALTERNATIVES:
             raise ValueError(f"bad alternative {a!r}")
+    check_distinct_arms(*treatment_values)
     group_cols = list(group_cols or [])
     x_parts = _split_cuped(X)
     nodes, base = parse_formulas([Y] + x_parts)
@@ -400,29 +405,34 @@ def ttests_2samp(df: DataFrame, Y: str, index: str,
 
     idx = F.col(index) if index.isidentifier() else F.expr(index)
     v0, v1 = treatment_values
+    alt_field = [T.StructField("alternative", T.StringType())]
+
+    def result_rows(s0, s1, keys: dict) -> list[dict]:
+        return [{"alternative": alt, **keys,
+                 **core.ttest_2samp_result(s0, s1, ynode, xnodes or None,
+                                           alt, alpha)}
+                for alt in alternatives]
+
+    if not group_cols:
+        s0, s1 = arm_stats(df, base, idx, v0, v1)
+        return _local_result(
+            df.sparkSession, result_rows(s0, s1, {}),
+            _result_schema(None, [], _RESULT_2SAMP, extra=alt_field))
+
     aggs = (suffstat_agg_columns(base, "g0_", idx == F.lit(v0))
             + suffstat_agg_columns(base, "g1_", idx == F.lit(v1)))
-    agged = (df.groupBy(*group_cols) if group_cols else df.groupBy()).agg(*aggs)
-
-    schema = _result_schema(agged, group_cols, _RESULT_2SAMP,
-                            extra=[T.StructField("alternative", T.StringType())])
+    agged = df.groupBy(*group_cols).agg(*aggs)
+    schema = _result_schema(agged, group_cols, _RESULT_2SAMP, extra=alt_field)
 
     def finalize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = []
             for _, r in pdf.iterrows():
-                s0 = row_to_stats(r, k, "g0_")
-                s1 = row_to_stats(r, k, "g1_")
-                for alt in alternatives:
-                    res = core.ttest_2samp_result(s0, s1, ynode, xnodes or None,
-                                                  alt, alpha)
-                    rows.append({"alternative": alt,
-                                 **{g: r[g] for g in group_cols}, **res})
+                rows += result_rows(row_to_stats(r, k, "g0_"),
+                                    row_to_stats(r, k, "g1_"),
+                                    {g: r[g] for g in group_cols})
             yield pd.DataFrame(rows, columns=[f.name for f in schema.fields])
 
-    if not group_cols:
-        return _finalize_local(df.sparkSession, agged.toPandas(),
-                               finalize, schema)
     ensure_udf_serializable()
     return agged.mapInPandas(finalize, schema)
 

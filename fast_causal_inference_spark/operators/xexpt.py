@@ -31,6 +31,9 @@ from fast_causal_inference_spark import stats_distributions as dist
 from fast_causal_inference_spark.formula import parse_formulas
 from fast_causal_inference_spark.operators import _ttest_core as core
 from fast_causal_inference_spark.operators.suffstats import (
+    arm_stats,
+    check_distinct_arms,
+    keyed_stats,
     row_to_stats,
     suffstat_agg_columns,
 )
@@ -80,6 +83,8 @@ def xexpt_ttest_2samp(df: DataFrame, numerator: str, denominator: str,
     ``df.groupBy('ds').xexpt_ttest_2samp(...)``) or a single row."""
     if metric_type not in ("avg", "sum"):
         raise ValueError("metric_type must be 'avg' or 'sum'")
+    if treatment_values is not None:
+        check_distinct_arms(*treatment_values)
 
     idx = F.col(index) if index.isidentifier() else F.expr(index)
 
@@ -113,27 +118,21 @@ def xexpt_ttest_2samp(df: DataFrame, numerator: str, denominator: str,
     if metric_type == "avg":
         if treatment_values is None:
             # arm values come out of the SAME scan that computes the
-            # statistics: group the suff-stats by the index value instead
+            # statistics: key the suff-stats by the index value instead
             # of probing distinct values first (saves one full pass)
-            grows = (df.where(idx.isNotNull())
-                       .groupBy(idx.alias("__i"))
-                       .agg(*suffstat_agg_columns(base))
-                       .orderBy("__i").limit(3).collect())
+            grows = (keyed_stats(df, base, idx)
+                     .orderBy("__key").limit(3).collect())
             if len(grows) != 2:
-                vals = [r["__i"] for r in grows]
+                vals = [r["__key"] for r in grows]
                 raise ValueError(
-                    f"index must have exactly 2 non-NULL values, "
-                    f"got {vals}")
-            v0, v1 = grows[0]["__i"], grows[1]["__i"]
+                    f"index must have exactly 2 non-NULL values with "
+                    f"complete metric rows, got {vals}")
+            v0, v1 = grows[0]["__key"], grows[1]["__key"]
             s0 = row_to_stats(grows[0], k)
             s1 = row_to_stats(grows[1], k)
         else:
             v0, v1 = treatment_values
-            aggs = (suffstat_agg_columns(base, "g0_", idx == F.lit(v0))
-                    + suffstat_agg_columns(base, "g1_", idx == F.lit(v1)))
-            row = df.agg(*aggs).collect()[0]
-            s0 = row_to_stats(row, k, "g0_")
-            s1 = row_to_stats(row, k, "g1_")
+            s0, s1 = arm_stats(df, base, idx, v0, v1)
             # fail loudly on a typo'd arm value — an empty arm's NaN
             # stats would otherwise flow into an all-NaN report row
             # (the sum path and the discovery path both raise already)

@@ -333,3 +333,49 @@ def test_grouped_gramian_single_exchange(spark, lineitem):
     scan = [ln for ln in plan.split("\n") if "ReadSchema" in ln]
     assert scan and "l_discount" not in scan[0]      # pruned
     assert "l_quantity" in scan[0]
+
+
+def _collected_plans(monkeypatch, df) -> list[str]:
+    """Physical plans of every DataFrame collected while the list is live."""
+    cls = type(df)
+    orig = cls.collect
+    plans: list[str] = []
+
+    def spy(self):
+        plans.append(_plan(self))
+        return orig(self)
+
+    monkeypatch.setattr(cls, "collect", spy)
+    return plans
+
+
+def _aggregate_functions(plan: str) -> list[str]:
+    return [ln.split("functions=[", 1)[1].split("], output=[", 1)[0]
+            for ln in plan.split("\n") if "HashAggregate(" in ln]
+
+
+@pytest.mark.parametrize("op", ["experiment_scorecard", "ttest_2samp"])
+def test_two_arm_readout_is_arm_keyed(spark, events, monkeypatch, op):
+    """Ungrouped two-arm readouts run ONE arm-keyed aggregation: the table
+    is scanned once and no aggregate carries a per-arm CASE WHEN (the
+    complete-case/arm guard is a filter and a grouping key instead)."""
+    from fast_causal_inference_spark.operators.scorecard import (
+        experiment_scorecard,
+    )
+    from fast_causal_inference_spark.operators.ttest import ttest_2samp
+
+    ev = events.withColumn("treatment", (F.col("user_id") % 2).cast("int"))
+    plans = _collected_plans(monkeypatch, ev)
+    if op == "experiment_scorecard":
+        experiment_scorecard(
+            ev, {f"m{j}": f"avg(value * {j + 1})" for j in range(10)},
+            "treatment", X="avg(event_id % 5)")
+    else:
+        ttest_2samp(ev, "avg(value)/avg(1 + event_id % 7)", "treatment",
+                    X="avg(event_id % 5)")
+    assert len(plans) == 1, plans
+    plan = plans[0]
+    assert plan.count("FileScan") == 1, plan
+    funcs = _aggregate_functions(plan)
+    assert funcs and all("sum(" in f for f in funcs), plan
+    assert not any("CASE WHEN" in f for f in funcs), plan

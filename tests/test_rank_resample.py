@@ -108,6 +108,19 @@ def test_xexpt_avg_consistent_with_ttest(spark, ab_df):
     assert rep2.power == pytest.approx(0.8, abs=0.01)
 
 
+def test_xexpt_arm_discovery_needs_complete_rows(spark, ab_df):
+    """Arm discovery keys the complete-case statistics by index value: an
+    index value whose metric rows are all NULL is not an arm, so the
+    report fails clearly instead of coming back all-NaN."""
+    from pyspark.sql import functions as F
+
+    df = ab_df.withColumn("numerator", F.when(F.col("treatment") == 0,
+                                              F.col("numerator")))
+    with pytest.raises(ValueError, match="complete metric rows"):
+        xexpt_ttest_2samp(df, "numerator", "denominator", "treatment",
+                          "denominator_pre")
+
+
 def test_xexpt_cuped_tightens(spark, ab_df):
     plain = xexpt_ttest_2samp(ab_df, "numerator", "denominator", "treatment",
                               "denominator_pre").iloc[0]

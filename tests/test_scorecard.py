@@ -41,13 +41,18 @@ def test_scorecard_matches_individual_ttests(exp_df):
             >= sc["p_value"].to_numpy() - 1e-15).all()
 
 
+# the benchmark's scorecard shape: 10 metrics over 10 components
+TEN_METRICS = {**{f"m{j}": f"avg(num * {j + 1})" for j in range(8)},
+               "sessions": "avg(den)", "per_session": "avg(num)/avg(den)"}
+
+
 def test_scorecard_is_one_job(exp_df, spark):
     tracker = spark.sparkContext.statusTracker()
     before = len(tracker.getJobIdsForGroup(None) or [])
-    experiment_scorecard(exp_df, {"a": "avg(num)", "b": "avg(den)",
-                                  "c": "avg(conv)"}, "arm", adjust=None)
+    sc = experiment_scorecard(exp_df, TEN_METRICS, "arm", adjust=None)
     after = len(tracker.getJobIdsForGroup(None) or [])
-    # one aggregation job for all three metrics (AQE may add a tiny
+    assert len(sc) == 10
+    # one aggregation job for all ten metrics (AQE may add a tiny
     # follow-up stage-materialization job; never one per metric)
     assert after - before <= 2, (before, after)
 
