@@ -33,6 +33,8 @@ corpus (SURVEY.md §2 LLM-pipeline addendum).
 from __future__ import annotations
 
 import struct
+from collections.abc import Mapping
+from types import MappingProxyType
 
 import numpy as np
 
@@ -128,14 +130,15 @@ def _fdct2(block: np.ndarray) -> np.ndarray:
 # ---------------------------------------------------------------------------
 
 
-def _build_decode_table(bits: list[int], huffval: list[int]) -> dict:
+def _build_decode_table(bits: list[int], huffval: list[int]) -> Mapping:
     """(length, code) → symbol, from the BITS/HUFFVAL spec encoding.
 
     Memoized on the spec bytes: the Annex-K tables recur on every
     encode/decode call (and most real streams carry the same four DHT
     segments), so rebuilding the dict per call was a measured hot spot
-    of the per-doc codec profile.  Callers treat the table as
-    read-only."""
+    of the per-doc codec profile.  The memo is bounded and hands out
+    read-only views, so a stream of distinct DHT specs cannot grow it
+    and no caller can corrupt a shared table."""
     key = (bytes(bits), bytes(huffval))
     table = _DECODE_TABLE_MEMO.get(key)
     if table is not None:
@@ -149,21 +152,30 @@ def _build_decode_table(bits: list[int], huffval: list[int]) -> dict:
             code += 1
             k += 1
         code <<= 1
-    _DECODE_TABLE_MEMO[key] = table
-    return table
+    return _memoize(_DECODE_TABLE_MEMO, key, table)
 
 
+# plain dicts, not functools.lru_cache: the codec ships to executors by
+# value, and an lru_cache wrapper pickles by reference to this module
+_HUFF_MEMO_MAX = 64
 _DECODE_TABLE_MEMO: dict = {}
 _ENCODE_TABLE_MEMO: dict = {}
 
 
-def _build_encode_table(bits: list[int], huffval: list[int]) -> dict:
+def _memoize(memo: dict, key, table: dict) -> Mapping:
+    if len(memo) >= _HUFF_MEMO_MAX:
+        memo.pop(next(iter(memo)))          # evict the oldest spec
+    view = memo[key] = MappingProxyType(table)
+    return view
+
+
+def _build_encode_table(bits: list[int], huffval: list[int]) -> Mapping:
     key = (bytes(bits), bytes(huffval))
     table = _ENCODE_TABLE_MEMO.get(key)
     if table is None:
-        table = {sym: (length, code) for (length, code), sym
-                 in _build_decode_table(bits, huffval).items()}
-        _ENCODE_TABLE_MEMO[key] = table
+        table = _memoize(_ENCODE_TABLE_MEMO, key, {
+            sym: (length, code) for (length, code), sym
+            in _build_decode_table(bits, huffval).items()})
     return table
 
 

@@ -20,13 +20,14 @@ The reference is grf's instrumental forest with instrument z = treatment:
   θ(x) = (m_yz·m_w − m_y·m_z)/(m_zz·m_w − m_t·m_z).
 
 Spark-first restatement: forest state lives on the driver; each depth level
-runs ONE job — rows explode over trees (deterministic hash draws for
-subsample membership and the honest half), a **broadcast join** against the
-frontier's (tree, node, feature) relation amplifies each row by exactly the
-mtry features its node draws (grf draws mtry per node, not per tree), and a
-single ``groupBy(tree, node, feature, bin, treatment)`` aggregates
-(cnt, Σy).  Those two numbers per cell are sufficient for every GRF quantity
-above because ρ is an affine function of y within an arm:
+runs ONE aggregation (one shuffle, no join) — rows explode over trees
+(deterministic hash draws for subsample membership and the honest half),
+then over exactly the mtry features their node draws (grf draws mtry per
+node, not per tree), read from a literal ``lut[tree][node]`` array of
+feature indices built on the driver, and a single
+``groupBy(tree, node, feature, bin, treatment)`` aggregates (cnt, Σy).
+Those two numbers per cell are sufficient for every GRF quantity above
+because ρ is an affine function of y within an arm:
 Σ_{S,a} ρ = (a−t̄)[(Σ_{S,a}y − n_{S,a}ȳ) − θ·n_{S,a}(a−t̄)].
 
 Variance (beyond the reference, grf §4.1 "bootstrap of little bags"): with
@@ -44,10 +45,66 @@ from dataclasses import dataclass, field
 
 import numpy as np
 import pandas as pd
+from pyspark.ml.feature import Bucketizer
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from fast_causal_inference_spark.serialization import ensure_udf_serializable
+
+
+def _with_fine_bins(df: DataFrame,
+                    bins: dict[str, tuple[Column, list[float]]]) -> DataFrame:
+    """Add an int column ``name`` per ``bins[name] = (value, edges)`` with
+    bin = first i with value ≤ edges[i], and len(edges) for NULL/NaN
+    (``edges`` sorted, distinct, NaN-free — a fine quantile grid).
+
+    All ids come from ONE multi-column ``Bucketizer``: a JVM binary search
+    per value instead of a nested-WHEN tree per feature, whose expression
+    size (2·len(edges) nodes) dominated driver-side planning.  Bucketizer
+    is left-closed (splits[k] ≤ x < splits[k+1]) while these bins are
+    right-closed, so it buckets u = −v against the reversed negated edges:
+    #{e < v} = m − #{−e ≤ u}.  Edges are normalised with ``e + 0.0``
+    before negating, so every zero split is −0.0, which the JVM binary
+    search ranks at or below either zero sign — as SQL's ``v <= 0.0``
+    does.  Infinite edges stay outside the splits (their fixed ±inf
+    ends): +inf counts into the top bin offset, and −inf puts v = −inf
+    alone in bin 0.  An empty edge list is the constant bin 0.
+    """
+    negs: dict[str, Column] = {}
+    splits: list[list[float]] = []
+    bucket_in: list[str] = []
+    buckets: list[str] = []
+    out: dict[str, Column] = {}
+    for i, (name, (value, edges)) in enumerate(bins.items()):
+        m = len(edges)
+        if not m:
+            out[name] = F.lit(0)
+            continue
+        u = f"__negv{i}"
+        negs[u] = -value
+        finite = [e for e in edges if math.isfinite(e)]
+        if finite:
+            splits.append([-math.inf]
+                          + [-(e + 0.0) for e in reversed(finite)]
+                          + [math.inf])
+            bucket_in.append(u)
+            buckets.append(f"__bkt{i}")
+            bucket = F.col(buckets[-1])
+        else:
+            bucket = F.lit(0.0)
+        low_inf = edges[0] == -math.inf
+        b = F.when(F.col(u).isNull() | F.isnan(F.col(u)), m)
+        if low_inf:
+            b = b.when(F.col(u) == math.inf, 0)
+        out[name] = b.otherwise(len(finite) + int(low_inf) - bucket)
+    df = df.withColumns(negs)
+    if splits:
+        df = Bucketizer(splitsArray=splits,
+                        inputCols=bucket_in,
+                        outputCols=buckets,
+                        handleInvalid="keep").transform(df)
+    return (df.withColumns({k: c.cast("int") for k, c in out.items()})
+              .drop(*negs, *buckets))
 
 
 @dataclass
@@ -133,6 +190,46 @@ class CausalForest:
         self.trees_ = [{0: _Node(feats=self._draw_feats(rng))}
                        for _ in range(self.num_trees)]
 
+        work = self._prepare(df)
+
+        frontier = [[0] for _ in range(self.num_trees)]
+        next_ids = [1] * self.num_trees
+        for _depth in range(self.max_depth):
+            if not any(frontier):
+                break
+            stats = self._level_stats(work, frontier, split_half=True)
+            for t in range(self.num_trees):
+                new_front = []
+                for nid in frontier[t]:
+                    best = self._best_split(stats, t, nid)
+                    if best is None:
+                        continue
+                    feat, thr = best
+                    node = self.trees_[t][nid]
+                    node.feature = feat
+                    node.threshold = thr
+                    node.left = next_ids[t]
+                    node.right = next_ids[t] + 1
+                    # children draw their own mtry features (grf per-node)
+                    self.trees_[t][next_ids[t]] = _Node(
+                        feats=self._draw_feats(rng))
+                    self.trees_[t][next_ids[t] + 1] = _Node(
+                        feats=self._draw_feats(rng))
+                    new_front += [next_ids[t], next_ids[t] + 1]
+                    next_ids[t] += 2
+                frontier[t] = new_front
+
+        # honest leaf moments on the estimation half
+        for (t, nid), arms in self._leaf_stats(work).items():
+            node = self.trees_[t][nid]
+            node.n0, node.s0 = arms.get(0, (0.0, 0.0))
+            node.n1, node.s1 = arms.get(1, (0.0, 0.0))
+        work.unpersist()
+        return self
+
+    def _prepare(self, df: DataFrame) -> DataFrame:
+        """Sketch the fine bin grid and build the enriched, cached row
+        relation every level job and the honest leaf job scan."""
         tcol = F.expr(self.treatment).cast("int")
         ycol = F.expr(self.outcome).cast("double")
         feat_cols = sorted({c for f in self.features for c in
@@ -184,19 +281,21 @@ class CausalForest:
 
         # enrich the cache ONCE with fine-bin ids and per-tree
         # (membership, half) bits: every level job and the honest leaf
-        # job then scan small precomputed ints instead of re-evaluating
-        # the balanced bin WHEN trees and two hash draws per tree per
-        # row — that repeated work (and the whole-stage codegen compile
-        # of its large generated class, paid once per level job) was
-        # most of the fixed per-level cost at small SF and a large slice
-        # of the scan cost at sf1 (measured: ~2.4 s of 4.6 s at sf0.1).
+        # job then scan small precomputed ints instead of re-binning and
+        # re-drawing two hashes per tree per row.  The bin ids come from
+        # one Bucketizer binary search per feature (``_with_fine_bins``):
+        # the nested-WHEN bin trees it replaced cost ~1.2 s of driver-side
+        # planning per fit on 4 features × 127 edges, before any task ran.
         # One cheap extra pass over the cached base materializes it.
-        enrich = {self._bin_col_names[f]: self._bin_col(f)
-                  for f in self.features}
+        binned = _with_fine_bins(base, {
+            self._bin_col_names[f]: (F.expr(f).cast("double"),
+                                     self.fine_edges_[f])
+            for f in self.features})
+        enrich = {}
         for t in range(self.num_trees):
             enrich[f"__m{t}"] = self._membership(t)
             enrich[f"__sh{t}"] = self._half(t)
-        work = base.withColumns(enrich).cache()
+        work = binned.withColumns(enrich).cache()
         # materialize the enriched cache AND validate the treatment
         # coding in the same job: a non-0/1 coding (1/2, strings casting
         # to NULL) would otherwise fail every node's n0>0/n1>0 check and
@@ -218,43 +317,9 @@ class CausalForest:
             warnings.warn(
                 f"causal_forest: {int(chk['n']) - n0 - n1} rows have "
                 "treatment outside {0, 1} and are ignored by every "
-                "split and leaf", stacklevel=2)
+                "split and leaf", stacklevel=3)
         base.unpersist()
-
-        frontier = [[0] for _ in range(self.num_trees)]
-        next_ids = [1] * self.num_trees
-        for _depth in range(self.max_depth):
-            if not any(frontier):
-                break
-            stats = self._level_stats(work, frontier, split_half=True)
-            for t in range(self.num_trees):
-                new_front = []
-                for nid in frontier[t]:
-                    best = self._best_split(stats, t, nid)
-                    if best is None:
-                        continue
-                    feat, thr = best
-                    node = self.trees_[t][nid]
-                    node.feature = feat
-                    node.threshold = thr
-                    node.left = next_ids[t]
-                    node.right = next_ids[t] + 1
-                    # children draw their own mtry features (grf per-node)
-                    self.trees_[t][next_ids[t]] = _Node(
-                        feats=self._draw_feats(rng))
-                    self.trees_[t][next_ids[t] + 1] = _Node(
-                        feats=self._draw_feats(rng))
-                    new_front += [next_ids[t], next_ids[t] + 1]
-                    next_ids[t] += 2
-                frontier[t] = new_front
-
-        # honest leaf moments on the estimation half
-        for (t, nid), arms in self._leaf_stats(work).items():
-            node = self.trees_[t][nid]
-            node.n0, node.s0 = arms.get(0, (0.0, 0.0))
-            node.n1, node.s1 = arms.get(1, (0.0, 0.0))
-        work.unpersist()
-        return self
+        return work
 
     # -- level machinery ------------------------------------------------
     def _membership(self, t: int) -> Column:
@@ -290,61 +355,55 @@ class CausalForest:
                 .select(F.col("tn.tree").alias("tree"),
                         F.col("tn.node").alias("node"), "__t", "__y", *keep))
 
-    def _bin_col(self, feat: str) -> Column:
-        """bin = first i with v ≤ edges[i], else len(edges) — built as a
-        BALANCED nested-WHEN tree: log₂(n_fine) comparisons per row instead
-        of a linear n_fine-branch CASE chain (the fine grid is 8× the old
-        one; a linear chain made the level pass ~2× slower)."""
-        edges = self.fine_edges_[feat]
-        if not edges:
-            return F.lit(0).cast("int")
-        c = F.expr(feat).cast("double")
-
-        def build(lo: int, hi: int) -> Column:
-            if lo == hi:
-                return F.lit(lo)
-            mid = (lo + hi) // 2
-            return F.when(c <= edges[mid], build(lo, mid)) \
-                    .otherwise(build(mid + 1, hi))
-
-        return build(0, len(edges)).cast("int")
-
     def _level_stats(self, work: DataFrame, frontier: list[list[int]],
                      split_half: bool) -> pd.DataFrame:
-        """(cnt, Σy) per (tree, node, feature, FINE bin, arm) — one job per
-        level; the frontier's (tree, node, feature) relation is broadcast-
-        joined so each row is amplified by exactly its node's mtry
-        features, not all p.  Binning is on the fine global quantile grid;
-        per-node candidate RE-SELECTION happens in ``_best_split`` (the
-        reference's per-node quantile_size re-sketch, realized as
-        re-binning within the node's range — prefix sums at a fine-bin
-        boundary are exact regardless of which boundaries become
-        candidates)."""
-        sess = work.sparkSession
-        rel = [(t, nid, feat)
-               for t in range(self.num_trees)
-               for nid in frontier[t]
-               for feat in self.trees_[t][nid].feats]
-        if not rel:
+        """(cnt, Σy) per (tree, node, feature, FINE bin, arm) — one shuffle
+        per level.  Each melted row explodes over exactly its node's mtry
+        features, read from a literal ``lut[tree][node]`` → feature-index
+        array (indexed by node id, so collision-free; NULL off the
+        frontier drops the row), and picks that feature's precomputed bin
+        from the row's bin array — no join, no per-level broadcast job.
+        Binning is on the fine global quantile grid; per-node candidate
+        RE-SELECTION happens in ``_best_split`` (the reference's per-node
+        quantile_size re-sketch, realized as re-binning within the node's
+        range — prefix sums at a fine-bin boundary are exact regardless of
+        which boundaries become candidates)."""
+        feat_union = sorted({feat for t in range(self.num_trees)
+                             for nid in frontier[t]
+                             for feat in self.trees_[t][nid].feats})
+        if not feat_union:
             self._level_edges = {}
             return pd.DataFrame(
                 columns=["tree", "node", "feature", "bin", "__t", "cnt", "s"])
-        ff = sess.createDataFrame(rel, "tree int, node int, feature string")
-        feat_union = sorted({r[2] for r in rel})
+        fidx = {feat: i for i, feat in enumerate(feat_union)}
+
+        def cell(t: int, nid: int) -> str:
+            if nid not in frontier[t]:
+                return "NULL"
+            feats = self.trees_[t][nid].feats
+            return f"array({', '.join(str(fidx[f]) for f in feats)})"
+
+        # parsed from one SQL string: one py4j call, not one per literal
+        lut = F.expr("array(" + ", ".join(
+            "array(" + ", ".join(cell(t, nid) for nid in range(len(tree)))
+            + ")" for t, tree in enumerate(self.trees_)) + ")")
         # fine-bin ids are PRECOMPUTED columns of the enriched cache
         keep = [self._bin_col_names[feat] for feat in feat_union]
         melted = self._melt(work, split_half, keep)
-        joined = melted.join(F.broadcast(ff), ["tree", "node"])
-        bin_expr = None
-        for feat in feat_union:
-            cnd = F.col("feature") == feat
-            bcol = F.col(self._bin_col_names[feat])
-            bin_expr = (F.when(cnd, bcol) if bin_expr is None
-                        else bin_expr.when(cnd, bcol))
-        agg = (joined.withColumn("bin", bin_expr)
+        agg = (melted
+               .select("tree", "node", "__t", "__y",
+                       F.array(*keep).alias("__bins"),
+                       F.explode(lut[F.col("tree")][F.col("node")])
+                       .alias("feature"))
+               .select("tree", "node", "feature",
+                       F.col("__bins")[F.col("feature")].alias("bin"),
+                       "__t", "__y")
                .groupBy("tree", "node", "feature", "bin", "__t")
-               .agg(F.count(F.lit(1)).alias("cnt"), F.sum("__y").alias("s")))
-        return agg.toPandas()
+               .agg(F.count(F.lit(1)).alias("cnt"), F.sum("__y").alias("s"))
+               .toPandas())
+        agg["feature"] = np.asarray(feat_union, dtype=object)[
+            agg["feature"].to_numpy()]
+        return agg
 
     def _leaf_stats(self, work: DataFrame) -> dict:
         melted = self._melt(work, split_half=not self.honesty, keep=[])

@@ -175,3 +175,25 @@ def test_progressive_grayscale_sampling_gt1_dc_raster():
     # same entropy data, same raster -> identical pixels over the
     # region both cover (sampling only changes padded-grid geometry)
     assert np.array_equal(out, ref)
+
+
+def test_huffman_memo_is_bounded_and_read_only():
+    """Many distinct DHT specs cannot grow the table memos past their
+    cap, the Annex-K tables still round-trip after eviction, and a
+    shared table cannot be mutated through the view a caller gets."""
+    from fast_causal_inference_spark.datapipe import jpeg
+
+    for i in range(3 * jpeg._HUFF_MEMO_MAX):
+        bits = [0, 2] + [0] * 14                 # two 2-bit codes
+        jpeg._build_encode_table(bits, [i % 256, (i // 256) + 1])
+    assert len(jpeg._DECODE_TABLE_MEMO) <= jpeg._HUFF_MEMO_MAX
+    assert len(jpeg._ENCODE_TABLE_MEMO) <= jpeg._HUFF_MEMO_MAX
+    dec = jpeg._build_decode_table(*jpeg.HT_DC_LUMA)
+    enc = jpeg._build_encode_table(*jpeg.HT_DC_LUMA)
+    assert enc is jpeg._build_encode_table(*jpeg.HT_DC_LUMA)
+    with pytest.raises(TypeError):
+        dec[(1, 0)] = 0
+    with pytest.raises(TypeError):
+        enc[0] = (1, 0)
+    img = _natural(16, 16)
+    assert decode_jpeg(encode_jpeg(img, quality=90)).shape == img.shape

@@ -2,6 +2,8 @@
 `.explain`-level output so regressions in partitioning/broadcast/pushdown
 fail loudly (local[4] plans — the same Catalyst decisions scale up)."""
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -335,17 +337,21 @@ def test_grouped_gramian_single_exchange(spark, lineitem):
     assert "l_quantity" in scan[0]
 
 
-def _collected_plans(monkeypatch, df) -> list[str]:
-    """Physical plans of every DataFrame collected while the list is live."""
+def _collected_plans(monkeypatch, df,
+                     methods=("collect",)) -> list[str]:
+    """Physical plans of every DataFrame collected (through ``methods``)
+    while the list is live."""
     cls = type(df)
-    orig = cls.collect
     plans: list[str] = []
 
-    def spy(self):
-        plans.append(_plan(self))
-        return orig(self)
+    def spying(orig):
+        def spy(self):
+            plans.append(_plan(self))
+            return orig(self)
+        return spy
 
-    monkeypatch.setattr(cls, "collect", spy)
+    for name in methods:
+        monkeypatch.setattr(cls, name, spying(getattr(cls, name)))
     return plans
 
 
@@ -379,3 +385,45 @@ def test_two_arm_readout_is_arm_keyed(spark, events, monkeypatch, op):
     funcs = _aggregate_functions(plan)
     assert funcs and all("sum(" in f for f in funcs), plan
     assert not any("CASE WHEN" in f for f in funcs), plan
+
+
+def _case_when_sizes(expr: str) -> list[int]:
+    """WHEN count of every outermost CASE ... END in ``expr``, nested
+    CASEs included (a nested-WHEN tree counts all of its branches)."""
+    sizes, depth = [], 0
+    for tok in re.findall(r"\b(?:CASE|WHEN|END)\b", expr):
+        if tok == "CASE":
+            if depth == 0:
+                sizes.append(0)
+            depth += 1
+        elif tok == "END":
+            depth -= 1
+        elif depth:
+            sizes[-1] += 1
+    return sizes
+
+
+def test_causal_forest_fit_plans(spark, ab_df, monkeypatch):
+    """A forest fit runs no broadcast (each level is one shuffle keyed by
+    a literal (tree, node) lookup, not a join), and its enriched cache
+    bins features by binary search: no CASE there exceeds the size of a
+    max_depth node-descent chain, where the nested-WHEN bin tree had one
+    branch per fine edge."""
+    from fast_causal_inference_spark.uplift.causal_forest import (
+        CausalForest,
+    )
+
+    plans = _collected_plans(monkeypatch, ab_df, ("collect", "toPandas"))
+    cf = CausalForest(["x1", "x2", "x3"], "y", "treatment", num_trees=3,
+                      max_depth=2, min_node_size=50, mtry=2, seed=1)
+    cf.fit(ab_df)
+    assert len(plans) == cf.max_depth + 2, plans      # check, levels, leaf
+    assert any(n.feature for t in cf.trees_ for n in t.values())
+    for plan in plans:
+        assert "BroadcastExchange" not in plan, plan
+        assert "BroadcastHashJoin" not in plan, plan
+    enrich = [ln for plan in plans for ln in plan.split("\n")
+              if " AS __finebin0" in ln]
+    assert enrich, plans
+    for ln in enrich:
+        assert max(_case_when_sizes(ln), default=0) <= cf.max_depth, ln
