@@ -520,15 +520,6 @@ SELECT chart, g, feature, round(value, 6) AS value FROM (
 """
 
 
-def q_ols_simple(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Simple OLS l_discount ~ l_tax with full inference columns."""
-    from fast_causal_inference_spark.operators.ols import ols_coef_df
-
-    li = _load(spark, sf_dir, "lineitem")
-    out = ols_coef_df(li, "l_discount ~ l_tax")
-    return _round_all(out, ["name"], ["estimate", "stderr", "t_value"], 6)
-
-
 _OLS_SIMPLE_SQL = """
 WITH a AS (
   SELECT CAST(count(*) AS DOUBLE) AS n,
@@ -555,15 +546,6 @@ FROM f
 """
 
 
-def q_ols_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Two-regressor OLS (betas only): l_extendedprice ~ l_quantity + l_discount."""
-    from fast_causal_inference_spark.operators.ols import ols_coef_df
-
-    li = _load(spark, sf_dir, "lineitem")
-    out = ols_coef_df(li, "l_extendedprice ~ l_quantity + l_discount")
-    return _round_all(out, ["name"], ["estimate"], 4)
-
-
 # Cramer's-rule solve of the 3x3 normal equations, entirely in SQL.
 _OLS_MULTI_SQL = """
 WITH a AS (
@@ -585,17 +567,6 @@ SELECT '(Intercept)' AS name, round(det0/det, 4) AS estimate FROM d
 UNION ALL SELECT 'l_quantity', round(det1/det, 4) FROM d
 UNION ALL SELECT 'l_discount', round(det2/det, 4) FROM d
 """
-
-
-def q_wls(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Weighted simple regression: l_discount ~ l_tax, weight = l_quantity."""
-    from fast_causal_inference_spark.operators.ols import wls
-
-    li = _load(spark, sf_dir, "lineitem")
-    model = wls(li, "l_discount ~ l_tax", weight="l_quantity")
-    return spark.createDataFrame(
-        [(n, round(float(b), 6)) for n, b in zip(model.names, model.beta)],
-        "name string, estimate double")
 
 
 _WLS_SQL = """
@@ -2390,16 +2361,6 @@ SELECT 'grouped_' || seg, round(theta, 6) FROM (
   SELECT seg, regr_slope(ry, rt) AS theta FROM gresid GROUP BY seg
 )
 """
-
-
-def q_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distributed rank-formula ROC-AUC of value scoring user-parity labels."""
-    from fast_causal_inference_spark.operators.logistic import auc
-
-    ev = _load(spark, sf_dir, "events") \
-        .withColumn("label", (F.col("user_id") % 2).cast("int"))
-    val = auc(ev, "value", "label")
-    return spark.createDataFrame([(round(val, 6),)], "auc double")
 
 
 _AUC_SQL = """

@@ -35,6 +35,7 @@ from dataclasses import dataclass
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from fast_causal_inference_spark.operators.design import persisted
 from fast_causal_inference_spark.operators.ols import OlsModel, ols_grouped
 
 __all__ = ["conformal_fit", "conformal_ite", "ConformalIte"]
@@ -107,8 +108,8 @@ def conformal_fit(df: DataFrame, Y: str, T: str, X: list[str],
     h = (F.expr(fold_expr) if fold_expr is not None
          else F.xxhash64(*[F.expr(c) for c in X], F.lit(seed)))
     work = work.withColumn("__fold", F.pmod(h, F.lit(2)).cast("int"))
-    work = work.persist()
-    try:
+    with persisted() as keep:
+        work = keep(work.persist())
         # the feature-hash fold is DETERMINISTIC IN X: with
         # low-cardinality features each covariate cell lands wholly
         # in one fold, so mu-hat fits on one stratum and calibrates
@@ -195,8 +196,6 @@ def conformal_fit(df: DataFrame, Y: str, T: str, X: list[str],
                     f"ceil((n+1)(1-alpha)) rows; lower alpha or add data")
             ranks.append(rank)
         q1, q0 = _order_stats_two_arms(scored, ranks[0], n1, ranks[1], n0)
-    finally:
-        work.unpersist()
     return ConformalIte(mu1=mu1, mu0=mu0, q1=q1, q0=q0, alpha=alpha,
                         n_cal1=n1, n_cal0=n0)
 

@@ -1,4 +1,4 @@
-"""Persisted design projection for iterative solvers.
+"""Persisted design projection and the cache lifetime of one call.
 
 Every IRLS / Newton operator in this package scans its input once per
 iteration (one Gramian-shaped aggregation — see ``glm.py``,
@@ -7,7 +7,7 @@ relation on every step repeats the parquet scan and the feature
 expression evaluation 5–50 times per fit.  The standard fix — what
 Spark MLlib's ``handlePersistence`` does before L-BFGS/IRLS — is to
 project the complete-case design down to a flat double-typed relation,
-persist it MEMORY_AND_DISK for the duration of the loop, and unpersist
+persist it MEMORY_AND_DISK for the duration of the loop, and release it
 afterwards.
 
 At 100 TB this is not an optional micro-optimisation: the projected
@@ -16,21 +16,45 @@ the source table — and MEMORY_AND_DISK spills per-executor to local
 disk when it does not fit, so each iteration reads columnar in-memory
 (or local-disk) batches instead of re-scanning remote storage.
 
-Callers follow the repo convention (cf. ``ordinal.py``, ``kstest.py``):
-``unpersist()`` at every normal/raising exit rather than try/finally.
+A cache made for one call lives in one :func:`persisted` scope, which
+releases it when the call returns or raises.  Caches meant to outlive
+the call (``datapipe.cachereg``, model count frames) are not scoped.
 """
 
 from __future__ import annotations
 
 import os
+from collections.abc import Callable, Iterator
+from contextlib import contextmanager
 
 import numpy as np
 from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-__all__ = ["persist_design", "collect_small_design", "collect_columns",
-           "SMALL_DESIGN_MAX_ROWS"]
+__all__ = ["persisted", "persist_design", "collect_small_design",
+           "collect_columns", "SMALL_DESIGN_MAX_ROWS"]
+
+
+@contextmanager
+def persisted() -> Iterator[Callable[[DataFrame], DataFrame]]:
+    """Yield ``keep``, which registers a frame the caller persisted
+    (``work = keep(df.select(...).persist(level))``) and returns it;
+    on exit, normal or raising, every registered frame is released,
+    newest first so a cache built from another goes before its source.
+    Keeping a frame twice, or one already released early, is harmless.
+    """
+    frames: list[DataFrame] = []
+
+    def keep(df: DataFrame) -> DataFrame:
+        frames.append(df)
+        return df
+
+    try:
+        yield keep
+    finally:
+        for df in reversed(frames):
+            df.unpersist()
 
 
 def collect_columns(df: DataFrame) -> dict[str, np.ndarray]:
@@ -118,9 +142,9 @@ def repartition_big_design(df: DataFrame, n_rows: int,
     again, and the golden-oracle scales (sf0.01) always sit below the
     cutoff, so their float-sum combine order is untouched.
 
-    Returns the repartitioned, persisted child (materialized before the
-    parent cache is dropped); the caller's ``unpersist()`` contract
-    transfers to the returned frame."""
+    Returns the repartitioned, persisted child, materialized before the
+    parent cache is dropped; register it with the caller's
+    :func:`persisted` scope like the parent."""
     if n_rows < min_rows:
         return df
     try:
@@ -142,6 +166,8 @@ def repartition_big_design(df: DataFrame, n_rows: int,
         return df
     work = df.repartition(cores).persist(StorageLevel.MEMORY_AND_DISK)
     work.count()
+    # early release: once the child holds every row, keeping the parent
+    # to the scope's exit would pin two copies through the solver loop
     df.unpersist()
     return work
 
@@ -156,7 +182,8 @@ def persist_design(df: DataFrame, y: Column, feat_cols: list[Column],
     (never materialized — constants cost storage, not compute), and
     ``off`` comes back as ``lit(0.0)`` when no offset was given.
 
-    The caller owns the cache: call ``work.unpersist()`` at every exit.
+    ``work`` is persisted but not yet materialized; register it with
+    the caller's :func:`persisted` scope.
     """
     cols = [y.alias("__y__")]
     cols += [c.alias(f"__x{j}__") for j, c in enumerate(feat_cols)]

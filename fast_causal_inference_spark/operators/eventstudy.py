@@ -90,72 +90,73 @@ def event_study(df: DataFrame, Y: str, unit: str, time: str,
     # lineage (often an expensive collapse of the raw event log)
     from pyspark import StorageLevel
 
-    work = work.withColumns(dummies) \
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    cols = ["__y"] + [_dcol(r) for r in rs]
+    from fast_causal_inference_spark.operators.design import persisted
 
-    # balanced-panel check at CELL grain: equal per-unit and per-time
-    # totals are NOT sufficient (a Latin-square-style panel passes both
-    # while missing cells entirely) — require every (unit, period) cell
-    # present with the same row count
-    cell = (work.groupBy("__u", "__t")
-            .agg(F.count(F.lit(1)).alias("__nc"))
-            .agg(F.count(F.lit(1)).alias("n_cells"),
-                 F.countDistinct("__nc").alias("k_shapes"),
-                 F.countDistinct("__u").alias("n_units"),
-                 F.countDistinct("__t").alias("n_periods")).collect()[0])
-    n_units = int(cell["n_units"])
-    n_periods = int(cell["n_periods"])
-    if int(cell["k_shapes"]) != 1 or \
-            int(cell["n_cells"]) != n_units * n_periods:
-        work.unpersist()
-        raise ValueError(
-            "unbalanced panel: the one-shot two-way within transform is "
-            "only exact when every unit is observed in every period "
-            "with equal cell counts; balance the panel first")
-    umeans = (work.groupBy("__u")
-              .agg(*[F.avg(c).alias(f"{c}_mu") for c in cols]))
-    tmeans = (work.groupBy("__t")
-              .agg(*[F.avg(c).alias(f"{c}_mt") for c in cols]))
-    t_rows = tmeans.collect()
-    grand = {c: float(np.mean([r[f"{c}_mt"] for r in t_rows]))
-             for c in cols}
+    with persisted() as keep:
+        work = keep(work.withColumns(dummies)
+                    .persist(StorageLevel.MEMORY_AND_DISK))
+        cols = ["__y"] + [_dcol(r) for r in rs]
 
-    joined = (work.join(umeans.select(
-        "__u", *[F.col(f"{c}_mu") for c in cols]), "__u")
-        .join(F.broadcast(tmeans.select(
-            "__t", *[F.col(f"{c}_mt") for c in cols])), "__t"))
-    dem = {f"{c}_w": (F.col(c) - F.col(f"{c}_mu") - F.col(f"{c}_mt")
-                      + F.lit(grand[c])) for c in cols}
-    joined = joined.withColumns(dem)
+        # balanced-panel check at CELL grain: equal per-unit and per-time
+        # totals are NOT sufficient (a Latin-square-style panel passes both
+        # while missing cells entirely) — require every (unit, period) cell
+        # present with the same row count
+        cell = (work.groupBy("__u", "__t")
+                .agg(F.count(F.lit(1)).alias("__nc"))
+                .agg(F.count(F.lit(1)).alias("n_cells"),
+                     F.countDistinct("__nc").alias("k_shapes"),
+                     F.countDistinct("__u").alias("n_units"),
+                     F.countDistinct("__t").alias("n_periods")).collect()[0])
+        n_units = int(cell["n_units"])
+        n_periods = int(cell["n_periods"])
+        if int(cell["k_shapes"]) != 1 or \
+                int(cell["n_cells"]) != n_units * n_periods:
+            raise ValueError(
+                "unbalanced panel: the one-shot two-way within transform is "
+                "only exact when every unit is observed in every period "
+                "with equal cell counts; balance the panel first")
+        umeans = (work.groupBy("__u")
+                  .agg(*[F.avg(c).alias(f"{c}_mu") for c in cols]))
+        tmeans = (work.groupBy("__t")
+                  .agg(*[F.avg(c).alias(f"{c}_mt") for c in cols]))
+        t_rows = tmeans.collect()
+        grand = {c: float(np.mean([r[f"{c}_mt"] for r in t_rows]))
+                 for c in cols}
 
-    feats = [f"{_dcol(r)}_w" for r in rs]
-    formula = "__y_w ~ " + " + ".join(feats)
-    k = len(feats)
-    # absorbed-FE df correction: (U-1) + (T-1) + 1 parameters vanished
-    # into the within transform
-    df_absorbed = (n_units - 1) + (n_periods - 1) + 1
-    if cluster:                       # CR1 clustered by UNIT (the panel
-        # default — within-unit serial correlation)
-        from fast_causal_inference_spark.operators.ols import (
-            cluster_robust_ols,
-        )
+        joined = (work.join(umeans.select(
+            "__u", *[F.col(f"{c}_mu") for c in cols]), "__u")
+            .join(F.broadcast(tmeans.select(
+                "__t", *[F.col(f"{c}_mt") for c in cols])), "__t"))
+        dem = {f"{c}_w": (F.col(c) - F.col(f"{c}_mu") - F.col(f"{c}_mt")
+                          + F.lit(grand[c])) for c in cols}
+        joined = joined.withColumns(dem)
 
-        m = cluster_robust_ols(joined, formula, cluster="__u",
-                               use_bias=False)
-        beta, se = m.beta, m.stderr           # CR1 SEs, df = G − 1
-        dof = max(int(m.df_override or 1), 1)
-    else:
-        from fast_causal_inference_spark.operators.ols import ols
+        feats = [f"{_dcol(r)}_w" for r in rs]
+        formula = "__y_w ~ " + " + ".join(feats)
+        k = len(feats)
+        # absorbed-FE df correction: (U-1) + (T-1) + 1 parameters vanished
+        # into the within transform
+        df_absorbed = (n_units - 1) + (n_periods - 1) + 1
+        if cluster:                       # CR1 clustered by UNIT (the panel
+            # default — within-unit serial correlation)
+            from fast_causal_inference_spark.operators.ols import (
+                cluster_robust_ols,
+            )
 
-        m = ols(joined, formula, use_bias=False)
-        beta = m.beta
-        n = m.n
-        dof = max(n - k - df_absorbed, 1)
-        # rescale the classical SEs from ols()'s (n - k) denominator to
-        # the absorbed-FE degrees of freedom
-        se = m.stderr * np.sqrt((n - k) / dof)
-    work.unpersist()
+            m = cluster_robust_ols(joined, formula, cluster="__u",
+                                   use_bias=False)
+            beta, se = m.beta, m.stderr           # CR1 SEs, df = G − 1
+            dof = max(int(m.df_override or 1), 1)
+        else:
+            from fast_causal_inference_spark.operators.ols import ols
+
+            m = ols(joined, formula, use_bias=False)
+            beta = m.beta
+            n = m.n
+            dof = max(n - k - df_absorbed, 1)
+            # rescale the classical SEs from ols()'s (n - k) denominator to
+            # the absorbed-FE degrees of freedom
+            se = m.stderr * np.sqrt((n - k) / dof)
     rows = []
     zq = float(dist.t_ppf(1 - alpha / 2, dof))
     for i, r in enumerate(rs):

@@ -26,6 +26,13 @@ import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from fast_causal_inference_spark.operators.design import (
+    collect_small_design,
+    persist_design,
+    persisted,
+    repartition_big_design,
+)
+
 
 @dataclass
 class GlmModel:
@@ -279,227 +286,213 @@ def glm(df: DataFrame, formula: str, family: str = "poisson",
     log_link = family != "gaussian"
     # persist the projected design for the IRLS loop (design.py) — the
     # m0 scan below doubles as its materialization
-    from fast_causal_inference_spark.operators.design import persist_design
+    with persisted() as keep:
+        df, y, xs, off = persist_design(
+            df, y, xs[1:] if use_bias else xs,
+            off=off if offset is not None else None,
+            use_bias=use_bias)
+        keep(df)
 
-    df, y, xs, off = persist_design(
-        df, y, xs[1:] if use_bias else xs,
-        off=F.expr(offset).cast("double") if offset is not None else None,
-        use_bias=use_bias)
+        beta = np.zeros(p)
+        n0 = None
+        if log_link:
+            # start eta at log(mean(y)) via the intercept when present —
+            # exp(0)=1 is a poor start for large counts; the scan also
+            # materializes the persisted design and yields the row count the
+            # small-design gate needs (saves its count job)
+            m0 = df.agg(F.avg(y).alias("m"), F.min(y).alias("lo"),
+                        F.count(F.lit(1)).alias("n")).collect()[0]
+            n0 = int(m0["n"])
+            if m0["m"] is None:
+                raise ValueError("no non-NULL outcome rows")
+            if family == "gamma" and float(m0["lo"]) <= 0:
+                raise ValueError("gamma family needs strictly positive y")
+            if family in ("poisson", "quasipoisson", "tweedie") \
+                    and float(m0["lo"]) < 0:
+                raise ValueError(f"{family} family needs non-negative y")
+            if use_bias and float(m0["m"]) > 0:
+                beta[0] = math.log(float(m0["m"]))
 
-    beta = np.zeros(p)
-    n0 = None
-    if log_link:
-        # start eta at log(mean(y)) via the intercept when present —
-        # exp(0)=1 is a poor start for large counts; the scan also
-        # materializes the persisted design and yields the row count the
-        # small-design gate needs (saves its count job)
-        m0 = df.agg(F.avg(y).alias("m"), F.min(y).alias("lo"),
-                    F.count(F.lit(1)).alias("n")).collect()[0]
-        n0 = int(m0["n"])
-        if m0["m"] is None:
-            df.unpersist()
-            raise ValueError("no non-NULL outcome rows")
-        if family == "gamma" and float(m0["lo"]) <= 0:
-            df.unpersist()
-            raise ValueError("gamma family needs strictly positive y")
-        if family in ("poisson", "quasipoisson", "tweedie") \
-                and float(m0["lo"]) < 0:
-            df.unpersist()
-            raise ValueError(f"{family} family needs non-negative y")
-        if use_bias and float(m0["m"]) > 0:
-            beta[0] = math.log(float(m0["m"]))
+        # small-input fast path (round 11, see design.collect_small_design):
+        # collect the persisted design ONCE and run the iterations in numpy
+        # — identical per-row algebra, one Spark job instead of one per step
+        if n0 is None:
+            n0 = int(df.count())
+        des = collect_small_design(df, xs, y, off, n_rows=n0)
+        if des is None:
+            # big design: spread the cache across cores before the IRLS
+            # loop starts re-scanning it (design.repartition_big_design)
+            df = keep(repartition_big_design(df, n0))
 
-    # small-input fast path (round 11, see design.collect_small_design):
-    # collect the persisted design ONCE and run the iterations in numpy
-    # — identical per-row algebra, one Spark job instead of one per step
-    from fast_causal_inference_spark.operators.design import (
-        collect_small_design,
-        repartition_big_design,
-    )
+        def _sums_np(beta: np.ndarray) -> tuple[np.ndarray, np.ndarray,
+                                                float]:
+            Xd, yv, ov = des
+            eta_v = Xd @ beta + ov
+            mu_v = np.exp(eta_v) if log_link else eta_v
+            w_v, z_v = _irls_wz_np(family, mu_v, eta_v, yv, ov, var_power)
+            Xw = Xd * w_v[:, None]
+            return Xw.T @ Xd, Xd.T @ (w_v * z_v), float(len(yv))
 
-    if n0 is None:
-        n0 = int(df.count())
-    des = collect_small_design(df, xs, y, off, n_rows=n0)
-    if des is None:
-        # big design: spread the cache across cores before the IRLS
-        # loop starts re-scanning it (design.repartition_big_design)
-        df = repartition_big_design(df, n0)
+        def _sums_spark(beta: np.ndarray) -> tuple[np.ndarray, np.ndarray,
+                                                   float]:
+            eta: Column = F.lit(float(beta[0])) * xs[0]
+            for j in range(1, p):
+                eta = eta + F.lit(float(beta[j])) * xs[j]
+            eta = eta + off
+            # two-stage projection: materialize η, then μ = exp(η), then the
+            # per-row w/z.  μ is referenced three times downstream; staged
+            # Projects keep exp() evaluated once per row (CollapseProject
+            # leaves multi-referenced non-cheap aliases in place), and the
+            # per-row arithmetic — hence every float sum — is bit-identical
+            # to the inlined form
+            base = df.select(*[c.alias(f"__p{i}__") for i, c in enumerate(xs)],
+                             y.alias("__yy__"), eta.alias("__eta__"),
+                             off.alias("__o__"))
+            etac, yc, offc = F.col("__eta__"), F.col("__yy__"), F.col("__o__")
+            if not log_link:                      # gaussian/identity: one shot
+                mu = etac
+                mid = base
+            else:
+                mid = base.select("*", F.exp(etac).alias("__mu__"))
+                mu = F.col("__mu__")
+            # weight + working response on the X-only predictor (offset is
+            # fixed) — shared per-family algebra (_irls_wz)
+            s, z = _irls_wz(family, mu, etac, yc, offc, var_power)
+            step = mid.select(*[F.col(f"__p{i}__") for i in range(p)],
+                              s.alias("__w__"), z.alias("__z__"),
+                              F.col("__yy__"))
+            ps = [F.col(f"__p{i}__") for i in range(p)]
+            sc, zc = F.col("__w__"), F.col("__z__")
+            aggs = []
+            for i in range(p):
+                aggs.append(F.sum(sc * ps[i] * zc).alias(f"b{i}"))
+                for j in range(i, p):
+                    aggs.append(F.sum(sc * ps[i] * ps[j]).alias(f"a{i}_{j}"))
+            aggs.append(F.count(F.col("__yy__")).alias("n__"))
+            row = step.agg(*aggs).collect()[0]
+            A = np.empty((p, p))
+            b = np.empty(p)
+            for i in range(p):
+                b[i] = row[f"b{i}"]
+                for j in range(i, p):
+                    A[i, j] = A[j, i] = row[f"a{i}_{j}"]
+            return A, b, float(row["n__"])
 
-    def _sums_np(beta: np.ndarray) -> tuple[np.ndarray, np.ndarray,
-                                            float]:
-        Xd, yv, ov = des
-        eta_v = Xd @ beta + ov
-        mu_v = np.exp(eta_v) if log_link else eta_v
-        w_v, z_v = _irls_wz_np(family, mu_v, eta_v, yv, ov, var_power)
-        Xw = Xd * w_v[:, None]
-        return Xw.T @ Xd, Xd.T @ (w_v * z_v), float(len(yv))
+        sums = _sums_np if des is not None else _sums_spark
+        n = 0.0
+        converged = False
+        it = 0
+        A = np.eye(p)
+        for it in range(1, max_iter + 1):
+            A, b, n = sums(beta)
+            new_beta = np.linalg.solve(A, b)
+            delta = float(np.max(np.abs(new_beta - beta)))
+            beta = new_beta
+            if delta < tol or not log_link:
+                converged = True
+                break
 
-    def _sums_spark(beta: np.ndarray) -> tuple[np.ndarray, np.ndarray,
-                                               float]:
-        eta: Column = F.lit(float(beta[0])) * xs[0]
+        # final-fit scalars: deviance, null deviance, Pearson dispersion —
+        # ONE more scan
+        eta = F.lit(float(beta[0])) * xs[0]
         for j in range(1, p):
             eta = eta + F.lit(float(beta[j])) * xs[j]
         eta = eta + off
-        # two-stage projection: materialize η, then μ = exp(η), then the
-        # per-row w/z.  μ is referenced three times downstream; staged
-        # Projects keep exp() evaluated once per row (CollapseProject
-        # leaves multi-referenced non-cheap aliases in place), and the
-        # per-row arithmetic — hence every float sum — is bit-identical
-        # to the inlined form
-        base = df.select(*[c.alias(f"__p{i}__") for i, c in enumerate(xs)],
-                         y.alias("__yy__"), eta.alias("__eta__"),
-                         off.alias("__o__"))
-        etac, yc, offc = F.col("__eta__"), F.col("__yy__"), F.col("__o__")
-        if not log_link:                      # gaussian/identity: one shot
-            mu = etac
-            mid = base
-        else:
-            mid = base.select("*", F.exp(etac).alias("__mu__"))
-            mu = F.col("__mu__")
-        # weight + working response on the X-only predictor (offset is
-        # fixed) — shared per-family algebra (_irls_wz)
-        s, z = _irls_wz(family, mu, etac, yc, offc, var_power)
-        step = mid.select(*[F.col(f"__p{i}__") for i in range(p)],
-                          s.alias("__w__"), z.alias("__z__"),
-                          F.col("__yy__"))
-        ps = [F.col(f"__p{i}__") for i in range(p)]
-        sc, zc = F.col("__w__"), F.col("__z__")
-        aggs = []
-        for i in range(p):
-            aggs.append(F.sum(sc * ps[i] * zc).alias(f"b{i}"))
-            for j in range(i, p):
-                aggs.append(F.sum(sc * ps[i] * ps[j]).alias(f"a{i}_{j}"))
-        aggs.append(F.count(F.col("__yy__")).alias("n__"))
-        row = step.agg(*aggs).collect()[0]
-        A = np.empty((p, p))
-        b = np.empty(p)
-        for i in range(p):
-            b[i] = row[f"b{i}"]
-            for j in range(i, p):
-                A[i, j] = A[j, i] = row[f"a{i}_{j}"]
-        return A, b, float(row["n__"])
-
-    sums = _sums_np if des is not None else _sums_spark
-    n = 0.0
-    converged = False
-    it = 0
-    A = np.eye(p)
-    for it in range(1, max_iter + 1):
-        A, b, n = sums(beta)
-        try:
-            new_beta = np.linalg.solve(A, b)
-        except np.linalg.LinAlgError:
-            df.unpersist()  # raising exit releases the design
-            raise
-        delta = float(np.max(np.abs(new_beta - beta)))
-        beta = new_beta
-        if delta < tol or not log_link:
-            converged = True
-            break
-
-    # final-fit scalars: deviance, null deviance, Pearson dispersion —
-    # ONE more scan
-    eta = F.lit(float(beta[0])) * xs[0]
-    for j in range(1, p):
-        eta = eta + F.lit(float(beta[j])) * xs[j]
-    eta = eta + off
-    if not compute_stats:
-        # nuisance-fit fast path: no deviance scans; dispersion-scaled
-        # families still need the Pearson χ² for their SEs (one reduced
-        # aggregation), the rest skip the pass entirely
-        df_p = df
-        dispersion = 1.0
-        cov = np.linalg.inv(A)
-        if family in ("quasipoisson", "gamma", "gaussian", "tweedie"):
-            mu_f = eta if family == "gaussian" else F.exp(eta)
-            pearson_f = _dev_pearson(family, y, mu_f, var_power)[1]
-            pchi = float(df_p.agg(F.sum(pearson_f).alias("p"))
-                         .collect()[0]["p"])
-            dispersion = pchi / max(n - p, 1.0)
-            cov = cov * dispersion
-        df.unpersist()
-        stderr = np.sqrt(np.maximum(np.diag(cov), 0.0))
-        return GlmModel(family=family, feature_exprs=feats,
-                        use_bias=use_bias, beta=beta, stderr=stderr, n=n,
-                        n_iter=it, converged=converged,
-                        deviance=float("nan"),
-                        null_deviance=float("nan"), dispersion=dispersion,
-                        offset=offset, y_expr=y_expr,
-                        var_power=var_power if family == "tweedie"
-                        else None)
-    mu = eta if family == "gaussian" else F.exp(eta)
-    dev_term, pearson = _dev_pearson(family, y, mu, var_power)
-    if family == "gaussian":
-        aux = y * y                           # → Σy² for TSS
-    elif family in ("poisson", "quasipoisson"):
-        aux = y * F.when(y > 0, F.log(y)).otherwise(F.lit(0.0))  # Σ y·log y
-    elif family == "tweedie":
-        aux = F.pow(y, F.lit(2.0 - var_power))  # Σ y^(2−p)
-    else:
-        aux = F.log(y)                        # gamma: Σ log y
-    fin = df.agg(F.sum(dev_term).alias("dev"),
-                 F.sum(pearson).alias("pchi"),
-                 F.avg(y).alias("ybar"),
-                 F.sum(aux).alias("aux"),
-                 F.sum(y).alias("ysum"),
-                 F.sum(F.exp(off)).alias("seo"),
-                 F.sum(y * F.exp(-off)).alias("syeo"),
-                 F.sum(y * F.exp(F.lit(1.0 - var_power) * off))
-                 .alias("syeo_t"),
-                 F.sum(F.exp(F.lit(2.0 - var_power) * off)).alias("seo_t"),
-                 F.sum(y - off).alias("syo"),
-                 F.sum((y - off) * (y - off)).alias("syo2")).collect()[0]
-    deviance = float(fin["dev"])
-    ybar = float(fin["ybar"])
-    if offset is None:
-        # intercept-only null model: μ₀ = ȳ, deviance in closed form
+        if not compute_stats:
+            # nuisance-fit fast path: no deviance scans; dispersion-scaled
+            # families still need the Pearson χ² for their SEs (one reduced
+            # aggregation), the rest skip the pass entirely
+            df_p = df
+            dispersion = 1.0
+            cov = np.linalg.inv(A)
+            if family in ("quasipoisson", "gamma", "gaussian", "tweedie"):
+                mu_f = eta if family == "gaussian" else F.exp(eta)
+                pearson_f = _dev_pearson(family, y, mu_f, var_power)[1]
+                pchi = float(df_p.agg(F.sum(pearson_f).alias("p"))
+                             .collect()[0]["p"])
+                dispersion = pchi / max(n - p, 1.0)
+                cov = cov * dispersion
+            stderr = np.sqrt(np.maximum(np.diag(cov), 0.0))
+            return GlmModel(family=family, feature_exprs=feats,
+                            use_bias=use_bias, beta=beta, stderr=stderr, n=n,
+                            n_iter=it, converged=converged,
+                            deviance=float("nan"),
+                            null_deviance=float("nan"), dispersion=dispersion,
+                            offset=offset, y_expr=y_expr,
+                            var_power=var_power if family == "tweedie"
+                            else None)
+        mu = eta if family == "gaussian" else F.exp(eta)
+        dev_term, pearson = _dev_pearson(family, y, mu, var_power)
         if family == "gaussian":
-            null_dev = float(fin["aux"]) - n * ybar * ybar
+            aux = y * y                           # → Σy² for TSS
         elif family in ("poisson", "quasipoisson"):
-            # 2Σ[y log(y/ȳ) − (y − ȳ)]; Σ(y−ȳ)=0
-            null_dev = 2 * (float(fin["aux"])
-                            - float(fin["ysum"]) * math.log(ybar)) \
-                if ybar > 0 else 0.0
+            aux = y * F.when(y > 0, F.log(y)).otherwise(F.lit(0.0))  # Σ y·log y
         elif family == "tweedie":
-            # intercept-only MLE is μ₀ = ȳ (score Σ(y−μ)μ^(1−p) = 0)
-            p1, p2 = 1.0 - var_power, 2.0 - var_power
-            null_dev = 2 * (float(fin["aux"]) / (p1 * p2)
-                            - float(fin["ysum"]) * ybar ** p1 / p1
-                            + n * ybar ** p2 / p2) if ybar > 0 else 0.0
+            aux = F.pow(y, F.lit(2.0 - var_power))  # Σ y^(2−p)
         else:
-            # gamma: 2Σ[−log(y/ȳ) + (y−ȳ)/ȳ]; second term sums to 0
-            null_dev = 2 * (n * math.log(ybar) - float(fin["aux"]))
-    else:
-        # with an offset the null model is intercept-only PLUS the fixed
-        # offset (R's null.deviance convention); the intercept MLE is
-        # closed-form for every family here, the deviance at μ₀ needs
-        # one more scan because μ₀ varies by row
-        if family == "gaussian":
-            b0 = float(fin["syo"]) / n
-            null_dev = float(fin["syo2"]) - n * b0 * b0
-        else:
-            if family in ("poisson", "quasipoisson"):
-                b0 = math.log(float(fin["ysum"]) / float(fin["seo"]))
-                mu0 = F.exp(F.lit(b0) + off)
-                nd_term = 2 * (F.when(y > 0, y * F.log(y / mu0))
-                               .otherwise(F.lit(0.0)) - (y - mu0))
+            aux = F.log(y)                        # gamma: Σ log y
+        fin = df.agg(F.sum(dev_term).alias("dev"),
+                     F.sum(pearson).alias("pchi"),
+                     F.avg(y).alias("ybar"),
+                     F.sum(aux).alias("aux"),
+                     F.sum(y).alias("ysum"),
+                     F.sum(F.exp(off)).alias("seo"),
+                     F.sum(y * F.exp(-off)).alias("syeo"),
+                     F.sum(y * F.exp(F.lit(1.0 - var_power) * off))
+                     .alias("syeo_t"),
+                     F.sum(F.exp(F.lit(2.0 - var_power) * off)).alias("seo_t"),
+                     F.sum(y - off).alias("syo"),
+                     F.sum((y - off) * (y - off)).alias("syo2")).collect()[0]
+        deviance = float(fin["dev"])
+        ybar = float(fin["ybar"])
+        if offset is None:
+            # intercept-only null model: μ₀ = ȳ, deviance in closed form
+            if family == "gaussian":
+                null_dev = float(fin["aux"]) - n * ybar * ybar
+            elif family in ("poisson", "quasipoisson"):
+                # 2Σ[y log(y/ȳ) − (y − ȳ)]; Σ(y−ȳ)=0
+                null_dev = 2 * (float(fin["aux"])
+                                - float(fin["ysum"]) * math.log(ybar)) \
+                    if ybar > 0 else 0.0
             elif family == "tweedie":
-                # score Σ(y−μ₀)μ₀^(1−p) = 0 with μ₀ = e^{b0+off} solves
-                # in closed form: e^{b0} = Σy·e^{(1−p)off} / Σe^{(2−p)off}
+                # intercept-only MLE is μ₀ = ȳ (score Σ(y−μ)μ^(1−p) = 0)
                 p1, p2 = 1.0 - var_power, 2.0 - var_power
-                b0 = math.log(float(fin["syeo_t"]) / float(fin["seo_t"]))
-                mu0 = F.exp(F.lit(b0) + off)
-                nd_term = 2 * (F.pow(y, F.lit(p2)) / F.lit(p1 * p2)
-                               - y * F.pow(mu0, F.lit(p1)) / F.lit(p1)
-                               + F.pow(mu0, F.lit(p2)) / F.lit(p2))
-            else:                             # gamma
-                b0 = math.log(float(fin["syeo"]) / n)
-                mu0 = F.exp(F.lit(b0) + off)
-                nd_term = 2 * (-F.log(y / mu0) + (y - mu0) / mu0)
-            null_dev = float(
-                df.agg(F.sum(nd_term).alias("nd")).collect()[0]["nd"])
+                null_dev = 2 * (float(fin["aux"]) / (p1 * p2)
+                                - float(fin["ysum"]) * ybar ** p1 / p1
+                                + n * ybar ** p2 / p2) if ybar > 0 else 0.0
+            else:
+                # gamma: 2Σ[−log(y/ȳ) + (y−ȳ)/ȳ]; second term sums to 0
+                null_dev = 2 * (n * math.log(ybar) - float(fin["aux"]))
+        else:
+            # with an offset the null model is intercept-only PLUS the fixed
+            # offset (R's null.deviance convention); the intercept MLE is
+            # closed-form for every family here, the deviance at μ₀ needs
+            # one more scan because μ₀ varies by row
+            if family == "gaussian":
+                b0 = float(fin["syo"]) / n
+                null_dev = float(fin["syo2"]) - n * b0 * b0
+            else:
+                if family in ("poisson", "quasipoisson"):
+                    b0 = math.log(float(fin["ysum"]) / float(fin["seo"]))
+                    mu0 = F.exp(F.lit(b0) + off)
+                    nd_term = 2 * (F.when(y > 0, y * F.log(y / mu0))
+                                   .otherwise(F.lit(0.0)) - (y - mu0))
+                elif family == "tweedie":
+                    # score Σ(y−μ₀)μ₀^(1−p) = 0 with μ₀ = e^{b0+off} solves
+                    # in closed form: e^{b0} = Σy·e^{(1−p)off} / Σe^{(2−p)off}
+                    p1, p2 = 1.0 - var_power, 2.0 - var_power
+                    b0 = math.log(float(fin["syeo_t"]) / float(fin["seo_t"]))
+                    mu0 = F.exp(F.lit(b0) + off)
+                    nd_term = 2 * (F.pow(y, F.lit(p2)) / F.lit(p1 * p2)
+                                   - y * F.pow(mu0, F.lit(p1)) / F.lit(p1)
+                                   + F.pow(mu0, F.lit(p2)) / F.lit(p2))
+                else:                             # gamma
+                    b0 = math.log(float(fin["syeo"]) / n)
+                    mu0 = F.exp(F.lit(b0) + off)
+                    nd_term = 2 * (-F.log(y / mu0) + (y - mu0) / mu0)
+                null_dev = float(
+                    df.agg(F.sum(nd_term).alias("nd")).collect()[0]["nd"])
 
-    df.unpersist()
     dispersion = 1.0
     cov = np.linalg.inv(A)
     if family in ("quasipoisson", "gamma", "gaussian", "tweedie"):
@@ -581,193 +574,188 @@ def glm_grouped(df: DataFrame, formula: str, group_expr: str,
              for j, e in enumerate(feats)]
     if offset is not None:
         cols.append(off.alias("__off__"))
-    work = df.where(cc).select(*cols) \
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    y = F.col("__y__")
-    xs = ([F.lit(1.0)] if use_bias else []) + \
-        [F.col(f"__x{j}__") for j in range(k)]
-    off = F.col("__off__") if offset is not None else F.lit(0.0)
-    log_link = family not in ("gaussian", "binomial")
+    with persisted() as keep:
+        work = keep(df.where(cc).select(*cols)
+                    .persist(StorageLevel.MEMORY_AND_DISK))
+        y = F.col("__y__")
+        xs = ([F.lit(1.0)] if use_bias else []) + \
+            [F.col(f"__x{j}__") for j in range(k)]
+        off = F.col("__off__") if offset is not None else F.lit(0.0)
+        log_link = family not in ("gaussian", "binomial")
 
-    # init + validation scan (doubles as the cache materialization):
-    # per-segment mean/min/max of y
-    init_rows = (work.groupBy("__g__")
-                 .agg(F.avg(y).alias("m"), F.min(y).alias("lo"),
-                      F.max(y).alias("hi"), F.count(y).alias("n"))
-                 .limit(max_groups + 1).collect())
-    if len(init_rows) > max_groups:
-        work.unpersist()
-        raise ValueError(f"more than max_groups={max_groups} segments; "
-                         f"coarsen group_expr or raise max_groups")
-    if not init_rows:
-        work.unpersist()
-        raise ValueError("no complete rows")
-    for r in init_rows:
-        if family == "gamma" and float(r["lo"]) <= 0:
-            work.unpersist()
-            raise ValueError(f"gamma family needs strictly positive y "
-                             f"(segment {r['__g__']!r})")
-        if family in ("poisson", "quasipoisson", "tweedie") \
-                and float(r["lo"]) < 0:
-            work.unpersist()
-            raise ValueError(f"{family} family needs non-negative y "
-                             f"(segment {r['__g__']!r})")
-        if family == "binomial" \
-                and (float(r["lo"]) < 0 or float(r["hi"]) > 1):
-            work.unpersist()
-            raise ValueError(f"binomial needs y in [0, 1] "
-                             f"(segment {r['__g__']!r})")
+        # init + validation scan (doubles as the cache materialization):
+        # per-segment mean/min/max of y
+        init_rows = (work.groupBy("__g__")
+                     .agg(F.avg(y).alias("m"), F.min(y).alias("lo"),
+                          F.max(y).alias("hi"), F.count(y).alias("n"))
+                     .limit(max_groups + 1).collect())
+        if len(init_rows) > max_groups:
+            raise ValueError(f"more than max_groups={max_groups} segments; "
+                             f"coarsen group_expr or raise max_groups")
+        if not init_rows:
+            raise ValueError("no complete rows")
+        for r in init_rows:
+            if family == "gamma" and float(r["lo"]) <= 0:
+                raise ValueError(f"gamma family needs strictly positive y "
+                                 f"(segment {r['__g__']!r})")
+            if family in ("poisson", "quasipoisson", "tweedie") \
+                    and float(r["lo"]) < 0:
+                raise ValueError(f"{family} family needs non-negative y "
+                                 f"(segment {r['__g__']!r})")
+            if family == "binomial" \
+                    and (float(r["lo"]) < 0 or float(r["hi"]) > 1):
+                raise ValueError(f"binomial needs y in [0, 1] "
+                                 f"(segment {r['__g__']!r})")
 
-    # one canonical NaN so a NaN segment key round-trips the driver
-    # dicts as ONE segment (Spark grouping already treats NaN as equal)
-    _NAN = float("nan")
+        # one canonical NaN so a NaN segment key round-trips the driver
+        # dicts as ONE segment (Spark grouping already treats NaN as equal)
+        _NAN = float("nan")
 
-    def _norm(v):
-        return _NAN if isinstance(v, float) and v != v else v
+        def _norm(v):
+            return _NAN if isinstance(v, float) and v != v else v
 
-    betas: dict = {}
-    for r in init_rows:
-        b = np.zeros(p)
-        if log_link and use_bias and float(r["m"] or 0.0) > 0:
-            b[0] = math.log(float(r["m"]))
-        betas[_norm(r["__g__"])] = b
-    g_field = work.schema["__g__"]
-    spark = df.sparkSession
+        betas: dict = {}
+        for r in init_rows:
+            b = np.zeros(p)
+            if log_link and use_bias and float(r["m"] or 0.0) > 0:
+                b[0] = math.log(float(r["m"]))
+            betas[_norm(r["__g__"])] = b
+        g_field = work.schema["__g__"]
+        spark = df.sparkSession
 
-    def _beta_join(bmap: dict) -> DataFrame:
-        """work ⋈ broadcast(per-segment β) on the group key (null-safe;
-        Spark join equality already matches NaN to NaN)."""
-        from pyspark.sql.types import DoubleType, StructField, StructType
+        def _beta_join(bmap: dict) -> DataFrame:
+            """work ⋈ broadcast(per-segment β) on the group key (null-safe;
+            Spark join equality already matches NaN to NaN)."""
+            from pyspark.sql.types import DoubleType, StructField, StructType
 
-        schema = StructType(
-            [StructField("__gb__", g_field.dataType, True)]
-            + [StructField(f"__b{j}__", DoubleType(), False)
-               for j in range(p)])
-        data = [tuple([gv] + [float(b[j]) for j in range(p)])
-                for gv, b in bmap.items()]
-        bdf = spark.createDataFrame(data, schema)
-        return work.join(F.broadcast(bdf),
-                         work["__g__"].eqNullSafe(bdf["__gb__"]))
+            schema = StructType(
+                [StructField("__gb__", g_field.dataType, True)]
+                + [StructField(f"__b{j}__", DoubleType(), False)
+                   for j in range(p)])
+            data = [tuple([gv] + [float(b[j]) for j in range(p)])
+                    for gv, b in bmap.items()]
+            bdf = spark.createDataFrame(data, schema)
+            return work.join(F.broadcast(bdf),
+                             work["__g__"].eqNullSafe(bdf["__gb__"]))
 
-    def _eta() -> Column:
-        eta: Column = F.col("__b0__") * xs[0]
-        for j in range(1, p):
-            eta = eta + F.col(f"__b{j}__") * xs[j]
-        return eta + off
+        def _eta() -> Column:
+            eta: Column = F.col("__b0__") * xs[0]
+            for j in range(1, p):
+                eta = eta + F.col(f"__b{j}__") * xs[j]
+            return eta + off
 
-    n_by_g: dict = {}
-    iters_by_g: dict = {g: 0 for g in betas}
-    frozen: set = set()             # segments already at their fixed point
-    converged: dict = {g: not log_link and family != "binomial"
-                       for g in betas}
-    it = 0
-    for it in range(1, max_iter + 1):
-        # only UNFROZEN segments ride the per-iteration scan: the inner
-        # beta join drops the others' rows, so late iterations aggregate
-        # only the still-moving segments (990 converged / 10 slow out of
-        # 1000 segments previously paid full O(p²)-per-row work for all
-        # 1000 every iteration).  Frozen segments' stderr Gramian comes
-        # from the final scan below, at exactly their final β.
-        joined = _beta_join({g: b for g, b in betas.items()
-                             if g not in frozen} or betas)
-        base = joined.select(
-            "__g__", *[c.alias(f"__p{i}__") for i, c in enumerate(xs)],
-            y.alias("__yy__"), _eta().alias("__eta__"),
-            off.alias("__o__"))
-        etac, yc, offc = F.col("__eta__"), F.col("__yy__"), F.col("__o__")
-        if family == "gaussian":
-            mu = etac
-            mid = base
-        elif family == "binomial":
-            mid = base.select(
-                "*", (F.lit(1.0) / (F.lit(1.0) + F.exp(-etac)))
-                .alias("__mu__"))
-            mu = F.col("__mu__")
-        else:
-            mid = base.select("*", F.exp(etac).alias("__mu__"))
-            mu = F.col("__mu__")
-        s, z = _irls_wz(family, mu, etac, yc, offc, var_power)
-        step = mid.select("__g__",
-                          *[F.col(f"__p{i}__") for i in range(p)],
-                          s.alias("__w__"), z.alias("__z__"),
-                          F.col("__yy__"))
-        ps = [F.col(f"__p{i}__") for i in range(p)]
-        sc, zc = F.col("__w__"), F.col("__z__")
-        aggs = []
-        for i in range(p):
-            aggs.append(F.sum(sc * ps[i] * zc).alias(f"b{i}"))
-            for j in range(i, p):
-                aggs.append(F.sum(sc * ps[i] * ps[j]).alias(f"a{i}_{j}"))
-        aggs.append(F.count(F.col("__yy__")).alias("n__"))
-        rows = step.groupBy("__g__").agg(*aggs).collect()
-        delta_max = 0.0
-        A_by_g: dict = {}
-        for r in rows:
-            gv = _norm(r["__g__"])
-            n_by_g[gv] = float(r["n__"])
-            A = np.empty((p, p))
-            b = np.empty(p)
-            for i in range(p):
-                b[i] = r[f"b{i}"]
-                for j in range(i, p):
-                    A[i, j] = A[j, i] = r[f"a{i}_{j}"]
-            A_by_g[gv] = A
-            if gv in frozen:
-                continue
-            try:
-                new_beta = np.linalg.solve(A, b)
-                solvable = True
-            except np.linalg.LinAlgError:
-                new_beta = np.linalg.lstsq(A, b, rcond=None)[0]
-                solvable = False
-            d = float(np.max(np.abs(new_beta - betas[gv])))
-            betas[gv] = new_beta
-            iters_by_g[gv] = it
-            if not solvable:
-                converged[gv] = False
-                frozen.add(gv)      # singular segment: keep the fallback
-            elif d < tol or family == "gaussian":
-                converged[gv] = True
-                frozen.add(gv)      # fixed point reached — stop updating
+        n_by_g: dict = {}
+        iters_by_g: dict = {g: 0 for g in betas}
+        frozen: set = set()             # segments already at their fixed point
+        converged: dict = {g: not log_link and family != "binomial"
+                           for g in betas}
+        it = 0
+        for it in range(1, max_iter + 1):
+            # only UNFROZEN segments ride the per-iteration scan: the inner
+            # beta join drops the others' rows, so late iterations aggregate
+            # only the still-moving segments (990 converged / 10 slow out of
+            # 1000 segments previously paid full O(p²)-per-row work for all
+            # 1000 every iteration).  Frozen segments' stderr Gramian comes
+            # from the final scan below, at exactly their final β.
+            joined = _beta_join({g: b for g, b in betas.items()
+                                 if g not in frozen} or betas)
+            base = joined.select(
+                "__g__", *[c.alias(f"__p{i}__") for i, c in enumerate(xs)],
+                y.alias("__yy__"), _eta().alias("__eta__"),
+                off.alias("__o__"))
+            etac, yc, offc = F.col("__eta__"), F.col("__yy__"), F.col("__o__")
+            if family == "gaussian":
+                mu = etac
+                mid = base
+            elif family == "binomial":
+                mid = base.select(
+                    "*", (F.lit(1.0) / (F.lit(1.0) + F.exp(-etac)))
+                    .alias("__mu__"))
+                mu = F.col("__mu__")
             else:
-                delta_max = max(delta_max, d)
-        if delta_max == 0.0 and len(frozen) == len(betas):
-            break
-        if not log_link and family != "binomial":
-            break
+                mid = base.select("*", F.exp(etac).alias("__mu__"))
+                mu = F.col("__mu__")
+            s, z = _irls_wz(family, mu, etac, yc, offc, var_power)
+            step = mid.select("__g__",
+                              *[F.col(f"__p{i}__") for i in range(p)],
+                              s.alias("__w__"), z.alias("__z__"),
+                              F.col("__yy__"))
+            ps = [F.col(f"__p{i}__") for i in range(p)]
+            sc, zc = F.col("__w__"), F.col("__z__")
+            aggs = []
+            for i in range(p):
+                aggs.append(F.sum(sc * ps[i] * zc).alias(f"b{i}"))
+                for j in range(i, p):
+                    aggs.append(F.sum(sc * ps[i] * ps[j]).alias(f"a{i}_{j}"))
+            aggs.append(F.count(F.col("__yy__")).alias("n__"))
+            rows = step.groupBy("__g__").agg(*aggs).collect()
+            delta_max = 0.0
+            A_by_g: dict = {}
+            for r in rows:
+                gv = _norm(r["__g__"])
+                n_by_g[gv] = float(r["n__"])
+                A = np.empty((p, p))
+                b = np.empty(p)
+                for i in range(p):
+                    b[i] = r[f"b{i}"]
+                    for j in range(i, p):
+                        A[i, j] = A[j, i] = r[f"a{i}_{j}"]
+                A_by_g[gv] = A
+                if gv in frozen:
+                    continue
+                try:
+                    new_beta = np.linalg.solve(A, b)
+                    solvable = True
+                except np.linalg.LinAlgError:
+                    new_beta = np.linalg.lstsq(A, b, rcond=None)[0]
+                    solvable = False
+                d = float(np.max(np.abs(new_beta - betas[gv])))
+                betas[gv] = new_beta
+                iters_by_g[gv] = it
+                if not solvable:
+                    converged[gv] = False
+                    frozen.add(gv)      # singular segment: keep the fallback
+                elif d < tol or family == "gaussian":
+                    converged[gv] = True
+                    frozen.add(gv)      # fixed point reached — stop updating
+                else:
+                    delta_max = max(delta_max, d)
+            if delta_max == 0.0 and len(frozen) == len(betas):
+                break
+            if not log_link and family != "binomial":
+                break
 
-    # final grouped scan: per-segment deviance + Pearson χ² at β̂
-    joined = _beta_join(betas)
-    etaf = _eta()
-    if family == "gaussian":
-        muf = etaf
-    elif family == "binomial":
-        muf = F.lit(1.0) / (F.lit(1.0) + F.exp(-etaf))
-    else:
-        muf = F.exp(etaf)
-    fb = joined.select(
-        "__g__", *[c.alias(f"__p{i}__") for i, c in enumerate(xs)],
-        y.alias("__yy__"), muf.alias("__mu__"),
-        etaf.alias("__eta__"), off.alias("__o__"))
-    yc, mu = F.col("__yy__"), F.col("__mu__")
-    dev_term, pearson = _dev_pearson(family, yc, mu, var_power)
-    # the Fisher information at EXACTLY β̂ rides the same final scan —
-    # the per-iteration Gramians only cover the segments that scan
-    # still carries (frozen ones drop out), and the old convention was
-    # quirky anyway (a segment frozen in the LAST iteration kept its
-    # pre-update Gramian)
-    s_fin, _zf = _irls_wz(family, mu, F.col("__eta__"), yc,
-                          F.col("__o__"), var_power)
-    psf = [F.col(f"__p{i}__") for i in range(p)]
-    fin_aggs = [F.sum(dev_term).alias("dev"),
-                F.sum(pearson).alias("pchi"),
-                F.count(F.col("__yy__")).alias("n__")]
-    for i in range(p):
-        for j in range(i, p):
-            fin_aggs.append(F.sum(s_fin * psf[i] * psf[j])
-                            .alias(f"fa{i}_{j}"))
-    fin_rows = fb.groupBy("__g__").agg(*fin_aggs).collect()
-    work.unpersist()
+        # final grouped scan: per-segment deviance + Pearson χ² at β̂
+        joined = _beta_join(betas)
+        etaf = _eta()
+        if family == "gaussian":
+            muf = etaf
+        elif family == "binomial":
+            muf = F.lit(1.0) / (F.lit(1.0) + F.exp(-etaf))
+        else:
+            muf = F.exp(etaf)
+        fb = joined.select(
+            "__g__", *[c.alias(f"__p{i}__") for i, c in enumerate(xs)],
+            y.alias("__yy__"), muf.alias("__mu__"),
+            etaf.alias("__eta__"), off.alias("__o__"))
+        yc, mu = F.col("__yy__"), F.col("__mu__")
+        dev_term, pearson = _dev_pearson(family, yc, mu, var_power)
+        # the Fisher information at EXACTLY β̂ rides the same final scan —
+        # the per-iteration Gramians only cover the segments that scan
+        # still carries (frozen ones drop out), and the old convention was
+        # quirky anyway (a segment frozen in the LAST iteration kept its
+        # pre-update Gramian)
+        s_fin, _zf = _irls_wz(family, mu, F.col("__eta__"), yc,
+                              F.col("__o__"), var_power)
+        psf = [F.col(f"__p{i}__") for i in range(p)]
+        fin_aggs = [F.sum(dev_term).alias("dev"),
+                    F.sum(pearson).alias("pchi"),
+                    F.count(F.col("__yy__")).alias("n__")]
+        for i in range(p):
+            for j in range(i, p):
+                fin_aggs.append(F.sum(s_fin * psf[i] * psf[j])
+                                .alias(f"fa{i}_{j}"))
+        fin_rows = fb.groupBy("__g__").agg(*fin_aggs).collect()
     fin = {_norm(r["__g__"]): r for r in fin_rows}
 
     out: dict = {}
@@ -851,204 +839,190 @@ def _binomial_glm(df: DataFrame, formula: str, link: str,
     # persist the projected design for the Fisher-scoring loop
     # (design.py); the small-design count gate doubles as its
     # materialization
-    from fast_causal_inference_spark.operators.design import persist_design
+    with persisted() as keep:
+        df, y, xs, off = persist_design(
+            df, y, xs[1:] if use_bias else xs,
+            off=off if offset is not None else None,
+            use_bias=use_bias)
+        keep(df)
 
-    df, y, xs, off = persist_design(
-        df, y, xs[1:] if use_bias else xs,
-        off=F.expr(offset).cast("double") if offset is not None else None,
-        use_bias=use_bias)
+        def _mu_dmu(eta: Column) -> tuple[Column, Column]:
+            if link == "logit":
+                mu = 1.0 / (1.0 + F.exp(-eta))
+                return mu, mu * (1.0 - mu)
+            if link == "probit":
+                from fast_causal_inference_spark.functions import erf
 
-    def _mu_dmu(eta: Column) -> tuple[Column, Column]:
-        if link == "logit":
-            mu = 1.0 / (1.0 + F.exp(-eta))
-            return mu, mu * (1.0 - mu)
-        if link == "probit":
-            from fast_causal_inference_spark.functions import erf
+                mu = 0.5 * (1.0 + erf(eta / F.lit(math.sqrt(2.0))))
+                dmu = F.exp(-eta * eta / 2.0) / F.lit(math.sqrt(2.0 * math.pi))
+                return mu, dmu
+            ex = F.exp(eta)                       # cloglog: μ = 1 − e^{−e^η}
+            return 1.0 - F.exp(-ex), ex * F.exp(-ex)
 
-            mu = 0.5 * (1.0 + erf(eta / F.lit(math.sqrt(2.0))))
-            dmu = F.exp(-eta * eta / 2.0) / F.lit(math.sqrt(2.0 * math.pi))
-            return mu, dmu
-        ex = F.exp(eta)                       # cloglog: μ = 1 − e^{−e^η}
-        return 1.0 - F.exp(-ex), ex * F.exp(-ex)
+        def _erf_np(x: np.ndarray) -> np.ndarray:
+            # libm erf element-wise WITHOUT ufunc boxing: map over plain
+            # Python floats (tolist) into a preallocated float64 buffer is
+            # ~6x faster than frompyfunc(...).astype(float) and calls the
+            # SAME math.erf, so every value is bit-identical (the probit
+            # IRLS calls this once per iteration over the whole design —
+            # measured as the hottest driver line of the ols family)
+            return np.fromiter(map(math.erf, x.tolist()), np.float64,
+                               count=len(x))
 
-    def _erf_np(x: np.ndarray) -> np.ndarray:
-        # libm erf element-wise WITHOUT ufunc boxing: map over plain
-        # Python floats (tolist) into a preallocated float64 buffer is
-        # ~6x faster than frompyfunc(...).astype(float) and calls the
-        # SAME math.erf, so every value is bit-identical (the probit
-        # IRLS calls this once per iteration over the whole design —
-        # measured as the hottest driver line of the ols family)
-        return np.fromiter(map(math.erf, x.tolist()), np.float64,
-                           count=len(x))
+        def _mu_dmu_np(eta: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+            """numpy twin of _mu_dmu for the collected-design path."""
+            if link == "logit":
+                mu = 1.0 / (1.0 + np.exp(-eta))
+                return mu, mu * (1.0 - mu)
+            if link == "probit":
+                mu = 0.5 * (1.0 + _erf_np(eta / math.sqrt(2.0)))
+                dmu = np.exp(-eta * eta / 2.0) / math.sqrt(2.0 * math.pi)
+                return mu, dmu
+            ex = np.exp(eta)
+            return 1.0 - np.exp(-ex), ex * np.exp(-ex)
 
-    def _mu_dmu_np(eta: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-        """numpy twin of _mu_dmu for the collected-design path."""
-        if link == "logit":
-            mu = 1.0 / (1.0 + np.exp(-eta))
-            return mu, mu * (1.0 - mu)
-        if link == "probit":
-            mu = 0.5 * (1.0 + _erf_np(eta / math.sqrt(2.0)))
-            dmu = np.exp(-eta * eta / 2.0) / math.sqrt(2.0 * math.pi)
-            return mu, dmu
-        ex = np.exp(eta)
-        return 1.0 - np.exp(-ex), ex * np.exp(-ex)
+        def _dev_term(mu: Column) -> Column:
+            # shared clamped binomial unit deviance (_dev_pearson)
+            return _dev_pearson("binomial", y, mu, var_power=1.5)[0]
 
-    def _dev_term(mu: Column) -> Column:
-        # shared clamped binomial unit deviance (_dev_pearson)
-        return _dev_pearson("binomial", y, mu, var_power=1.5)[0]
+        # small-input fast path (round 11, design.collect_small_design):
+        # iterate driver-side in numpy off one collected design
+        _nb = int(df.count())
+        des = collect_small_design(df, xs, y, off, n_rows=_nb)
+        if des is None:
+            df = keep(repartition_big_design(df, _nb))
 
-    # small-input fast path (round 11, design.collect_small_design):
-    # iterate driver-side in numpy off one collected design
-    from fast_causal_inference_spark.operators.design import (
-        collect_small_design,
-        repartition_big_design,
-    )
-
-    _nb = int(df.count())
-    des = collect_small_design(df, xs, y, off, n_rows=_nb)
-    if des is None:
-        df = repartition_big_design(df, _nb)
-
-    def _irls(beta: np.ndarray, cols: list[Column], pp: int,
-              validate: bool = False,
-              np_design: tuple | None = None,
-              ) -> tuple[np.ndarray, np.ndarray, float, int, bool]:
-        A = np.eye(pp)
-        n = 0.0
-        it = 0
-        conv = False
-        if np_design is not None and validate:
-            _, yv0, _ = np_design
-            if len(yv0) == 0:
-                df.unpersist()
-                raise ValueError("no non-NULL outcome rows")
-            if yv0.min() < 0 or yv0.max() > 1:
-                df.unpersist()
-                raise ValueError("binomial family needs y in [0, 1]")
-        for it in range(1, max_iter + 1):
-            if np_design is not None:
-                X_, yv, ov = np_design
-                eta_v = X_ @ beta + ov
-                mu_v, dmu_v = _mu_dmu_np(eta_v)
-                dmu_v = dmu_v + EPS
-                w_v = dmu_v * dmu_v / (mu_v * (1.0 - mu_v) + EPS)
-                z_v = (eta_v - ov) + (yv - mu_v) / dmu_v
-                Xw = X_ * w_v[:, None]
-                A = Xw.T @ X_
-                b = X_.T @ (w_v * z_v)
-                n = float(len(yv))
-            else:
-                eta: Column = F.lit(float(beta[0])) * cols[0]
-                for j in range(1, pp):
-                    eta = eta + F.lit(float(beta[j])) * cols[j]
-                eta = eta + off
-                # staged Projects: η once, then μ/dμ once (the probit
-                # erf chain is referenced three times by w/z —
-                # CollapseProject keeps multi-referenced non-cheap
-                # aliases materialized), then w/z.  Per-row arithmetic
-                # — hence every float sum — is bit-identical to the
-                # inlined form.
-                base = df.select(*[c.alias(f"__p{i}__")
-                                   for i, c in enumerate(cols)],
-                                 y.alias("__yy__"), eta.alias("__eta__"),
-                                 off.alias("__o__"))
-                etac, yc = F.col("__eta__"), F.col("__yy__")
-                mu, dmu = _mu_dmu(etac)
-                mid = base.select("*", mu.alias("__mu__"),
-                                  (dmu + F.lit(EPS)).alias("__dmu__"))
-                muc, dmuc = F.col("__mu__"), F.col("__dmu__")
-                w = dmuc * dmuc / (muc * (1.0 - muc) + F.lit(EPS))
-                z = (etac - F.col("__o__")) + (yc - muc) / dmuc
-                step = mid.select(*[F.col(f"__p{i}__")
-                                    for i in range(pp)],
-                                  w.alias("__w__"), z.alias("__z__"),
-                                  F.col("__yy__"))
-                ps = [F.col(f"__p{i}__") for i in range(pp)]
-                wc, zc = F.col("__w__"), F.col("__z__")
-                aggs = []
-                for i in range(pp):
-                    aggs.append(F.sum(wc * ps[i] * zc).alias(f"b{i}"))
-                    for j in range(i, pp):
-                        aggs.append(F.sum(wc * ps[i] * ps[j])
-                                    .alias(f"a{i}_{j}"))
-                aggs.append(F.count(F.col("__yy__")).alias("n__"))
-                if validate and it == 1:
-                    # fold the input-validation scan into the first
-                    # iteration's aggregation (saves a full pass)
-                    aggs += [F.avg(F.col("__yy__")).alias("m0__"),
-                             F.min(F.col("__yy__")).alias("lo__"),
-                             F.max(F.col("__yy__")).alias("hi__")]
-                row = step.agg(*aggs).collect()[0]
-                if validate and it == 1:
-                    if row["m0__"] is None:
-                        df.unpersist()
-                        raise ValueError("no non-NULL outcome rows")
-                    if float(row["lo__"]) < 0 or float(row["hi__"]) > 1:
-                        df.unpersist()
-                        raise ValueError(
-                            "binomial family needs y in [0, 1]")
-                n = float(row["n__"])
-                A = np.empty((pp, pp))
-                b = np.empty(pp)
-                for i in range(pp):
-                    b[i] = row[f"b{i}"]
-                    for j in range(i, pp):
-                        A[i, j] = A[j, i] = row[f"a{i}_{j}"]
-            try:
+        def _irls(beta: np.ndarray, cols: list[Column], pp: int,
+                  validate: bool = False,
+                  np_design: tuple | None = None,
+                  ) -> tuple[np.ndarray, np.ndarray, float, int, bool]:
+            A = np.eye(pp)
+            n = 0.0
+            it = 0
+            conv = False
+            if np_design is not None and validate:
+                _, yv0, _ = np_design
+                if len(yv0) == 0:
+                    raise ValueError("no non-NULL outcome rows")
+                if yv0.min() < 0 or yv0.max() > 1:
+                    raise ValueError("binomial family needs y in [0, 1]")
+            for it in range(1, max_iter + 1):
+                if np_design is not None:
+                    X_, yv, ov = np_design
+                    eta_v = X_ @ beta + ov
+                    mu_v, dmu_v = _mu_dmu_np(eta_v)
+                    dmu_v = dmu_v + EPS
+                    w_v = dmu_v * dmu_v / (mu_v * (1.0 - mu_v) + EPS)
+                    z_v = (eta_v - ov) + (yv - mu_v) / dmu_v
+                    Xw = X_ * w_v[:, None]
+                    A = Xw.T @ X_
+                    b = X_.T @ (w_v * z_v)
+                    n = float(len(yv))
+                else:
+                    eta: Column = F.lit(float(beta[0])) * cols[0]
+                    for j in range(1, pp):
+                        eta = eta + F.lit(float(beta[j])) * cols[j]
+                    eta = eta + off
+                    # staged Projects: η once, then μ/dμ once (the probit
+                    # erf chain is referenced three times by w/z —
+                    # CollapseProject keeps multi-referenced non-cheap
+                    # aliases materialized), then w/z.  Per-row arithmetic
+                    # — hence every float sum — is bit-identical to the
+                    # inlined form.
+                    base = df.select(*[c.alias(f"__p{i}__")
+                                       for i, c in enumerate(cols)],
+                                     y.alias("__yy__"), eta.alias("__eta__"),
+                                     off.alias("__o__"))
+                    etac, yc = F.col("__eta__"), F.col("__yy__")
+                    mu, dmu = _mu_dmu(etac)
+                    mid = base.select("*", mu.alias("__mu__"),
+                                      (dmu + F.lit(EPS)).alias("__dmu__"))
+                    muc, dmuc = F.col("__mu__"), F.col("__dmu__")
+                    w = dmuc * dmuc / (muc * (1.0 - muc) + F.lit(EPS))
+                    z = (etac - F.col("__o__")) + (yc - muc) / dmuc
+                    step = mid.select(*[F.col(f"__p{i}__")
+                                        for i in range(pp)],
+                                      w.alias("__w__"), z.alias("__z__"),
+                                      F.col("__yy__"))
+                    ps = [F.col(f"__p{i}__") for i in range(pp)]
+                    wc, zc = F.col("__w__"), F.col("__z__")
+                    aggs = []
+                    for i in range(pp):
+                        aggs.append(F.sum(wc * ps[i] * zc).alias(f"b{i}"))
+                        for j in range(i, pp):
+                            aggs.append(F.sum(wc * ps[i] * ps[j])
+                                        .alias(f"a{i}_{j}"))
+                    aggs.append(F.count(F.col("__yy__")).alias("n__"))
+                    if validate and it == 1:
+                        # fold the input-validation scan into the first
+                        # iteration's aggregation (saves a full pass)
+                        aggs += [F.avg(F.col("__yy__")).alias("m0__"),
+                                 F.min(F.col("__yy__")).alias("lo__"),
+                                 F.max(F.col("__yy__")).alias("hi__")]
+                    row = step.agg(*aggs).collect()[0]
+                    if validate and it == 1:
+                        if row["m0__"] is None:
+                            raise ValueError("no non-NULL outcome rows")
+                        if float(row["lo__"]) < 0 \
+                                or float(row["hi__"]) > 1:
+                            raise ValueError(
+                                "binomial family needs y in [0, 1]")
+                    n = float(row["n__"])
+                    A = np.empty((pp, pp))
+                    b = np.empty(pp)
+                    for i in range(pp):
+                        b[i] = row[f"b{i}"]
+                        for j in range(i, pp):
+                            A[i, j] = A[j, i] = row[f"a{i}_{j}"]
                 new_beta = np.linalg.solve(A, b)
-            except np.linalg.LinAlgError:
-                df.unpersist()  # raising exit releases the design
-                raise
-            delta = float(np.max(np.abs(new_beta - beta)))
-            beta = new_beta
-            if delta < tol:
-                conv = True
-                break
-        return beta, A, n, it, conv
+                delta = float(np.max(np.abs(new_beta - beta)))
+                beta = new_beta
+                if delta < tol:
+                    conv = True
+                    break
+            return beta, A, n, it, conv
 
-    beta, A, n, it, converged = _irls(np.zeros(p), xs, p, validate=True,
-                                      np_design=des)
+        beta, A, n, it, converged = _irls(np.zeros(p), xs, p, validate=True,
+                                          np_design=des)
 
-    if not compute_stats:
-        # nuisance-fit fast path (see glm()): beta/stderr only, no
-        # deviance scans — binomial dispersion is fixed at 1
-        df.unpersist()
-        stderr = np.sqrt(np.maximum(np.diag(np.linalg.inv(A)), 0.0))
-        return GlmModel(family="binomial", feature_exprs=feats,
-                        use_bias=use_bias, beta=beta, stderr=stderr, n=n,
-                        n_iter=it, converged=converged,
-                        deviance=float("nan"),
-                        null_deviance=float("nan"), dispersion=1.0,
-                        offset=offset, y_expr=y_expr, link=link)
+        if not compute_stats:
+            # nuisance-fit fast path (see glm()): beta/stderr only, no
+            # deviance scans — binomial dispersion is fixed at 1
+            stderr = np.sqrt(np.maximum(np.diag(np.linalg.inv(A)), 0.0))
+            return GlmModel(family="binomial", feature_exprs=feats,
+                            use_bias=use_bias, beta=beta, stderr=stderr, n=n,
+                            n_iter=it, converged=converged,
+                            deviance=float("nan"),
+                            null_deviance=float("nan"), dispersion=1.0,
+                            offset=offset, y_expr=y_expr, link=link)
 
-    eta = F.lit(float(beta[0])) * xs[0]
-    for j in range(1, p):
-        eta = eta + F.lit(float(beta[j])) * xs[j]
-    mu_fit, _ = _mu_dmu(eta + off)
-    fin = df.agg(F.sum(_dev_term(mu_fit)).alias("dev"),
-                 F.avg(y).alias("ybar")).collect()[0]
-    deviance = float(fin["dev"])
-    ybar = float(fin["ybar"])
+        eta = F.lit(float(beta[0])) * xs[0]
+        for j in range(1, p):
+            eta = eta + F.lit(float(beta[j])) * xs[j]
+        mu_fit, _ = _mu_dmu(eta + off)
+        fin = df.agg(F.sum(_dev_term(mu_fit)).alias("dev"),
+                     F.avg(y).alias("ybar")).collect()[0]
+        deviance = float(fin["dev"])
+        ybar = float(fin["ybar"])
 
-    if offset is None:
-        # intercept-only null: μ₀ = ȳ for every binomial link
-        mu0 = F.lit(min(max(ybar, 1e-12), 1.0 - 1e-12))
-        null_dev = float(df.agg(F.sum(_dev_term(mu0)).alias("nd"))
-                         .collect()[0]["nd"])
-    elif use_bias:
-        # intercept-only + fixed offset: no closed form — reuse the
-        # Fisher loop at p=1 (a handful of tiny scans), then one scan
-        des0 = None if des is None else \
-            (np.ones((len(des[1]), 1)), des[1], des[2])
-        b0, _, _, _, _ = _irls(np.zeros(1), [F.lit(1.0)], 1,
-                               np_design=des0)
-        mu0, _ = _mu_dmu(F.lit(float(b0[0])) + off)
-        null_dev = float(df.agg(F.sum(_dev_term(mu0)).alias("nd"))
-                         .collect()[0]["nd"])
-    else:
-        null_dev = float("nan")
+        if offset is None:
+            # intercept-only null: μ₀ = ȳ for every binomial link
+            mu0 = F.lit(min(max(ybar, 1e-12), 1.0 - 1e-12))
+            null_dev = float(df.agg(F.sum(_dev_term(mu0)).alias("nd"))
+                             .collect()[0]["nd"])
+        elif use_bias:
+            # intercept-only + fixed offset: no closed form — reuse the
+            # Fisher loop at p=1 (a handful of tiny scans), then one scan
+            des0 = None if des is None else \
+                (np.ones((len(des[1]), 1)), des[1], des[2])
+            b0, _, _, _, _ = _irls(np.zeros(1), [F.lit(1.0)], 1,
+                                   np_design=des0)
+            mu0, _ = _mu_dmu(F.lit(float(b0[0])) + off)
+            null_dev = float(df.agg(F.sum(_dev_term(mu0)).alias("nd"))
+                             .collect()[0]["nd"])
+        else:
+            null_dev = float("nan")
 
-    df.unpersist()
     stderr = np.sqrt(np.maximum(np.diag(np.linalg.inv(A)), 0.0))
     return GlmModel(family="binomial", feature_exprs=feats,
                     use_bias=use_bias, beta=beta, stderr=stderr, n=n,
@@ -1094,188 +1068,179 @@ def negative_binomial_regression(df: DataFrame, formula: str,
     df = df.where(cc)
     # persist the projected design for the IRLS + alpha rounds
     # (design.py); the m0 scan below doubles as its materialization
-    from fast_causal_inference_spark.operators.design import persist_design
+    with persisted() as keep:
+        df, y, xs, off = persist_design(
+            df, y, xs[1:] if use_bias else xs,
+            off=off if offset is not None else None,
+            use_bias=use_bias)
+        keep(df)
 
-    df, y, xs, off = persist_design(
-        df, y, xs[1:] if use_bias else xs,
-        off=F.expr(offset).cast("double") if offset is not None else None,
-        use_bias=use_bias)
+        m0 = df.agg(F.avg(y).alias("m"), F.min(y).alias("lo"),
+                    F.count(F.lit(1)).alias("n")).collect()[0]
+        if m0["m"] is None:
+            raise ValueError("no non-NULL outcome rows")
+        if float(m0["lo"]) < 0:
+            raise ValueError(
+                "negative-binomial family needs non-negative y")
 
-    m0 = df.agg(F.avg(y).alias("m"), F.min(y).alias("lo"),
-                F.count(F.lit(1)).alias("n")).collect()[0]
-    if m0["m"] is None:
-        df.unpersist()
-        raise ValueError("no non-NULL outcome rows")
-    if float(m0["lo"]) < 0:
-        df.unpersist()
-        raise ValueError("negative-binomial family needs non-negative y")
+        # small-input fast path (round 11, design.collect_small_design):
+        # the α-round structure multiplies the per-step job cost (outer
+        # dispersion rounds × inner IRLS), so the collected path pays off
+        # more here than anywhere else in the GLM zoo
+        des = collect_small_design(df, xs, y, off, n_rows=int(m0["n"]))
+        if des is None:
+            df = keep(repartition_big_design(df, int(m0["n"])))
 
-    # small-input fast path (round 11, design.collect_small_design):
-    # the α-round structure multiplies the per-step job cost (outer
-    # dispersion rounds × inner IRLS), so the collected path pays off
-    # more here than anywhere else in the GLM zoo
-    from fast_causal_inference_spark.operators.design import (
-        collect_small_design,
-        repartition_big_design,
-    )
+        def _eta(beta):
+            e: Column = F.lit(float(beta[0])) * xs[0]
+            for j in range(1, p):
+                e = e + F.lit(float(beta[j])) * xs[j]
+            return e + off
 
-    des = collect_small_design(df, xs, y, off, n_rows=int(m0["n"]))
-    if des is None:
-        df = repartition_big_design(df, int(m0["n"]))
-
-    def _eta(beta):
-        e: Column = F.lit(float(beta[0])) * xs[0]
-        for j in range(1, p):
-            e = e + F.lit(float(beta[j])) * xs[j]
-        return e + off
-
-    def _irls(a_disp, beta):
-        """IRLS to convergence at fixed dispersion; returns beta, A, n, it."""
-        A = np.eye(p)
-        n = 0.0
-        it = 0
-        conv = False
-        for it in range(1, max_iter + 1):
-            if des is not None:
-                X_, yv, ov = des
-                eta_v = X_ @ beta + ov
-                mu_v = np.exp(eta_v)
-                w_v = mu_v / (1 + float(a_disp) * mu_v) + 1e-10
-                z_v = (eta_v - ov) + (yv - mu_v) / (mu_v + 1e-10)
-                Xw = X_ * w_v[:, None]
-                A = Xw.T @ X_
-                b = X_.T @ (w_v * z_v)
-                n = float(len(yv))
-            else:
-                mu = F.exp(_eta(beta))
-                w = mu / (1 + F.lit(float(a_disp)) * mu) + F.lit(1e-10)
-                z = (_eta(beta) - off) + (y - mu) / (mu + F.lit(1e-10))
-                # project w/z once per row (see glm(): inlining expands
-                # the exp chain into every agg expression)
-                step = df.select(*[c.alias(f"__p{i}__")
-                                   for i, c in enumerate(xs)],
-                                 w.alias("__w__"), z.alias("__z__"),
-                                 y.alias("__yy__"))
-                ps = [F.col(f"__p{i}__") for i in range(p)]
-                wc, zc = F.col("__w__"), F.col("__z__")
-                aggs = []
-                for i in range(p):
-                    aggs.append(F.sum(wc * ps[i] * zc).alias(f"b{i}"))
-                    for j in range(i, p):
-                        aggs.append(F.sum(wc * ps[i] * ps[j])
-                                    .alias(f"a{i}_{j}"))
-                aggs.append(F.count(F.col("__yy__")).alias("n__"))
-                row = step.agg(*aggs).collect()[0]
-                n = float(row["n__"])
-                A = np.empty((p, p))
-                b = np.empty(p)
-                for i in range(p):
-                    b[i] = row[f"b{i}"]
-                    for j in range(i, p):
-                        A[i, j] = A[j, i] = row[f"a{i}_{j}"]
-            try:
+        def _irls(a_disp, beta):
+            """IRLS to convergence at fixed dispersion; returns beta, A,
+            n, it."""
+            A = np.eye(p)
+            n = 0.0
+            it = 0
+            conv = False
+            for it in range(1, max_iter + 1):
+                if des is not None:
+                    X_, yv, ov = des
+                    eta_v = X_ @ beta + ov
+                    mu_v = np.exp(eta_v)
+                    w_v = mu_v / (1 + float(a_disp) * mu_v) + 1e-10
+                    z_v = (eta_v - ov) + (yv - mu_v) / (mu_v + 1e-10)
+                    Xw = X_ * w_v[:, None]
+                    A = Xw.T @ X_
+                    b = X_.T @ (w_v * z_v)
+                    n = float(len(yv))
+                else:
+                    mu = F.exp(_eta(beta))
+                    w = mu / (1 + F.lit(float(a_disp)) * mu) + F.lit(1e-10)
+                    z = (_eta(beta) - off) + (y - mu) / (mu + F.lit(1e-10))
+                    # project w/z once per row (see glm(): inlining expands
+                    # the exp chain into every agg expression)
+                    step = df.select(*[c.alias(f"__p{i}__")
+                                       for i, c in enumerate(xs)],
+                                     w.alias("__w__"), z.alias("__z__"),
+                                     y.alias("__yy__"))
+                    ps = [F.col(f"__p{i}__") for i in range(p)]
+                    wc, zc = F.col("__w__"), F.col("__z__")
+                    aggs = []
+                    for i in range(p):
+                        aggs.append(F.sum(wc * ps[i] * zc).alias(f"b{i}"))
+                        for j in range(i, p):
+                            aggs.append(F.sum(wc * ps[i] * ps[j])
+                                        .alias(f"a{i}_{j}"))
+                    aggs.append(F.count(F.col("__yy__")).alias("n__"))
+                    row = step.agg(*aggs).collect()[0]
+                    n = float(row["n__"])
+                    A = np.empty((p, p))
+                    b = np.empty(p)
+                    for i in range(p):
+                        b[i] = row[f"b{i}"]
+                        for j in range(i, p):
+                            A[i, j] = A[j, i] = row[f"a{i}_{j}"]
                 new_beta = np.linalg.solve(A, b)
-            except np.linalg.LinAlgError:
-                df.unpersist()  # raising exit releases the design
-                raise
-            delta = float(np.max(np.abs(new_beta - beta)))
-            beta = new_beta
-            if delta < tol:
-                conv = True
-                break
-        return beta, A, n, it, conv
+                delta = float(np.max(np.abs(new_beta - beta)))
+                beta = new_beta
+                if delta < tol:
+                    conv = True
+                    break
+            return beta, A, n, it, conv
 
-    beta = np.zeros(p)
-    if use_bias and float(m0["m"]) > 0:
-        beta[0] = math.log(float(m0["m"]))
-    # Poisson first stage (α=0) seeds both β and the aux-OLS α estimate
-    beta, A, n, it, conv = _irls(0.0, beta)
-    a_disp = alpha
-    total_it = it
-    if alpha is None:
-        a_disp = 0.0
-        for _ in range(max(alpha_rounds, 1)):
-            # aux OLS of u=((y−μ)²−y)/μ on μ through origin:
-            # α̂ = Σμ·u / Σμ² and μ·u = (y−μ)²−y, so two sums suffice
-            if des is not None:
-                X_, yv, ov = des
-                mu_v = np.exp(X_ @ beta + ov)
-                a_new = max(float(np.sum((yv - mu_v) ** 2 - yv))
-                            / float(np.sum(mu_v * mu_v)), 0.0)
-            else:
-                mu = F.exp(_eta(beta))
-                aux = df.agg(
-                    F.sum((y - mu) * (y - mu) - y).alias("num"),
-                    F.sum(mu * mu).alias("den")).collect()[0]
-                a_new = max(float(aux["num"]) / float(aux["den"]), 0.0)
-            if abs(a_new - a_disp) < 1e-8:
+        beta = np.zeros(p)
+        if use_bias and float(m0["m"]) > 0:
+            beta[0] = math.log(float(m0["m"]))
+        # Poisson first stage (α=0) seeds both β and the aux-OLS α estimate
+        beta, A, n, it, conv = _irls(0.0, beta)
+        a_disp = alpha
+        total_it = it
+        if alpha is None:
+            a_disp = 0.0
+            for _ in range(max(alpha_rounds, 1)):
+                # aux OLS of u=((y−μ)²−y)/μ on μ through origin:
+                # α̂ = Σμ·u / Σμ² and μ·u = (y−μ)²−y, so two sums suffice
+                if des is not None:
+                    X_, yv, ov = des
+                    mu_v = np.exp(X_ @ beta + ov)
+                    a_new = max(float(np.sum((yv - mu_v) ** 2 - yv))
+                                / float(np.sum(mu_v * mu_v)), 0.0)
+                else:
+                    mu = F.exp(_eta(beta))
+                    aux = df.agg(
+                        F.sum((y - mu) * (y - mu) - y).alias("num"),
+                        F.sum(mu * mu).alias("den")).collect()[0]
+                    a_new = max(float(aux["num"]) / float(aux["den"]), 0.0)
+                if abs(a_new - a_disp) < 1e-8:
+                    a_disp = a_new
+                    break
                 a_disp = a_new
-                break
-            a_disp = a_new
-            beta, A, n, it, conv = _irls(a_disp, beta)
-            total_it += it
-    elif alpha < 0:
-        df.unpersist()
-        raise ValueError("alpha must be >= 0")
-    else:
-        beta, A, n, it, conv = _irls(float(alpha), beta)
-        total_it += it
-
-    # NB2 deviance at the final fit: 2Σ[y·log(y/μ) − (y+1/α)·log((1+αy)/(1+αμ))]
-    mu = F.exp(_eta(beta))
-    a_l = F.lit(float(a_disp))
-    if a_disp and a_disp > 0:
-        dev_term = 2 * (F.when(y > 0, y * F.log(y / mu)).otherwise(F.lit(0.0))
-                        - (y + 1.0 / a_l)
-                        * F.log((1 + a_l * y) / (1 + a_l * mu)))
-    else:                                 # α→0 limit is the Poisson deviance
-        dev_term = 2 * (F.when(y > 0, y * F.log(y / mu)).otherwise(F.lit(0.0))
-                        - (y - mu))
-    fin = df.agg(F.sum(dev_term).alias("dev"),
-                 F.sum(y).alias("ysum"),
-                 F.sum(F.exp(off)).alias("seo")).collect()[0]
-    deviance = float(fin["dev"])
-    # null model: intercept-only + offset at the SAME α.  The mean score
-    # Σ(y−μ)/(1+αμ)=0 has no closed form with an offset, so reuse the
-    # IRLS machinery with p=1 (a handful of tiny scans)
-    if use_bias:
-        b0 = np.array([math.log(max(float(fin["ysum"])
-                                    / float(fin["seo"]), 1e-12))])
-        for _ in range(max_iter):
-            if des is not None:
-                _, yv, ov = des
-                mu0_v = np.exp(float(b0[0]) + ov)
-                w0_v = mu0_v / (1 + float(a_disp) * mu0_v) + 1e-10
-                z0_v = float(b0[0]) + (yv - mu0_v) / (mu0_v + 1e-10)
-                nb0 = float(np.sum(w0_v * z0_v)) / float(np.sum(w0_v))
-            else:
-                eta0 = F.lit(float(b0[0])) + off
-                mu0 = F.exp(eta0)
-                w0 = mu0 / (1 + F.lit(float(a_disp)) * mu0) \
-                    + F.lit(1e-10)
-                z0 = F.lit(float(b0[0])) \
-                    + (y - mu0) / (mu0 + F.lit(1e-10))
-                r0 = df.agg(F.sum(w0 * z0).alias("b"),
-                            F.sum(w0).alias("a")).collect()[0]
-                nb0 = float(r0["b"]) / float(r0["a"])
-            d0 = abs(nb0 - float(b0[0]))
-            b0 = np.array([nb0])
-            if d0 < tol:
-                break
-        mu0 = F.exp(F.lit(float(b0[0])) + off)
-        if a_disp and a_disp > 0:
-            nd_term = 2 * (F.when(y > 0, y * F.log(y / mu0))
-                           .otherwise(F.lit(0.0))
-                           - (y + 1.0 / a_l)
-                           * F.log((1 + a_l * y) / (1 + a_l * mu0)))
+                beta, A, n, it, conv = _irls(a_disp, beta)
+                total_it += it
+        elif alpha < 0:
+            raise ValueError("alpha must be >= 0")
         else:
-            nd_term = 2 * (F.when(y > 0, y * F.log(y / mu0))
-                           .otherwise(F.lit(0.0)) - (y - mu0))
-        null_dev = float(df.agg(F.sum(nd_term).alias("nd"))
-                         .collect()[0]["nd"])
-    else:
-        null_dev = float("nan")
-    df.unpersist()
+            beta, A, n, it, conv = _irls(float(alpha), beta)
+            total_it += it
+
+        # NB2 deviance at the final fit:
+        # 2Σ[y·log(y/μ) − (y+1/α)·log((1+αy)/(1+αμ))]
+        mu = F.exp(_eta(beta))
+        a_l = F.lit(float(a_disp))
+        if a_disp and a_disp > 0:
+            dev_term = 2 * (F.when(y > 0, y * F.log(y / mu))
+                            .otherwise(F.lit(0.0))
+                            - (y + 1.0 / a_l)
+                            * F.log((1 + a_l * y) / (1 + a_l * mu)))
+        else:                       # α→0 limit is the Poisson deviance
+            dev_term = 2 * (F.when(y > 0, y * F.log(y / mu))
+                            .otherwise(F.lit(0.0)) - (y - mu))
+        fin = df.agg(F.sum(dev_term).alias("dev"),
+                     F.sum(y).alias("ysum"),
+                     F.sum(F.exp(off)).alias("seo")).collect()[0]
+        deviance = float(fin["dev"])
+        # null model: intercept-only + offset at the SAME α.  The mean score
+        # Σ(y−μ)/(1+αμ)=0 has no closed form with an offset, so reuse the
+        # IRLS machinery with p=1 (a handful of tiny scans)
+        if use_bias:
+            b0 = np.array([math.log(max(float(fin["ysum"])
+                                        / float(fin["seo"]), 1e-12))])
+            for _ in range(max_iter):
+                if des is not None:
+                    _, yv, ov = des
+                    mu0_v = np.exp(float(b0[0]) + ov)
+                    w0_v = mu0_v / (1 + float(a_disp) * mu0_v) + 1e-10
+                    z0_v = float(b0[0]) + (yv - mu0_v) / (mu0_v + 1e-10)
+                    nb0 = float(np.sum(w0_v * z0_v)) / float(np.sum(w0_v))
+                else:
+                    eta0 = F.lit(float(b0[0])) + off
+                    mu0 = F.exp(eta0)
+                    w0 = mu0 / (1 + F.lit(float(a_disp)) * mu0) \
+                        + F.lit(1e-10)
+                    z0 = F.lit(float(b0[0])) \
+                        + (y - mu0) / (mu0 + F.lit(1e-10))
+                    r0 = df.agg(F.sum(w0 * z0).alias("b"),
+                                F.sum(w0).alias("a")).collect()[0]
+                    nb0 = float(r0["b"]) / float(r0["a"])
+                d0 = abs(nb0 - float(b0[0]))
+                b0 = np.array([nb0])
+                if d0 < tol:
+                    break
+            mu0 = F.exp(F.lit(float(b0[0])) + off)
+            if a_disp and a_disp > 0:
+                nd_term = 2 * (F.when(y > 0, y * F.log(y / mu0))
+                               .otherwise(F.lit(0.0))
+                               - (y + 1.0 / a_l)
+                               * F.log((1 + a_l * y) / (1 + a_l * mu0)))
+            else:
+                nd_term = 2 * (F.when(y > 0, y * F.log(y / mu0))
+                               .otherwise(F.lit(0.0)) - (y - mu0))
+            null_dev = float(df.agg(F.sum(nd_term).alias("nd"))
+                             .collect()[0]["nd"])
+        else:
+            null_dev = float("nan")
     stderr = np.sqrt(np.maximum(np.diag(np.linalg.inv(A)), 0.0))
     # y_expr matters downstream: margins.average_marginal_effects uses it
     # to keep its rebuilt Fisher/AME sums on the SAME complete-case rows

@@ -24,6 +24,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from fast_causal_inference_spark.formula import parse_formula
+from fast_causal_inference_spark.operators.design import persisted
 from fast_causal_inference_spark.operators.suffstats import (
     StatView,
     check_distinct_arms,
@@ -416,32 +417,32 @@ def permutation(df: DataFrame, expr: str, index: str,
     for c in bcols:
         nn = F.col(c).isNotNull()
         notnull = nn if notnull is None else (notnull & nn)
-    sub = (df.where(idx.isin([v0, v1]))
-             .select((idx == F.lit(v1)).cast("int").alias("__t"),
-                     *[F.expr(e).cast("double").alias(f"__b{i}")
-                       for i, e in enumerate(base)])
-             .where(notnull)
-             .cache())
-    # observed difference + arm sizes + total sums (one arm-keyed pass)
-    arms = {r["__key"]: r for r in
-            keyed_stats(sub, bcols, F.col("__t"))
-            .select("__key", "n", *[f"s{i}" for i in range(k)]).collect()}
-    if len(arms) < 2:
-        raise ValueError("both arms must be non-empty")
-    n0, n1 = (int(arms[a]["n"]) for a in (0, 1))
-    sums = [np.array([float(arms[a][f"s{i}"]) for i in range(k)])
-            for a in (0, 1)]
-    with np.errstate(divide="ignore", invalid="ignore"):
-        observed = (float(node.value(list(sums[1] / float(n1))))
-                    - float(node.value(list(sums[0] / float(n0)))))
-    if not math.isfinite(observed):
-        observed = float("nan")      # zero-denominator arm: undefined
-    tot = sums[0] + sums[1]
-    n = n0 + n1
+    with persisted() as keep:
+        sub = keep(df.where(idx.isin([v0, v1]))
+                   .select((idx == F.lit(v1)).cast("int").alias("__t"),
+                           *[F.expr(e).cast("double").alias(f"__b{i}")
+                             for i, e in enumerate(base)])
+                   .where(notnull)
+                   .cache())
+        # observed difference + arm sizes + total sums (one arm-keyed pass)
+        arms = {r["__key"]: r for r in
+                keyed_stats(sub, bcols, F.col("__t"))
+                .select("__key", "n", *[f"s{i}" for i in range(k)]).collect()}
+        if len(arms) < 2:
+            raise ValueError("both arms must be non-empty")
+        n0, n1 = (int(arms[a]["n"]) for a in (0, 1))
+        sums = [np.array([float(arms[a][f"s{i}"]) for i in range(k)])
+                for a in (0, 1)]
+        with np.errstate(divide="ignore", invalid="ignore"):
+            observed = (float(node.value(list(sums[1] / float(n1))))
+                        - float(node.value(list(sums[0] / float(n0)))))
+        if not math.isfinite(observed):
+            observed = float("nan")      # zero-denominator arm: undefined
+        tot = sums[0] + sums[1]
+        n = n0 + n1
 
-    reps = _permutation_replica_stats(sub, k, n1, permutation_num, seed) \
-        .collect()
-    sub.unpersist()
+        reps = _permutation_replica_stats(sub, k, n1, permutation_num, seed) \
+            .collect()
     diffs = np.empty(len(reps))
     for j, r in enumerate(reps):
         rn1 = float(r["n"])
@@ -511,53 +512,53 @@ def permutation_alt(df: DataFrame, expr: str, permutation_num: int = 100,
     for c in bcols:
         nn = F.col(c).isNotNull()
         notnull = nn if notnull is None else (notnull & nn)
-    sub = (df.select(*[F.expr(e).cast("double").alias(f"__b{i}")
-                       for i, e in enumerate(base)])
-             .where(notnull).cache())
-    tot_row = sub.agg(F.count(F.lit(1)).alias("n"),
-                      *[F.sum(c).alias(f"t{i}")
-                        for i, c in enumerate(bcols)]).collect()[0]
-    n = int(tot_row["n"] or 0)
-    if n == 0:
-        raise ValueError("permutation_alt: empty input")
-    tot = np.array([float(tot_row[f"t{i}"]) for i in range(k)])
-    B = int(permutation_num)
-    schema = ("replica_id long, n double, "
-              + ", ".join(f"s{i} double" for i in range(k)))
+    with persisted() as keep:
+        sub = keep(df.select(*[F.expr(e).cast("double").alias(f"__b{i}")
+                               for i, e in enumerate(base)])
+                   .where(notnull).cache())
+        tot_row = sub.agg(F.count(F.lit(1)).alias("n"),
+                          *[F.sum(c).alias(f"t{i}")
+                            for i, c in enumerate(bcols)]).collect()[0]
+        n = int(tot_row["n"] or 0)
+        if n == 0:
+            raise ValueError("permutation_alt: empty input")
+        tot = np.array([float(tot_row[f"t{i}"]) for i in range(k)])
+        B = int(permutation_num)
+        schema = ("replica_id long, n double, "
+                  + ", ".join(f"s{i} double" for i in range(k)))
 
-    def _draw(batches):
-        pid = TaskContext.get().partitionId()
-        chunks = [c for c in batches]
-        if not chunks:
-            return
-        X = np.concatenate([c[bcols].to_numpy(dtype=float)
-                            for c in chunks])
-        m = len(X)
-        rng = np.random.default_rng([seed, pid])
-        # fresh labels PER replicate; chunk the replicate axis so the
-        # (rows x B) draw never exceeds ~20M cells per partition — the
-        # 100 TB guard against a 190k-row partition x B=1000 matrix
-        rb = max(1, min(B, 20_000_000 // max(m, 1)))
-        n_out = np.empty(B)
-        S = np.empty((k, B))
-        for b0 in range(0, B, rb):
-            b1 = min(b0 + rb, B)
-            R = rng.random((m, b1 - b0)) < 0.5
-            n_out[b0:b1] = R.sum(axis=0)
-            S[:, b0:b1] = X.T @ R
-        out = {"replica_id": np.arange(B, dtype=np.int64),
-               "n": n_out.astype(float)}
-        for i in range(k):
-            out[f"s{i}"] = S[i]
-        yield pd.DataFrame(out)
+        def _draw(batches):
+            pid = TaskContext.get().partitionId()
+            chunks = [c for c in batches]
+            if not chunks:
+                return
+            X = np.concatenate([c[bcols].to_numpy(dtype=float)
+                                for c in chunks])
+            m = len(X)
+            rng = np.random.default_rng([seed, pid])
+            # fresh labels PER replicate; chunk the replicate axis so the
+            # (rows x B) draw never exceeds ~20M cells per partition — the
+            # 100 TB guard against a 190k-row partition x B=1000 matrix
+            rb = max(1, min(B, 20_000_000 // max(m, 1)))
+            n_out = np.empty(B)
+            S = np.empty((k, B))
+            for b0 in range(0, B, rb):
+                b1 = min(b0 + rb, B)
+                R = rng.random((m, b1 - b0)) < 0.5
+                n_out[b0:b1] = R.sum(axis=0)
+                S[:, b0:b1] = X.T @ R
+            out = {"replica_id": np.arange(B, dtype=np.int64),
+                   "n": n_out.astype(float)}
+            for i in range(k):
+                out[f"s{i}"] = S[i]
+            yield pd.DataFrame(out)
 
-    ensure_udf_serializable()
-    reps = (sub.mapInPandas(_draw, schema)
-               .groupBy("replica_id")
-               .agg(F.sum("n").alias("n"),
-                    *[F.sum(f"s{i}").alias(f"s{i}") for i in range(k)])
-               .collect())
-    sub.unpersist()
+        ensure_udf_serializable()
+        reps = (sub.mapInPandas(_draw, schema)
+                   .groupBy("replica_id")
+                   .agg(F.sum("n").alias("n"),
+                        *[F.sum(f"s{i}").alias(f"s{i}") for i in range(k)])
+                   .collect())
     null_d = np.full(B, np.nan)
     alt_d = np.full(B, np.nan)
     for r in reps:

@@ -102,128 +102,120 @@ def heckman(df: DataFrame, outcome_formula: str, selection_formula: str,
     # read this narrow relation
     from pyspark import StorageLevel
 
-    # the leading intercepts of W and Z are constants — keep them as
-    # lit(1.0) rebased expressions instead of materializing 16 wasted
-    # bytes per cached row (persist_design's rule in design.py)
-    selw = (sel.select(
-        *[w.alias(f"__w{i}__") for i, w in enumerate(ws[1:], start=1)],
-        *[z.alias(f"__z{j}__") for j, z in enumerate(zs[1:], start=1)],
-        delta.alias("__d__"), y.alias("__y__"))
-        .persist(StorageLevel.MEMORY_AND_DISK))
-    ws = [F.lit(1.0)] + [F.col(f"__w{i}__") for i in range(1, pw)]
-    zs = [F.lit(1.0)] + [F.col(f"__z{j}__") for j in range(1, kzz)]
-    delta = F.col("__d__")
-    y = F.col("__y__")
-    sel = selw
-
-    # small-input fast path (round 11, design.py cutoff): the selected
-    # design already carries the erf-chain λ/δ as materialized columns,
-    # so ONE bounded collect evaluates the Arrow erf once and scans 1-2
-    # become numpy Gramians
     from fast_causal_inference_spark.operators.design import (
         SMALL_DESIGN_MAX_CELLS,
         SMALL_DESIGN_MAX_ROWS,
+        collect_columns,
+        persisted,
+        repartition_big_design,
     )
 
-    lim = min(SMALL_DESIGN_MAX_ROWS,
-              SMALL_DESIGN_MAX_CELLS // max(pw + kzz + 2, 1))
-    des = None
-    # count-gate (see design.collect_small_design): counting prunes the
-    # erf-chain columns and materializes the persisted design either way
-    _nsel = int(selw.count())
-    if _nsel > lim:
-        from fast_causal_inference_spark.operators.design import (
-            repartition_big_design,
-        )
-
-        selw = repartition_big_design(selw, _nsel)
+    # the leading intercepts of W and Z are constants — keep them as
+    # lit(1.0) rebased expressions instead of materializing 16 wasted
+    # bytes per cached row (persist_design's rule in design.py)
+    with persisted() as keep:
+        selw = keep(sel.select(
+            *[w.alias(f"__w{i}__") for i, w in enumerate(ws[1:], start=1)],
+            *[z.alias(f"__z{j}__") for j, z in enumerate(zs[1:], start=1)],
+            delta.alias("__d__"), y.alias("__y__"))
+            .persist(StorageLevel.MEMORY_AND_DISK))
+        ws = [F.lit(1.0)] + [F.col(f"__w{i}__") for i in range(1, pw)]
+        zs = [F.lit(1.0)] + [F.col(f"__z{j}__") for j in range(1, kzz)]
+        delta = F.col("__d__")
+        y = F.col("__y__")
         sel = selw
-    if _nsel <= lim:
-        from fast_causal_inference_spark.operators.design import (
-            collect_columns,
-        )
 
-        _pdf = collect_columns(selw)
-        ones = np.ones(_nsel)
-        des = (np.column_stack(
-                   [ones] + [_pdf[f"__w{i}__"]
-                             for i in range(1, pw)]),
-               np.column_stack(
-                   [ones] + [_pdf[f"__z{j}__"]
-                             for j in range(1, kzz)]),
-               _pdf["__d__"],
-               _pdf["__y__"])
-        del _pdf
+        # small-input fast path (round 11, design.py cutoff): the selected
+        # design already carries the erf-chain λ/δ as materialized columns,
+        # so ONE bounded collect evaluates the Arrow erf once and scans 1-2
+        # become numpy Gramians
+        lim = min(SMALL_DESIGN_MAX_ROWS,
+                  SMALL_DESIGN_MAX_CELLS // max(pw + kzz + 2, 1))
+        des = None
+        # count-gate (see design.collect_small_design): counting prunes the
+        # erf-chain columns and materializes the persisted design either way
+        _nsel = int(selw.count())
+        if _nsel > lim:
+            selw = keep(repartition_big_design(selw, _nsel))
+            sel = selw
+        if _nsel <= lim:
+            _pdf = collect_columns(selw)
+            ones = np.ones(_nsel)
+            des = (np.column_stack(
+                       [ones] + [_pdf[f"__w{i}__"]
+                                 for i in range(1, pw)]),
+                   np.column_stack(
+                       [ones] + [_pdf[f"__z{j}__"]
+                                 for j in range(1, kzz)]),
+                   _pdf["__d__"],
+                   _pdf["__y__"])
+            del _pdf
 
-    if des is not None:
-        Wm, Zm, dv, yv = des
-        n1 = float(len(yv))
-        if n1 <= pw:
-            selw.unpersist()
-            raise ValueError(f"only {int(n1)} selected rows for {pw} "
-                             f"step-2 parameters")
-        WtW = Wm.T @ Wm
-        Wty = Wm.T @ yv
-        beta = np.linalg.solve(WtW, Wty)
-        b_lam = float(beta[-1])
-        e_v = yv - Wm @ beta
-        sse = float(e_v @ e_v)
-        sd = float(dv.sum())
-        Wd = Wm * dv[:, None]
-        WdW = Wd.T @ Wm
-        WdZ = Wd.T @ Zm
-        sigma2 = sse / n1 + b_lam * b_lam * sd / n1
-        rho2 = min(b_lam * b_lam / sigma2, 1.0) if sigma2 > 0 else 0.0
-        selw.unpersist()
-    else:
-        # scan 1: step-2 Gramian [W'W | W'y]
-        aggs = []
-        for i in range(pw):
-            aggs.append(F.sum(ws[i] * y).alias(f"b{i}"))
-            for j in range(i, pw):
-                aggs.append(F.sum(ws[i] * ws[j]).alias(f"a{i}_{j}"))
-        aggs.append(F.count(y).alias("n1"))
-        r = sel.agg(*aggs).collect()[0]
-        n1 = float(r["n1"])
-        if n1 <= pw:
-            selw.unpersist()
-            raise ValueError(f"only {int(n1)} selected rows for {pw} "
-                             f"step-2 parameters")
-        WtW = np.empty((pw, pw))
-        Wty = np.empty(pw)
-        for i in range(pw):
-            Wty[i] = r[f"b{i}"]
-            for j in range(i, pw):
-                WtW[i, j] = WtW[j, i] = r[f"a{i}_{j}"]
-        beta = np.linalg.solve(WtW, Wty)
-        b_lam = float(beta[-1])
+        if des is not None:
+            Wm, Zm, dv, yv = des
+            n1 = float(len(yv))
+            if n1 <= pw:
+                raise ValueError(f"only {int(n1)} selected rows for {pw} "
+                                 f"step-2 parameters")
+            WtW = Wm.T @ Wm
+            Wty = Wm.T @ yv
+            beta = np.linalg.solve(WtW, Wty)
+            b_lam = float(beta[-1])
+            e_v = yv - Wm @ beta
+            sse = float(e_v @ e_v)
+            sd = float(dv.sum())
+            Wd = Wm * dv[:, None]
+            WdW = Wd.T @ Wm
+            WdZ = Wd.T @ Zm
+            sigma2 = sse / n1 + b_lam * b_lam * sd / n1
+            rho2 = min(b_lam * b_lam / sigma2, 1.0) if sigma2 > 0 else 0.0
+        else:
+            # scan 1: step-2 Gramian [W'W | W'y]
+            aggs = []
+            for i in range(pw):
+                aggs.append(F.sum(ws[i] * y).alias(f"b{i}"))
+                for j in range(i, pw):
+                    aggs.append(F.sum(ws[i] * ws[j]).alias(f"a{i}_{j}"))
+            aggs.append(F.count(y).alias("n1"))
+            r = sel.agg(*aggs).collect()[0]
+            n1 = float(r["n1"])
+            if n1 <= pw:
+                raise ValueError(f"only {int(n1)} selected rows for {pw} "
+                                 f"step-2 parameters")
+            WtW = np.empty((pw, pw))
+            Wty = np.empty(pw)
+            for i in range(pw):
+                Wty[i] = r[f"b{i}"]
+                for j in range(i, pw):
+                    WtW[i, j] = WtW[j, i] = r[f"a{i}_{j}"]
+            beta = np.linalg.solve(WtW, Wty)
+            b_lam = float(beta[-1])
 
-        # scan 2: correction moments off the fitted residual column
-        yhat: Column = F.lit(0.0)
-        for b, c in zip(beta, ws):
-            yhat = yhat + F.lit(float(b)) * c
-        e_col = y - yhat
-        aggs = [F.sum(e_col * e_col).alias("sse"),
-                F.sum(delta).alias("sd")]
-        for i in range(pw):
-            for j in range(i, pw):
-                aggs.append(F.sum(delta * ws[i] * ws[j])
-                            .alias(f"wdw{i}_{j}"))
-            for j in range(kz):
-                aggs.append(F.sum(delta * ws[i] * zs[j])
-                            .alias(f"wdz{i}_{j}"))
-        r2 = sel.agg(*aggs).collect()[0]
-        sigma2 = float(r2["sse"]) / n1 \
-            + b_lam * b_lam * float(r2["sd"]) / n1
-        rho2 = min(b_lam * b_lam / sigma2, 1.0) if sigma2 > 0 else 0.0
-        WdW = np.empty((pw, pw))
-        WdZ = np.empty((pw, kz))
-        for i in range(pw):
-            for j in range(i, pw):
-                WdW[i, j] = WdW[j, i] = r2[f"wdw{i}_{j}"]
-            for j in range(kz):
-                WdZ[i, j] = r2[f"wdz{i}_{j}"]
-        selw.unpersist()
+            # scan 2: correction moments off the fitted residual column
+            yhat: Column = F.lit(0.0)
+            for b, c in zip(beta, ws):
+                yhat = yhat + F.lit(float(b)) * c
+            e_col = y - yhat
+            aggs = [F.sum(e_col * e_col).alias("sse"),
+                    F.sum(delta).alias("sd")]
+            for i in range(pw):
+                for j in range(i, pw):
+                    aggs.append(F.sum(delta * ws[i] * ws[j])
+                                .alias(f"wdw{i}_{j}"))
+                for j in range(kz):
+                    aggs.append(F.sum(delta * ws[i] * zs[j])
+                                .alias(f"wdz{i}_{j}"))
+            r2 = sel.agg(*aggs).collect()[0]
+            sigma2 = float(r2["sse"]) / n1 \
+                + b_lam * b_lam * float(r2["sd"]) / n1
+            rho2 = min(b_lam * b_lam / sigma2, 1.0) if sigma2 > 0 else 0.0
+            WdW = np.empty((pw, pw))
+            WdZ = np.empty((pw, kz))
+            for i in range(pw):
+                for j in range(i, pw):
+                    WdW[i, j] = WdW[j, i] = r2[f"wdw{i}_{j}"]
+                for j in range(kz):
+                    WdZ[i, j] = r2[f"wdz{i}_{j}"]
     # probit covariance: glm keeps only stderr, so rebuild the full
     # Fisher inverse with one more tiny scan over the probit's own
     # complete cases (selection + all Z non-null); project w0 (erf

@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from fast_causal_inference_spark import stats_distributions as dist
+from fast_causal_inference_spark.operators.design import persisted
 
 
 def _collect_small_tex(sub: DataFrame, k: int, n: int):
@@ -386,92 +387,92 @@ def cox_ph(df: DataFrame, time: str, event: str, covariates: list[str],
         raise ValueError(
             "cox_ph: no complete-case rows (every row has a NULL in "
             "time/event/covariates)")
-    tex = _collect_small_tex(sub, k, n_rows)
-    if tex is not None:
-        grouped = _CoxGroupedRows(*tex)
-    else:
-        sub = sub.cache()
-    beta = np.zeros(k)
-    loglik_prev = -np.inf
-    efron = ties == "efron"
-    for _ in range(max_iter):
+    with persisted() as keep:
+        tex = _collect_small_tex(sub, k, n_rows)
         if tex is not None:
-            rows = grouped.rows(beta, efron)
+            grouped = _CoxGroupedRows(*tex)
         else:
-            rows = _cox_grouped_scan(sub, k, beta, efron)
-
-        # suffix (risk-set) accumulation over descending time on the driver
-        U = np.zeros(k)
-        H = np.zeros((k, k))
-        loglik = 0.0
-        S0 = 0.0
-        S1 = np.zeros(k)
-        S2 = np.zeros((k, k))
-        for r in rows:
-            S0 += float(r["sw"])
-            for i in range(k):
-                S1[i] += float(r[f"swx{i}"])
-                for j in range(i, k):
-                    v = float(r[f"swxx{i}_{j}"])
-                    S2[i, j] += v
-                    if i != j:
-                        S2[j, i] += v
-            d = float(r["d"])
-            if d <= 0:
-                continue
-            if ties == "breslow":
-                loglik += float(r["sxb_e"]) - d * np.log(S0)
-                xbar = S1 / S0
-                for i in range(k):
-                    U[i] += float(r[f"sx{i}_e"]) - d * xbar[i]
-                H += d * (S2 / S0 - np.outer(xbar, xbar))
+            sub = keep(sub.cache())
+        beta = np.zeros(k)
+        loglik_prev = -np.inf
+        efron = ties == "efron"
+        for _ in range(max_iter):
+            if tex is not None:
+                rows = grouped.rows(beta, efron)
             else:
-                # Efron: the l-th of d tied events sees the risk set minus
-                # an l/d fraction of the tied-event group's own sums —
-                # vectorized over the d events (heavy-tie data would
-                # otherwise pay a Python iteration per event)
-                E0 = float(r["swe"])
-                E1 = np.array([float(r[f"swxe{i}"]) for i in range(k)])
-                E2 = np.zeros((k, k))
+                rows = _cox_grouped_scan(sub, k, beta, efron)
+
+            # suffix (risk-set) accumulation over descending time on the driver
+            U = np.zeros(k)
+            H = np.zeros((k, k))
+            loglik = 0.0
+            S0 = 0.0
+            S1 = np.zeros(k)
+            S2 = np.zeros((k, k))
+            for r in rows:
+                S0 += float(r["sw"])
                 for i in range(k):
+                    S1[i] += float(r[f"swx{i}"])
                     for j in range(i, k):
-                        v = float(r[f"swxxe{i}_{j}"])
-                        E2[i, j] = E2[j, i] = v
-                if abs(d - round(d)) > 1e-9:
-                    raise ValueError(
-                        f"Efron ties need 0/1 event indicators (integer "
-                        f"tie counts); got d={d} at one event time — use "
-                        f"ties='breslow' for fractional event weights")
-                loglik += float(r["sxb_e"])
-                di = int(round(d))
-                sx_e = np.array([float(r[f"sx{i}_e"]) for i in range(k)])
-                # chunk the d tied events: the vectorized term is
-                # O(chunk·k²) memory, not O(d·k²), so coarse time
-                # bucketing with huge tie groups cannot OOM the driver
-                for lo in range(0, di, 8192):
-                    fr = np.arange(lo, min(lo + 8192, di)) / d
-                    a0 = S0 - fr * E0
-                    a1 = S1[None, :] - fr[:, None] * E1[None, :]
-                    a2 = (S2[None, :, :]
-                          - fr[:, None, None] * E2[None, :, :])
-                    loglik -= float(np.log(a0).sum())
-                    xbar = a1 / a0[:, None]
-                    U += sx_e * (len(fr) / d) - xbar.sum(axis=0)
-                    H += ((a2 / a0[:, None, None]).sum(axis=0)
-                          - np.einsum("li,lj->ij", xbar, xbar))
-        try:
-            step = np.linalg.solve(H, U)
-        except np.linalg.LinAlgError:
-            step = np.linalg.pinv(H) @ U
-        beta = beta + step
-        if abs(loglik - loglik_prev) < tol:
-            converged = True
-            break
-        loglik_prev = loglik
-    else:
-        converged = False
-    if tex is None:
-        sub.unpersist()
+                        v = float(r[f"swxx{i}_{j}"])
+                        S2[i, j] += v
+                        if i != j:
+                            S2[j, i] += v
+                d = float(r["d"])
+                if d <= 0:
+                    continue
+                if ties == "breslow":
+                    loglik += float(r["sxb_e"]) - d * np.log(S0)
+                    xbar = S1 / S0
+                    for i in range(k):
+                        U[i] += float(r[f"sx{i}_e"]) - d * xbar[i]
+                    H += d * (S2 / S0 - np.outer(xbar, xbar))
+                else:
+                    # Efron: the l-th of d tied events sees the risk set minus
+                    # an l/d fraction of the tied-event group's own sums —
+                    # vectorized over the d events (heavy-tie data would
+                    # otherwise pay a Python iteration per event)
+                    E0 = float(r["swe"])
+                    E1 = np.array([float(r[f"swxe{i}"]) for i in range(k)])
+                    E2 = np.zeros((k, k))
+                    for i in range(k):
+                        for j in range(i, k):
+                            v = float(r[f"swxxe{i}_{j}"])
+                            E2[i, j] = E2[j, i] = v
+                    if abs(d - round(d)) > 1e-9:
+                        raise ValueError(
+                            f"Efron ties need 0/1 event indicators "
+                            f"(integer tie counts); got d={d} at one event "
+                            f"time — use ties='breslow' for fractional "
+                            f"event weights")
+                    loglik += float(r["sxb_e"])
+                    di = int(round(d))
+                    sx_e = np.array([float(r[f"sx{i}_e"]) for i in range(k)])
+                    # chunk the d tied events: the vectorized term is
+                    # O(chunk·k²) memory, not O(d·k²), so coarse time
+                    # bucketing with huge tie groups cannot OOM the driver
+                    for lo in range(0, di, 8192):
+                        fr = np.arange(lo, min(lo + 8192, di)) / d
+                        a0 = S0 - fr * E0
+                        a1 = S1[None, :] - fr[:, None] * E1[None, :]
+                        a2 = (S2[None, :, :]
+                              - fr[:, None, None] * E2[None, :, :])
+                        loglik -= float(np.log(a0).sum())
+                        xbar = a1 / a0[:, None]
+                        U += sx_e * (len(fr) / d) - xbar.sum(axis=0)
+                        H += ((a2 / a0[:, None, None]).sum(axis=0)
+                              - np.einsum("li,lj->ij", xbar, xbar))
+            try:
+                step = np.linalg.solve(H, U)
+            except np.linalg.LinAlgError:
+                step = np.linalg.pinv(H) @ U
+            beta = beta + step
+            if abs(loglik - loglik_prev) < tol:
+                converged = True
+                break
+            loglik_prev = loglik
+        else:
+            converged = False
     if not converged:
         import warnings
 
@@ -812,127 +813,127 @@ def weibull_aft(df: DataFrame, time: str, event: str,
         raise ValueError("event indicator must lie in [0, 1]")
     # small-design fast path: one collect, then every Newton scan (and
     # each step-halving re-scan) is numpy instead of a Spark job
-    tex = _collect_small_tex(sub, k, int(chk["n"]))
-    if tex is None:
-        sub = sub.cache()
-    p = k + 1                                   # intercept first
-    xs = [F.lit(1.0)] + [F.col(f"__x{i}") for i in range(k)]
-    lt = F.log("__t")
-    dl = F.col("__e")
+    with persisted() as keep:
+        tex = _collect_small_tex(sub, k, int(chk["n"]))
+        if tex is None:
+            sub = keep(sub.cache())
+        p = k + 1                                   # intercept first
+        xs = [F.lit(1.0)] + [F.col(f"__x{i}") for i in range(k)]
+        lt = F.log("__t")
+        dl = F.col("__e")
 
-    if tex is not None:
-        tn, en, Xn = tex
-        Xn1 = np.column_stack([np.ones(len(tn)), Xn])   # [1, x...]
-        ltn = np.log(tn)
+        if tex is not None:
+            tn, en, Xn = tex
+            Xn1 = np.column_stack([np.ones(len(tn)), Xn])   # [1, x...]
+            ltn = np.log(tn)
 
-    # OLS of log t on X seeds β (ignores censoring — a start, not a fit)
-    A0 = np.empty((p, p))
-    b0 = np.empty(p)
-    if tex is not None:
-        for i in range(p):
-            b0[i] = float((Xn1[:, i] * ltn).sum())
-            for j in range(i, p):
-                A0[i, j] = A0[j, i] = float((Xn1[:, i] * Xn1[:, j]).sum())
-    else:
-        aggs = []
-        for i in range(p):
-            aggs.append(F.sum(xs[i] * lt).alias(f"b{i}"))
-            for j in range(i, p):
-                aggs.append(F.sum(xs[i] * xs[j]).alias(f"a{i}_{j}"))
-        r0 = sub.agg(*aggs).collect()[0]
-        for i in range(p):
-            b0[i] = r0[f"b{i}"]
-            for j in range(i, p):
-                A0[i, j] = A0[j, i] = r0[f"a{i}_{j}"]
-    theta = np.zeros(p + 1)                     # [β..., s=log σ]
-    try:
-        theta[:p] = np.linalg.solve(A0, b0)
-    except np.linalg.LinAlgError:
-        theta[:p] = np.linalg.lstsq(A0, b0, rcond=None)[0]
-
-    def _scan_np(th: np.ndarray):
-        # numpy mirror of the distributed _scan: same sufficient sums
-        beta, s = th[:p], float(th[p])
-        sig = math.exp(s)
-        xb = Xn1 @ beta
-        z = (ltn - xb) / sig
-        u = np.exp(z)
-        ll = float((en * (z - s) - u + en * -ltn).sum())
-        g = np.empty(p + 1)
-        H = np.empty((p + 1, p + 1))
-        for i in range(p):
-            g[i] = float((Xn1[:, i] * (u - en)).sum()) / sig
-            H[i, p] = H[p, i] = \
-                -float((Xn1[:, i] * (z * u + (u - en))).sum()) / sig
-            for j in range(i, p):
-                H[i, j] = H[j, i] = \
-                    -float((Xn1[:, i] * Xn1[:, j] * u).sum()) / (sig * sig)
-        g[p] = float((z * (u - en) - en).sum())
-        H[p, p] = -(float((z * u).sum()) + float((z * z * u).sum())
-                    - float((z * en).sum()))
-        return ll, g, H
-
-    def _scan_spark(th: np.ndarray):
-        beta, s = th[:p], float(th[p])
-        sig = math.exp(s)
-        xb: Column = F.lit(float(beta[0])) * xs[0]
-        for j in range(1, p):
-            xb = xb + F.lit(float(beta[j])) * xs[j]
-        z = (lt - xb) / F.lit(sig)
-        u = F.exp(z)
-        ag = [F.sum(dl * (z - F.lit(s)) - u + dl * -lt).alias("ll"),
-              F.sum(u - dl).alias("gu"),
-              F.sum(z * (u - dl) - dl).alias("gs"),
-              F.sum(z * u).alias("zu"),
-              F.sum(z * z * u).alias("zzu"),
-              F.sum(z * dl).alias("zd")]
-        for i in range(p):
-            ag.append(F.sum(xs[i] * (u - dl)).alias(f"g{i}"))
-            ag.append(F.sum(xs[i] * (z * u + (u - dl))).alias(f"c{i}"))
-            for j in range(i, p):
-                ag.append(F.sum(xs[i] * xs[j] * u).alias(f"h{i}_{j}"))
-        r = sub.agg(*ag).collect()[0]
-        ll = float(r["ll"])
-        g = np.empty(p + 1)
-        H = np.empty((p + 1, p + 1))
-        for i in range(p):
-            g[i] = float(r[f"g{i}"]) / sig
-            H[i, p] = H[p, i] = -float(r[f"c{i}"]) / sig
-            for j in range(i, p):
-                H[i, j] = H[j, i] = -float(r[f"h{i}_{j}"]) / (sig * sig)
-        g[p] = float(r["gs"])
-        H[p, p] = -(float(r["zu"]) + float(r["zzu"]) - float(r["zd"]))
-        return ll, g, H
-
-    _scan = _scan_np if tex is not None else _scan_spark
-
-    ll, g, H = _scan(theta)
-    converged = False
-    it = 0
-    for it in range(1, max_iter + 1):
+        # OLS of log t on X seeds β (ignores censoring — a start, not a fit)
+        A0 = np.empty((p, p))
+        b0 = np.empty(p)
+        if tex is not None:
+            for i in range(p):
+                b0[i] = float((Xn1[:, i] * ltn).sum())
+                for j in range(i, p):
+                    A0[i, j] = A0[j, i] = float((Xn1[:, i] * Xn1[:, j]).sum())
+        else:
+            aggs = []
+            for i in range(p):
+                aggs.append(F.sum(xs[i] * lt).alias(f"b{i}"))
+                for j in range(i, p):
+                    aggs.append(F.sum(xs[i] * xs[j]).alias(f"a{i}_{j}"))
+            r0 = sub.agg(*aggs).collect()[0]
+            for i in range(p):
+                b0[i] = r0[f"b{i}"]
+                for j in range(i, p):
+                    A0[i, j] = A0[j, i] = r0[f"a{i}_{j}"]
+        theta = np.zeros(p + 1)                     # [β..., s=log σ]
         try:
-            step = np.linalg.solve(H, g)
+            theta[:p] = np.linalg.solve(A0, b0)
         except np.linalg.LinAlgError:
-            step = np.linalg.pinv(H) @ g
-        new = theta - step
-        ll_new, g_new, H_new = _scan(new)
-        halves = 0
-        while ll_new < ll - 1e-12 and halves < 20:
-            step = step / 2.0
+            theta[:p] = np.linalg.lstsq(A0, b0, rcond=None)[0]
+
+        def _scan_np(th: np.ndarray):
+            # numpy mirror of the distributed _scan: same sufficient sums
+            beta, s = th[:p], float(th[p])
+            sig = math.exp(s)
+            xb = Xn1 @ beta
+            z = (ltn - xb) / sig
+            u = np.exp(z)
+            ll = float((en * (z - s) - u + en * -ltn).sum())
+            g = np.empty(p + 1)
+            H = np.empty((p + 1, p + 1))
+            for i in range(p):
+                g[i] = float((Xn1[:, i] * (u - en)).sum()) / sig
+                H[i, p] = H[p, i] = \
+                    -float((Xn1[:, i] * (z * u + (u - en))).sum()) / sig
+                for j in range(i, p):
+                    H[i, j] = H[j, i] = \
+                        -float((Xn1[:, i] * Xn1[:, j] * u).sum()) / (sig * sig)
+            g[p] = float((z * (u - en) - en).sum())
+            H[p, p] = -(float((z * u).sum()) + float((z * z * u).sum())
+                        - float((z * en).sum()))
+            return ll, g, H
+
+        def _scan_spark(th: np.ndarray):
+            beta, s = th[:p], float(th[p])
+            sig = math.exp(s)
+            xb: Column = F.lit(float(beta[0])) * xs[0]
+            for j in range(1, p):
+                xb = xb + F.lit(float(beta[j])) * xs[j]
+            z = (lt - xb) / F.lit(sig)
+            u = F.exp(z)
+            ag = [F.sum(dl * (z - F.lit(s)) - u + dl * -lt).alias("ll"),
+                  F.sum(u - dl).alias("gu"),
+                  F.sum(z * (u - dl) - dl).alias("gs"),
+                  F.sum(z * u).alias("zu"),
+                  F.sum(z * z * u).alias("zzu"),
+                  F.sum(z * dl).alias("zd")]
+            for i in range(p):
+                ag.append(F.sum(xs[i] * (u - dl)).alias(f"g{i}"))
+                ag.append(F.sum(xs[i] * (z * u + (u - dl))).alias(f"c{i}"))
+                for j in range(i, p):
+                    ag.append(F.sum(xs[i] * xs[j] * u).alias(f"h{i}_{j}"))
+            r = sub.agg(*ag).collect()[0]
+            ll = float(r["ll"])
+            g = np.empty(p + 1)
+            H = np.empty((p + 1, p + 1))
+            for i in range(p):
+                g[i] = float(r[f"g{i}"]) / sig
+                H[i, p] = H[p, i] = -float(r[f"c{i}"]) / sig
+                for j in range(i, p):
+                    H[i, j] = H[j, i] = -float(r[f"h{i}_{j}"]) / (sig * sig)
+            g[p] = float(r["gs"])
+            H[p, p] = -(float(r["zu"]) + float(r["zzu"]) - float(r["zd"]))
+            return ll, g, H
+
+        _scan = _scan_np if tex is not None else _scan_spark
+
+        ll, g, H = _scan(theta)
+        converged = False
+        it = 0
+        for it in range(1, max_iter + 1):
+            try:
+                step = np.linalg.solve(H, g)
+            except np.linalg.LinAlgError:
+                step = np.linalg.pinv(H) @ g
             new = theta - step
             ll_new, g_new, H_new = _scan(new)
-            halves += 1
-        done = float(np.max(np.abs(new - theta))) < tol \
-            or abs(ll_new - ll) < tol
-        theta, ll, g, H = new, ll_new, g_new, H_new
-        if done:
-            converged = True
-            break
-    if tex is not None:
-        n_ev = float(en.sum())
-    else:
-        n_ev = float(sub.agg(F.sum(dl).alias("d")).collect()[0]["d"])
-        sub.unpersist()
+            halves = 0
+            while ll_new < ll - 1e-12 and halves < 20:
+                step = step / 2.0
+                new = theta - step
+                ll_new, g_new, H_new = _scan(new)
+                halves += 1
+            done = float(np.max(np.abs(new - theta))) < tol \
+                or abs(ll_new - ll) < tol
+            theta, ll, g, H = new, ll_new, g_new, H_new
+            if done:
+                converged = True
+                break
+        if tex is not None:
+            n_ev = float(en.sum())
+        else:
+            n_ev = float(sub.agg(F.sum(dl).alias("d")).collect()[0]["d"])
 
     cov = np.linalg.pinv(-H)
     se = np.sqrt(np.maximum(np.diag(cov), 0.0))

@@ -41,6 +41,8 @@ from __future__ import annotations
 import math
 import threading
 import warnings
+from collections.abc import Iterator
+from contextlib import contextmanager
 from dataclasses import dataclass, field
 
 import numpy as np
@@ -49,6 +51,7 @@ from pyspark.ml.feature import Bucketizer
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from fast_causal_inference_spark.operators.design import persisted
 from fast_causal_inference_spark.serialization import ensure_udf_serializable
 
 
@@ -190,46 +193,46 @@ class CausalForest:
         self.trees_ = [{0: _Node(feats=self._draw_feats(rng))}
                        for _ in range(self.num_trees)]
 
-        work = self._prepare(df)
+        with self._prepare(df) as work:
+            frontier = [[0] for _ in range(self.num_trees)]
+            next_ids = [1] * self.num_trees
+            for _depth in range(self.max_depth):
+                if not any(frontier):
+                    break
+                stats = self._level_stats(work, frontier, split_half=True)
+                for t in range(self.num_trees):
+                    new_front = []
+                    for nid in frontier[t]:
+                        best = self._best_split(stats, t, nid)
+                        if best is None:
+                            continue
+                        feat, thr = best
+                        node = self.trees_[t][nid]
+                        node.feature = feat
+                        node.threshold = thr
+                        node.left = next_ids[t]
+                        node.right = next_ids[t] + 1
+                        # children draw their own mtry features (grf per-node)
+                        self.trees_[t][next_ids[t]] = _Node(
+                            feats=self._draw_feats(rng))
+                        self.trees_[t][next_ids[t] + 1] = _Node(
+                            feats=self._draw_feats(rng))
+                        new_front += [next_ids[t], next_ids[t] + 1]
+                        next_ids[t] += 2
+                    frontier[t] = new_front
 
-        frontier = [[0] for _ in range(self.num_trees)]
-        next_ids = [1] * self.num_trees
-        for _depth in range(self.max_depth):
-            if not any(frontier):
-                break
-            stats = self._level_stats(work, frontier, split_half=True)
-            for t in range(self.num_trees):
-                new_front = []
-                for nid in frontier[t]:
-                    best = self._best_split(stats, t, nid)
-                    if best is None:
-                        continue
-                    feat, thr = best
-                    node = self.trees_[t][nid]
-                    node.feature = feat
-                    node.threshold = thr
-                    node.left = next_ids[t]
-                    node.right = next_ids[t] + 1
-                    # children draw their own mtry features (grf per-node)
-                    self.trees_[t][next_ids[t]] = _Node(
-                        feats=self._draw_feats(rng))
-                    self.trees_[t][next_ids[t] + 1] = _Node(
-                        feats=self._draw_feats(rng))
-                    new_front += [next_ids[t], next_ids[t] + 1]
-                    next_ids[t] += 2
-                frontier[t] = new_front
-
-        # honest leaf moments on the estimation half
-        for (t, nid), arms in self._leaf_stats(work).items():
-            node = self.trees_[t][nid]
-            node.n0, node.s0 = arms.get(0, (0.0, 0.0))
-            node.n1, node.s1 = arms.get(1, (0.0, 0.0))
-        work.unpersist()
+            # honest leaf moments on the estimation half
+            for (t, nid), arms in self._leaf_stats(work).items():
+                node = self.trees_[t][nid]
+                node.n0, node.s0 = arms.get(0, (0.0, 0.0))
+                node.n1, node.s1 = arms.get(1, (0.0, 0.0))
         return self
 
-    def _prepare(self, df: DataFrame) -> DataFrame:
+    @contextmanager
+    def _prepare(self, df: DataFrame) -> Iterator[DataFrame]:
         """Sketch the fine bin grid and build the enriched, cached row
-        relation every level job and the honest leaf job scan."""
+        relation every level job and the honest leaf job scan; yields it
+        for the caller's ``with`` block and releases it when that exits."""
         tcol = F.expr(self.treatment).cast("int")
         ycol = F.expr(self.outcome).cast("double")
         feat_cols = sorted({c for f in self.features for c in
@@ -253,73 +256,76 @@ class CausalForest:
                                for i, feat in enumerate(self.features)}
         n_parts = int(df.sparkSession.conf.get(
             "spark.sql.shuffle.partitions", "32"))
-        base = work.withColumn("__h", rowh) \
-                   .repartition(n_parts, F.col("__h")).cache()
+        with persisted() as keep:
+            base = keep(work.withColumn("__h", rowh)
+                        .repartition(n_parts, F.col("__h")).cache())
 
-        # ONE fine global quantile grid (8× n_bins, capped at 128): the
-        # per-node candidate re-sketch in _best_split re-bins within each
-        # node's own range on this grid, so deep narrow nodes keep
-        # candidate resolution without a per-node sketch job.  The sketch
-        # reads the RAW input (deterministic scan order — sketching the
-        # shuffled cache would make the GK summaries order-dependent) and
-        # runs CONCURRENTLY with the cache materialization, so fit startup
-        # costs max(sketch, cache build) instead of their sum.
-        n_fine = min(128, max(self.n_bins, 2) * 8)
-        probs = [i / n_fine for i in range(1, n_fine)]
-        fcols = [f"__feat{i}" for i in range(len(self.features))]
-        fwork = df.select(*[F.expr(f).cast("double").alias(c)
-                            for f, c in zip(self.features, fcols)])
-        warm = threading.Thread(target=base.count)
-        warm.start()
-        # candidate thresholds need no sub-0.1% precision (grf SAMPLES its
-        # candidates); 0.005 halves the sketch-job cost on wide inputs
-        all_edges = fwork.approxQuantile(fcols, probs, 0.005)
-        warm.join()
-        self.fine_edges_ = {}
-        for feat, edges in zip(self.features, all_edges):
-            self.fine_edges_[feat] = sorted(set(edges))
+            # ONE fine global quantile grid (8× n_bins, capped at 128): the
+            # per-node candidate re-sketch in _best_split re-bins within each
+            # node's own range on this grid, so deep narrow nodes keep
+            # candidate resolution without a per-node sketch job.  The sketch
+            # reads the RAW input (deterministic scan order — sketching the
+            # shuffled cache would make the GK summaries order-dependent) and
+            # runs CONCURRENTLY with the cache materialization, so fit startup
+            # costs max(sketch, cache build) instead of their sum.
+            n_fine = min(128, max(self.n_bins, 2) * 8)
+            probs = [i / n_fine for i in range(1, n_fine)]
+            fcols = [f"__feat{i}" for i in range(len(self.features))]
+            fwork = df.select(*[F.expr(f).cast("double").alias(c)
+                                for f, c in zip(self.features, fcols)])
+            warm = threading.Thread(target=base.count)
+            warm.start()
+            # candidate thresholds need no sub-0.1% precision (grf SAMPLES its
+            # candidates); 0.005 halves the sketch-job cost on wide inputs
+            all_edges = fwork.approxQuantile(fcols, probs, 0.005)
+            warm.join()
+            self.fine_edges_ = {}
+            for feat, edges in zip(self.features, all_edges):
+                self.fine_edges_[feat] = sorted(set(edges))
 
-        # enrich the cache ONCE with fine-bin ids and per-tree
-        # (membership, half) bits: every level job and the honest leaf
-        # job then scan small precomputed ints instead of re-binning and
-        # re-drawing two hashes per tree per row.  The bin ids come from
-        # one Bucketizer binary search per feature (``_with_fine_bins``):
-        # the nested-WHEN bin trees it replaced cost ~1.2 s of driver-side
-        # planning per fit on 4 features × 127 edges, before any task ran.
-        # One cheap extra pass over the cached base materializes it.
-        binned = _with_fine_bins(base, {
-            self._bin_col_names[f]: (F.expr(f).cast("double"),
-                                     self.fine_edges_[f])
-            for f in self.features})
-        enrich = {}
-        for t in range(self.num_trees):
-            enrich[f"__m{t}"] = self._membership(t)
-            enrich[f"__sh{t}"] = self._half(t)
-        work = binned.withColumns(enrich).cache()
-        # materialize the enriched cache AND validate the treatment
-        # coding in the same job: a non-0/1 coding (1/2, strings casting
-        # to NULL) would otherwise fail every node's n0>0/n1>0 check and
-        # silently grow zero trees (all-NaN predictions)
-        chk = work.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum((F.col("__t") == 0).cast("long")).alias("n0"),
-            F.sum((F.col("__t") == 1).cast("long")).alias("n1"),
-        ).collect()[0]
-        n0, n1 = int(chk["n0"] or 0), int(chk["n1"] or 0)
-        if n0 == 0 or n1 == 0:
-            work.unpersist()
-            raise ValueError(
-                "causal_forest: treatment must be a 0/1 indicator with "
-                f"both arms present — {self.treatment!r} has n0={n0}, "
-                f"n1={n1} (a 1/2 or string coding leaves one arm empty "
-                "after the int cast, so no node could ever split)")
-        if n0 + n1 < int(chk["n"]):
-            warnings.warn(
-                f"causal_forest: {int(chk['n']) - n0 - n1} rows have "
-                "treatment outside {0, 1} and are ignored by every "
-                "split and leaf", stacklevel=3)
-        base.unpersist()
-        return work
+            # enrich the cache ONCE with fine-bin ids and per-tree
+            # (membership, half) bits: every level job and the honest leaf
+            # job then scan small precomputed ints instead of re-binning and
+            # re-drawing two hashes per tree per row.  The bin ids come from
+            # one Bucketizer binary search per feature (``_with_fine_bins``):
+            # the nested-WHEN bin trees it replaced cost ~1.2 s of driver-side
+            # planning per fit on 4 features × 127 edges, before any task ran.
+            # One cheap extra pass over the cached base materializes it.
+            binned = _with_fine_bins(base, {
+                self._bin_col_names[f]: (F.expr(f).cast("double"),
+                                         self.fine_edges_[f])
+                for f in self.features})
+            enrich = {}
+            for t in range(self.num_trees):
+                enrich[f"__m{t}"] = self._membership(t)
+                enrich[f"__sh{t}"] = self._half(t)
+            work = keep(binned.withColumns(enrich).cache())
+            # materialize the enriched cache AND validate the treatment
+            # coding in the same job: a non-0/1 coding (1/2, strings casting
+            # to NULL) would otherwise fail every node's n0>0/n1>0 check and
+            # silently grow zero trees (all-NaN predictions)
+            chk = work.agg(
+                F.count(F.lit(1)).alias("n"),
+                F.sum((F.col("__t") == 0).cast("long")).alias("n0"),
+                F.sum((F.col("__t") == 1).cast("long")).alias("n1"),
+            ).collect()[0]
+            n0, n1 = int(chk["n0"] or 0), int(chk["n1"] or 0)
+            if n0 == 0 or n1 == 0:
+                raise ValueError(
+                    "causal_forest: treatment must be a 0/1 indicator with "
+                    f"both arms present — {self.treatment!r} has n0={n0}, "
+                    f"n1={n1} (a 1/2 or string coding leaves one arm empty "
+                    "after the int cast, so no node could ever split)")
+            if n0 + n1 < int(chk["n"]):
+                warnings.warn(
+                    f"causal_forest: {int(chk['n']) - n0 - n1} rows have "
+                    "treatment outside {0, 1} and are ignored by every "
+                    "split and leaf", stacklevel=4)
+            # early release: every later job reads the enriched cache,
+            # so holding base through the level loop would pin a second
+            # full copy of the rows for the whole fit
+            base.unpersist()
+            yield work
 
     # -- level machinery ------------------------------------------------
     def _membership(self, t: int) -> Column:

@@ -112,8 +112,7 @@ def test_level_stats_match_join_form(forest_df, fitted):
     form's frame, float sums compared bit for bit, at two depths of an
     8-tree forest whose nodes draw mtry=2 of 3 features (split half at
     depth 1, honest half at depth 2)."""
-    work = fitted._prepare(forest_df)
-    try:
+    with fitted._prepare(forest_df) as work:
         for depth, split_half in ((1, True), (2, False)):
             cut, frontier = _grown_to(fitted, depth)
             assert sum(map(len, frontier)) >= 2 * depth
@@ -121,5 +120,3 @@ def test_level_stats_match_join_form(forest_df, fitted):
             want = _join_level_stats(cut, work, frontier, split_half)
             assert len(got) > 0
             assert _sorted_bits(got) == _sorted_bits(want), depth
-    finally:
-        work.unpersist()
