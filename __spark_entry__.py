@@ -6349,13 +6349,9 @@ SELECT 'icc', 'value~cl101', stat, round(value, 6) FROM (
 """
 
 
-def _golden_fragment(key: str) -> str:
-    """Wrap a golden VALUES oracle so it can ride UNION ALL by name."""
-    frag = _golden_oracles().get(key)
-    if frag is None:
-        return ("SELECT NULL AS variant, NULL AS item, NULL AS stat, "
-                "NULL AS value WHERE FALSE")
-    return f"SELECT variant, item, stat, value FROM ({frag}) __g_{key}"
+_LONG_COLS = ("variant", "item", "stat", "value")
+_ITE_COLS = ("variant", "l_returnflag", "avg_ite")
+_KNN_COLS = ("variant", "query_id", "vec_id", "rank", "score")
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
@@ -6449,9 +6445,20 @@ def _golden_oracles() -> dict[str, str]:
 
 
 def oracle_sql() -> dict[str, str]:
+    gold = _golden_oracles()
+
+    def frag(key: str, cols: tuple[str, ...] = _LONG_COLS) -> str:
+        """`` UNION ALL `` + ``cols`` of the golden VALUES oracle ``key``,
+        or an empty relation of ``cols`` when there is no such golden."""
+        if key not in gold:
+            return (" UNION ALL SELECT "
+                    + ", ".join(f"NULL AS {c}" for c in cols) + " WHERE FALSE")
+        return (f" UNION ALL SELECT {', '.join(cols)} "
+                f"FROM ({gold[key]}) __g_{key}")
+
     # pseudo-keys ("family__part") are hybrid-oracle fragments composed
     # below, never standalone gates
-    goldens = {k: v for k, v in _golden_oracles().items() if "__" not in k}
+    goldens = {k: v for k, v in gold.items() if "__" not in k}
     return {
         **goldens,
         "q1_pricing_summary": _Q1_SQL,
@@ -6470,82 +6477,30 @@ def oracle_sql() -> dict[str, str]:
         "quantile_test_bucket": _QTB_SQL,
         "describe_quantiles": _DESCRIBE_QUANTILES_SQL,
         "matrix_ops": _MATRIX_OPS_SQL,
-        "ols": (_OLS_FAMILY_SQL + " UNION ALL "
-                + "SELECT variant, item, stat, value FROM ("
-                + _golden_oracles().get(
-                    "ols__heckman", "SELECT NULL AS variant, NULL AS item, "
-                    "NULL AS stat, NULL AS value WHERE FALSE") + ") __oh"
-                + " UNION ALL SELECT variant, item, stat, value FROM ("
-                + _golden_oracles().get(
-                    "ols__quantreg", "SELECT NULL AS variant, NULL AS item, "
-                    "NULL AS stat, NULL AS value WHERE FALSE") + ") __oq"),
+        "ols": (_OLS_FAMILY_SQL + frag("ols__heckman")
+                + frag("ols__quantreg")),
         "robust_ols": _ROBUST_OLS_SQL,
-        "did": (_DID_SQL + " UNION ALL SELECT name, beta FROM ("
-                + _golden_oracles().get(
-                    "did__synth", "SELECT NULL AS name, NULL AS beta "
-                    "WHERE FALSE") + ") __ds"
-                + " UNION ALL SELECT name, beta FROM ("
-                + _golden_oracles().get(
-                    "did__event", "SELECT NULL AS name, NULL AS beta "
-                    "WHERE FALSE") + ") __de"
+        "did": (_DID_SQL + frag("did__synth", ("name", "beta"))
+                + frag("did__event", ("name", "beta"))
                 + " UNION ALL SELECT name, beta FROM ("
                 + _DID_CS_SQL + ") __cs"
-                + " UNION ALL SELECT name, beta FROM ("
-                + _golden_oracles().get(
-                    "did__its", "SELECT NULL AS name, NULL AS beta "
-                    "WHERE FALSE") + ") __di"),
+                + frag("did__its", ("name", "beta"))),
         "iv_regression": _IV_SQL,
         "linear_dml": _LINEAR_DML_SQL,
-        "auc": (_AUC_FAMILY_SQL + " UNION ALL "
-                + "SELECT variant, item, stat, value FROM ("
-                + _golden_oracles().get(
-                    "auc__glm", "SELECT NULL AS variant, NULL AS item, "
-                    "NULL AS stat, NULL AS value WHERE FALSE") + ") __gl"),
-        "survival": (_KM_LONG_SQL + " UNION ALL "
-                     + _golden_fragment("survival__cox")),
-        "t_learner": (
-            _T_LEARNER_SQL + " UNION ALL "
-            + "SELECT variant, l_returnflag, avg_ite FROM ("
-            + _golden_oracles().get(
-                "t_learner__cvt", "SELECT NULL AS variant, NULL AS "
-                "l_returnflag, NULL AS avg_ite WHERE FALSE") + ") __tc "
-            + "UNION ALL SELECT variant, l_returnflag, avg_ite FROM ("
-            + _golden_oracles().get(
-                "t_learner__x", "SELECT NULL AS variant, NULL AS "
-                "l_returnflag, NULL AS avg_ite WHERE FALSE") + ") __tx "
-            + "UNION ALL SELECT variant, l_returnflag, avg_ite FROM ("
-            + _golden_oracles().get(
-                "t_learner__prop", "SELECT NULL AS variant, NULL AS "
-                "l_returnflag, NULL AS avg_ite WHERE FALSE") + ") __tp "
-            + "UNION ALL SELECT variant, l_returnflag, avg_ite FROM ("
-            + _golden_oracles().get(
-                "t_learner__retro", "SELECT NULL AS variant, NULL AS "
-                "l_returnflag, NULL AS avg_ite WHERE FALSE") + ") __tr "
-            + "UNION ALL SELECT variant, l_returnflag, avg_ite FROM ("
-            + _golden_oracles().get(
-                "t_learner__r", "SELECT NULL AS variant, NULL AS "
-                "l_returnflag, NULL AS avg_ite WHERE FALSE") + ") __trl "
-            + "UNION ALL SELECT variant, l_returnflag, avg_ite FROM ("
-            + _golden_oracles().get(
-                "t_learner__dr", "SELECT NULL AS variant, NULL AS "
-                "l_returnflag, NULL AS avg_ite WHERE FALSE") + ") __td"),
+        "auc": _AUC_FAMILY_SQL + frag("auc__glm"),
+        "survival": _KM_LONG_SQL + frag("survival__cox"),
+        "t_learner": (_T_LEARNER_SQL
+                      + "".join(frag(f"t_learner__{k}", _ITE_COLS)
+                                for k in ("cvt", "x", "prop", "retro", "r",
+                                          "dr"))),
         "ate": _ATE_SQL,
-        "matching": (
-            _MATCHING_FAMILY_SQL + " UNION ALL "
-            + "SELECT variant, item, stat, value FROM ("
-            + _golden_oracles().get(
-                "matching__prognostic", "SELECT NULL AS variant, NULL AS "
-                "item, NULL AS stat, NULL AS value WHERE FALSE") + ") __mp"
-            + " UNION ALL SELECT variant, item, stat, value FROM ("
-            + _golden_oracles().get(
-                "matching__entropy", "SELECT NULL AS variant, NULL AS "
-                "item, NULL AS stat, NULL AS value WHERE FALSE") + ") __me"),
+        "matching": (_MATCHING_FAMILY_SQL + frag("matching__prognostic")
+                     + frag("matching__entropy")),
         "multi_arm_tests": _MULTI_ARM_SQL,
         "contingency_tests": _CONTINGENCY_SQL,
         "multiple_testing": _MULTIPLE_TESTING_SQL,
         "temporal_ops": _TEMPORAL_SQL,
-        "power_effect_size": (_EFFECT_SIZE_SQL + " UNION ALL "
-                              + _golden_fragment("power__closed")),
+        "power_effect_size": _EFFECT_SIZE_SQL + frag("power__closed"),
         "group_set": _GROUP_SET_SQL,
         "lift_gain": _LIFT_FAMILY_SQL,
         "exact_dedup": _EXACT_DEDUP_SQL,
@@ -6556,33 +6511,17 @@ def oracle_sql() -> dict[str, str]:
         "ngram_jaccard_dedup": _NGRAM_JACCARD_SQL,
         "dedup_components": _DEDUP_COMPONENTS_SQL,
         "knn": ("SELECT 'exact' AS variant, query_id, vec_id, rank, score "
-                + "FROM (" + _KNN_SQL + ") __kx UNION ALL "
-                + "SELECT variant, query_id, vec_id, rank, score FROM ("
-                + _golden_oracles().get(
-                    "knn__ivf", "SELECT NULL AS variant, NULL AS query_id, "
-                    "NULL AS vec_id, NULL AS rank, NULL AS score "
-                    "WHERE FALSE") + ") __ki UNION ALL "
-                + "SELECT variant, query_id, vec_id, rank, score FROM ("
-                + _golden_oracles().get(
-                    "knn__lsh", "SELECT NULL AS variant, NULL AS query_id, "
-                    "NULL AS vec_id, NULL AS rank, NULL AS score "
-                    "WHERE FALSE") + ") __kl UNION ALL "
-                + "SELECT variant, query_id, vec_id, rank, score FROM ("
-                + _golden_oracles().get(
-                    "knn__pq", "SELECT NULL AS variant, NULL AS query_id, "
-                    "NULL AS vec_id, NULL AS rank, NULL AS score "
-                    "WHERE FALSE") + ") __kp UNION ALL "
+                + "FROM (" + _KNN_SQL + ") __kx"
+                + frag("knn__ivf", _KNN_COLS) + frag("knn__lsh", _KNN_COLS)
+                + frag("knn__pq", _KNN_COLS) + " UNION ALL "
                 + "SELECT 'bm25' AS variant, query_id, vec_id, rank, score "
                 + "FROM (" + _BM25_SQL + ") __kb UNION ALL "
                 + "SELECT 'tfidf' AS variant, query_id, vec_id, rank, score "
                 + "FROM (" + _TFIDF_SQL + ") __kt"),
         "embedding_near_dup": (
-            _EMB_NEAR_DUP_SQL + " UNION ALL "
-            + "SELECT variant, id_a, id_b, cosine FROM ("
-            + _golden_oracles().get(
-                "embedding_near_dup__pca",
-                "SELECT NULL AS variant, NULL AS id_a, NULL AS id_b, "
-                "NULL AS cosine WHERE FALSE") + ") __gp"),
+            _EMB_NEAR_DUP_SQL
+            + frag("embedding_near_dup__pca",
+                   ("variant", "id_a", "id_b", "cosine"))),
         "media_features": _MEDIA_FEATURES_SQL,
         "text_profile": _TEXT_PROFILE_SQL,
         "vector_functions": _VECTOR_FUNCTIONS_SQL,

@@ -206,7 +206,7 @@ def entropy_balancing(df: DataFrame, T: str, features: list[str],
         des = collect_small_design(ctl, cs, F.lit(0.0), F.lit(0.0),
                                    n_rows=int(n0))
         if des is None:
-            ctl = keep(repartition_big_design(ctl, int(n0)))
+            ctl = repartition_big_design(ctl, int(n0), keep)
 
         def _scan_np(lam: np.ndarray, shift: float):
             C, _, _ = des

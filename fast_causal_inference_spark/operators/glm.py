@@ -9,9 +9,11 @@ style strictly-positive skewed outcomes, log link), and gaussian
 (identity link — one iteration, equals OLS; included so family is a
 config knob, not a code path).
 
-Same execution shape as ``logistic.py``: each IRLS iteration is ONE
-aggregation of the weighted Gramian Σ s·xxᵀ and Σ s·x·z (p(p+3)/2
-doubles shuffled, map-side combined), solved on the driver.  Row-scale
+Every fitter here, and ``logistic.py``, runs the shared Fisher-scoring
+kernel in ``design.py``: each IRLS iteration is ONE aggregation of the
+weighted Gramian Σ s·xxᵀ and Σ s·x·z (p(p+3)/2 doubles shuffled,
+map-side combined), solved on the driver; a fitter supplies its
+per-row (weight, working response) rule.  Row-scale
 arithmetic stays in whole-stage codegen; nothing iterates over rows in
 Python.  At 100 TB each iteration is a single scan — for k features the
 network cost is O(k²) per iteration regardless of row count.
@@ -20,17 +22,19 @@ network cost is O(k²) per iteration regardless of row count.
 from __future__ import annotations
 
 import math
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, replace
 
 import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from fast_causal_inference_spark.operators.design import (
-    collect_small_design,
-    persist_design,
+    Rule,
+    gramian_aggs,
+    irls_frame,
     persisted,
-    repartition_big_design,
+    prepare_design,
+    unpack_gramian,
 )
 
 
@@ -133,9 +137,10 @@ def _irls_wz(family: str, mu: Column, etac: Column, yc: Column,
              offc: Column, var_power: float) -> tuple[Column, Column]:
     """(IRLS weight, working response) Columns for one Fisher step.
 
-    Shared by :func:`glm` and :func:`glm_grouped` (log / identity /
-    canonical-logit links — ``_binomial_glm`` keeps its own chain for
-    the non-canonical probit/cloglog links).  The working response
+    The rule of every log / identity / canonical-logit fit
+    (:func:`_family_rule`: :func:`glm`, :func:`glm_grouped` and
+    ``logistic_regression``); ``_binomial_glm`` has its own rule for
+    the non-canonical probit/cloglog weights.  The working response
     divides by dμ/dη — which only coincides with the weight for the
     canonical poisson/logit cases."""
     if family == "gaussian":
@@ -180,6 +185,33 @@ def _irls_wz_np(family: str, mu: np.ndarray, eta: np.ndarray,
         dmu = mu
     z = (eta - off) + (y - mu) / dmu
     return s, z
+
+
+def _family_rule(family: str, var_power: float = 1.5) -> Rule:
+    """Fisher-scoring :class:`~.design.Rule` of ``family``: the mean is
+    η (gaussian), the logistic function (binomial, canonical logit) or
+    exp(η) (log link), and (w, z) come from :func:`_irls_wz`."""
+    def stage(eta: Column) -> list[Column]:
+        if family == "gaussian":
+            return []
+        if family == "binomial":
+            return [F.lit(1.0) / (F.lit(1.0) + F.exp(-eta))]
+        return [F.exp(eta)]
+
+    def wz(eta, y, off, staged):
+        return _irls_wz(family, staged[0] if staged else eta, eta, y, off,
+                        var_power)
+
+    def wz_np(eta, y, off):
+        if family == "gaussian":
+            mu = eta
+        elif family == "binomial":
+            mu = 1.0 / (1.0 + np.exp(-eta))
+        else:
+            mu = np.exp(eta)
+        return _irls_wz_np(family, mu, eta, y, off, var_power)
+
+    return Rule(stage, wz, wz_np)
 
 
 def _dev_pearson(family: str, y: Column, mu: Column,
@@ -268,235 +300,131 @@ def glm(df: DataFrame, formula: str, family: str = "poisson",
     from fast_causal_inference_spark.operators.ols import parse_r_formula
 
     y_expr, feats = parse_r_formula(formula)
-    k = len(feats)
-    p = k + (1 if use_bias else 0)
-    if p == 0:
-        raise ValueError("empty design: no features and use_bias=False")
-    xs = ([F.lit(1.0)] if use_bias else []) + \
-        [F.expr(e).cast("double") for e in feats]
-    y = F.expr(y_expr).cast("double")
-    off = F.expr(offset).cast("double") if offset is not None else F.lit(0.0)
-    # complete-case filter: a NULL-y (or NULL-feature) row would otherwise
-    # enter the y-free Gramian sums but not the y-bearing ones, silently
-    # biasing the solve
-    cc = y.isNotNull() & off.isNotNull()
-    for e in feats:
-        cc = cc & F.expr(e).cast("double").isNotNull()
-    df = df.where(cc)
     log_link = family != "gaussian"
-    # persist the projected design for the IRLS loop (design.py) — the
-    # m0 scan below doubles as its materialization
+
+    def check(m0) -> None:
+        if m0["m"] is None:
+            raise ValueError("no non-NULL outcome rows")
+        if family == "gamma" and float(m0["lo"]) <= 0:
+            raise ValueError("gamma family needs strictly positive y")
+        if family in ("poisson", "quasipoisson", "tweedie") \
+                and float(m0["lo"]) < 0:
+            raise ValueError(f"{family} family needs non-negative y")
+
     with persisted() as keep:
-        df, y, xs, off = persist_design(
-            df, y, xs[1:] if use_bias else xs,
-            off=off if offset is not None else None,
-            use_bias=use_bias)
-        keep(df)
-
+        # the log links' start value and checks ride the design's
+        # materializing count
+        d = prepare_design(
+            keep, df, y_expr, feats, offset, use_bias,
+            probe=(lambda y: [F.avg(y).alias("m"), F.min(y).alias("lo")])
+            if log_link else None,
+            check=check if log_link else None)
+        df, y, off = d.work, d.y, d.off
+        p = len(d.xs)
         beta = np.zeros(p)
-        n0 = None
-        if log_link:
-            # start eta at log(mean(y)) via the intercept when present —
-            # exp(0)=1 is a poor start for large counts; the scan also
-            # materializes the persisted design and yields the row count the
-            # small-design gate needs (saves its count job)
-            m0 = df.agg(F.avg(y).alias("m"), F.min(y).alias("lo"),
-                        F.count(F.lit(1)).alias("n")).collect()[0]
-            n0 = int(m0["n"])
-            if m0["m"] is None:
-                raise ValueError("no non-NULL outcome rows")
-            if family == "gamma" and float(m0["lo"]) <= 0:
-                raise ValueError("gamma family needs strictly positive y")
-            if family in ("poisson", "quasipoisson", "tweedie") \
-                    and float(m0["lo"]) < 0:
-                raise ValueError(f"{family} family needs non-negative y")
-            if use_bias and float(m0["m"]) > 0:
-                beta[0] = math.log(float(m0["m"]))
-
-        # small-input fast path (round 11, see design.collect_small_design):
-        # collect the persisted design ONCE and run the iterations in numpy
-        # — identical per-row algebra, one Spark job instead of one per step
-        if n0 is None:
-            n0 = int(df.count())
-        des = collect_small_design(df, xs, y, off, n_rows=n0)
-        if des is None:
-            # big design: spread the cache across cores before the IRLS
-            # loop starts re-scanning it (design.repartition_big_design)
-            df = keep(repartition_big_design(df, n0))
-
-        def _sums_np(beta: np.ndarray) -> tuple[np.ndarray, np.ndarray,
-                                                float]:
-            Xd, yv, ov = des
-            eta_v = Xd @ beta + ov
-            mu_v = np.exp(eta_v) if log_link else eta_v
-            w_v, z_v = _irls_wz_np(family, mu_v, eta_v, yv, ov, var_power)
-            Xw = Xd * w_v[:, None]
-            return Xw.T @ Xd, Xd.T @ (w_v * z_v), float(len(yv))
-
-        def _sums_spark(beta: np.ndarray) -> tuple[np.ndarray, np.ndarray,
-                                                   float]:
-            eta: Column = F.lit(float(beta[0])) * xs[0]
-            for j in range(1, p):
-                eta = eta + F.lit(float(beta[j])) * xs[j]
-            eta = eta + off
-            # two-stage projection: materialize η, then μ = exp(η), then the
-            # per-row w/z.  μ is referenced three times downstream; staged
-            # Projects keep exp() evaluated once per row (CollapseProject
-            # leaves multi-referenced non-cheap aliases in place), and the
-            # per-row arithmetic — hence every float sum — is bit-identical
-            # to the inlined form
-            base = df.select(*[c.alias(f"__p{i}__") for i, c in enumerate(xs)],
-                             y.alias("__yy__"), eta.alias("__eta__"),
-                             off.alias("__o__"))
-            etac, yc, offc = F.col("__eta__"), F.col("__yy__"), F.col("__o__")
-            if not log_link:                      # gaussian/identity: one shot
-                mu = etac
-                mid = base
-            else:
-                mid = base.select("*", F.exp(etac).alias("__mu__"))
-                mu = F.col("__mu__")
-            # weight + working response on the X-only predictor (offset is
-            # fixed) — shared per-family algebra (_irls_wz)
-            s, z = _irls_wz(family, mu, etac, yc, offc, var_power)
-            step = mid.select(*[F.col(f"__p{i}__") for i in range(p)],
-                              s.alias("__w__"), z.alias("__z__"),
-                              F.col("__yy__"))
-            ps = [F.col(f"__p{i}__") for i in range(p)]
-            sc, zc = F.col("__w__"), F.col("__z__")
-            aggs = []
-            for i in range(p):
-                aggs.append(F.sum(sc * ps[i] * zc).alias(f"b{i}"))
-                for j in range(i, p):
-                    aggs.append(F.sum(sc * ps[i] * ps[j]).alias(f"a{i}_{j}"))
-            aggs.append(F.count(F.col("__yy__")).alias("n__"))
-            row = step.agg(*aggs).collect()[0]
-            A = np.empty((p, p))
-            b = np.empty(p)
-            for i in range(p):
-                b[i] = row[f"b{i}"]
-                for j in range(i, p):
-                    A[i, j] = A[j, i] = row[f"a{i}_{j}"]
-            return A, b, float(row["n__"])
-
-        sums = _sums_np if des is not None else _sums_spark
-        n = 0.0
-        converged = False
-        it = 0
-        A = np.eye(p)
-        for it in range(1, max_iter + 1):
-            A, b, n = sums(beta)
-            new_beta = np.linalg.solve(A, b)
-            delta = float(np.max(np.abs(new_beta - beta)))
-            beta = new_beta
-            if delta < tol or not log_link:
-                converged = True
-                break
+        # start eta at log(mean(y)) via the intercept when present —
+        # exp(0)=1 is a poor start for large counts
+        if log_link and use_bias and float(d.probe["m"]) > 0:
+            beta[0] = math.log(float(d.probe["m"]))
+        rule = _family_rule(family, var_power)
+        beta, A, n, it, converged = d.newton(rule, beta, max_iter, tol,
+                                             one_step=not log_link)
 
         # final-fit scalars: deviance, null deviance, Pearson dispersion —
         # ONE more scan
-        eta = F.lit(float(beta[0])) * xs[0]
-        for j in range(1, p):
-            eta = eta + F.lit(float(beta[j])) * xs[j]
-        eta = eta + off
+        eta = d.eta(beta)
+        mu = eta if family == "gaussian" else F.exp(eta)
+        scaled = family in ("quasipoisson", "gamma", "gaussian", "tweedie")
         if not compute_stats:
             # nuisance-fit fast path: no deviance scans; dispersion-scaled
             # families still need the Pearson χ² for their SEs (one reduced
             # aggregation), the rest skip the pass entirely
-            df_p = df
-            dispersion = 1.0
-            cov = np.linalg.inv(A)
-            if family in ("quasipoisson", "gamma", "gaussian", "tweedie"):
-                mu_f = eta if family == "gaussian" else F.exp(eta)
-                pearson_f = _dev_pearson(family, y, mu_f, var_power)[1]
-                pchi = float(df_p.agg(F.sum(pearson_f).alias("p"))
-                             .collect()[0]["p"])
-                dispersion = pchi / max(n - p, 1.0)
-                cov = cov * dispersion
-            stderr = np.sqrt(np.maximum(np.diag(cov), 0.0))
-            return GlmModel(family=family, feature_exprs=feats,
-                            use_bias=use_bias, beta=beta, stderr=stderr, n=n,
-                            n_iter=it, converged=converged,
-                            deviance=float("nan"),
-                            null_deviance=float("nan"), dispersion=dispersion,
-                            offset=offset, y_expr=y_expr,
-                            var_power=var_power if family == "tweedie"
-                            else None)
-        mu = eta if family == "gaussian" else F.exp(eta)
-        dev_term, pearson = _dev_pearson(family, y, mu, var_power)
-        if family == "gaussian":
-            aux = y * y                           # → Σy² for TSS
-        elif family in ("poisson", "quasipoisson"):
-            aux = y * F.when(y > 0, F.log(y)).otherwise(F.lit(0.0))  # Σ y·log y
-        elif family == "tweedie":
-            aux = F.pow(y, F.lit(2.0 - var_power))  # Σ y^(2−p)
+            deviance = null_dev = float("nan")
+            pchi = df.agg(F.sum(_dev_pearson(family, y, mu, var_power)[1])
+                          .alias("p")).collect()[0]["p"] if scaled else None
         else:
-            aux = F.log(y)                        # gamma: Σ log y
-        fin = df.agg(F.sum(dev_term).alias("dev"),
-                     F.sum(pearson).alias("pchi"),
-                     F.avg(y).alias("ybar"),
-                     F.sum(aux).alias("aux"),
-                     F.sum(y).alias("ysum"),
-                     F.sum(F.exp(off)).alias("seo"),
-                     F.sum(y * F.exp(-off)).alias("syeo"),
-                     F.sum(y * F.exp(F.lit(1.0 - var_power) * off))
-                     .alias("syeo_t"),
-                     F.sum(F.exp(F.lit(2.0 - var_power) * off)).alias("seo_t"),
-                     F.sum(y - off).alias("syo"),
-                     F.sum((y - off) * (y - off)).alias("syo2")).collect()[0]
-        deviance = float(fin["dev"])
-        ybar = float(fin["ybar"])
-        if offset is None:
-            # intercept-only null model: μ₀ = ȳ, deviance in closed form
+            dev_term, pearson = _dev_pearson(family, y, mu, var_power)
             if family == "gaussian":
-                null_dev = float(fin["aux"]) - n * ybar * ybar
+                aux = y * y                           # → Σy² for TSS
             elif family in ("poisson", "quasipoisson"):
-                # 2Σ[y log(y/ȳ) − (y − ȳ)]; Σ(y−ȳ)=0
-                null_dev = 2 * (float(fin["aux"])
-                                - float(fin["ysum"]) * math.log(ybar)) \
-                    if ybar > 0 else 0.0
+                # Σ y·log y
+                aux = y * F.when(y > 0, F.log(y)).otherwise(F.lit(0.0))
             elif family == "tweedie":
-                # intercept-only MLE is μ₀ = ȳ (score Σ(y−μ)μ^(1−p) = 0)
-                p1, p2 = 1.0 - var_power, 2.0 - var_power
-                null_dev = 2 * (float(fin["aux"]) / (p1 * p2)
-                                - float(fin["ysum"]) * ybar ** p1 / p1
-                                + n * ybar ** p2 / p2) if ybar > 0 else 0.0
+                aux = F.pow(y, F.lit(2.0 - var_power))  # Σ y^(2−p)
             else:
-                # gamma: 2Σ[−log(y/ȳ) + (y−ȳ)/ȳ]; second term sums to 0
-                null_dev = 2 * (n * math.log(ybar) - float(fin["aux"]))
-        else:
-            # with an offset the null model is intercept-only PLUS the fixed
-            # offset (R's null.deviance convention); the intercept MLE is
-            # closed-form for every family here, the deviance at μ₀ needs
-            # one more scan because μ₀ varies by row
-            if family == "gaussian":
-                b0 = float(fin["syo"]) / n
-                null_dev = float(fin["syo2"]) - n * b0 * b0
-            else:
-                if family in ("poisson", "quasipoisson"):
-                    b0 = math.log(float(fin["ysum"]) / float(fin["seo"]))
-                    mu0 = F.exp(F.lit(b0) + off)
-                    nd_term = 2 * (F.when(y > 0, y * F.log(y / mu0))
-                                   .otherwise(F.lit(0.0)) - (y - mu0))
+                aux = F.log(y)                        # gamma: Σ log y
+            fin = df.agg(F.sum(dev_term).alias("dev"),
+                         F.sum(pearson).alias("pchi"),
+                         F.avg(y).alias("ybar"),
+                         F.sum(aux).alias("aux"),
+                         F.sum(y).alias("ysum"),
+                         F.sum(F.exp(off)).alias("seo"),
+                         F.sum(y * F.exp(-off)).alias("syeo"),
+                         F.sum(y * F.exp(F.lit(1.0 - var_power) * off))
+                         .alias("syeo_t"),
+                         F.sum(F.exp(F.lit(2.0 - var_power) * off))
+                         .alias("seo_t"),
+                         F.sum(y - off).alias("syo"),
+                         F.sum((y - off) * (y - off)).alias("syo2"),
+                         ).collect()[0]
+            deviance = float(fin["dev"])
+            ybar = float(fin["ybar"])
+            if offset is None:
+                # intercept-only null model: μ₀ = ȳ, deviance in closed form
+                if family == "gaussian":
+                    null_dev = float(fin["aux"]) - n * ybar * ybar
+                elif family in ("poisson", "quasipoisson"):
+                    # 2Σ[y log(y/ȳ) − (y − ȳ)]; Σ(y−ȳ)=0
+                    null_dev = 2 * (float(fin["aux"])
+                                    - float(fin["ysum"]) * math.log(ybar)) \
+                        if ybar > 0 else 0.0
                 elif family == "tweedie":
-                    # score Σ(y−μ₀)μ₀^(1−p) = 0 with μ₀ = e^{b0+off} solves
-                    # in closed form: e^{b0} = Σy·e^{(1−p)off} / Σe^{(2−p)off}
+                    # intercept-only MLE is μ₀ = ȳ
+                    # (score Σ(y−μ)μ^(1−p) = 0)
                     p1, p2 = 1.0 - var_power, 2.0 - var_power
-                    b0 = math.log(float(fin["syeo_t"]) / float(fin["seo_t"]))
-                    mu0 = F.exp(F.lit(b0) + off)
-                    nd_term = 2 * (F.pow(y, F.lit(p2)) / F.lit(p1 * p2)
-                                   - y * F.pow(mu0, F.lit(p1)) / F.lit(p1)
-                                   + F.pow(mu0, F.lit(p2)) / F.lit(p2))
-                else:                             # gamma
-                    b0 = math.log(float(fin["syeo"]) / n)
-                    mu0 = F.exp(F.lit(b0) + off)
-                    nd_term = 2 * (-F.log(y / mu0) + (y - mu0) / mu0)
-                null_dev = float(
-                    df.agg(F.sum(nd_term).alias("nd")).collect()[0]["nd"])
+                    null_dev = 2 * (float(fin["aux"]) / (p1 * p2)
+                                    - float(fin["ysum"]) * ybar ** p1 / p1
+                                    + n * ybar ** p2 / p2) if ybar > 0 else 0.0
+                else:
+                    # gamma: 2Σ[−log(y/ȳ) + (y−ȳ)/ȳ]; second term sums to 0
+                    null_dev = 2 * (n * math.log(ybar) - float(fin["aux"]))
+            else:
+                # with an offset the null model is intercept-only PLUS the
+                # fixed offset (R's null.deviance convention); the intercept
+                # MLE is closed-form for every family here, the deviance at
+                # μ₀ needs one more scan because μ₀ varies by row
+                if family == "gaussian":
+                    b0 = float(fin["syo"]) / n
+                    null_dev = float(fin["syo2"]) - n * b0 * b0
+                else:
+                    if family in ("poisson", "quasipoisson"):
+                        b0 = math.log(float(fin["ysum"]) / float(fin["seo"]))
+                        mu0 = F.exp(F.lit(b0) + off)
+                        nd_term = 2 * (F.when(y > 0, y * F.log(y / mu0))
+                                       .otherwise(F.lit(0.0)) - (y - mu0))
+                    elif family == "tweedie":
+                        # score Σ(y−μ₀)μ₀^(1−p) = 0 with μ₀ = e^{b0+off}
+                        # solves in closed form:
+                        # e^{b0} = Σy·e^{(1−p)off} / Σe^{(2−p)off}
+                        p1, p2 = 1.0 - var_power, 2.0 - var_power
+                        b0 = math.log(float(fin["syeo_t"])
+                                      / float(fin["seo_t"]))
+                        mu0 = F.exp(F.lit(b0) + off)
+                        nd_term = 2 * (F.pow(y, F.lit(p2)) / F.lit(p1 * p2)
+                                       - y * F.pow(mu0, F.lit(p1)) / F.lit(p1)
+                                       + F.pow(mu0, F.lit(p2)) / F.lit(p2))
+                    else:                             # gamma
+                        b0 = math.log(float(fin["syeo"]) / n)
+                        mu0 = F.exp(F.lit(b0) + off)
+                        nd_term = 2 * (-F.log(y / mu0) + (y - mu0) / mu0)
+                    null_dev = float(
+                        df.agg(F.sum(nd_term).alias("nd")).collect()[0]["nd"])
+            pchi = fin["pchi"]
 
     dispersion = 1.0
     cov = np.linalg.inv(A)
-    if family in ("quasipoisson", "gamma", "gaussian", "tweedie"):
-        dispersion = float(fin["pchi"]) / max(n - p, 1.0)
+    if scaled:
+        dispersion = float(pchi) / max(n - p, 1.0)
         cov = cov * dispersion
     stderr = np.sqrt(np.maximum(np.diag(cov), 0.0))
     return GlmModel(family=family, feature_exprs=feats, use_bias=use_bias,
@@ -644,6 +572,7 @@ def glm_grouped(df: DataFrame, formula: str, group_expr: str,
                 eta = eta + F.col(f"__b{j}__") * xs[j]
             return eta + off
 
+        rule = _family_rule(family, var_power)
         n_by_g: dict = {}
         iters_by_g: dict = {g: 0 for g in betas}
         frozen: set = set()             # segments already at their fixed point
@@ -659,47 +588,14 @@ def glm_grouped(df: DataFrame, formula: str, group_expr: str,
             # from the final scan below, at exactly their final β.
             joined = _beta_join({g: b for g, b in betas.items()
                                  if g not in frozen} or betas)
-            base = joined.select(
-                "__g__", *[c.alias(f"__p{i}__") for i, c in enumerate(xs)],
-                y.alias("__yy__"), _eta().alias("__eta__"),
-                off.alias("__o__"))
-            etac, yc, offc = F.col("__eta__"), F.col("__yy__"), F.col("__o__")
-            if family == "gaussian":
-                mu = etac
-                mid = base
-            elif family == "binomial":
-                mid = base.select(
-                    "*", (F.lit(1.0) / (F.lit(1.0) + F.exp(-etac)))
-                    .alias("__mu__"))
-                mu = F.col("__mu__")
-            else:
-                mid = base.select("*", F.exp(etac).alias("__mu__"))
-                mu = F.col("__mu__")
-            s, z = _irls_wz(family, mu, etac, yc, offc, var_power)
-            step = mid.select("__g__",
-                              *[F.col(f"__p{i}__") for i in range(p)],
-                              s.alias("__w__"), z.alias("__z__"),
-                              F.col("__yy__"))
-            ps = [F.col(f"__p{i}__") for i in range(p)]
-            sc, zc = F.col("__w__"), F.col("__z__")
-            aggs = []
-            for i in range(p):
-                aggs.append(F.sum(sc * ps[i] * zc).alias(f"b{i}"))
-                for j in range(i, p):
-                    aggs.append(F.sum(sc * ps[i] * ps[j]).alias(f"a{i}_{j}"))
-            aggs.append(F.count(F.col("__yy__")).alias("n__"))
-            rows = step.groupBy("__g__").agg(*aggs).collect()
+            step = irls_frame(joined, xs, y, off, _eta(), rule,
+                              keys=("__g__",))
+            rows = step.groupBy("__g__").agg(*gramian_aggs(p)).collect()
             delta_max = 0.0
             A_by_g: dict = {}
             for r in rows:
                 gv = _norm(r["__g__"])
-                n_by_g[gv] = float(r["n__"])
-                A = np.empty((p, p))
-                b = np.empty(p)
-                for i in range(p):
-                    b[i] = r[f"b{i}"]
-                    for j in range(i, p):
-                        A[i, j] = A[j, i] = r[f"a{i}_{j}"]
+                A, b, n_by_g[gv] = unpack_gramian(r, p)
                 A_by_g[gv] = A
                 if gv in frozen:
                     continue
@@ -728,12 +624,7 @@ def glm_grouped(df: DataFrame, formula: str, group_expr: str,
         # final grouped scan: per-segment deviance + Pearson χ² at β̂
         joined = _beta_join(betas)
         etaf = _eta()
-        if family == "gaussian":
-            muf = etaf
-        elif family == "binomial":
-            muf = F.lit(1.0) / (F.lit(1.0) + F.exp(-etaf))
-        else:
-            muf = F.exp(etaf)
+        muf = (rule.stage(etaf) or [etaf])[0]     # identity link: μ = η
         fb = joined.select(
             "__g__", *[c.alias(f"__p{i}__") for i, c in enumerate(xs)],
             y.alias("__yy__"), muf.alias("__mu__"),
@@ -747,15 +638,9 @@ def glm_grouped(df: DataFrame, formula: str, group_expr: str,
         # pre-update Gramian)
         s_fin, _zf = _irls_wz(family, mu, F.col("__eta__"), yc,
                               F.col("__o__"), var_power)
-        psf = [F.col(f"__p{i}__") for i in range(p)]
-        fin_aggs = [F.sum(dev_term).alias("dev"),
-                    F.sum(pearson).alias("pchi"),
-                    F.count(F.col("__yy__")).alias("n__")]
-        for i in range(p):
-            for j in range(i, p):
-                fin_aggs.append(F.sum(s_fin * psf[i] * psf[j])
-                                .alias(f"fa{i}_{j}"))
-        fin_rows = fb.groupBy("__g__").agg(*fin_aggs).collect()
+        fin_rows = fb.groupBy("__g__").agg(
+            F.sum(dev_term).alias("dev"), F.sum(pearson).alias("pchi"),
+            *gramian_aggs(p, w=s_fin, rhs=False)).collect()
     fin = {_norm(r["__g__"]): r for r in fin_rows}
 
     out: dict = {}
@@ -763,13 +648,8 @@ def glm_grouped(df: DataFrame, formula: str, group_expr: str,
     for gv, beta in betas.items():
         fr = fin.get(gv)
         n = float(fr["n__"]) if fr is not None else n_by_g.get(gv, 0.0)
-        if fr is not None:
-            A = np.empty((p, p))
-            for i in range(p):
-                for j in range(i, p):
-                    A[i, j] = A[j, i] = fr[f"fa{i}_{j}"]
-        else:
-            A = A_by_g.get(gv)
+        A = unpack_gramian(fr, p, rhs=False)[0] if fr is not None \
+            else A_by_g.get(gv)
         try:
             cov = np.linalg.inv(A)
         except np.linalg.LinAlgError:
@@ -824,204 +704,106 @@ def _binomial_glm(df: DataFrame, formula: str, link: str,
     from fast_causal_inference_spark.operators.ols import parse_r_formula
 
     y_expr, feats = parse_r_formula(formula)
-    p = len(feats) + (1 if use_bias else 0)
-    if p == 0:
-        raise ValueError("empty design: no features and use_bias=False")
-    xs = ([F.lit(1.0)] if use_bias else []) + \
-        [F.expr(e).cast("double") for e in feats]
-    y = F.expr(y_expr).cast("double")
-    off = F.expr(offset).cast("double") if offset is not None else F.lit(0.0)
-    cc = y.isNotNull() & off.isNotNull()
-    for e in feats:
-        cc = cc & F.expr(e).cast("double").isNotNull()
-    df = df.where(cc)
     EPS = 1e-10
-    # persist the projected design for the Fisher-scoring loop
-    # (design.py); the small-design count gate doubles as its
-    # materialization
+
+    def _mu_dmu(eta: Column) -> tuple[Column, Column]:
+        if link == "logit":
+            mu = 1.0 / (1.0 + F.exp(-eta))
+            return mu, mu * (1.0 - mu)
+        if link == "probit":
+            from fast_causal_inference_spark.functions import erf
+
+            mu = 0.5 * (1.0 + erf(eta / F.lit(math.sqrt(2.0))))
+            dmu = F.exp(-eta * eta / 2.0) / F.lit(math.sqrt(2.0 * math.pi))
+            return mu, dmu
+        ex = F.exp(eta)                           # cloglog: μ = 1 − e^{−e^η}
+        return 1.0 - F.exp(-ex), ex * F.exp(-ex)
+
+    def _erf_np(x: np.ndarray) -> np.ndarray:
+        # libm erf element-wise WITHOUT ufunc boxing: map over plain
+        # Python floats (tolist) into a preallocated float64 buffer is
+        # ~6x faster than frompyfunc(...).astype(float) and calls the
+        # SAME math.erf, so every value is bit-identical (the probit
+        # IRLS calls this once per iteration over the whole design —
+        # measured as the hottest driver line of the ols family)
+        return np.fromiter(map(math.erf, x.tolist()), np.float64,
+                           count=len(x))
+
+    def _mu_dmu_np(eta: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+        """numpy twin of _mu_dmu for the collected-design path."""
+        if link == "logit":
+            mu = 1.0 / (1.0 + np.exp(-eta))
+            return mu, mu * (1.0 - mu)
+        if link == "probit":
+            mu = 0.5 * (1.0 + _erf_np(eta / math.sqrt(2.0)))
+            dmu = np.exp(-eta * eta / 2.0) / math.sqrt(2.0 * math.pi)
+            return mu, dmu
+        ex = np.exp(eta)
+        return 1.0 - np.exp(-ex), ex * np.exp(-ex)
+
+    # w = (dμ/dη)²/V(μ), z = η + (y−μ)/(dμ/dη); the probit erf chain is
+    # referenced three times by w/z, so μ and dμ are staged
+    def _stage(eta: Column) -> list[Column]:
+        mu, dmu = _mu_dmu(eta)
+        return [mu, dmu + F.lit(EPS)]
+
+    def _wz(eta, y, off, staged):
+        muc, dmuc = staged
+        return (dmuc * dmuc / (muc * (1.0 - muc) + F.lit(EPS)),
+                (eta - off) + (y - muc) / dmuc)
+
+    def _wz_np(eta, y, off):
+        mu, dmu = _mu_dmu_np(eta)
+        dmu = dmu + EPS
+        return (dmu * dmu / (mu * (1.0 - mu) + EPS),
+                (eta - off) + (y - mu) / dmu)
+
+    def _check(row) -> None:
+        if row["m"] is None:
+            raise ValueError("no non-NULL outcome rows")
+        if float(row["lo"]) < 0 or float(row["hi"]) > 1:
+            raise ValueError("binomial family needs y in [0, 1]")
+
+    rule = Rule(_stage, _wz, _wz_np)
     with persisted() as keep:
-        df, y, xs, off = persist_design(
-            df, y, xs[1:] if use_bias else xs,
-            off=off if offset is not None else None,
-            use_bias=use_bias)
-        keep(df)
-
-        def _mu_dmu(eta: Column) -> tuple[Column, Column]:
-            if link == "logit":
-                mu = 1.0 / (1.0 + F.exp(-eta))
-                return mu, mu * (1.0 - mu)
-            if link == "probit":
-                from fast_causal_inference_spark.functions import erf
-
-                mu = 0.5 * (1.0 + erf(eta / F.lit(math.sqrt(2.0))))
-                dmu = F.exp(-eta * eta / 2.0) / F.lit(math.sqrt(2.0 * math.pi))
-                return mu, dmu
-            ex = F.exp(eta)                       # cloglog: μ = 1 − e^{−e^η}
-            return 1.0 - F.exp(-ex), ex * F.exp(-ex)
-
-        def _erf_np(x: np.ndarray) -> np.ndarray:
-            # libm erf element-wise WITHOUT ufunc boxing: map over plain
-            # Python floats (tolist) into a preallocated float64 buffer is
-            # ~6x faster than frompyfunc(...).astype(float) and calls the
-            # SAME math.erf, so every value is bit-identical (the probit
-            # IRLS calls this once per iteration over the whole design —
-            # measured as the hottest driver line of the ols family)
-            return np.fromiter(map(math.erf, x.tolist()), np.float64,
-                               count=len(x))
-
-        def _mu_dmu_np(eta: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-            """numpy twin of _mu_dmu for the collected-design path."""
-            if link == "logit":
-                mu = 1.0 / (1.0 + np.exp(-eta))
-                return mu, mu * (1.0 - mu)
-            if link == "probit":
-                mu = 0.5 * (1.0 + _erf_np(eta / math.sqrt(2.0)))
-                dmu = np.exp(-eta * eta / 2.0) / math.sqrt(2.0 * math.pi)
-                return mu, dmu
-            ex = np.exp(eta)
-            return 1.0 - np.exp(-ex), ex * np.exp(-ex)
+        d = prepare_design(
+            keep, df, y_expr, feats, offset, use_bias,
+            probe=lambda y: [F.avg(y).alias("m"), F.min(y).alias("lo"),
+                             F.max(y).alias("hi")],
+            check=_check)
+        df, y, off = d.work, d.y, d.off
+        beta, A, n, it, converged = d.newton(rule, np.zeros(len(d.xs)),
+                                             max_iter, tol)
 
         def _dev_term(mu: Column) -> Column:
             # shared clamped binomial unit deviance (_dev_pearson)
             return _dev_pearson("binomial", y, mu, var_power=1.5)[0]
 
-        # small-input fast path (round 11, design.collect_small_design):
-        # iterate driver-side in numpy off one collected design
-        _nb = int(df.count())
-        des = collect_small_design(df, xs, y, off, n_rows=_nb)
-        if des is None:
-            df = keep(repartition_big_design(df, _nb))
+        # compute_stats=False is the nuisance-fit fast path (see glm()):
+        # beta/stderr only, no deviance scans
+        deviance = null_dev = float("nan")
+        if compute_stats:
+            mu_fit, _ = _mu_dmu(d.eta(beta))
+            fin = df.agg(F.sum(_dev_term(mu_fit)).alias("dev"),
+                         F.avg(y).alias("ybar")).collect()[0]
+            deviance = float(fin["dev"])
+            ybar = float(fin["ybar"])
 
-        def _irls(beta: np.ndarray, cols: list[Column], pp: int,
-                  validate: bool = False,
-                  np_design: tuple | None = None,
-                  ) -> tuple[np.ndarray, np.ndarray, float, int, bool]:
-            A = np.eye(pp)
-            n = 0.0
-            it = 0
-            conv = False
-            if np_design is not None and validate:
-                _, yv0, _ = np_design
-                if len(yv0) == 0:
-                    raise ValueError("no non-NULL outcome rows")
-                if yv0.min() < 0 or yv0.max() > 1:
-                    raise ValueError("binomial family needs y in [0, 1]")
-            for it in range(1, max_iter + 1):
-                if np_design is not None:
-                    X_, yv, ov = np_design
-                    eta_v = X_ @ beta + ov
-                    mu_v, dmu_v = _mu_dmu_np(eta_v)
-                    dmu_v = dmu_v + EPS
-                    w_v = dmu_v * dmu_v / (mu_v * (1.0 - mu_v) + EPS)
-                    z_v = (eta_v - ov) + (yv - mu_v) / dmu_v
-                    Xw = X_ * w_v[:, None]
-                    A = Xw.T @ X_
-                    b = X_.T @ (w_v * z_v)
-                    n = float(len(yv))
-                else:
-                    eta: Column = F.lit(float(beta[0])) * cols[0]
-                    for j in range(1, pp):
-                        eta = eta + F.lit(float(beta[j])) * cols[j]
-                    eta = eta + off
-                    # staged Projects: η once, then μ/dμ once (the probit
-                    # erf chain is referenced three times by w/z —
-                    # CollapseProject keeps multi-referenced non-cheap
-                    # aliases materialized), then w/z.  Per-row arithmetic
-                    # — hence every float sum — is bit-identical to the
-                    # inlined form.
-                    base = df.select(*[c.alias(f"__p{i}__")
-                                       for i, c in enumerate(cols)],
-                                     y.alias("__yy__"), eta.alias("__eta__"),
-                                     off.alias("__o__"))
-                    etac, yc = F.col("__eta__"), F.col("__yy__")
-                    mu, dmu = _mu_dmu(etac)
-                    mid = base.select("*", mu.alias("__mu__"),
-                                      (dmu + F.lit(EPS)).alias("__dmu__"))
-                    muc, dmuc = F.col("__mu__"), F.col("__dmu__")
-                    w = dmuc * dmuc / (muc * (1.0 - muc) + F.lit(EPS))
-                    z = (etac - F.col("__o__")) + (yc - muc) / dmuc
-                    step = mid.select(*[F.col(f"__p{i}__")
-                                        for i in range(pp)],
-                                      w.alias("__w__"), z.alias("__z__"),
-                                      F.col("__yy__"))
-                    ps = [F.col(f"__p{i}__") for i in range(pp)]
-                    wc, zc = F.col("__w__"), F.col("__z__")
-                    aggs = []
-                    for i in range(pp):
-                        aggs.append(F.sum(wc * ps[i] * zc).alias(f"b{i}"))
-                        for j in range(i, pp):
-                            aggs.append(F.sum(wc * ps[i] * ps[j])
-                                        .alias(f"a{i}_{j}"))
-                    aggs.append(F.count(F.col("__yy__")).alias("n__"))
-                    if validate and it == 1:
-                        # fold the input-validation scan into the first
-                        # iteration's aggregation (saves a full pass)
-                        aggs += [F.avg(F.col("__yy__")).alias("m0__"),
-                                 F.min(F.col("__yy__")).alias("lo__"),
-                                 F.max(F.col("__yy__")).alias("hi__")]
-                    row = step.agg(*aggs).collect()[0]
-                    if validate and it == 1:
-                        if row["m0__"] is None:
-                            raise ValueError("no non-NULL outcome rows")
-                        if float(row["lo__"]) < 0 \
-                                or float(row["hi__"]) > 1:
-                            raise ValueError(
-                                "binomial family needs y in [0, 1]")
-                    n = float(row["n__"])
-                    A = np.empty((pp, pp))
-                    b = np.empty(pp)
-                    for i in range(pp):
-                        b[i] = row[f"b{i}"]
-                        for j in range(i, pp):
-                            A[i, j] = A[j, i] = row[f"a{i}_{j}"]
-                new_beta = np.linalg.solve(A, b)
-                delta = float(np.max(np.abs(new_beta - beta)))
-                beta = new_beta
-                if delta < tol:
-                    conv = True
-                    break
-            return beta, A, n, it, conv
-
-        beta, A, n, it, converged = _irls(np.zeros(p), xs, p, validate=True,
-                                          np_design=des)
-
-        if not compute_stats:
-            # nuisance-fit fast path (see glm()): beta/stderr only, no
-            # deviance scans — binomial dispersion is fixed at 1
-            stderr = np.sqrt(np.maximum(np.diag(np.linalg.inv(A)), 0.0))
-            return GlmModel(family="binomial", feature_exprs=feats,
-                            use_bias=use_bias, beta=beta, stderr=stderr, n=n,
-                            n_iter=it, converged=converged,
-                            deviance=float("nan"),
-                            null_deviance=float("nan"), dispersion=1.0,
-                            offset=offset, y_expr=y_expr, link=link)
-
-        eta = F.lit(float(beta[0])) * xs[0]
-        for j in range(1, p):
-            eta = eta + F.lit(float(beta[j])) * xs[j]
-        mu_fit, _ = _mu_dmu(eta + off)
-        fin = df.agg(F.sum(_dev_term(mu_fit)).alias("dev"),
-                     F.avg(y).alias("ybar")).collect()[0]
-        deviance = float(fin["dev"])
-        ybar = float(fin["ybar"])
-
-        if offset is None:
-            # intercept-only null: μ₀ = ȳ for every binomial link
-            mu0 = F.lit(min(max(ybar, 1e-12), 1.0 - 1e-12))
-            null_dev = float(df.agg(F.sum(_dev_term(mu0)).alias("nd"))
-                             .collect()[0]["nd"])
-        elif use_bias:
-            # intercept-only + fixed offset: no closed form — reuse the
-            # Fisher loop at p=1 (a handful of tiny scans), then one scan
-            des0 = None if des is None else \
-                (np.ones((len(des[1]), 1)), des[1], des[2])
-            b0, _, _, _, _ = _irls(np.zeros(1), [F.lit(1.0)], 1,
-                                   np_design=des0)
-            mu0, _ = _mu_dmu(F.lit(float(b0[0])) + off)
-            null_dev = float(df.agg(F.sum(_dev_term(mu0)).alias("nd"))
-                             .collect()[0]["nd"])
-        else:
-            null_dev = float("nan")
+            if offset is None:
+                # intercept-only null: μ₀ = ȳ for every binomial link
+                mu0 = F.lit(min(max(ybar, 1e-12), 1.0 - 1e-12))
+                null_dev = float(df.agg(F.sum(_dev_term(mu0)).alias("nd"))
+                                 .collect()[0]["nd"])
+            elif use_bias:
+                # intercept-only + fixed offset: no closed form — reuse the
+                # Fisher loop at p=1 (a handful of tiny scans), then one scan
+                d0 = replace(d, xs=[F.lit(1.0)],
+                             arrays=None if d.arrays is None else
+                             (np.ones((len(d.arrays[1]), 1)), *d.arrays[1:]))
+                b0 = d0.newton(rule, np.zeros(1), max_iter, tol)[0]
+                mu0, _ = _mu_dmu(F.lit(float(b0[0])) + off)
+                null_dev = float(df.agg(F.sum(_dev_term(mu0)).alias("nd"))
+                                 .collect()[0]["nd"])
 
     stderr = np.sqrt(np.maximum(np.diag(np.linalg.inv(A)), 0.0))
     return GlmModel(family="binomial", feature_exprs=feats,
@@ -1055,104 +837,46 @@ def negative_binomial_regression(df: DataFrame, formula: str,
     from fast_causal_inference_spark.operators.ols import parse_r_formula
 
     y_expr, feats = parse_r_formula(formula)
-    p = len(feats) + (1 if use_bias else 0)
-    if p == 0:
-        raise ValueError("empty design: no features and use_bias=False")
-    xs = ([F.lit(1.0)] if use_bias else []) + \
-        [F.expr(e).cast("double") for e in feats]
-    y = F.expr(y_expr).cast("double")
-    off = F.expr(offset).cast("double") if offset is not None else F.lit(0.0)
-    cc = y.isNotNull() & off.isNotNull()
-    for e in feats:
-        cc = cc & F.expr(e).cast("double").isNotNull()
-    df = df.where(cc)
-    # persist the projected design for the IRLS + alpha rounds
-    # (design.py); the m0 scan below doubles as its materialization
-    with persisted() as keep:
-        df, y, xs, off = persist_design(
-            df, y, xs[1:] if use_bias else xs,
-            off=off if offset is not None else None,
-            use_bias=use_bias)
-        keep(df)
 
-        m0 = df.agg(F.avg(y).alias("m"), F.min(y).alias("lo"),
-                    F.count(F.lit(1)).alias("n")).collect()[0]
+    def _check(m0) -> None:
         if m0["m"] is None:
             raise ValueError("no non-NULL outcome rows")
         if float(m0["lo"]) < 0:
             raise ValueError(
                 "negative-binomial family needs non-negative y")
 
-        # small-input fast path (round 11, design.collect_small_design):
-        # the α-round structure multiplies the per-step job cost (outer
-        # dispersion rounds × inner IRLS), so the collected path pays off
-        # more here than anywhere else in the GLM zoo
-        des = collect_small_design(df, xs, y, off, n_rows=int(m0["n"]))
-        if des is None:
-            df = keep(repartition_big_design(df, int(m0["n"])))
+    def _rule(a: float) -> Rule:
+        """NB2 weights at fixed dispersion: w = μ/(1+αμ), log link."""
+        def wz(eta, y, off, staged):
+            mu, = staged
+            return (mu / (1 + F.lit(a) * mu) + F.lit(1e-10),
+                    (eta - off) + (y - mu) / (mu + F.lit(1e-10)))
 
-        def _eta(beta):
-            e: Column = F.lit(float(beta[0])) * xs[0]
-            for j in range(1, p):
-                e = e + F.lit(float(beta[j])) * xs[j]
-            return e + off
+        def wz_np(eta, y, off):
+            mu = np.exp(eta)
+            return (mu / (1 + a * mu) + 1e-10,
+                    (eta - off) + (y - mu) / (mu + 1e-10))
+
+        return Rule(lambda eta: [F.exp(eta)], wz, wz_np)
+
+    # the α-round structure multiplies the per-step job cost (outer
+    # dispersion rounds × inner IRLS), so the collected small-design path
+    # pays off more here than anywhere else in the GLM zoo
+    with persisted() as keep:
+        d = prepare_design(
+            keep, df, y_expr, feats, offset, use_bias,
+            probe=lambda y: [F.avg(y).alias("m"), F.min(y).alias("lo")],
+            check=_check)
+        df, y, off, des = d.work, d.y, d.off, d.arrays
 
         def _irls(a_disp, beta):
             """IRLS to convergence at fixed dispersion; returns beta, A,
-            n, it."""
-            A = np.eye(p)
-            n = 0.0
-            it = 0
-            conv = False
-            for it in range(1, max_iter + 1):
-                if des is not None:
-                    X_, yv, ov = des
-                    eta_v = X_ @ beta + ov
-                    mu_v = np.exp(eta_v)
-                    w_v = mu_v / (1 + float(a_disp) * mu_v) + 1e-10
-                    z_v = (eta_v - ov) + (yv - mu_v) / (mu_v + 1e-10)
-                    Xw = X_ * w_v[:, None]
-                    A = Xw.T @ X_
-                    b = X_.T @ (w_v * z_v)
-                    n = float(len(yv))
-                else:
-                    mu = F.exp(_eta(beta))
-                    w = mu / (1 + F.lit(float(a_disp)) * mu) + F.lit(1e-10)
-                    z = (_eta(beta) - off) + (y - mu) / (mu + F.lit(1e-10))
-                    # project w/z once per row (see glm(): inlining expands
-                    # the exp chain into every agg expression)
-                    step = df.select(*[c.alias(f"__p{i}__")
-                                       for i, c in enumerate(xs)],
-                                     w.alias("__w__"), z.alias("__z__"),
-                                     y.alias("__yy__"))
-                    ps = [F.col(f"__p{i}__") for i in range(p)]
-                    wc, zc = F.col("__w__"), F.col("__z__")
-                    aggs = []
-                    for i in range(p):
-                        aggs.append(F.sum(wc * ps[i] * zc).alias(f"b{i}"))
-                        for j in range(i, p):
-                            aggs.append(F.sum(wc * ps[i] * ps[j])
-                                        .alias(f"a{i}_{j}"))
-                    aggs.append(F.count(F.col("__yy__")).alias("n__"))
-                    row = step.agg(*aggs).collect()[0]
-                    n = float(row["n__"])
-                    A = np.empty((p, p))
-                    b = np.empty(p)
-                    for i in range(p):
-                        b[i] = row[f"b{i}"]
-                        for j in range(i, p):
-                            A[i, j] = A[j, i] = row[f"a{i}_{j}"]
-                new_beta = np.linalg.solve(A, b)
-                delta = float(np.max(np.abs(new_beta - beta)))
-                beta = new_beta
-                if delta < tol:
-                    conv = True
-                    break
-            return beta, A, n, it, conv
+            n, it, converged."""
+            return d.newton(_rule(float(a_disp)), beta, max_iter, tol)
 
-        beta = np.zeros(p)
-        if use_bias and float(m0["m"]) > 0:
-            beta[0] = math.log(float(m0["m"]))
+        beta = np.zeros(len(d.xs))
+        if use_bias and float(d.probe["m"]) > 0:
+            beta[0] = math.log(float(d.probe["m"]))
         # Poisson first stage (α=0) seeds both β and the aux-OLS α estimate
         beta, A, n, it, conv = _irls(0.0, beta)
         a_disp = alpha
@@ -1168,7 +892,7 @@ def negative_binomial_regression(df: DataFrame, formula: str,
                     a_new = max(float(np.sum((yv - mu_v) ** 2 - yv))
                                 / float(np.sum(mu_v * mu_v)), 0.0)
                 else:
-                    mu = F.exp(_eta(beta))
+                    mu = F.exp(d.eta(beta))
                     aux = df.agg(
                         F.sum((y - mu) * (y - mu) - y).alias("num"),
                         F.sum(mu * mu).alias("den")).collect()[0]
@@ -1187,7 +911,7 @@ def negative_binomial_regression(df: DataFrame, formula: str,
 
         # NB2 deviance at the final fit:
         # 2Σ[y·log(y/μ) − (y+1/α)·log((1+αy)/(1+αμ))]
-        mu = F.exp(_eta(beta))
+        mu = F.exp(d.eta(beta))
         a_l = F.lit(float(a_disp))
         if a_disp and a_disp > 0:
             dev_term = 2 * (F.when(y > 0, y * F.log(y / mu))

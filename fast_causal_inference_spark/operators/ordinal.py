@@ -40,10 +40,9 @@ def ordered_logit(df: DataFrame, formula: str, max_iter: int = 50,
     cumulative odds ratio of landing in a HIGHER category per unit x.
     """
     from fast_causal_inference_spark.operators.design import (
-        SMALL_DESIGN_MAX_CELLS,
-        SMALL_DESIGN_MAX_ROWS,
         persisted,
         repartition_big_design,
+        small_design_limit,
     )
     from fast_causal_inference_spark.operators.ols import parse_r_formula
 
@@ -161,9 +160,8 @@ def ordered_logit(df: DataFrame, formula: str, max_iter: int = 50,
         # Identical per-row algebra to _scan; the distributed scan remains
         # the above-cutoff (100 TB) path.
         des = None
-        _lim = min(SMALL_DESIGN_MAX_ROWS,
-                   SMALL_DESIGN_MAX_CELLS // max(k + 1, 1))
-        if n <= _lim:                 # n already known from the counts scan
+        # n already known from the counts scan
+        if n <= small_design_limit(k + 1):
             _pdf = sub.select(idx.alias("__i"),
                               *[F.col(f"__x{i}") for i in range(k)]) \
                 .toPandas()
@@ -172,7 +170,7 @@ def ordered_logit(df: DataFrame, formula: str, max_iter: int = 50,
                                     for i in range(k)]))
             del _pdf
         else:
-            sub = keep(repartition_big_design(sub, int(n)))
+            sub = repartition_big_design(sub, int(n), keep)
 
         def _scan_np(th: np.ndarray):
             iv, Xv = des

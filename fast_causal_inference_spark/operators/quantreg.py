@@ -228,7 +228,7 @@ def quantile_regression_multi(df: DataFrame, formula: str,
         # with the identical smoothed-check-loss algebra
         des = collect_small_design(df, xs, y, F.lit(0.0), n_rows=int(n0))
         if des is None:
-            df = keep(repartition_big_design(df, int(n0)))
+            df = repartition_big_design(df, int(n0), keep)
 
         # X'X is independent of (b, h, tau): compute it once instead of per
         # Newton/line-search scan (the sandwich S is the same object every

@@ -103,11 +103,10 @@ def heckman(df: DataFrame, outcome_formula: str, selection_formula: str,
     from pyspark import StorageLevel
 
     from fast_causal_inference_spark.operators.design import (
-        SMALL_DESIGN_MAX_CELLS,
-        SMALL_DESIGN_MAX_ROWS,
         collect_columns,
         persisted,
         repartition_big_design,
+        small_design_limit,
     )
 
     # the leading intercepts of W and Z are constants — keep them as
@@ -129,14 +128,13 @@ def heckman(df: DataFrame, outcome_formula: str, selection_formula: str,
         # design already carries the erf-chain λ/δ as materialized columns,
         # so ONE bounded collect evaluates the Arrow erf once and scans 1-2
         # become numpy Gramians
-        lim = min(SMALL_DESIGN_MAX_ROWS,
-                  SMALL_DESIGN_MAX_CELLS // max(pw + kzz + 2, 1))
+        lim = small_design_limit(pw + kzz + 2)
         des = None
         # count-gate (see design.collect_small_design): counting prunes the
         # erf-chain columns and materializes the persisted design either way
         _nsel = int(selw.count())
         if _nsel > lim:
-            selw = keep(repartition_big_design(selw, _nsel))
+            selw = repartition_big_design(selw, _nsel, keep)
             sel = selw
         if _nsel <= lim:
             _pdf = collect_columns(selw)
@@ -229,10 +227,9 @@ def heckman(df: DataFrame, outcome_formula: str, selection_formula: str,
     stepf = df.where(cc).select(
         *[z.alias(f"__z{j}__") for j, z in enumerate(zs_raw)],
         w0.alias("__w0__"))
-    limf = min(SMALL_DESIGN_MAX_ROWS,
-               SMALL_DESIGN_MAX_CELLS // max(kz + 2, 1))
     _pf = None
-    if int(stepf.count()) <= limf:   # count prunes the erf column
+    # count prunes the erf column
+    if int(stepf.count()) <= small_design_limit(kz + 2):
         from fast_causal_inference_spark.operators.design import (
             collect_columns,
         )

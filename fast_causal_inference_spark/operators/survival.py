@@ -32,17 +32,11 @@ def _collect_small_tex(sub: DataFrame, k: int, n: int):
     iterates driver-side; above it the distributed per-step scan — the
     100 TB path — runs unchanged."""
     from fast_causal_inference_spark.operators.design import (
-        SMALL_DESIGN_MAX_CELLS,
-        SMALL_DESIGN_MAX_ROWS,
-    )
-
-    from fast_causal_inference_spark.operators.design import (
         collect_columns,
+        small_design_limit,
     )
 
-    lim = min(SMALL_DESIGN_MAX_ROWS,
-              SMALL_DESIGN_MAX_CELLS // max(k + 2, 1))
-    if n > lim:
+    if n > small_design_limit(k + 2):
         return None
     cols = collect_columns(sub)
     t, e = cols["__t"], cols["__e"]

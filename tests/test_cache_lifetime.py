@@ -23,6 +23,8 @@ import pathlib
 import numpy as np
 import pandas as pd
 import pytest
+from pyspark import StorageLevel
+from pyspark.sql import functions as F
 from pyspark.sql.classic.dataframe import DataFrame as ClassicDataFrame
 
 import fast_causal_inference_spark
@@ -120,6 +122,35 @@ def test_logistic_mid_loop_failure_releases_cache(spark, monkeypatch):
     calls = _fail_on_collect(monkeypatch, 3)
     with pytest.raises(RuntimeError, match="injected"):
         logistic_regression(df, "yb ~ x1 + x2")
+    assert len(calls) == 3
+    assert _cached(spark) == before
+
+
+def test_spread_child_count_failure_releases_child(spark, monkeypatch):
+    """``repartition_big_design`` registers its repartitioned child with
+    the caller's scope before the child's materializing count: a count
+    that fails once Spark has cached the child still releases it."""
+    df = spark.range(20_000).select(
+        (F.col("id") % 17).cast("double").alias("x")).coalesce(1)
+    real = ClassicDataFrame.count
+    calls = []
+
+    def count(self):
+        calls.append(1)
+        n = real(self)
+        if len(calls) == 3:             # the child's count
+            raise RuntimeError("injected count failure")
+        return n
+
+    before = _cached(spark)
+    with pytest.raises(RuntimeError, match="injected"):
+        with design.persisted() as keep:
+            work = keep(df.persist(StorageLevel.MEMORY_AND_DISK))
+            monkeypatch.setattr(ClassicDataFrame, "count", count)
+            work.count()
+            # count 2 probes the row spread, count 3 is the child's
+            design.repartition_big_design(work, 20_000, keep,
+                                          min_rows=10_000)
     assert len(calls) == 3
     assert _cached(spark) == before
 

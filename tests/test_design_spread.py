@@ -46,7 +46,7 @@ def test_spreads_big_single_partition_design(spark):
     with persisted() as keep:
         work, y, xs = _one_partition_design(spark, keep, 50_000)
         assert _spread(work) == 1
-        out = keep(repartition_big_design(work, 50_000, min_rows=10_000))
+        out = repartition_big_design(work, 50_000, keep, min_rows=10_000)
         assert out is not work
         assert _spread(out) == spark.sparkContext.defaultParallelism
         assert out.count() == 50_000
@@ -55,7 +55,7 @@ def test_spreads_big_single_partition_design(spark):
 def test_noop_below_row_threshold(spark):
     with persisted() as keep:
         work, y, xs = _one_partition_design(spark, keep, 5_000)
-        out = repartition_big_design(work, 5_000, min_rows=10_000)
+        out = repartition_big_design(work, 5_000, keep, min_rows=10_000)
         assert out is work                       # same object, no shuffle
         assert _spread(out) == 1
 
@@ -68,7 +68,7 @@ def test_noop_on_already_spread_design(spark):
         work = keep(df.persist(StorageLevel.MEMORY_AND_DISK))
         work.count()
         # session fixture runs local[4]: 8 nonempty partitions >= cores
-        out = repartition_big_design(work, 50_000, min_rows=10_000)
+        out = repartition_big_design(work, 50_000, keep, min_rows=10_000)
         assert out is work
 
 
@@ -81,7 +81,7 @@ def test_gramian_sums_invariant_under_spread(spark):
                       F.count(F.lit(1)).alias("n")).collect()[0]
             return float(r["a"]), float(r["b"]), int(r["n"])
         before = sums(work)
-        out = keep(repartition_big_design(work, 50_000, min_rows=10_000))
+        out = repartition_big_design(work, 50_000, keep, min_rows=10_000)
         after = sums(out)
         assert after[2] == before[2]
         assert np.allclose(after[:2], before[:2], rtol=1e-12)
