@@ -12,12 +12,25 @@ the generated regressor and the heteroskedastic truncated errors):
 σ̂² = e'e/n₁ + β_λ²·Σδ/n₁ with δ = λ(λ + zγ̂), ρ̂² = β_λ²/σ̂², and
 Cov = σ̂²(W'W)⁻¹[W'(I−ρ̂²Δ)W + ρ̂²(W'ΔZ)V_probit(Z'ΔW)](W'W)⁻¹.
 
+Step 2 is solved in shifted coordinates: every non-intercept column of
+W = [1, X, λ] is centred on its mean over the selected rows, W_c = W·S
+with S the identity whose row 0 is (1, −w̄₁, …, −w̄ₚ₋₁).  When selection
+barely depends on Z, λ hardly varies and is nearly collinear with the
+intercept, so the uncentred W'W is ill-conditioned (cond ~ 4e7 on the
+``ols__heckman`` gate) and its solve and inverse magnify last-bit
+differences in the Gramian sums — which move with the BLAS thread count
+and the Spark sum order — into the sixth decimal.  The solve, the
+residuals and the Greene sandwich are formed from W_c; then β = S·β_c
+and Cov = S·Cov_c·Sᵀ.  β_λ, e, σ̂², ρ̂² and the Z side are unchanged.
+
 Scale shape: one probit (Fisher-scoring Gramian scans,
-``glm.py:_binomial_glm``), then TWO aggregation scans — the step-2
-Gramian [W'W, W'y], and the correction moments [e'e, Σδ, W'ΔW, W'ΔZ] —
-every per-row quantity (λ, δ, e) a pure Column off the driver-held
-coefficient vectors (Φ from the exact Arrow ``erf``).  Nothing row-scale
-reaches the driver.
+``glm.py:_binomial_glm``), one materializing aggregate over the selected
+design that returns its row count and the column means w̄ (the same
+single job the bare count was), then TWO aggregation scans — the step-2
+Gramian [W_c'W_c, W_c'y], and the correction moments
+[e'e, Σδ, W_c'ΔW_c, W_c'ΔZ] — every per-row quantity (λ, δ, e) a pure
+Column off the driver-held coefficient vectors and means (Φ from the
+exact Arrow ``erf``).  Nothing row-scale reaches the driver.
 """
 
 from __future__ import annotations
@@ -118,7 +131,17 @@ def heckman(df: DataFrame, outcome_formula: str, selection_formula: str,
             *[z.alias(f"__z{j}__") for j, z in enumerate(zs[1:], start=1)],
             delta.alias("__d__"), y.alias("__y__"))
             .persist(StorageLevel.MEMORY_AND_DISK))
-        ws = [F.lit(1.0)] + [F.col(f"__w{i}__") for i in range(1, pw)]
+        # count-gate (see design.collect_small_design): one aggregate
+        # materializes the persisted design and returns the row count and
+        # the step-2 column means w̄ (the shift; module docstring)
+        r0 = selw.agg(F.count(F.lit(1)).alias("n"),
+                      *[F.avg(f"__w{i}__").alias(f"m{i}")
+                        for i in range(1, pw)]).collect()[0]
+        _nsel = int(r0["n"])
+        wbar = np.array([r0[f"m{i}"] or 0.0 for i in range(1, pw)],
+                        dtype=float)
+        ws = [F.lit(1.0)] + [F.col(f"__w{i}__") - F.lit(float(wbar[i - 1]))
+                             for i in range(1, pw)]
         zs = [F.lit(1.0)] + [F.col(f"__z{j}__") for j in range(1, kzz)]
         delta = F.col("__d__")
         y = F.col("__y__")
@@ -130,9 +153,6 @@ def heckman(df: DataFrame, outcome_formula: str, selection_formula: str,
         # become numpy Gramians
         lim = small_design_limit(pw + kzz + 2)
         des = None
-        # count-gate (see design.collect_small_design): counting prunes the
-        # erf-chain columns and materializes the persisted design either way
-        _nsel = int(selw.count())
         if _nsel > lim:
             selw = repartition_big_design(selw, _nsel, keep)
             sel = selw
@@ -140,7 +160,7 @@ def heckman(df: DataFrame, outcome_formula: str, selection_formula: str,
             _pdf = collect_columns(selw)
             ones = np.ones(_nsel)
             des = (np.column_stack(
-                       [ones] + [_pdf[f"__w{i}__"]
+                       [ones] + [_pdf[f"__w{i}__"] - wbar[i - 1]
                                  for i in range(1, pw)]),
                    np.column_stack(
                        [ones] + [_pdf[f"__z{j}__"]
@@ -253,9 +273,14 @@ def heckman(df: DataFrame, outcome_formula: str, selection_formula: str,
     del _pf
     Vg = np.linalg.inv(Fz)
 
+    # Greene sandwich in the shifted coordinates, then back: β = S·β_c,
+    # Cov = S·Cov_c·Sᵀ (S: identity with row 0 = (1, −w̄))
     WtW_inv = np.linalg.inv(WtW)
     mid = (WtW - rho2 * WdW) + rho2 * (WdZ @ Vg @ WdZ.T)
-    cov = sigma2 * (WtW_inv @ mid @ WtW_inv)
+    S = np.eye(pw)
+    S[0, 1:] = -wbar
+    beta = S @ beta
+    cov = sigma2 * (S @ WtW_inv @ mid @ WtW_inv @ S.T)
     se = np.sqrt(np.maximum(np.diag(cov), 0.0))
 
     names = ["(Intercept)"] + list(x_feats) + ["lambda"]

@@ -2,8 +2,11 @@
 re-derive (xxhash64 signatures, seeded draws, iterative solvers).
 
 Runs each golden-gated query at sf0.01 in TWO separate *processes* (with
-different PYTHONHASHSEED, Spark parallelism, and shuffle settings), asserts
-the outputs are identical — the determinism the snapshot gate depends on:
+different PYTHONHASHSEED, Spark parallelism, shuffle settings and OpenBLAS
+thread count: the first runs with OpenBLAS's default, the second with
+``OPENBLAS_NUM_THREADS=1``, so a driver-side solve whose last bits move
+with the BLAS thread count shows up as a difference), asserts the outputs
+are identical — the determinism the snapshot gate depends on:
 sf0.01 files are < 4 MB so scans are single-split, and rand(seed)/
 partition-seeded draws are layout-stable.  Separate processes matter: a
 per-process Python string-hash salt once reordered a set-comprehension
@@ -87,10 +90,15 @@ def _worker(master: str, shuffle: str, out_path: str) -> None:
         pickle.dump(out, f)
 
 
-def _spawn(master: str, shuffle: str, hashseed: str) -> dict:
+def _spawn(master: str, shuffle: str, hashseed: str,
+           blas_threads: str | None = None) -> dict:
     out_path = tempfile.mktemp(suffix=".pkl")
     env = dict(os.environ)
     env["PYTHONHASHSEED"] = hashseed
+    # None: OpenBLAS's default thread count (one per core)
+    env.pop("OPENBLAS_NUM_THREADS", None)
+    if blas_threads is not None:
+        env["OPENBLAS_NUM_THREADS"] = blas_threads
     env["PYTHONPATH"] = ROOT + os.pathsep + env.get("PYTHONPATH", "")
     subprocess.run(
         [sys.executable, os.path.abspath(__file__), "--worker",
@@ -128,7 +136,7 @@ def _values_sql(pdf) -> str:
 
 def main() -> None:
     res_a = _spawn("local[4]", "7", "1")
-    res_b = _spawn("local[16]", "32", "31337")
+    res_b = _spawn("local[16]", "32", "31337", blas_threads="1")
 
     goldens = {}
     for key in GOLDEN_KEYS:

@@ -1,6 +1,7 @@
 """Heckman two-step vs a full numpy mirror (probit→Mills→OLS→Greene cov)."""
 
 import math
+import os
 
 import numpy as np
 import pandas as pd
@@ -128,3 +129,45 @@ def test_heckman_validation(spark, heck_pdf):
     sdf = spark.createDataFrame(few)
     with pytest.raises(ValueError, match="selected rows"):
         heckman(sdf, "y ~ x1", "s ~ z1")
+
+
+# the ols__heckman gate's spec (__spark_entry__.g_ols_heckman): selection
+# barely depends on Z, so λ is nearly collinear with the intercept
+GATE_SF = "/root/testdata/sf0.01"
+# 60-digit evaluation of the estimator on that spec, printed by
+# tools/heckman_exact.py
+GATE_EXACT = {
+    "(Intercept)": (33895.538239811718, 33242.560219271177),
+    "l_quantity": (0.642557751261618, 15.976806298799442),
+    "lambda": (17750.845920201492, 30530.054175292864),
+}
+
+
+@pytest.mark.skipif(not os.path.exists(f"{GATE_SF}/lineitem.parquet"),
+                    reason="sf0.01 lineitem testdata not present")
+@pytest.mark.parametrize("branch", ["collected", "distributed"])
+def test_heckman_near_collinear_gate_spec_matches_exact(spark, monkeypatch,
+                                                        branch):
+    """Every coef and stderr within half a unit of the gate's 6th
+    decimal of the exact values, on both step-2 branches: with λ this
+    close to collinear with the intercept (cond(W'W) ~ 4e7), a solve
+    of the uncentred normal equations misses by up to 5e-6."""
+    from pyspark.sql import functions as F
+
+    from fast_causal_inference_spark.operators import design
+
+    if branch == "distributed":
+        monkeypatch.setattr(design, "SMALL_DESIGN_MAX_ROWS", 0)
+    li = spark.read.parquet(f"{GATE_SF}/lineitem.parquet") \
+        .withColumn("sel", (F.col("l_orderkey") % 3 == 0).cast("double"))
+    out = heckman(li, "l_extendedprice ~ l_quantity",
+                  "sel ~ l_tax + l_quantity")
+    assert sorted(out.name) == sorted(GATE_EXACT)
+    for r in out.itertuples():
+        coef, se = GATE_EXACT[r.name]
+        assert r.coef == pytest.approx(coef, rel=0, abs=5e-7), r.name
+        assert r.stderr == pytest.approx(se, rel=0, abs=5e-7), r.name
+    assert out.attrs["n_selected"] == 19964
+    assert out.attrs["rho"] == pytest.approx(0.527419008939, rel=0, abs=5e-5)
+    assert out.attrs["sigma"] == pytest.approx(33656.060208964, rel=0,
+                                               abs=5e-5)
