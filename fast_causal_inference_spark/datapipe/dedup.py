@@ -150,9 +150,13 @@ def _shingle_inv(df: DataFrame, text_col: str, id_col: str,
     # docs by id first (a) fans the HOF work across the cluster and
     # (b) still leaves the cached relation hash-partitioned by id for the
     # prefix ranker's window and the verifier's per-doc aggregations.
-    n_parts = int(df.sparkSession.conf.get(
-        "spark.sql.shuffle.partitions", "32"))
-    out = (df.repartition(n_parts, F.col(id_col))
+    # One partition per core (defaultParallelism, as in
+    # design.repartition_big_design), not spark.sql.shuffle.partitions:
+    # AQE never coalesces a cached relation's partitioning, so every
+    # partition-local aggregation, window and join below the cache runs
+    # one task per cached partition (32 under the session default).
+    cores = df.sparkSession.sparkContext.defaultParallelism
+    out = (df.repartition(cores, F.col(id_col))
            .select(F.col(id_col).alias("id"),
                    F.explode(shingle_hashes(F.col(text_col), n))
                    .alias("gh"))
@@ -347,10 +351,11 @@ def simhash_signatures(df: DataFrame, text_col: str = "text",
     # bind_once keeps the tokenizing split out of the per-output-row
     # re-evaluation Generate does for non-codegen generator inputs
     # pre-repartition: below the explode the tokenizer runs in the scan
-    # stage (one task per input split) — same fix as _shingle_inv
-    n_parts = int(df.sparkSession.conf.get(
-        "spark.sql.shuffle.partitions", "32"))
-    toks = (df.repartition(n_parts, F.col(id_col))
+    # stage (one task per input split) — same fix as _shingle_inv, and
+    # sized to the cores for the same reason: simhash_pairs caches this
+    # relation, and a cached relation's partitioning is never coalesced
+    cores = df.sparkSession.sparkContext.defaultParallelism
+    toks = (df.repartition(cores, F.col(id_col))
             .select(F.col(id_col).alias("id"),
                     F.explode(bind_once(tokens(F.col(text_col)),
                                         lambda x: x)).alias("t"))
@@ -479,10 +484,16 @@ def simhash_pairs(df: DataFrame, text_col: str = "text",
     # literal array of C(b, m) key expressions — the latter is a single
     # generated consume function of ~500×m hash terms, which blows
     # Janino's 64 KB method limit and silently drops the whole stage to
-    # the interpreted path (measured ~10× slower).
-    combo_df = df.sparkSession.createDataFrame(
-        [(cid, *c) for cid, c in enumerate(combos)],
-        ["cid"] + [f"i{j}" for j in range(m)])
+    # the interpreted path (measured ~10× slower).  The table is built in
+    # the JVM: one range row per combination picks its block indices
+    # from constant-folded literal arrays (cid is bigint: xxhash64 hashes
+    # by type, so the key values depend on it).  A createDataFrame of
+    # Python tuples would scan a pickled Python RDD, i.e. start a Python
+    # worker per call.
+    combo_df = df.sparkSession.range(0, n_combos, 1, 1).selectExpr(
+        "id AS cid",
+        *[f"element_at(array({', '.join(str(c[j]) for c in combos)}), "
+          f"CAST(id + 1 AS INT)) AS i{j}" for j in range(m)])
     key = F.xxhash64(
         F.col("cid"),
         *[F.element_at(F.col("blk"), (F.col(f"i{j}") + 1).cast("int"))

@@ -836,6 +836,10 @@ def negative_binomial_regression(df: DataFrame, formula: str,
     """
     from fast_causal_inference_spark.operators.ols import parse_r_formula
 
+    # before any Spark job: the Poisson first stage runs ahead of the
+    # fixed-α fit, and a NaN α would fit and return NaNs
+    if alpha is not None and not (math.isfinite(alpha) and alpha >= 0):
+        raise ValueError(f"alpha must be finite and >= 0, got {alpha!r}")
     y_expr, feats = parse_r_formula(formula)
 
     def _check(m0) -> None:
@@ -903,8 +907,6 @@ def negative_binomial_regression(df: DataFrame, formula: str,
                 a_disp = a_new
                 beta, A, n, it, conv = _irls(a_disp, beta)
                 total_it += it
-        elif alpha < 0:
-            raise ValueError("alpha must be >= 0")
         else:
             beta, A, n, it, conv = _irls(float(alpha), beta)
             total_it += it

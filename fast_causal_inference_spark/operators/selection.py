@@ -49,7 +49,7 @@ _SQRT2PI = math.sqrt(2.0 * math.pi)
 
 
 def heckman(df: DataFrame, outcome_formula: str, selection_formula: str,
-            max_iter: int = 25, tol: float = 1e-8) -> pd.DataFrame:
+            max_iter: int = 25, tol: float = 1e-10) -> pd.DataFrame:
     """Fit ``heckman(df, 'wage ~ edu + exper', 'works ~ edu + kids')``.
 
     The selection LHS must be 0/1 and observed for every row; outcome
@@ -61,7 +61,15 @@ def heckman(df: DataFrame, outcome_formula: str, selection_formula: str,
     (the inverse-Mills coefficient β_λ = ρσ, whose z-test is the
     selection-bias test), with coef/stderr/z/p_value.  attrs: rho, sigma,
     n_total, n_selected, plus the step-1 probit frame under
-    ``attrs['selection_model']``.
+    ``attrs['selection_model']`` and whether it converged under
+    ``attrs['selection_converged']``.
+
+    ``tol`` stops the step-1 probit once no coefficient moves by more.
+    It is tighter than the GLMs' 1e-8 because step 2 magnifies γ's
+    error when λ is nearly collinear with the intercept: on the
+    ``ols__heckman`` gate's spec a probit stopped at 1e-8 left the
+    intercept 1.8e-7 off its exact value, at 1e-10 (one more Fisher
+    step) 3e-8.
     """
     from fast_causal_inference_spark.functions import erf
     from fast_causal_inference_spark.operators.glm import glm
@@ -296,5 +304,6 @@ def heckman(df: DataFrame, outcome_formula: str, selection_formula: str,
     out.attrs.update({
         "rho": b_lam / sigma if sigma > 0 else float("nan"),
         "sigma": sigma, "n_total": float(probit.n), "n_selected": n1,
-        "selection_model": probit.coef_table()})
+        "selection_model": probit.coef_table(),
+        "selection_converged": probit.converged})
     return out

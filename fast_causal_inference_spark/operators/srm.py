@@ -4,8 +4,8 @@ Parity target: reference ``srm.h:44-160`` / Python facade
 ``statistics.py:512-572`` — observed per-group totals of ``x`` vs expected
 ``ratio`` proportions, Pearson chi-square with df = #groups − 1.
 
-Spark-first: one ``groupBy(group).agg(sum)``; the chi-square finalizer runs on
-the tiny per-arm relation.
+Spark-first: one ``groupBy(group).agg(sum)``; the arm rows are sorted and the
+chi-square finalizes on the driver.
 """
 
 from __future__ import annotations
@@ -25,10 +25,18 @@ def srm(df: DataFrame, x: str, groupby: str,
     ``chisquare``/``p_value`` (also repeated as columns for convenience)."""
     xcol = F.expr(x).cast("double")
     gcol = F.col(groupby) if groupby.isidentifier() else F.expr(groupby)
-    obs = (df.groupBy(gcol.alias("groupname"))
+    # the k arm rows are sorted on the driver, in the order an ascending
+    # Spark sort gives (NULL first, NaN after every number): an orderBy
+    # before toPandas adds a range-partition sampling job and its stage
+    # (4 jobs instead of 2).  The NULL flag rides along as a grouping
+    # key, since toPandas turns both NULL and NaN into NaN.
+    obs = (df.groupBy(gcol.alias("groupname"), gcol.isNull().alias("__null"))
              .agg(F.sum(xcol).alias("observed"))
-             .orderBy("groupname")
-             .toPandas())
+             .toPandas()
+             .sort_values(["__null", "groupname"], ascending=[False, True],
+                          na_position="last", kind="stable")
+             .drop(columns="__null")
+             .reset_index(drop=True))
     f_obs = obs["observed"].to_numpy(dtype=float)
     kk = len(f_obs)
     if ratio is None:
@@ -87,7 +95,7 @@ def srm_grouped(df: DataFrame, x: str, groupby: str,
             f"more than {max_groups} (segment, arm) cells — the "
             "per-segment reports collect to the driver; coarsen the "
             "grouping or raise max_groups")
-    # natural order, matching srm()'s orderBy("groupname") ratio alignment
+    # natural order, matching srm()'s ascending arm order (ratio alignment)
     arms = sorted(obs["groupname"].unique().tolist())
     if ratio is not None and len(ratio) != len(arms):
         raise ValueError(

@@ -259,6 +259,25 @@ def test_negative_binomial_fixed_alpha_and_validation(spark, count_df):
             count_df.withColumn("y", F.col("y") - 100), "y ~ x1")
 
 
+@pytest.mark.parametrize("alpha", [-1.0, -1e-300, math.nan, math.inf])
+def test_negative_binomial_bad_alpha_raises_before_any_job(spark, count_df,
+                                                           monkeypatch,
+                                                           alpha):
+    """A negative or non-finite α is rejected up front: the call runs no
+    Spark job, on the distributed branch too, where the Poisson first
+    stage would otherwise cost one job per IRLS step."""
+    monkeypatch.setattr(design, "SMALL_DESIGN_MAX_ROWS", 0)
+    sc = spark.sparkContext
+    group = f"negbin_bad_alpha_{alpha}"
+    sc.setJobGroup(group, "")
+    try:
+        with pytest.raises(ValueError, match="alpha"):
+            negative_binomial_regression(count_df, "y ~ x1", alpha=alpha)
+    finally:
+        sc.setJobGroup("default", "")
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 0
+
+
 def _np_binom_irls(X, yv, off, link, max_iter=25, tol=1e-8):
     """Mirror of operators/glm._binomial_glm in numpy (exact erf)."""
     verf = np.vectorize(math.erf)

@@ -75,6 +75,97 @@ def test_minhash_candidate_join_is_equi_join(spark, docs):
     assert "Cartesian" not in _plan(pairs)
 
 
+def test_dedup_caches_sized_to_cores(spark, docs, monkeypatch):
+    """The cached dedup stages (shingle index, MinHash bands, SimHash
+    signatures) have one partition per core whatever
+    spark.sql.shuffle.partitions says: AQE never coalesces a cached
+    relation, so its partition count is the task count of every
+    partition-local step below it."""
+    from fast_causal_inference_spark.datapipe import dedup
+
+    cached = []
+    real = dedup.register_cache
+    monkeypatch.setattr(dedup, "register_cache",
+                        lambda df: cached.append(df) or real(df))
+    old = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "7")
+    try:
+        dedup.minhash_lsh_pairs(docs, threshold=0.5)
+        dedup.simhash_pairs(docs, max_hamming=3)
+        parts = [c.rdd.getNumPartitions() for c in cached]
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", old)
+    assert [c.columns for c in cached] == [["id", "gh"], ["id", "band",
+                                            "bucket"], ["id", "sig"]]
+    assert parts == [spark.sparkContext.defaultParallelism] * 3
+
+
+def test_simhash_pairs_has_no_python_side_data(spark, docs):
+    """The block-combination table is built in the JVM: no scan of a
+    Python RDD (a createDataFrame of Python rows) anywhere in the plan,
+    so no Python worker starts for it."""
+    from fast_causal_inference_spark.datapipe.dedup import simhash_pairs
+
+    for k in (3, 8):
+        plan = _optimized(simhash_pairs(docs, max_hamming=k))
+        assert "LogicalRDD" not in plan and "ExistingRDD" not in plan, plan
+
+
+def _dedup_job_sizing_faults(source: str) -> list[str]:
+    """Lines of ``source`` that read spark.sql.shuffle.partitions (the
+    cached dedup stages are sized to the cores) or hand
+    ``createDataFrame`` Python rows: a non-empty list, tuple or
+    comprehension, or a name bound to one (a pickled Python RDD scan).
+    An empty list and a pandas frame stay allowed."""
+    import ast
+
+    def rows(node) -> bool:
+        if isinstance(node, (ast.List, ast.Tuple)):
+            return bool(node.elts)
+        return isinstance(node, (ast.ListComp, ast.GeneratorExp))
+
+    tree = ast.parse(source)
+    bound = {t.id for n in ast.walk(tree) if isinstance(n, ast.Assign)
+             and rows(n.value) for t in n.targets
+             if isinstance(t, ast.Name)}
+    faults = []
+    for n in ast.walk(tree):
+        if isinstance(n, ast.Constant) \
+                and n.value == "spark.sql.shuffle.partitions":
+            faults.append(f"{n.lineno}: reads spark.sql.shuffle.partitions")
+        if isinstance(n, ast.Call) and isinstance(n.func, ast.Attribute) \
+                and n.func.attr == "createDataFrame" and n.args:
+            a = n.args[0]
+            if rows(a) or (isinstance(a, ast.Name) and a.id in bound):
+                faults.append(f"{n.lineno}: createDataFrame of Python rows")
+    return faults
+
+
+def test_dedup_sizes_no_job_from_shuffle_partitions():
+    import pathlib
+
+    import fast_causal_inference_spark
+
+    root = pathlib.Path(fast_causal_inference_spark.__file__).parent
+    faults = _dedup_job_sizing_faults(
+        (root / "datapipe" / "dedup.py").read_text())
+    assert not faults, faults
+
+
+@pytest.mark.parametrize("source, n_faults", [
+    ("n = int(spark.conf.get('spark.sql.shuffle.partitions'))\n"
+     "df.repartition(n, 'id')", 1),
+    ("spark.createDataFrame([(0, 1), (1, 2)], ['cid', 'i0'])", 1),
+    ("spark.createDataFrame([(i, *c) for i, c in enumerate(cs)], s)", 1),
+    ("rows = [(i,) for i in range(3)]\nspark.createDataFrame(rows, s)", 1),
+    ("spark.createDataFrame([], 'id bigint')", 0),
+    ("spark.createDataFrame(pdf, 'id bigint, component bigint')", 0),
+    ("df.repartition(cores(df), 'id')", 0),
+])
+def test_dedup_sizing_guard_flags(source, n_faults):
+    assert len(_dedup_job_sizing_faults(source)) == n_faults
+
+
 def test_knn_broadcasts_query_side(spark):
     import pandas as pd
 

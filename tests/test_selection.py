@@ -151,7 +151,9 @@ def test_heckman_near_collinear_gate_spec_matches_exact(spark, monkeypatch,
     """Every coef and stderr within half a unit of the gate's 6th
     decimal of the exact values, on both step-2 branches: with λ this
     close to collinear with the intercept (cond(W'W) ~ 4e7), a solve
-    of the uncentred normal equations misses by up to 5e-6."""
+    of the uncentred normal equations misses by up to 5e-6.  The
+    collected branch holds a tenth of that margin: with the step-1
+    probit stopped at a 1e-8 move it missed by 1.8e-7."""
     from pyspark.sql import functions as F
 
     from fast_causal_inference_spark.operators import design
@@ -163,10 +165,12 @@ def test_heckman_near_collinear_gate_spec_matches_exact(spark, monkeypatch,
     out = heckman(li, "l_extendedprice ~ l_quantity",
                   "sel ~ l_tax + l_quantity")
     assert sorted(out.name) == sorted(GATE_EXACT)
+    assert out.attrs["selection_converged"]            # within max_iter
+    bound = 5e-8 if branch == "collected" else 5e-7
     for r in out.itertuples():
         coef, se = GATE_EXACT[r.name]
-        assert r.coef == pytest.approx(coef, rel=0, abs=5e-7), r.name
-        assert r.stderr == pytest.approx(se, rel=0, abs=5e-7), r.name
+        assert r.coef == pytest.approx(coef, rel=0, abs=bound), r.name
+        assert r.stderr == pytest.approx(se, rel=0, abs=bound), r.name
     assert out.attrs["n_selected"] == 19964
     assert out.attrs["rho"] == pytest.approx(0.527419008939, rel=0, abs=5e-5)
     assert out.attrs["sigma"] == pytest.approx(33656.060208964, rel=0,
