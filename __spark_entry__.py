@@ -4808,6 +4808,10 @@ def q_survival_family(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _long_rows(spark, rows).unionByName(cox)
 
 
+# Runs at sf0.01 and up only: at sf0.001 the last RMST grid time
+# (tm = 33) has every subject still at risk fail (d = n_risk), so rm_s
+# takes ln((n_risk - d)/n_risk) = ln(0), which DuckDB rejects ("cannot
+# take logarithm of zero") where the operator's cumprod gives S = 0.
 _KM_LONG_SQL = f"""
 WITH km AS ({_KM_SQL})
 SELECT 'km' AS variant, CAST(CAST(time AS BIGINT) AS VARCHAR) AS item,

@@ -242,7 +242,42 @@ def _provenance() -> dict:
                 prov[label] = hashlib.sha256(fh.read()).hexdigest()[:16]
         except OSError:
             pass
+    lines = _line_counts(here)
+    if lines:
+        prov["lines"] = lines
     return prov
+
+
+# tracked Python files per part of the tree, keyed by path prefix
+_LINE_PARTS = (("library", "fast_causal_inference_spark/"),
+               ("entry", "__spark_entry__.py"), ("tests", "tests/"))
+
+
+def _line_counts(root: str) -> dict:
+    """Lines of the tracked ``.py`` files (``git ls-files``) of the
+    library, ``__spark_entry__.py`` and ``tests/``, recorded with every
+    run so code size is tracked the way timings are; empty outside a
+    git checkout."""
+    import subprocess
+
+    try:
+        files = subprocess.run(
+            ["git", "ls-files", "-z", "--", "*.py"], cwd=root,
+            capture_output=True, text=True, timeout=10,
+            check=True).stdout.split("\0")
+    except (OSError, subprocess.SubprocessError):
+        return {}
+    counts = dict.fromkeys((part for part, _ in _LINE_PARTS), 0)
+    for f in files:
+        part = next((p for p, pre in _LINE_PARTS if f.startswith(pre)), None)
+        if part is None:
+            continue
+        try:
+            with open(os.path.join(root, f), "rb") as fh:
+                counts[part] += fh.read().count(b"\n")
+        except OSError:
+            pass
+    return counts
 
 
 def _settle(max_wait: float = 150.0, target: float = 2.0) -> float:

@@ -20,7 +20,7 @@ pipelines:
 
 from __future__ import annotations
 
-import os
+import re
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -642,6 +642,22 @@ def ngram_jaccard_pairs(df: DataFrame, text_col: str = "text",
 # ---------------------------------------------------------------------------
 
 
+_MEMORY_UNITS = {"": 1 << 20, "b": 1, "k": 1 << 10, "kb": 1 << 10,
+                 "m": 1 << 20, "mb": 1 << 20, "g": 1 << 30, "gb": 1 << 30,
+                 "t": 1 << 40, "tb": 1 << 40, "p": 1 << 50, "pb": 1 << 50}
+
+
+def driver_edge_cutoff(memory: str) -> int:
+    """Most edges :func:`connected_components` solves on the driver for
+    a ``spark.driver.memory`` of ``memory`` (``8g``, ``512m``, ``2t``; a
+    bare number is MiB, as Spark reads it): 20M edges per 8 GiB."""
+    m = re.fullmatch(r"(\d+)\s*([a-z]*)", memory.strip().lower())
+    if not m or m.group(2) not in _MEMORY_UNITS:
+        raise ValueError(f"not a memory size: {memory!r}")
+    return int(m.group(1)) * _MEMORY_UNITS[m.group(2)] * 20_000_000 \
+        // (8 << 30)
+
+
 def connected_components(pairs: DataFrame, a_col: str = "id_a",
                          b_col: str = "id_b",
                          max_iterations: int = 20) -> DataFrame:
@@ -686,10 +702,11 @@ def connected_components(pairs: DataFrame, a_col: str = "id_a",
     # 125-131 s for the distributed loop (the chain costs it ~17
     # pointer-jump rounds of joins); at 20M edges the driver branch is
     # 23-34 s at 2.8 GB peak Python RSS (~0.14 GB per M edges), both
-    # branches output-identical.  Default 20M (~3 GB driver headroom),
-    # env-tunable for bigger drivers or leaner ones.
-    if n_edges <= int(os.environ.get(
-            "SPARK_GRAFT_CC_DRIVER_EDGES", "20000000")):
+    # branches output-identical.  The cutoff scales with the driver's
+    # memory: 20M edges (~3 GB of headroom) on the default 8g driver.
+    memory = pairs.sparkSession.sparkContext.getConf().get(
+        "spark.driver.memory", "1g")
+    if n_edges <= driver_edge_cutoff(memory):
         import numpy as np
         import pandas as pd
 

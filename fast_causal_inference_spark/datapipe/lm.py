@@ -68,8 +68,9 @@ def train_bigram_lm(df: DataFrame, text_col: str = "text") -> dict:
     DataFrame(w1, c1), "vocab_size": int}`` — count RELATIONS, not a
     driver-side model, so the trusted corpus can be arbitrarily large.
     """
-    n_parts = int(df.sparkSession.conf.get(
-        "spark.sql.shuffle.partitions", "32"))
+    # one partition per core: the count relations below are cached, and
+    # AQE never coalesces a cached relation's partitions
+    n_parts = df.sparkSession.sparkContext.defaultParallelism
     toks = (df.repartition(n_parts)
             .select(F.explode(_bigrams(F.col(text_col))).alias("bg"))
             .select(F.col("bg.w1").alias("w1"), F.col("bg.w2").alias("w2"))
@@ -194,9 +195,9 @@ def train_trigram_lm(df: DataFrame, text_col: str = "text") -> dict:
 
     # repartition per explode branch (a shared repartitioned frame would
     # re-execute its shuffle once per concurrent action — exchanges are
-    # not reused across jobs); the unigram branch reads df directly
-    n_parts = int(df.sparkSession.conf.get(
-        "spark.sql.shuffle.partitions", "32"))
+    # not reused across jobs); the unigram branch reads df directly.  One
+    # partition per core, as in train_bigram_lm
+    n_parts = df.sparkSession.sparkContext.defaultParallelism
     src = df
     tg = (src.repartition(n_parts)
           .select(F.explode(_trigrams(F.col(text_col))).alias("g"))

@@ -31,19 +31,19 @@ from .text import tokens
 __all__ = ["postings", "bm25_search", "tfidf_search"]
 
 
-def _n_parts(df: DataFrame) -> int:
-    return int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
-
-
 def postings(df: DataFrame, text_col: str = "text",
              id_col: str = "doc_id") -> DataFrame:
     """Term postings ``(id, term, tf)`` — one explode + one groupBy.
 
     The tokenize+explode pipeline is repartitioned first so it fans out
     across the cluster instead of running inside the (possibly 1-split)
-    scan stage — same reasoning as the shingle index in ``dedup``.
+    scan stage — same reasoning as the shingle index in ``dedup``, and
+    sized the same way: one partition per core (``defaultParallelism``),
+    since the searches cache this relation and AQE never coalesces a
+    cached relation's partitions.
     """
-    return (df.repartition(_n_parts(df), F.col(id_col))
+    cores = df.sparkSession.sparkContext.defaultParallelism
+    return (df.repartition(cores, F.col(id_col))
             .select(F.col(id_col).alias("id"),
                     F.explode(tokens(F.col(text_col))).alias("term"))
             .where(F.col("term") != "")

@@ -16,9 +16,11 @@ moments.
 Plan shape (100 TB honest): each Newton step on the dual is ONE
 aggregation over control rows — Σeᵢ, Σeᵢcᵢ, Σeᵢcᵢcᵢᵀ with
 eᵢ = exp(λᵀcᵢ) as a pure Column expression (k(k+1)/2 + k + 1 sums, the
-same Gramian scan kernel as GLM/IRLS).  The treated moment target is
-one prior scan.  Weights never materialize until the caller scores
-them as a Column (``weight_column``), so nothing is collected.
+same Gramian scan kernel as GLM/IRLS).  Both arms are persisted as one
+design (``design.prepare_design``), whose materializing pass also sums
+the treated moment target.  Weights never materialize until the caller
+scores them as a Column (``weight_column``); below the small-design
+cutoff the design is collected once and the Newton sums run in numpy.
 
 The reference engine's causal toolbox (``statistics.py:1054-1217``)
 stops at IPW; entropy balancing is the standard design-stage
@@ -34,6 +36,12 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from fast_causal_inference_spark import stats_distributions as dist
+from fast_causal_inference_spark.operators.design import (
+    persisted,
+    prepare_design,
+    sym_aggs,
+    unpack_sym,
+)
 
 __all__ = ["entropy_balancing", "EntropyBalance"]
 
@@ -141,39 +149,38 @@ def entropy_balancing(df: DataFrame, T: str, features: list[str],
         raise ValueError("entropy_balancing needs at least one feature")
     t = F.expr(T)
     xs = [F.expr(c).cast("double") for c in features]
-    cc = t.isNotNull()
+    cc = t.isNotNull() & ((t == F.lit(treatment_value))
+                          | (t == F.lit(control_value)))
     for x in xs:
         cc = cc & x.isNotNull()
-    work = df.where(cc)
     k = len(features)
-    # target: treated moments (plus counts) — one scan over both arms
-    is_t = (t == F.lit(treatment_value)).cast("double")
-    is_c = (t == F.lit(control_value)).cast("double")
-    aggs = [F.sum(is_t).alias("n1"), F.sum(is_c).alias("n0")]
-    for j, x in enumerate(xs):
-        aggs.append(F.sum(is_t * x).alias(f"m{j}"))
-    row = work.agg(*aggs).collect()[0]
-    n1, n0 = float(row["n1"] or 0.0), float(row["n0"] or 0.0)
-    if n1 == 0 or n0 == 0:
-        raise ValueError(f"entropy_balancing: empty arm (treated n={n1:.0f},"
-                         f" control n={n0:.0f})")
-    center = np.array([float(row[f"m{j}"]) / n1 for j in range(k)])
-    # persist the centered control design for the dual Newton loop
-    # (design.py pattern): k doubles per control row, re-scanned once
-    # per step + once per halving
-    from pyspark import StorageLevel
+    # one persisted design over both arms: the probe that materializes
+    # it also returns the treated moment target, and the dual Newton
+    # loop scans its control rows (k doubles each, re-scanned once per
+    # step + once per halving)
+    cols = {"__t__": (t == F.lit(treatment_value)).cast("double")}
+    cols.update({f"__x{j}__": x for j, x in enumerate(xs)})
+    is_t = F.col("__t__")
+    probe = [F.sum(is_t).alias("n1")] + [
+        F.sum(is_t * F.col(f"__x{j}__")).alias(f"m{j}") for j in range(k)]
 
-    from fast_causal_inference_spark.operators.design import (
-        collect_small_design,
-        persisted,
-        repartition_big_design,
-    )
+    def check(row) -> None:
+        n1 = float(row["n1"] or 0.0)
+        n0 = float(row["n"]) - n1
+        if n1 == 0 or n0 == 0:
+            raise ValueError(f"entropy_balancing: empty arm (treated "
+                             f"n={n1:.0f}, control n={n0:.0f})")
 
     with persisted() as keep:
-        ctl = keep(work.where(t == F.lit(control_value))
-                   .select(*[(x - F.lit(float(c))).alias(f"__c{j}__")
-                             for j, (x, c) in enumerate(zip(xs, center))])
-                   .persist(StorageLevel.MEMORY_AND_DISK))
+        d = prepare_design(keep, df, cols, where=cc, probe=probe,
+                           check=check)
+        n1 = float(d.probe["n1"])
+        n0 = float(d.probe["n"]) - n1
+        center = np.array([float(d.probe[f"m{j}"]) / n1 for j in range(k)])
+        # the control design, centred on the treated moments
+        ctl = d.work.where(is_t == 0.0).select(
+            *[(F.col(f"__x{j}__") - F.lit(float(c))).alias(f"__c{j}__")
+              for j, c in enumerate(center)])
         cs = [F.col(f"__c{j}__") for j in range(k)]
 
         def _scan(lam: np.ndarray, shift: float):
@@ -187,29 +194,20 @@ def entropy_balancing(df: DataFrame, T: str, features: list[str],
             step = ctl.select(*cs, e.alias("__e__"))
             ec = F.col("__e__")
             aggs = [F.sum(ec).alias("s")]
-            for i, ci in enumerate(cs):
-                aggs.append(F.sum(ec * ci).alias(f"g{i}"))
-                for j in range(i, k):
-                    aggs.append(F.sum(ec * ci * cs[j]).alias(f"h{i}_{j}"))
+            aggs += [F.sum(ec * ci).alias(f"g{i}") for i, ci in enumerate(cs)]
+            aggs += sym_aggs(k, "h", lambda i, j: ec * cs[i] * cs[j])
             r = step.agg(*aggs).collect()[0]
-            s = float(r["s"])
             g = np.array([float(r[f"g{i}"]) for i in range(k)])
-            H = np.empty((k, k))
-            for i in range(k):
-                for j in range(i, k):
-                    H[i, j] = H[j, i] = float(r[f"h{i}_{j}"])
-            return s, g, H
+            return float(r["s"]), g, unpack_sym(r, k, "h")
 
-        # small-input fast path (round 11, design.collect_small_design):
-        # collect the centered control design once; the dual Newton scans
-        # (and step-halving re-scans) run driver-side in numpy
-        des = collect_small_design(ctl, cs, F.lit(0.0), F.lit(0.0),
-                                   n_rows=int(n0))
-        if des is None:
-            ctl = repartition_big_design(ctl, int(n0), keep)
+        C = None
+        if d.arrays is not None:
+            a = d.arrays
+            m = a["__t__"] == 0.0
+            C = np.column_stack([a[f"__x{j}__"][m] - center[j]
+                                 for j in range(k)])
 
         def _scan_np(lam: np.ndarray, shift: float):
-            C, _, _ = des
             with np.errstate(over="ignore", under="ignore"):
                 e = np.exp(C @ lam - shift)
             s = float(e.sum())
@@ -217,12 +215,16 @@ def entropy_balancing(df: DataFrame, T: str, features: list[str],
             H = (C * e[:, None]).T @ C
             return s, g, H
 
-        scan = _scan_np if des is not None else _scan
+        scan = _scan_np if C is not None else _scan
 
         lam = np.zeros(k)
         shift = 0.0                   # running log-scale guard against overflow
         s, g, H = scan(lam, shift)
         obj = np.log(s) + shift       # log sum exp — the dual objective
+        # not design.newton_ascent: the dual is minimized on a running
+        # log-scale shift, stops on the moment gap before stepping, and
+        # raises when 25 halvings find no descent — the infeasibility
+        # signal its callers rely on
         converged = False
         it = 0
         for it in range(1, max_iter + 1):

@@ -1,12 +1,11 @@
 """Persisted design projection, the cache lifetime of one call, and the
-shared Fisher-scoring kernel.
+shared solver kernels.
 
-Every IRLS / Newton operator in this package scans its input once per
-iteration (one Gramian-shaped aggregation — see ``glm.py``,
-``quantreg.py``, ``logistic.py``).  Re-deriving (y, X) from the source
-relation on every step repeats the parquet scan and the feature
-expression evaluation 5–50 times per fit.  The standard fix — what
-Spark MLlib's ``handlePersistence`` does before L-BFGS/IRLS — is to
+Every iterative operator in this package scans its input once per
+iteration (one Gramian-shaped aggregation).  Re-deriving the design
+from the source relation on every step repeats the parquet scan and the
+feature expression evaluation 5–50 times per fit.  The standard fix —
+what Spark MLlib's ``handlePersistence`` does before L-BFGS/IRLS — is to
 project the complete-case design down to a flat double-typed relation,
 persist it MEMORY_AND_DISK for the duration of the loop, and release it
 afterwards.
@@ -21,34 +20,54 @@ A cache made for one call lives in one :func:`persisted` scope, which
 releases it when the call returns or raises.  Caches meant to outlive
 the call (``datapipe.cachereg``, model count frames) are not scoped.
 
-The GLM fitters (``logistic_regression``, ``glm``, its binomial links,
-negative binomial) run ONE Fisher-scoring kernel, in the shape of Spark
-ML's single IRLS driver with a per-family reweight function:
-:func:`prepare_design` builds the persisted complete-case design,
+ONE design prep serves every iterative solver: :func:`prepare_design`
+filters the complete cases, persists the named columns, runs one
+materializing probe aggregate (the row count plus whatever start values
+or input checks the solver needs), then collects the design below the
+small-design cutoff or spreads it across the cores above it.  Its users:
+
+- the GLM fitters (``logistic_regression``, ``glm``, its binomial links,
+  negative binomial) and ``quantile_regression(_multi)``, through the
+  ``y ~ features`` front :func:`formula_design` — quantreg's OLS warm
+  start rides the probe;
+- ``entropy_balancing`` (both arms; the probe holds the treated moment
+  target);
+- ``heckman`` (the step-2 design, whose probe holds the column means,
+  and the probit information pass);
+- ``cox_ph``, ``proportional_hazards_test`` and ``weibull_aft``
+  (Weibull's log-time OLS start rides the probe).
+
+``ordered_logit`` sizes its own collect: its category index needs a
+pass over the cache before the design's columns exist.
+
+The GLMs run ONE Fisher-scoring kernel, in the shape of Spark ML's
+single IRLS driver with a per-family reweight function:
 :meth:`Design.sums` is one Gramian step (a distributed aggregation, or
 its numpy twin on a collected small design), and :meth:`Design.newton`
-is the solve loop.  A fitter supplies only its :class:`Rule` — the per-row
-(weight, working response) algebra — plus its start value, its input
-checks and its deviance passes.
+is the solve loop.  A fitter supplies only its :class:`Rule` — the
+per-row (weight, working response) algebra — plus its start value, its
+input checks and its deviance passes.  ``ordered_logit`` and
+``weibull_aft`` share the step-halving likelihood ascent
+:func:`newton_ascent`.
 """
 
 from __future__ import annotations
 
 import os
-from collections.abc import Callable, Iterator
+from collections.abc import Callable, Iterator, Sequence
 from contextlib import contextmanager
 from dataclasses import dataclass
 from typing import NamedTuple
 
 import numpy as np
 from pyspark import StorageLevel
-from pyspark.sql import Column, DataFrame, Row
+from pyspark.sql import Column, DataFrame, Observation, Row
 from pyspark.sql import functions as F
 
-__all__ = ["persisted", "persist_design", "collect_small_design",
-           "collect_columns", "small_design_limit", "SMALL_DESIGN_MAX_ROWS",
-           "Rule", "Design", "prepare_design", "irls_frame", "gramian_aggs",
-           "unpack_gramian"]
+__all__ = ["persisted", "collect_columns", "small_design_limit",
+           "SMALL_DESIGN_MAX_ROWS", "Prepared", "prepare_design",
+           "formula_design", "Rule", "Design", "irls_frame", "gramian_aggs",
+           "sym_aggs", "unpack_sym", "unpack_gramian", "newton_ascent"]
 
 
 @contextmanager
@@ -100,8 +119,7 @@ def collect_columns(df: DataFrame) -> dict[str, np.ndarray]:
 # stays bounded at ~MAX_CELLS × 8 bytes regardless of p.
 SMALL_DESIGN_MAX_ROWS = int(os.environ.get(
     "FCIS_SMALL_DESIGN_ROWS", "2000000"))
-SMALL_DESIGN_MAX_CELLS = int(os.environ.get(
-    "FCIS_SMALL_DESIGN_CELLS", "16000000"))
+SMALL_DESIGN_MAX_CELLS = 16_000_000
 
 
 def small_design_limit(width: int) -> int:
@@ -110,32 +128,6 @@ def small_design_limit(width: int) -> int:
     is smaller.  Reads the module settings at call time, so a patched
     cutoff reaches every solver."""
     return min(SMALL_DESIGN_MAX_ROWS, SMALL_DESIGN_MAX_CELLS // max(width, 1))
-
-
-def collect_small_design(df: DataFrame, xs: list[Column], y: Column,
-                         off: Column, n_rows: int,
-                         ) -> tuple[np.ndarray, np.ndarray,
-                                    np.ndarray] | None:
-    """Collect the projected design as ``(X[n,p], y[n], off[n])`` numpy
-    arrays when its ``n_rows`` fit :func:`small_design_limit`; return
-    None above the cutoff (callers keep their distributed loop).
-
-    The size gate is the caller's COUNT: counting prunes every projected
-    column, so an over-cutoff table costs one cheap aggregate — an
-    earlier LIMIT-probe variant shipped cutoff-many Arrow rows to the
-    driver before giving up, a measured multi-second tax on every
-    big-input solver call.  The count also materializes the caller's
-    persisted design, work the distributed loop needs anyway."""
-    lim = small_design_limit(len(xs) + 2)
-    if lim <= 0 or n_rows > lim:
-        return None
-    p = len(xs)
-    sel = [c.alias(f"__cx{i}__") for i, c in enumerate(xs)]
-    cols = collect_columns(
-        df.select(*sel, y.alias("__cy__"), off.alias("__co__")))
-    X = np.column_stack([cols[f"__cx{i}__"] for i in range(p)]) if p else \
-        np.empty((len(cols["__cy__"]), 0))
-    return X, cols["__cy__"], cols["__co__"]
 
 
 def repartition_big_design(df: DataFrame, n_rows: int,
@@ -153,10 +145,10 @@ def repartition_big_design(df: DataFrame, n_rows: int,
     full parallelism; round robin keeps the layout deterministic for a
     given (source layout, target count).
 
-    Only call this on the ``collect_small_design(...) is None`` branch:
-    below the cutoff the collected numpy path never scans the cache
-    again, and the golden-oracle scales (sf0.01) always sit below the
-    cutoff, so their float-sum combine order is untouched.
+    Only call this above the small-design cutoff: below it the collected
+    numpy path never scans the cache again, and the golden-oracle scales
+    (sf0.01) always sit below the cutoff, so their float-sum combine
+    order is untouched.
 
     Returns the repartitioned, persisted child, materialized before the
     parent cache is dropped.  The child joins the caller's
@@ -172,7 +164,7 @@ def repartition_big_design(df: DataFrame, n_rows: int,
         # splits into byte ranges of which exactly ONE holds every row
         # — getNumPartitions() says 28, the scan runs on 1 core.  Ask
         # for the true row spread instead: one cheap JVM aggregation
-        # over the cache the caller's count gate just materialized (a
+        # over the cache the caller's probe just materialized (a
         # python-side first-row probe was measured 20x slower — it
         # drags rows through the Arrow socket).
         spread = df.groupBy(F.spark_partition_id()).count() \
@@ -189,23 +181,51 @@ def repartition_big_design(df: DataFrame, n_rows: int,
     return work
 
 
-def persist_design(df: DataFrame, y: Column, feat_cols: list[Column],
-                   off: Column | None = None, use_bias: bool = True,
-                   ) -> tuple[DataFrame, Column, list[Column], Column]:
-    """Project ``(y, features[, offset])`` to flat columns and persist.
+class Prepared(NamedTuple):
+    """A persisted design (:func:`prepare_design`): ``work`` is the
+    persisted relation of the named columns, ``probe`` the materializing
+    pass's row (``n`` plus the caller's probes), and ``arrays`` the
+    collected columns by name when the design fits the small-design
+    budget, else None."""
+    work: DataFrame
+    probe: Row
+    arrays: dict[str, np.ndarray] | None
 
-    Returns ``(work, y, xs, off)`` rebased onto the cached relation:
-    ``xs`` gets a leading ``lit(1.0)`` bias column when ``use_bias``
-    (never materialized — constants cost storage, not compute), and
-    ``off`` comes back as ``lit(0.0)`` when no offset was given.
 
-    ``work`` is persisted but not yet materialized; register it with
-    the caller's :func:`persisted` scope.
-    """
-    cols = [y.alias("__y__")]
-    cols += [c.alias(f"__x{j}__") for j, c in enumerate(feat_cols)]
-    if off is not None:
-        cols.append(off.alias("__off__"))
+def prepare_design(keep: Callable[[DataFrame], DataFrame], df: DataFrame,
+                   cols: dict[str, Column], where: Column | None = None,
+                   probe: Sequence[Column] = (), order_free: bool = False,
+                   check: Callable[[Row], None] | None = None,
+                   width: int | None = None) -> Prepared:
+    """Keep the rows of ``df`` that pass ``where`` (default: every named
+    column non-NULL), project them to ``cols`` (name → Column) and
+    persist the projection, registered with ``keep``; run ONE
+    materializing pass that returns ``count`` as ``n`` plus the
+    ``probe`` aggregates, which read the persisted columns by name; then
+    ``check(row)``.  Below :func:`small_design_limit` of ``width``
+    (default: the number of columns) doubles per row, collect the
+    design; above it, :func:`repartition_big_design`.
+
+    The pass is one aggregate: three Spark jobs on the fresh cache (the
+    cache stage, the partial aggregate's shuffle, the result).  When
+    every probe gives the same value in any merge order (``order_free``:
+    count, min, max), it is instead a no-op write that observes them, two
+    jobs.  A summed probe must not be observed: observed partials merge
+    in task completion order, so its low bits would vary run to run.
+
+    The filter must drop every row with a NULL in a column the solver
+    sums: such a row would otherwise enter some sums and not others,
+    silently biasing the solve.  Constants (an intercept, a zero
+    offset) are never persisted — they cost storage, not compute.
+
+    The count sizes the collect, so an over-cutoff table costs one cheap
+    pass — an earlier LIMIT-probe variant shipped cutoff-many Arrow rows
+    to the driver before giving up, a measured multi-second tax on every
+    big-input solver call."""
+    if where is None:
+        where = F.lit(True)
+        for c in cols.values():
+            where = where & c.isNotNull()
     # NOTE: deliberately NO repartition — the projection keeps the
     # source's split layout, so per-partition row order (and therefore
     # every float-sum combine order) is identical to scanning the
@@ -213,11 +233,24 @@ def persist_design(df: DataFrame, y: Column, feat_cols: list[Column],
     # loop produced, which the frozen golden oracles depend on.  A
     # repartition here once broke gen_goldens' cross-process
     # determinism check (partition count followed defaultParallelism).
-    work = df.select(*cols).persist(StorageLevel.MEMORY_AND_DISK)
-    xs = ([F.lit(1.0)] if use_bias else []) \
-        + [F.col(f"__x{j}__") for j in range(len(feat_cols))]
-    return (work, F.col("__y__"), xs,
-            F.col("__off__") if off is not None else F.lit(0.0))
+    work = keep(df.where(where)
+                .select(*[c.alias(nm) for nm, c in cols.items()])
+                .persist(StorageLevel.MEMORY_AND_DISK))
+    aggs = [F.count(F.lit(1)).alias("n"), *probe]
+    if order_free:
+        seen = Observation()
+        work.observe(seen, *aggs).write.format("noop") \
+            .mode("overwrite").save()
+        row = Row(**seen.get)
+    else:
+        row = work.agg(*aggs).collect()[0]
+    if check:
+        check(row)
+    n = int(row["n"])
+    lim = small_design_limit(len(cols) if width is None else width)
+    if lim > 0 and n <= lim:
+        return Prepared(work, row, collect_columns(work))
+    return Prepared(repartition_big_design(work, n, keep), row, None)
 
 
 class Rule(NamedTuple):
@@ -256,6 +289,24 @@ def irls_frame(df: DataFrame, xs: list[Column], y: Column, off: Column,
                        w.alias("__w__"), z.alias("__z__"), F.col("__yy__"))
 
 
+def sym_aggs(p: int, name: str,
+             term: Callable[[int, int], Column]) -> list[Column]:
+    """``Σ term(i, j)`` for i ≤ j < p as ``{name}{i}_{j}``: the upper
+    triangle of a symmetric sum matrix (:func:`unpack_sym`)."""
+    return [F.sum(term(i, j)).alias(f"{name}{i}_{j}")
+            for i in range(p) for j in range(i, p)]
+
+
+def unpack_sym(row, p: int, name: str) -> np.ndarray:
+    """The symmetric p×p matrix of ``{name}{i}_{j}`` (i ≤ j) in ``row``
+    (a Row or a dict)."""
+    A = np.empty((p, p))
+    for i in range(p):
+        for j in range(i, p):
+            A[i, j] = A[j, i] = row[f"{name}{i}_{j}"]
+    return A
+
+
 def gramian_aggs(p: int, w: Column | None = None,
                  rhs: bool = True) -> list[Column]:
     """Aggregates of one Fisher step over :func:`irls_frame` columns:
@@ -263,12 +314,9 @@ def gramian_aggs(p: int, w: Column | None = None,
     and the outcome count as ``n__``; ``w`` defaults to ``__w__``."""
     ps = [F.col(f"__p{i}__") for i in range(p)]
     w = F.col("__w__") if w is None else w
-    aggs = []
-    for i in range(p):
-        if rhs:
-            aggs.append(F.sum(w * ps[i] * F.col("__z__")).alias(f"b{i}"))
-        for j in range(i, p):
-            aggs.append(F.sum(w * ps[i] * ps[j]).alias(f"a{i}_{j}"))
+    aggs = [F.sum(w * ps[i] * F.col("__z__")).alias(f"b{i}")
+            for i in range(p)] if rhs else []
+    aggs += sym_aggs(p, "a", lambda i, j: w * ps[i] * ps[j])
     aggs.append(F.count(F.col("__yy__")).alias("n__"))
     return aggs
 
@@ -277,19 +325,15 @@ def unpack_gramian(row: Row, p: int, rhs: bool = True,
                    ) -> tuple[np.ndarray, np.ndarray | None, float]:
     """``(A, b, n)`` from one row of :func:`gramian_aggs`; A is filled
     symmetric, b is None without ``rhs``."""
-    A = np.empty((p, p))
-    b = np.empty(p) if rhs else None
-    for i in range(p):
-        if rhs:
-            b[i] = row[f"b{i}"]
-        for j in range(i, p):
-            A[i, j] = A[j, i] = row[f"a{i}_{j}"]
-    return A, b, float(row["n__"])
+    b = np.array([row[f"b{i}"] for i in range(p)], dtype=float) \
+        if rhs else None
+    return unpack_sym(row, p, "a"), b, float(row["n__"])
 
 
 @dataclass
 class Design:
-    """A complete-case design persisted for one fit (:func:`prepare_design`).
+    """A complete-case ``y ~ features`` design persisted for one fit
+    (:func:`formula_design`).
 
     ``work`` is the persisted relation and ``xs``/``y``/``off`` are
     rebased onto it; ``probe`` is the materializing aggregate's row
@@ -345,36 +389,71 @@ class Design:
         return beta, A, n, it, converged
 
 
-def prepare_design(keep: Callable[[DataFrame], DataFrame], df: DataFrame,
+def formula_design(keep: Callable[[DataFrame], DataFrame], df: DataFrame,
                    y_expr: str, feats: list[str], offset: str | None = None,
                    use_bias: bool = True,
                    probe: Callable[[Column], list[Column]] | None = None,
                    check: Callable[[Row], None] | None = None) -> Design:
-    """Complete-case filter, :func:`persist_design` (registered with
-    ``keep``), one materializing aggregate — ``count`` as ``n`` plus
-    ``probe(y)`` — then ``check(row)``, :func:`collect_small_design` and,
-    above the cutoff, :func:`repartition_big_design`.
-
-    The filter drops rows with a NULL outcome, feature or offset: such a
-    row would otherwise enter the y-free Gramian sums but not the
-    y-bearing ones, silently biasing the solve."""
+    """:func:`prepare_design` of ``y_expr ~ feats (+ offset)``: the
+    persisted columns are ``__y__``, ``__x{j}__`` and ``__off__``;
+    ``probe(y)`` adds aggregates over the rebased outcome.  The design's
+    ``xs`` gain a leading ``lit(1.0)`` bias when ``use_bias``, and
+    ``off`` is ``lit(0.0)`` without an offset."""
     if not feats and not use_bias:
         raise ValueError("empty design: no features and use_bias=False")
-    y = F.expr(y_expr).cast("double")
-    xs = [F.expr(e).cast("double") for e in feats]
-    off = F.expr(offset).cast("double") if offset is not None else F.lit(0.0)
-    cc = y.isNotNull() & off.isNotNull()
-    for x in xs:
-        cc = cc & x.isNotNull()
-    work, y, xs, off = persist_design(
-        df.where(cc), y, xs, off=off if offset is not None else None,
-        use_bias=use_bias)
-    keep(work)
-    row = work.agg(F.count(F.lit(1)).alias("n"),
-                   *(probe(y) if probe else [])).collect()[0]
-    if check:
-        check(row)
-    arrays = collect_small_design(work, xs, y, off, n_rows=int(row["n"]))
-    if arrays is None:
-        work = repartition_big_design(work, int(row["n"]), keep)
-    return Design(work, xs, y, off, row, arrays)
+    cols = {"__y__": F.expr(y_expr).cast("double")}
+    cols.update({f"__x{j}__": F.expr(e).cast("double")
+                 for j, e in enumerate(feats)})
+    if offset is not None:
+        cols["__off__"] = F.expr(offset).cast("double")
+    y = F.col("__y__")
+    prep = prepare_design(keep, df, cols, probe=probe(y) if probe else (),
+                          order_free=probe is None, check=check,
+                          width=len(feats) + (1 if use_bias else 0) + 2)
+    xs = ([F.lit(1.0)] if use_bias else []) \
+        + [F.col(f"__x{j}__") for j in range(len(feats))]
+    off = F.col("__off__") if offset is not None else F.lit(0.0)
+    arrays = None
+    if prep.arrays is not None:
+        a = prep.arrays
+        n = len(a["__y__"])
+        X = np.column_stack(([np.ones(n)] if use_bias else [])
+                            + [a[f"__x{j}__"] for j in range(len(feats))])
+        arrays = (X, a["__y__"],
+                  a["__off__"] if offset is not None else np.zeros(n))
+    return Design(prep.work, xs, y, off, prep.probe, arrays)
+
+
+def newton_ascent(scan: Callable[[np.ndarray],
+                                 tuple[float, np.ndarray, np.ndarray]],
+                  theta: np.ndarray, max_iter: int, tol: float,
+                  ) -> tuple[np.ndarray, float, np.ndarray, int, bool]:
+    """Maximize a log-likelihood by Newton steps θ ← θ − H⁻¹g, where
+    ``scan(θ)`` gives ``(ll, g, H)`` (H negative definite near the
+    optimum).  A step that lowers ll or makes it non-finite is halved,
+    up to 20 times; the loop stops once the step or the ll change is
+    under ``tol``.  Returns ``(θ, ll, H, iterations, converged)``."""
+    ll, g, H = scan(theta)
+    converged = False
+    it = 0
+    for it in range(1, max_iter + 1):
+        try:
+            step = np.linalg.solve(H, g)
+        except np.linalg.LinAlgError:
+            step = np.linalg.pinv(H) @ g
+        new = theta - step
+        ll_new, g_new, H_new = scan(new)
+        halves = 0
+        while (not np.isfinite(ll_new) or ll_new < ll - 1e-12) \
+                and halves < 20:
+            step = step / 2.0
+            new = theta - step
+            ll_new, g_new, H_new = scan(new)
+            halves += 1
+        done = float(np.max(np.abs(new - theta))) < tol \
+            or abs(ll_new - ll) < tol
+        theta, ll, g, H = new, ll_new, g_new, H_new
+        if done:
+            converged = True
+            break
+    return theta, ll, H, it, converged

@@ -33,7 +33,7 @@ from fast_causal_inference_spark.operators.design import (
     gramian_aggs,
     irls_frame,
     persisted,
-    prepare_design,
+    formula_design,
     unpack_gramian,
 )
 
@@ -166,7 +166,7 @@ def _irls_wz_np(family: str, mu: np.ndarray, eta: np.ndarray,
                 y: np.ndarray, off: np.ndarray,
                 var_power: float) -> tuple[np.ndarray, np.ndarray]:
     """numpy twin of :func:`_irls_wz` for the collected-design
-    small-input path (design.collect_small_design) — identical per-row
+    small-input path (design.prepare_design) — identical per-row
     algebra, driver-side."""
     if family == "gaussian":
         s = np.ones_like(mu)
@@ -314,7 +314,7 @@ def glm(df: DataFrame, formula: str, family: str = "poisson",
     with persisted() as keep:
         # the log links' start value and checks ride the design's
         # materializing count
-        d = prepare_design(
+        d = formula_design(
             keep, df, y_expr, feats, offset, use_bias,
             probe=(lambda y: [F.avg(y).alias("m"), F.min(y).alias("lo")])
             if log_link else None,
@@ -496,7 +496,7 @@ def glm_grouped(df: DataFrame, formula: str, group_expr: str,
     for e in feats:
         cc = cc & F.expr(e).cast("double").isNotNull()
     # project (group, y, X, offset) once and persist for the loop —
-    # same discipline as persist_design (design.py), plus the group key
+    # same discipline as design.prepare_design, plus the group key
     cols = [F.expr(group_expr).alias("__g__"), y.alias("__y__")]
     cols += [F.expr(e).cast("double").alias(f"__x{j}__")
              for j, e in enumerate(feats)]
@@ -766,7 +766,7 @@ def _binomial_glm(df: DataFrame, formula: str, link: str,
 
     rule = Rule(_stage, _wz, _wz_np)
     with persisted() as keep:
-        d = prepare_design(
+        d = formula_design(
             keep, df, y_expr, feats, offset, use_bias,
             probe=lambda y: [F.avg(y).alias("m"), F.min(y).alias("lo"),
                              F.max(y).alias("hi")],
@@ -867,7 +867,7 @@ def negative_binomial_regression(df: DataFrame, formula: str,
     # dispersion rounds × inner IRLS), so the collected small-design path
     # pays off more here than anywhere else in the GLM zoo
     with persisted() as keep:
-        d = prepare_design(
+        d = formula_design(
             keep, df, y_expr, feats, offset, use_bias,
             probe=lambda y: [F.avg(y).alias("m"), F.min(y).alias("lo")],
             check=_check)

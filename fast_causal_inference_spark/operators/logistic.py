@@ -85,7 +85,7 @@ def logistic_regression(df: DataFrame, formula: str, use_bias: bool = True,
     """
     from fast_causal_inference_spark.operators.design import (
         persisted,
-        prepare_design,
+        formula_design,
     )
     from fast_causal_inference_spark.operators.glm import _family_rule
     from fast_causal_inference_spark.operators.ols import parse_r_formula
@@ -95,7 +95,7 @@ def logistic_regression(df: DataFrame, formula: str, use_bias: bool = True,
         return _mllib_logistic(df, y_expr, feats, use_bias, max_iter, tol)
     rule = _family_rule("binomial")
     with persisted() as keep:
-        d = prepare_design(keep, df, y_expr, feats, use_bias=use_bias)
+        d = formula_design(keep, df, y_expr, feats, use_bias=use_bias)
         beta, A, n, it, converged = d.newton(rule, np.zeros(len(d.xs)),
                                              max_iter, tol)
     # SE from inv of final Fisher information (= weighted Gramian A)

@@ -40,9 +40,12 @@ def ordered_logit(df: DataFrame, formula: str, max_iter: int = 50,
     cumulative odds ratio of landing in a HIGHER category per unit x.
     """
     from fast_causal_inference_spark.operators.design import (
+        newton_ascent,
         persisted,
         repartition_big_design,
         small_design_limit,
+        sym_aggs,
+        unpack_sym,
     )
     from fast_causal_inference_spark.operators.ols import parse_r_formula
 
@@ -131,11 +134,9 @@ def ordered_logit(df: DataFrame, formula: str, max_iter: int = 50,
                                     * (u * (lAA + lAB) + w * (lAB + lBB)))
                               .alias(f"hab{m}_{i}"))
             curv = lAA + 2.0 * lAB + lBB
-            for i in range(k):
-                ag.append(F.sum(-F.col(f"__x{i}") * (lA + lB)).alias(f"gb{i}"))
-                for j2 in range(i, k):
-                    ag.append(F.sum(F.col(f"__x{i}") * F.col(f"__x{j2}") * curv)
-                              .alias(f"hbb{i}_{j2}"))
+            xc = [F.col(f"__x{i}") for i in range(k)]
+            ag += [F.sum(-xc[i] * (lA + lB)).alias(f"gb{i}") for i in range(k)]
+            ag += sym_aggs(k, "hbb", lambda i, j: xc[i] * xc[j] * curv)
             r = sub.agg(*ag).collect()[0]
             p_tot = J - 1 + k
             g = np.zeros(p_tot)
@@ -149,13 +150,13 @@ def ordered_logit(df: DataFrame, formula: str, max_iter: int = 50,
                     H[m, J - 1 + i] = H[J - 1 + i, m] = float(r[f"hab{m}_{i}"])
             for i in range(k):
                 g[J - 1 + i] = float(r[f"gb{i}"])
-                for j2 in range(i, k):
-                    H[J - 1 + i, J - 1 + j2] = H[J - 1 + j2, J - 1 + i] = \
-                        float(r[f"hbb{i}_{j2}"])
+            H[J - 1:, J - 1:] = unpack_sym(r, k, "hbb")
             return float(r["ll"]), g, H
 
-        # small-input fast path (round 11, design.SMALL_DESIGN_MAX_ROWS):
-        # collect (category index, X) ONCE and run every Newton scan —
+        # small-input fast path (round 11, design.SMALL_DESIGN_MAX_ROWS),
+        # sized here rather than by design.prepare_design: the category
+        # index needs the category pass over the cache first.
+        # Collect (category index, X) ONCE and run every Newton scan —
         # including the step-halving re-scans — driver-side in numpy.
         # Identical per-row algebra to _scan; the distributed scan remains
         # the above-cutoff (100 TB) path.
@@ -224,30 +225,8 @@ def ordered_logit(df: DataFrame, formula: str, max_iter: int = 50,
             H[J - 1:, J - 1:] = Xv.T @ (Xv * curv[:, None])
             return ll, g, H
 
-        scan = _scan_np if des is not None else _scan
-        ll, g, H = scan(theta)
-        converged = False
-        it = 0
-        for it in range(1, max_iter + 1):
-            try:
-                step = np.linalg.solve(H, g)
-            except np.linalg.LinAlgError:
-                step = np.linalg.pinv(H) @ g
-            new = theta - step
-            ll_new, g_new, H_new = scan(new)
-            halves = 0
-            while (not np.isfinite(ll_new) or ll_new < ll - 1e-12) \
-                    and halves < 20:
-                step = step / 2.0
-                new = theta - step
-                ll_new, g_new, H_new = scan(new)
-                halves += 1
-            done = float(np.max(np.abs(new - theta))) < tol \
-                or abs(ll_new - ll) < tol
-            theta, ll, g, H = new, ll_new, g_new, H_new
-            if done:
-                converged = True
-                break
+        theta, ll, H, it, converged = newton_ascent(
+            _scan_np if des is not None else _scan, theta, max_iter, tol)
     if np.any(np.diff(theta[:J - 1]) <= 0):
         raise ValueError(
             "cutpoints came out non-monotone — the proportional-odds "

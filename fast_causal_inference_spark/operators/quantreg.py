@@ -39,7 +39,19 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from fast_causal_inference_spark import stats_distributions as dist
-from fast_causal_inference_spark.operators.ols import parse_r_formula
+from fast_causal_inference_spark.operators.design import (
+    formula_design,
+    persisted,
+    sym_aggs,
+    unpack_sym,
+)
+from fast_causal_inference_spark.operators.ols import (
+    _fit_from_row,
+    parse_r_formula,
+)
+from fast_causal_inference_spark.operators.suffstats import (
+    suffstat_agg_columns,
+)
 
 __all__ = ["quantile_regression", "quantile_regression_multi",
            "QuantRegModel"]
@@ -125,38 +137,25 @@ def quantile_regression_multi(df: DataFrame, formula: str,
     y_expr, feats = parse_r_formula(formula)
     k = len(feats)
     p = k + (1 if use_bias else 0)
-    if p == 0:
-        raise ValueError("empty design: no features and use_bias=False")
-    xs = ([F.lit(1.0)] if use_bias else []) + \
-        [F.expr(e).cast("double") for e in feats]
-    y = F.expr(y_expr).cast("double")
-    cc = y.isNotNull()
-    for e in feats:
-        cc = cc & F.expr(e).cast("double").isNotNull()
-    df = df.where(cc)
-    # persist the projected design for the Newton loop (design.py); the
-    # OLS warm start below doubles as its materialization
-    from fast_causal_inference_spark.operators.design import (
-        collect_small_design,
-        persist_design,
-        persisted,
-        repartition_big_design,
-    )
+    names = [f"__x{j}__" for j in range(k)] + ["__y__"]
+
+    def check(row) -> None:
+        if float(row["n"]) < p + 1:
+            raise ValueError(
+                f"quantile_regression: n={float(row['n']):.0f} rows < p+1")
 
     with persisted() as keep:
-        df, y, xs, _ = persist_design(df, y, xs[1:] if use_bias else xs,
-                                      use_bias=use_bias)
-        keep(df)
-
-        # warm start at OLS; its residual sd sets the bandwidth scale
-        from fast_causal_inference_spark.operators.ols import ols
-
-        init = ols(df, "__y__ ~ " + " + ".join(f"__x{j}__" for j in range(k)),
-                   use_bias=use_bias)
+        # the OLS warm start rides the design's materializing probe: the
+        # (Σx, Σxxᵀ) sums of the persisted columns, minus the row count
+        # the probe already holds; its residual sd sets the bandwidth
+        d = formula_design(keep, df, y_expr, feats, use_bias=use_bias,
+                           probe=lambda y: suffstat_agg_columns(names)[1:],
+                           check=check)
+        df, xs, y, des = d.work, d.xs, d.y, d.arrays
+        n0 = float(d.probe["n"])
+        init = _fit_from_row(d.probe, names[:-1], "__y__", use_bias, n0,
+                             None)
         beta = np.asarray(init.beta, dtype=float).copy()
-        n0 = float(init.n)
-        if n0 < p + 1:
-            raise ValueError(f"quantile_regression: n={n0:.0f} rows < p+1")
         sigma0 = math.sqrt(max(init.sigma2, 1e-12)) \
             if init.sigma2 == init.sigma2 else 1.0
         if h is None:
@@ -194,41 +193,22 @@ def quantile_regression_multi(df: DataFrame, formula: str,
                               F.col("__yy__"))
             ps = [F.col(f"__p{i}__") for i in range(p)]
             wc, g1c = F.col("__w__"), F.col("__g1__")
-            aggs = []
-            for i in range(p):
-                # gradient wrt beta_i is -sum(x_i * loss'(r))
-                aggs.append(F.sum(ps[i] * g1c).alias(f"g{i}"))
-                for j in range(i, p):
-                    aggs.append(F.sum(wc * ps[i] * ps[j]).alias(f"h{i}_{j}"))
-                    if _S_cache[0] is None:
-                        # S = X'X is β- and τ-independent: pay its p(p+1)/2
-                        # sums on the FIRST scan only (every later scan of
-                        # the Newton/line-search sequence drops them)
-                        aggs.append(F.sum(ps[i] * ps[j]).alias(f"s{i}_{j}"))
+            # gradient wrt beta_i is -sum(x_i * loss'(r))
+            aggs = [F.sum(ps[i] * g1c).alias(f"g{i}") for i in range(p)]
+            aggs += sym_aggs(p, "h", lambda i, j: wc * ps[i] * ps[j])
+            if _S_cache[0] is None:
+                # S = X'X is β- and τ-independent: pay its p(p+1)/2 sums
+                # on the FIRST scan only (every later scan of the
+                # Newton/line-search sequence drops them)
+                aggs += sym_aggs(p, "s", lambda i, j: ps[i] * ps[j])
             aggs.append(F.sum(F.col("__l__")).alias("loss__"))
             aggs.append(F.count(F.col("__yy__")).alias("n__"))
             row = step.agg(*aggs).collect()[0]
             g = np.array([float(row[f"g{i}"]) for i in range(p)])
-            H = np.empty((p, p))
-            for i in range(p):
-                for j in range(i, p):
-                    H[i, j] = H[j, i] = float(row[f"h{i}_{j}"])
             if _S_cache[0] is None:
-                S = np.empty((p, p))
-                for i in range(p):
-                    for j in range(i, p):
-                        S[i, j] = S[j, i] = float(row[f"s{i}_{j}"])
-                _S_cache[0] = S
-            return (g, H, _S_cache[0], float(row["loss__"]),
-                    float(row["n__"]))
-
-        # small-input fast path (round 11, design.collect_small_design):
-        # collect the complete-case design once; every Newton scan —
-        # including the line-search re-scans — runs driver-side in numpy
-        # with the identical smoothed-check-loss algebra
-        des = collect_small_design(df, xs, y, F.lit(0.0), n_rows=int(n0))
-        if des is None:
-            df = repartition_big_design(df, int(n0), keep)
+                _S_cache[0] = unpack_sym(row, p, "s")
+            return (g, unpack_sym(row, p, "h"), _S_cache[0],
+                    float(row["loss__"]), float(row["n__"]))
 
         # X'X is independent of (b, h, tau): compute it once instead of per
         # Newton/line-search scan (the sandwich S is the same object every
@@ -253,7 +233,11 @@ def quantile_regression_multi(df: DataFrame, formula: str,
 
         def _newton(beta: np.ndarray, hh: float, tau: float,
                     iters_budget: int, step_tol: float):
-            """Damped Newton at fixed bandwidth hh from the given start."""
+            """Damped Newton at fixed bandwidth hh from the given start.
+
+            Not design.newton_ascent: a descent that stops on the step
+            size before trying it, and gives up when 20 halvings find no
+            descent, sets the reported iterations, convergence and loss."""
             g, H, S, loss, n = scan(beta, hh, tau)
             converged = False
             it = 0

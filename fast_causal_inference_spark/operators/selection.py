@@ -24,13 +24,15 @@ residuals and the Greene sandwich are formed from W_c; then β = S·β_c
 and Cov = S·Cov_c·Sᵀ.  β_λ, e, σ̂², ρ̂² and the Z side are unchanged.
 
 Scale shape: one probit (Fisher-scoring Gramian scans,
-``glm.py:_binomial_glm``), one materializing aggregate over the selected
-design that returns its row count and the column means w̄ (the same
-single job the bare count was), then TWO aggregation scans — the step-2
-Gramian [W_c'W_c, W_c'y], and the correction moments
-[e'e, Σδ, W_c'ΔW_c, W_c'ΔZ] — every per-row quantity (λ, δ, e) a pure
-Column off the driver-held coefficient vectors and means (Φ from the
-exact Arrow ``erf``).  Nothing row-scale reaches the driver.
+``glm.py:_binomial_glm``), then the selected design persisted through
+``design.prepare_design``, whose materializing aggregate also returns
+the column means w̄, then TWO aggregation scans — the step-2 Gramian
+[W_c'W_c, W_c'y], and the correction moments [e'e, Σδ, W_c'ΔW_c,
+W_c'ΔZ] — every per-row quantity (λ, δ, e) a pure Column off the
+driver-held coefficient vectors and means (Φ from the exact Arrow
+``erf``).  The probit information Z'W₀Z is one more prepared design.
+Below the small-design cutoff each design is collected once and the
+sums are numpy Gramians; above it nothing row-scale reaches the driver.
 """
 
 from __future__ import annotations
@@ -43,6 +45,12 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from fast_causal_inference_spark import stats_distributions as dist
+from fast_causal_inference_spark.operators.design import (
+    persisted,
+    prepare_design,
+    sym_aggs,
+    unpack_sym,
+)
 
 _SQRT2 = math.sqrt(2.0)
 _SQRT2PI = math.sqrt(2.0 * math.pi)
@@ -112,77 +120,39 @@ def heckman(df: DataFrame, outcome_formula: str, selection_formula: str,
     cc = (s == 1) & y.isNotNull()
     for e in x_feats + z_feats:
         cc = cc & F.expr(e).cast("double").isNotNull()
-    sel = df.where(cc)
-    ws = [F.lit(1.0)] + [F.expr(e).cast("double") for e in x_feats] + [lam]
-    zs = [F.lit(1.0)] + [F.expr(e).cast("double") for e in z_feats]
-    pw = len(ws)
-    kzz = len(zs)
-    # project the per-row quantities ONCE (the inverse-Mills λ and δ
-    # chains contain erf; inlined into the O(p²) agg expressions below
-    # they would be re-evaluated per term) and persist: scans 1-2 both
-    # read this narrow relation
-    from pyspark import StorageLevel
-
-    from fast_causal_inference_spark.operators.design import (
-        collect_columns,
-        persisted,
-        repartition_big_design,
-        small_design_limit,
-    )
-
-    # the leading intercepts of W and Z are constants — keep them as
-    # lit(1.0) rebased expressions instead of materializing 16 wasted
-    # bytes per cached row (persist_design's rule in design.py)
+    pw = len(x_feats) + 2
+    # the per-row quantities are projected ONCE (the inverse-Mills λ and
+    # δ chains contain erf; inlined into the O(p²) agg expressions below
+    # they would be re-evaluated per term) and persisted; the leading
+    # intercepts of W and Z stay lit(1.0) (never materialized)
+    cols = {f"__w{i}__": F.expr(e).cast("double")
+            for i, e in enumerate(x_feats, start=1)}
+    cols[f"__w{pw - 1}__"] = lam
+    cols.update({f"__z{j}__": F.expr(e).cast("double")
+                 for j, e in enumerate(z_feats, start=1)})
+    cols["__d__"] = delta
+    cols["__y__"] = y
     with persisted() as keep:
-        selw = keep(sel.select(
-            *[w.alias(f"__w{i}__") for i, w in enumerate(ws[1:], start=1)],
-            *[z.alias(f"__z{j}__") for j, z in enumerate(zs[1:], start=1)],
-            delta.alias("__d__"), y.alias("__y__"))
-            .persist(StorageLevel.MEMORY_AND_DISK))
-        # count-gate (see design.collect_small_design): one aggregate
-        # materializes the persisted design and returns the row count and
-        # the step-2 column means w̄ (the shift; module docstring)
-        r0 = selw.agg(F.count(F.lit(1)).alias("n"),
-                      *[F.avg(f"__w{i}__").alias(f"m{i}")
-                        for i in range(1, pw)]).collect()[0]
-        _nsel = int(r0["n"])
-        wbar = np.array([r0[f"m{i}"] or 0.0 for i in range(1, pw)],
+        # the materializing probe also returns the step-2 column means w̄
+        # (the shift; module docstring)
+        d = prepare_design(
+            keep, df, cols, where=cc,
+            probe=[F.avg(f"__w{i}__").alias(f"m{i}") for i in range(1, pw)],
+            width=pw + kz + 2)
+        n1 = float(d.probe["n"])
+        if n1 <= pw:
+            raise ValueError(f"only {int(n1)} selected rows for {pw} "
+                             f"step-2 parameters")
+        wbar = np.array([d.probe[f"m{i}"] or 0.0 for i in range(1, pw)],
                         dtype=float)
-        ws = [F.lit(1.0)] + [F.col(f"__w{i}__") - F.lit(float(wbar[i - 1]))
-                             for i in range(1, pw)]
-        zs = [F.lit(1.0)] + [F.col(f"__z{j}__") for j in range(1, kzz)]
-        delta = F.col("__d__")
-        y = F.col("__y__")
-        sel = selw
-
-        # small-input fast path (round 11, design.py cutoff): the selected
-        # design already carries the erf-chain λ/δ as materialized columns,
-        # so ONE bounded collect evaluates the Arrow erf once and scans 1-2
-        # become numpy Gramians
-        lim = small_design_limit(pw + kzz + 2)
-        des = None
-        if _nsel > lim:
-            selw = repartition_big_design(selw, _nsel, keep)
-            sel = selw
-        if _nsel <= lim:
-            _pdf = collect_columns(selw)
-            ones = np.ones(_nsel)
-            des = (np.column_stack(
-                       [ones] + [_pdf[f"__w{i}__"] - wbar[i - 1]
-                                 for i in range(1, pw)]),
-                   np.column_stack(
-                       [ones] + [_pdf[f"__z{j}__"]
-                                 for j in range(1, kzz)]),
-                   _pdf["__d__"],
-                   _pdf["__y__"])
-            del _pdf
-
-        if des is not None:
-            Wm, Zm, dv, yv = des
-            n1 = float(len(yv))
-            if n1 <= pw:
-                raise ValueError(f"only {int(n1)} selected rows for {pw} "
-                                 f"step-2 parameters")
+        if d.arrays is not None:
+            a = d.arrays
+            ones = np.ones(int(n1))
+            Wm = np.column_stack([ones] + [a[f"__w{i}__"] - wbar[i - 1]
+                                           for i in range(1, pw)])
+            Zm = np.column_stack([ones] + [a[f"__z{j}__"]
+                                           for j in range(1, kz)])
+            dv, yv = a["__d__"], a["__y__"]
             WtW = Wm.T @ Wm
             Wty = Wm.T @ yv
             beta = np.linalg.solve(WtW, Wty)
@@ -193,27 +163,17 @@ def heckman(df: DataFrame, outcome_formula: str, selection_formula: str,
             Wd = Wm * dv[:, None]
             WdW = Wd.T @ Wm
             WdZ = Wd.T @ Zm
-            sigma2 = sse / n1 + b_lam * b_lam * sd / n1
-            rho2 = min(b_lam * b_lam / sigma2, 1.0) if sigma2 > 0 else 0.0
         else:
+            ws = [F.lit(1.0)] + [F.col(f"__w{i}__") - F.lit(float(wbar[i - 1]))
+                                 for i in range(1, pw)]
+            zs = [F.lit(1.0)] + [F.col(f"__z{j}__") for j in range(1, kz)]
+            delta, y = F.col("__d__"), F.col("__y__")
             # scan 1: step-2 Gramian [W'W | W'y]
-            aggs = []
-            for i in range(pw):
-                aggs.append(F.sum(ws[i] * y).alias(f"b{i}"))
-                for j in range(i, pw):
-                    aggs.append(F.sum(ws[i] * ws[j]).alias(f"a{i}_{j}"))
-            aggs.append(F.count(y).alias("n1"))
-            r = sel.agg(*aggs).collect()[0]
-            n1 = float(r["n1"])
-            if n1 <= pw:
-                raise ValueError(f"only {int(n1)} selected rows for {pw} "
-                                 f"step-2 parameters")
-            WtW = np.empty((pw, pw))
-            Wty = np.empty(pw)
-            for i in range(pw):
-                Wty[i] = r[f"b{i}"]
-                for j in range(i, pw):
-                    WtW[i, j] = WtW[j, i] = r[f"a{i}_{j}"]
+            r = d.work.agg(
+                *[F.sum(ws[i] * y).alias(f"b{i}") for i in range(pw)],
+                *sym_aggs(pw, "a", lambda i, j: ws[i] * ws[j])).collect()[0]
+            WtW = unpack_sym(r, pw, "a")
+            Wty = np.array([r[f"b{i}"] for i in range(pw)], dtype=float)
             beta = np.linalg.solve(WtW, Wty)
             b_lam = float(beta[-1])
 
@@ -222,63 +182,42 @@ def heckman(df: DataFrame, outcome_formula: str, selection_formula: str,
             for b, c in zip(beta, ws):
                 yhat = yhat + F.lit(float(b)) * c
             e_col = y - yhat
-            aggs = [F.sum(e_col * e_col).alias("sse"),
-                    F.sum(delta).alias("sd")]
-            for i in range(pw):
-                for j in range(i, pw):
-                    aggs.append(F.sum(delta * ws[i] * ws[j])
-                                .alias(f"wdw{i}_{j}"))
-                for j in range(kz):
-                    aggs.append(F.sum(delta * ws[i] * zs[j])
-                                .alias(f"wdz{i}_{j}"))
-            r2 = sel.agg(*aggs).collect()[0]
-            sigma2 = float(r2["sse"]) / n1 \
-                + b_lam * b_lam * float(r2["sd"]) / n1
-            rho2 = min(b_lam * b_lam / sigma2, 1.0) if sigma2 > 0 else 0.0
-            WdW = np.empty((pw, pw))
-            WdZ = np.empty((pw, kz))
-            for i in range(pw):
-                for j in range(i, pw):
-                    WdW[i, j] = WdW[j, i] = r2[f"wdw{i}_{j}"]
-                for j in range(kz):
-                    WdZ[i, j] = r2[f"wdz{i}_{j}"]
+            r2 = d.work.agg(
+                F.sum(e_col * e_col).alias("sse"), F.sum(delta).alias("sd"),
+                *sym_aggs(pw, "wdw", lambda i, j: delta * ws[i] * ws[j]),
+                *[F.sum(delta * ws[i] * zs[j]).alias(f"wdz{i}_{j}")
+                  for i in range(pw) for j in range(kz)]).collect()[0]
+            sse, sd = float(r2["sse"]), float(r2["sd"])
+            WdW = unpack_sym(r2, pw, "wdw")
+            WdZ = np.array([[r2[f"wdz{i}_{j}"] for j in range(kz)]
+                            for i in range(pw)], dtype=float)
+        sigma2 = sse / n1 + b_lam * b_lam * sd / n1
+        rho2 = min(b_lam * b_lam / sigma2, 1.0) if sigma2 > 0 else 0.0
+
     # probit covariance: glm keeps only stderr, so rebuild the full
-    # Fisher inverse with one more tiny scan over the probit's own
-    # complete cases (selection + all Z non-null); project w0 (erf
-    # chain) and Z once per row before the O(k²) aggregate
+    # Fisher inverse with one more tiny pass over the probit's own
+    # complete cases (selection + all Z non-null), projecting the w0 erf
+    # chain once per row
     cc = s.isNotNull()
-    zs_raw = [F.lit(1.0)] + [F.expr(e).cast("double") for e in z_feats]
     for e in z_feats:
         cc = cc & F.expr(e).cast("double").isNotNull()
-    mu0 = Phi
-    w0 = (phi * phi) / (mu0 * (1.0 - mu0) + F.lit(1e-10))
-    stepf = df.where(cc).select(
-        *[z.alias(f"__z{j}__") for j, z in enumerate(zs_raw)],
-        w0.alias("__w0__"))
-    _pf = None
-    # count prunes the erf column
-    if int(stepf.count()) <= small_design_limit(kz + 2):
-        from fast_causal_inference_spark.operators.design import (
-            collect_columns,
-        )
-
-        _pf = collect_columns(stepf)
-        Zf_np = np.column_stack([_pf[f"__z{j}__"] for j in range(kz)])
-        w0_np = _pf["__w0__"]
-        Fz = (Zf_np * w0_np[:, None]).T @ Zf_np
-    else:
-        zf = [F.col(f"__z{j}__") for j in range(kz)]
-        w0c = F.col("__w0__")
-        ag = []
-        for i in range(kz):
-            for j in range(i, kz):
-                ag.append(F.sum(w0c * zf[i] * zf[j]).alias(f"f{i}_{j}"))
-        rf = stepf.agg(*ag).collect()[0]
-        Fz = np.empty((kz, kz))
-        for i in range(kz):
-            for j in range(i, kz):
-                Fz[i, j] = Fz[j, i] = rf[f"f{i}_{j}"]
-    del _pf
+    cols = {f"__z{j}__": F.expr(e).cast("double")
+            for j, e in enumerate(z_feats, start=1)}
+    cols["__w0__"] = (phi * phi) / (Phi * (1.0 - Phi) + F.lit(1e-10))
+    with persisted() as keep:
+        f = prepare_design(keep, df, cols, where=cc, order_free=True,
+                           width=kz + 2)
+        if f.arrays is not None:
+            a = f.arrays
+            Zf = np.column_stack([np.ones(len(a["__w0__"]))]
+                                 + [a[f"__z{j}__"] for j in range(1, kz)])
+            Fz = (Zf * a["__w0__"][:, None]).T @ Zf
+        else:
+            zf = [F.lit(1.0)] + [F.col(f"__z{j}__") for j in range(1, kz)]
+            w0c = F.col("__w0__")
+            Fz = unpack_sym(f.work.agg(*sym_aggs(
+                kz, "f", lambda i, j: w0c * zf[i] * zf[j])).collect()[0],
+                kz, "f")
     Vg = np.linalg.inv(Fz)
 
     # Greene sandwich in the shifted coordinates, then back: β = S·β_c,

@@ -18,25 +18,33 @@ from pyspark.sql import functions as F
 from fast_causal_inference_spark import stats_distributions as dist
 
 
+def _arm_keys(groupby: str) -> list:
+    """The arm as ``groupname`` plus its NULL flag ``__null``, grouping
+    keys for :func:`_in_arm_order` (toPandas turns both a NULL and a NaN
+    arm into NaN; the flag tells them apart)."""
+    gcol = F.col(groupby) if groupby.isidentifier() else F.expr(groupby)
+    return [gcol.alias("groupname"), gcol.isNull().alias("__null")]
+
+
+def _in_arm_order(obs: pd.DataFrame) -> pd.DataFrame:
+    """``obs`` rows sorted by arm on the driver, in the order an ascending
+    Spark sort gives (NULL first, NaN after every number), stably, with
+    the ``__null`` key dropped: an orderBy before toPandas adds a
+    range-partition sampling job and its stage (4 jobs instead of 2)."""
+    return (obs.sort_values(["__null", "groupname"], ascending=[False, True],
+                            na_position="last", kind="stable")
+            .drop(columns="__null")
+            .reset_index(drop=True))
+
+
 def srm(df: DataFrame, x: str, groupby: str,
         ratio: list[float] | None = None) -> pd.DataFrame:
     """Chi-square SRM check. Returns a pandas DataFrame: one row per group
     value (ordered) with observed/expected totals, plus attrs
     ``chisquare``/``p_value`` (also repeated as columns for convenience)."""
     xcol = F.expr(x).cast("double")
-    gcol = F.col(groupby) if groupby.isidentifier() else F.expr(groupby)
-    # the k arm rows are sorted on the driver, in the order an ascending
-    # Spark sort gives (NULL first, NaN after every number): an orderBy
-    # before toPandas adds a range-partition sampling job and its stage
-    # (4 jobs instead of 2).  The NULL flag rides along as a grouping
-    # key, since toPandas turns both NULL and NaN into NaN.
-    obs = (df.groupBy(gcol.alias("groupname"), gcol.isNull().alias("__null"))
-             .agg(F.sum(xcol).alias("observed"))
-             .toPandas()
-             .sort_values(["__null", "groupname"], ascending=[False, True],
-                          na_position="last", kind="stable")
-             .drop(columns="__null")
-             .reset_index(drop=True))
+    obs = _in_arm_order(df.groupBy(*_arm_keys(groupby))
+                        .agg(F.sum(xcol).alias("observed")).toPandas())
     f_obs = obs["observed"].to_numpy(dtype=float)
     kk = len(f_obs)
     if ratio is None:
@@ -85,8 +93,7 @@ def srm_grouped(df: DataFrame, x: str, groupby: str,
     renormalized (exactly what the solo call on the segment would see).
     """
     xcol = F.expr(x).cast("double")
-    gcol = F.col(groupby) if groupby.isidentifier() else F.expr(groupby)
-    obs = (df.groupBy(*group_cols, gcol.alias("groupname"))
+    obs = (df.groupBy(*group_cols, *_arm_keys(groupby))
              .agg(F.sum(xcol).alias("observed"))
              .limit(max_groups + 1)
              .toPandas())
@@ -95,14 +102,20 @@ def srm_grouped(df: DataFrame, x: str, groupby: str,
             f"more than {max_groups} (segment, arm) cells — the "
             "per-segment reports collect to the driver; coarsen the "
             "grouping or raise max_groups")
-    # natural order, matching srm()'s ascending arm order (ratio alignment)
-    arms = sorted(obs["groupname"].unique().tolist())
-    if ratio is not None and len(ratio) != len(arms):
+    # number the arms in srm()'s order (ratio alignment); every segment
+    # then keeps its rows in that order
+    obs["__arm"] = obs.groupby(["__null", "groupname"],
+                               dropna=False).ngroup()
+    obs = _in_arm_order(obs)
+    obs["__arm"] = pd.factorize(obs["__arm"])[0]
+    n_arms = obs["__arm"].nunique()
+    if ratio is not None and len(ratio) != n_arms:
         raise ValueError(
             f"ratio length {len(ratio)} != number of distinct arms "
-            f"{len(arms)}")
-    share = dict(zip(arms, [1.0] * len(arms) if ratio is None else ratio))
-    if any(v <= 0 for v in share.values()):
+            f"{n_arms}")
+    share = np.ones(n_arms) if ratio is None \
+        else np.asarray(ratio, dtype=float)
+    if (share <= 0).any():
         raise ValueError(
             f"ratio entries must be strictly positive (got {ratio}): "
             "a zero expected count makes the chi-square undefined — "
@@ -111,14 +124,14 @@ def srm_grouped(df: DataFrame, x: str, groupby: str,
     # dropna=False: a NULL segment key is a real report cell (pandas'
     # default silently drops it, unlike the Spark groupBy that made it)
     for key, seg in obs.groupby(group_cols, sort=True, dropna=False):
-        seg = seg.sort_values("groupname").reset_index(drop=True)
+        r = share[seg["__arm"].to_numpy()]
+        seg = seg.drop(columns="__arm").reset_index(drop=True)
         f_obs = seg["observed"].to_numpy(dtype=float)
         if np.isnan(f_obs).any():
             raise ValueError(
                 f"srm_grouped: segment {key!r} has a NULL/NaN observed "
                 "sum (all-NULL metric rows?) — chi-square would be "
                 "silently NaN")
-        r = np.array([share[g] for g in seg["groupname"]], dtype=float)
         f_exp = r / r.sum() * f_obs.sum()
         chi2 = float(((f_obs - f_exp) ** 2 / f_exp).sum())
         seg["expected"] = f_exp

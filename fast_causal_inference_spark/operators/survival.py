@@ -16,33 +16,32 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from fast_causal_inference_spark import stats_distributions as dist
-from fast_causal_inference_spark.operators.design import persisted
+from fast_causal_inference_spark.operators.design import (
+    Prepared,
+    newton_ascent,
+    persisted,
+    prepare_design,
+    sym_aggs,
+    unpack_sym,
+)
 
 
-def _collect_small_tex(sub: DataFrame, k: int, n: int):
-    """Collect a projected ``(__t, __e, __x0..)`` survival design as numpy
-    arrays when it fits the shared small-design budget (see
-    ``design.collect_small_design``); ``None`` above the cutoff.
-
-    The iterative fitters below (Cox partial likelihood, Weibull AFT,
-    Grambsch-Therneau) otherwise pay ONE Spark aggregation job per
-    Newton step — each ~0.1-0.4 s of scheduling+Catalyst fixed cost that
-    dwarfs the arithmetic at small n (guide §1.2: fix the algorithm's
-    pass count first).  Below the cutoff the solver collects once and
-    iterates driver-side; above it the distributed per-step scan — the
-    100 TB path — runs unchanged."""
-    from fast_causal_inference_spark.operators.design import (
-        collect_columns,
-        small_design_limit,
-    )
-
-    if n > small_design_limit(k + 2):
-        return None
-    cols = collect_columns(sub)
-    t, e = cols["__t"], cols["__e"]
-    X = (np.column_stack([cols[f"__x{i}"] for i in range(k)]) if k else
-         np.empty((len(t), 0)))
-    return t, e, X
+def _surv_design(keep, df: DataFrame, time: str, event: str,
+                 covariates: list[str], probe: list = (),
+                 check=None) -> Prepared:
+    """The persisted ``(__t, __e, __x0..)`` design of the survival
+    fitters (``design.prepare_design``): rows with a NULL or NaN time,
+    event or covariate are dropped (``na.drop`` semantics).  ``probe``
+    takes order-free aggregates only (count, min, max)."""
+    cols = {"__t": F.expr(time).cast("double"),
+            "__e": F.expr(event).cast("double")}
+    cols.update({f"__x{i}": F.expr(c).cast("double")
+                 for i, c in enumerate(covariates)})
+    where = F.lit(True)
+    for c in cols.values():
+        where = where & c.isNotNull() & ~F.isnan(c)
+    return prepare_design(keep, df, cols, where=where, probe=probe,
+                          order_free=True, check=check)
 
 
 class _CoxGroupedRows:
@@ -308,7 +307,7 @@ def aalen_johansen(df: DataFrame, time: str, event: str,
 
 
 def _cox_grouped_scan(sub: DataFrame, k: int, beta: np.ndarray,
-                      efron: bool) -> list:
+                      efron: bool, with_n: bool = False) -> list:
     """One distributed Newton-step scan: the per-event-time sufficient
     sums as a ``groupBy(__t)`` aggregation (shuffle: #distinct-times ×
     k² doubles), descending time order.  This is the 100 TB path; the
@@ -319,25 +318,122 @@ def _cox_grouped_scan(sub: DataFrame, k: int, beta: np.ndarray,
         xb = term if xb is None else xb + term
     w = F.exp(xb)
     e = F.col("__e")
+    xs = [F.col(f"__x{i}") for i in range(k)]
     aggs = [F.sum(w).alias("sw"),
             F.sum(e).alias("d"),
             F.sum(e * xb).alias("sxb_e")]
+    if with_n:
+        aggs.append(F.count(F.lit(1)).alias("n"))
     if efron:
         aggs.append(F.sum(e * w).alias("swe"))
     for i in range(k):
-        aggs.append(F.sum(w * F.col(f"__x{i}")).alias(f"swx{i}"))
-        aggs.append(F.sum(e * F.col(f"__x{i}")).alias(f"sx{i}_e"))
+        aggs.append(F.sum(w * xs[i]).alias(f"swx{i}"))
+        aggs.append(F.sum(e * xs[i]).alias(f"sx{i}_e"))
         if efron:
-            aggs.append(F.sum(e * w * F.col(f"__x{i}"))
-                        .alias(f"swxe{i}"))
-        for j in range(i, k):
-            aggs.append(F.sum(w * F.col(f"__x{i}") * F.col(f"__x{j}"))
-                        .alias(f"swxx{i}_{j}"))
-            if efron:
-                aggs.append(
-                    F.sum(e * w * F.col(f"__x{i}") * F.col(f"__x{j}"))
-                    .alias(f"swxxe{i}_{j}"))
+            aggs.append(F.sum(e * w * xs[i]).alias(f"swxe{i}"))
+    aggs += sym_aggs(k, "swxx", lambda i, j: w * xs[i] * xs[j])
+    if efron:
+        aggs += sym_aggs(k, "swxxe", lambda i, j: e * w * xs[i] * xs[j])
     return sub.groupBy("__t").agg(*aggs).orderBy(F.desc("__t")).collect()
+
+
+def _cox_rows(d: Prepared, k: int):
+    """``rows(β, efron, with_n=False)``: the per-event-time sums of one
+    Newton step at β, descending time — numpy on the collected design,
+    else :func:`_cox_grouped_scan` of the persisted one."""
+    if d.arrays is not None:
+        a = d.arrays
+        X = np.column_stack([a[f"__x{i}"] for i in range(k)])
+        return _CoxGroupedRows(a["__t"], a["__e"], X).rows
+    return lambda beta, efron, with_n=False: _cox_grouped_scan(
+        d.work, k, beta, efron, with_n)
+
+
+def _risk_sets(rows, k: int):
+    """``(row, S0, S1, S2)`` per event-time row, descending time: the
+    running risk-set sums Σw, Σw·x, Σw·xxᵀ over every subject still at
+    risk (the suffix accumulation of the partial likelihood).  S1 and
+    S2 are updated in place; read them before the next row."""
+    S0, S1, S2 = 0.0, np.zeros(k), np.zeros((k, k))
+    for r in rows:
+        S0 += float(r["sw"])
+        S1 += np.array([float(r[f"swx{i}"]) for i in range(k)])
+        S2 += unpack_sym(r, k, "swxx")
+        yield r, S0, S1, S2
+
+
+def _cox_newton(rows, k: int, ties: str, max_iter: int, tol: float,
+                ) -> tuple[np.ndarray, np.ndarray, bool]:
+    """Newton on the Cox partial likelihood from β = 0 until the
+    log-likelihood moves by less than ``tol``; ``rows`` is a
+    :func:`_cox_rows` scanner.  Returns ``(β, H, converged)`` with H the
+    information matrix of the last step."""
+    beta = np.zeros(k)
+    loglik_prev = -np.inf
+    efron = ties == "efron"
+    converged = False
+    for _ in range(max_iter):
+        U = np.zeros(k)
+        H = np.zeros((k, k))
+        loglik = 0.0
+        for r, S0, S1, S2 in _risk_sets(rows(beta, efron), k):
+            d = float(r["d"])
+            if d <= 0:
+                continue
+            if not efron:
+                loglik += float(r["sxb_e"]) - d * np.log(S0)
+                xbar = S1 / S0
+                for i in range(k):
+                    U[i] += float(r[f"sx{i}_e"]) - d * xbar[i]
+                H += d * (S2 / S0 - np.outer(xbar, xbar))
+                continue
+            # Efron: the l-th of d tied events sees the risk set minus an
+            # l/d fraction of the tied-event group's own sums — vectorized
+            # over the d events (heavy-tie data would otherwise pay a
+            # Python iteration per event)
+            E0 = float(r["swe"])
+            E1 = np.array([float(r[f"swxe{i}"]) for i in range(k)])
+            E2 = unpack_sym(r, k, "swxxe")
+            if abs(d - round(d)) > 1e-9:
+                raise ValueError(
+                    f"Efron ties need 0/1 event indicators (integer tie "
+                    f"counts); got d={d} at one event time — use "
+                    f"ties='breslow' for fractional event weights")
+            loglik += float(r["sxb_e"])
+            di = int(round(d))
+            sx_e = np.array([float(r[f"sx{i}_e"]) for i in range(k)])
+            # chunk the d tied events: the vectorized term is O(chunk·k²)
+            # memory, not O(d·k²), so coarse time bucketing with huge tie
+            # groups cannot OOM the driver
+            for lo in range(0, di, 8192):
+                fr = np.arange(lo, min(lo + 8192, di)) / d
+                a0 = S0 - fr * E0
+                a1 = S1[None, :] - fr[:, None] * E1[None, :]
+                a2 = S2[None, :, :] - fr[:, None, None] * E2[None, :, :]
+                loglik -= float(np.log(a0).sum())
+                xbar = a1 / a0[:, None]
+                U += sx_e * (len(fr) / d) - xbar.sum(axis=0)
+                H += ((a2 / a0[:, None, None]).sum(axis=0)
+                      - np.einsum("li,lj->ij", xbar, xbar))
+        try:
+            step = np.linalg.solve(H, U)
+        except np.linalg.LinAlgError:
+            step = np.linalg.pinv(H) @ U
+        beta = beta + step
+        if abs(loglik - loglik_prev) < tol:
+            converged = True
+            break
+        loglik_prev = loglik
+    if not converged:
+        import warnings
+
+        warnings.warn(
+            f"cox_ph did not converge in {max_iter} iterations "
+            "(near-separation or extreme covariate scales?); the "
+            "reported stderr/z/p come from the information matrix of "
+            "the LAST completed step and may not describe the returned "
+            "coefficients", stacklevel=3)
+    return beta, H, converged
 
 
 def cox_ph(df: DataFrame, time: str, event: str, covariates: list[str],
@@ -367,115 +463,20 @@ def cox_ph(df: DataFrame, time: str, event: str, covariates: list[str],
     k = len(covariates)
     if k == 0:
         raise ValueError("cox_ph needs at least one covariate")
-    tcol = F.expr(time).cast("double").alias("__t")
-    ecol = F.expr(event).cast("double").alias("__e")
-    xs = [F.expr(c).cast("double").alias(f"__x{i}")
-          for i, c in enumerate(covariates)]
-    sub = df.select(tcol, ecol, *xs).na.drop()
-    # empty after complete-case: the Newton loop would silently
-    # 'converge' at beta = 0 with converged=True and all-NaN inference
-    # (weibull_aft raises for the identical input).  The count is
-    # column-pruned (cheap) and doubles as the small-design gate.
-    n_rows = int(sub.count())
-    if n_rows == 0:
-        raise ValueError(
-            "cox_ph: no complete-case rows (every row has a NULL in "
-            "time/event/covariates)")
+
+    def check(row) -> None:
+        # empty after complete-case: the Newton loop would silently
+        # 'converge' at beta = 0 with converged=True and all-NaN
+        # inference (weibull_aft raises for the identical input)
+        if row["n"] == 0:
+            raise ValueError(
+                "cox_ph: no complete-case rows (every row has a NULL in "
+                "time/event/covariates)")
+
     with persisted() as keep:
-        tex = _collect_small_tex(sub, k, n_rows)
-        if tex is not None:
-            grouped = _CoxGroupedRows(*tex)
-        else:
-            sub = keep(sub.cache())
-        beta = np.zeros(k)
-        loglik_prev = -np.inf
-        efron = ties == "efron"
-        for _ in range(max_iter):
-            if tex is not None:
-                rows = grouped.rows(beta, efron)
-            else:
-                rows = _cox_grouped_scan(sub, k, beta, efron)
-
-            # suffix (risk-set) accumulation over descending time on the driver
-            U = np.zeros(k)
-            H = np.zeros((k, k))
-            loglik = 0.0
-            S0 = 0.0
-            S1 = np.zeros(k)
-            S2 = np.zeros((k, k))
-            for r in rows:
-                S0 += float(r["sw"])
-                for i in range(k):
-                    S1[i] += float(r[f"swx{i}"])
-                    for j in range(i, k):
-                        v = float(r[f"swxx{i}_{j}"])
-                        S2[i, j] += v
-                        if i != j:
-                            S2[j, i] += v
-                d = float(r["d"])
-                if d <= 0:
-                    continue
-                if ties == "breslow":
-                    loglik += float(r["sxb_e"]) - d * np.log(S0)
-                    xbar = S1 / S0
-                    for i in range(k):
-                        U[i] += float(r[f"sx{i}_e"]) - d * xbar[i]
-                    H += d * (S2 / S0 - np.outer(xbar, xbar))
-                else:
-                    # Efron: the l-th of d tied events sees the risk set minus
-                    # an l/d fraction of the tied-event group's own sums —
-                    # vectorized over the d events (heavy-tie data would
-                    # otherwise pay a Python iteration per event)
-                    E0 = float(r["swe"])
-                    E1 = np.array([float(r[f"swxe{i}"]) for i in range(k)])
-                    E2 = np.zeros((k, k))
-                    for i in range(k):
-                        for j in range(i, k):
-                            v = float(r[f"swxxe{i}_{j}"])
-                            E2[i, j] = E2[j, i] = v
-                    if abs(d - round(d)) > 1e-9:
-                        raise ValueError(
-                            f"Efron ties need 0/1 event indicators "
-                            f"(integer tie counts); got d={d} at one event "
-                            f"time — use ties='breslow' for fractional "
-                            f"event weights")
-                    loglik += float(r["sxb_e"])
-                    di = int(round(d))
-                    sx_e = np.array([float(r[f"sx{i}_e"]) for i in range(k)])
-                    # chunk the d tied events: the vectorized term is
-                    # O(chunk·k²) memory, not O(d·k²), so coarse time
-                    # bucketing with huge tie groups cannot OOM the driver
-                    for lo in range(0, di, 8192):
-                        fr = np.arange(lo, min(lo + 8192, di)) / d
-                        a0 = S0 - fr * E0
-                        a1 = S1[None, :] - fr[:, None] * E1[None, :]
-                        a2 = (S2[None, :, :]
-                              - fr[:, None, None] * E2[None, :, :])
-                        loglik -= float(np.log(a0).sum())
-                        xbar = a1 / a0[:, None]
-                        U += sx_e * (len(fr) / d) - xbar.sum(axis=0)
-                        H += ((a2 / a0[:, None, None]).sum(axis=0)
-                              - np.einsum("li,lj->ij", xbar, xbar))
-            try:
-                step = np.linalg.solve(H, U)
-            except np.linalg.LinAlgError:
-                step = np.linalg.pinv(H) @ U
-            beta = beta + step
-            if abs(loglik - loglik_prev) < tol:
-                converged = True
-                break
-            loglik_prev = loglik
-        else:
-            converged = False
-    if not converged:
-        import warnings
-
-        warnings.warn(
-            f"cox_ph did not converge in {max_iter} iterations "
-            "(near-separation or extreme covariate scales?); the "
-            "reported stderr/z/p come from the information matrix of "
-            "the LAST completed step and may not describe the returned "
-            "coefficients", stacklevel=2)
+        d = _surv_design(keep, df, time, event, covariates, check=check)
+        beta, H, converged = _cox_newton(_cox_rows(d, k), k, ties,
+                                         max_iter, tol)
     out = pd.DataFrame({
         "name": covariates, "coef": beta, "hazard_ratio": np.exp(beta),
         "stderr": np.sqrt(np.maximum(np.diag(np.linalg.pinv(H)), 0.0)),
@@ -648,66 +649,36 @@ def proportional_hazards_test(df: DataFrame, time: str, event: str,
     Plan shape: ONE ``groupBy(time)`` aggregation at β̂ (the same
     k²-sum scan as a Cox iteration); suffix accumulation and the k×k
     solve run on the driver over the bounded time grid.  ``beta=None``
-    fits :func:`cox_ph` (Breslow) first.
+    fits :func:`cox_ph` (Breslow) first, on the same persisted design,
+    so the source is scanned once either way.
     """
     if transform not in ("km", "identity", "rank"):
         raise ValueError("transform must be 'km', 'identity', or 'rank'")
     k = len(covariates)
     if k == 0:
         raise ValueError("proportional_hazards_test needs covariates")
-    if beta is None:
-        beta = cox_ph(df, time, event, covariates).coef.to_numpy()
-    beta = np.asarray(beta, dtype=float)
-    tcol = F.expr(time).cast("double").alias("__t")
-    ecol = F.expr(event).cast("double").alias("__e")
-    xs = [F.expr(c).cast("double").alias(f"__x{i}")
-          for i, c in enumerate(covariates)]
-    sub = df.select(tcol, ecol, *xs).na.drop()
-    n_rows = int(sub.count())
-    if n_rows == 0:
-        raise ValueError("proportional_hazards_test: no complete rows")
-    tex = _collect_small_tex(sub, k, n_rows)
-    if tex is not None:
-        rows = _CoxGroupedRows(*tex).rows(beta, efron=False, with_n=True)
-    else:
-        xb = None
-        for i in range(k):
-            term = float(beta[i]) * F.col(f"__x{i}")
-            xb = term if xb is None else xb + term
-        w = F.exp(xb)
-        e = F.col("__e")
-        aggs = [F.sum(w).alias("sw"), F.sum(e).alias("d"),
-                F.count(F.lit(1)).alias("n")]
-        for i in range(k):
-            aggs.append(F.sum(w * F.col(f"__x{i}")).alias(f"swx{i}"))
-            aggs.append(F.sum(e * F.col(f"__x{i}")).alias(f"sx{i}_e"))
-            for j in range(i, k):
-                aggs.append(F.sum(w * F.col(f"__x{i}") * F.col(f"__x{j}"))
-                            .alias(f"swxx{i}_{j}"))
-        rows = sub.groupBy("__t").agg(*aggs).orderBy(F.desc("__t")) \
-            .collect()
-    if not rows:
-        raise ValueError("proportional_hazards_test: no complete rows")
 
-    # suffix accumulation (descending time) → per-event-time pieces
-    S0, S1, S2 = 0.0, np.zeros(k), np.zeros((k, k))
+    def check(row) -> None:
+        if row["n"] == 0:
+            raise ValueError("proportional_hazards_test: no complete rows")
+
+    with persisted() as keep:
+        des = _surv_design(keep, df, time, event, covariates, check=check)
+        scan = _cox_rows(des, k)
+        if beta is None:
+            beta = _cox_newton(scan, k, "breslow", 25, 1e-9)[0]
+        rows = scan(np.asarray(beta, dtype=float), False, with_n=True)
+
+    # per-event-time pieces off the running risk-set sums
     recs = []                      # (time, d, n_leave, s_vec, V, )
-    for r in rows:
-        S0 += float(r["sw"])
-        for i in range(k):
-            S1[i] += float(r[f"swx{i}"])
-            for j in range(i, k):
-                v = float(r[f"swxx{i}_{j}"])
-                S2[i, j] += v
-                if i != j:
-                    S2[j, i] += v
+    for r, S0, S1, S2 in _risk_sets(rows, k):
         d = float(r["d"])
         if d <= 0:
             continue
         xbar = S1 / S0
         V = S2 / S0 - np.outer(xbar, xbar)
         s = np.array([float(r[f"sx{i}_e"]) for i in range(k)]) - d * xbar
-        recs.append((float(r["__t"]), d, float(r["n"]), s, V.copy()))
+        recs.append((float(r["__t"]), d, float(r["n"]), s, V))
     if not recs:
         raise ValueError("proportional_hazards_test: no events")
     recs.sort(key=lambda rec: rec[0])          # ascending time
@@ -791,55 +762,48 @@ def weibull_aft(df: DataFrame, time: str, event: str,
     k = len(covariates)
     if k == 0:
         raise ValueError("weibull_aft needs at least one covariate")
-    tcol = F.expr(time).cast("double").alias("__t")
-    ecol = F.expr(event).cast("double").alias("__e")
-    xcols = [F.expr(c).cast("double").alias(f"__x{i}")
-             for i, c in enumerate(covariates)]
-    sub = df.select(tcol, ecol, *xcols).na.drop()
-    chk = sub.agg(F.min("__t").alias("lo"), F.min("__e").alias("elo"),
-                  F.max("__e").alias("ehi"),
-                  F.count(F.lit(1)).alias("n")).collect()[0]
-    if chk["lo"] is None or float(chk["n"]) == 0:
-        raise ValueError("no complete-case rows")
-    if float(chk["lo"]) <= 0:
-        raise ValueError("weibull_aft needs strictly positive times")
-    if float(chk["elo"]) < 0 or float(chk["ehi"]) > 1:
-        raise ValueError("event indicator must lie in [0, 1]")
-    # small-design fast path: one collect, then every Newton scan (and
-    # each step-halving re-scan) is numpy instead of a Spark job
-    with persisted() as keep:
-        tex = _collect_small_tex(sub, k, int(chk["n"]))
-        if tex is None:
-            sub = keep(sub.cache())
-        p = k + 1                                   # intercept first
-        xs = [F.lit(1.0)] + [F.col(f"__x{i}") for i in range(k)]
-        lt = F.log("__t")
-        dl = F.col("__e")
+    p = k + 1                                   # intercept first
+    xs = [F.lit(1.0)] + [F.col(f"__x{i}") for i in range(k)]
+    lt = F.log("__t")
+    dl = F.col("__e")
 
-        if tex is not None:
-            tn, en, Xn = tex
+    def check(row) -> None:
+        if row["lo"] is None or float(row["n"]) == 0:
+            raise ValueError("no complete-case rows")
+        if float(row["lo"]) <= 0:
+            raise ValueError("weibull_aft needs strictly positive times")
+        if float(row["elo"]) < 0 or float(row["ehi"]) > 1:
+            raise ValueError("event indicator must lie in [0, 1]")
+
+    with persisted() as keep:
+        d = _surv_design(keep, df, time, event, covariates,
+                         probe=[F.min("__t").alias("lo"),
+                                F.min("__e").alias("elo"),
+                                F.max("__e").alias("ehi")], check=check)
+        # OLS of log t on X seeds β (ignores censoring — a start, not a
+        # fit); its Gramian and the event count are summed in numpy on
+        # the collected design, else in one aggregate over the cache
+        if d.arrays is not None:
+            a = d.arrays
+            tn, en = a["__t"], a["__e"]
+            Xn = np.column_stack([a[f"__x{i}"] for i in range(k)])
             Xn1 = np.column_stack([np.ones(len(tn)), Xn])   # [1, x...]
             ltn = np.log(tn)
-
-        # OLS of log t on X seeds β (ignores censoring — a start, not a fit)
-        A0 = np.empty((p, p))
-        b0 = np.empty(p)
-        if tex is not None:
+            A0 = np.empty((p, p))
+            b0 = np.empty(p)
             for i in range(p):
                 b0[i] = float((Xn1[:, i] * ltn).sum())
                 for j in range(i, p):
                     A0[i, j] = A0[j, i] = float((Xn1[:, i] * Xn1[:, j]).sum())
+            n_ev = float(en.sum())
         else:
-            aggs = []
-            for i in range(p):
-                aggs.append(F.sum(xs[i] * lt).alias(f"b{i}"))
-                for j in range(i, p):
-                    aggs.append(F.sum(xs[i] * xs[j]).alias(f"a{i}_{j}"))
-            r0 = sub.agg(*aggs).collect()[0]
-            for i in range(p):
-                b0[i] = r0[f"b{i}"]
-                for j in range(i, p):
-                    A0[i, j] = A0[j, i] = r0[f"a{i}_{j}"]
+            r0 = d.work.agg(
+                F.sum(dl).alias("n_ev"),
+                *[F.sum(xs[i] * lt).alias(f"b{i}") for i in range(p)],
+                *sym_aggs(p, "a", lambda i, j: xs[i] * xs[j])).collect()[0]
+            A0 = unpack_sym(r0, p, "a")
+            b0 = np.array([r0[f"b{i}"] for i in range(p)], dtype=float)
+            n_ev = float(r0["n_ev"])
         theta = np.zeros(p + 1)                     # [β..., s=log σ]
         try:
             theta[:p] = np.linalg.solve(A0, b0)
@@ -877,7 +841,6 @@ def weibull_aft(df: DataFrame, time: str, event: str,
             z = (lt - xb) / F.lit(sig)
             u = F.exp(z)
             ag = [F.sum(dl * (z - F.lit(s)) - u + dl * -lt).alias("ll"),
-                  F.sum(u - dl).alias("gu"),
                   F.sum(z * (u - dl) - dl).alias("gs"),
                   F.sum(z * u).alias("zu"),
                   F.sum(z * z * u).alias("zzu"),
@@ -885,49 +848,21 @@ def weibull_aft(df: DataFrame, time: str, event: str,
             for i in range(p):
                 ag.append(F.sum(xs[i] * (u - dl)).alias(f"g{i}"))
                 ag.append(F.sum(xs[i] * (z * u + (u - dl))).alias(f"c{i}"))
-                for j in range(i, p):
-                    ag.append(F.sum(xs[i] * xs[j] * u).alias(f"h{i}_{j}"))
-            r = sub.agg(*ag).collect()[0]
-            ll = float(r["ll"])
+            ag += sym_aggs(p, "h", lambda i, j: xs[i] * xs[j] * u)
+            r = d.work.agg(*ag).collect()[0]
             g = np.empty(p + 1)
             H = np.empty((p + 1, p + 1))
+            H[:p, :p] = -unpack_sym(r, p, "h") / (sig * sig)
             for i in range(p):
                 g[i] = float(r[f"g{i}"]) / sig
                 H[i, p] = H[p, i] = -float(r[f"c{i}"]) / sig
-                for j in range(i, p):
-                    H[i, j] = H[j, i] = -float(r[f"h{i}_{j}"]) / (sig * sig)
             g[p] = float(r["gs"])
             H[p, p] = -(float(r["zu"]) + float(r["zzu"]) - float(r["zd"]))
-            return ll, g, H
+            return float(r["ll"]), g, H
 
-        _scan = _scan_np if tex is not None else _scan_spark
-
-        ll, g, H = _scan(theta)
-        converged = False
-        it = 0
-        for it in range(1, max_iter + 1):
-            try:
-                step = np.linalg.solve(H, g)
-            except np.linalg.LinAlgError:
-                step = np.linalg.pinv(H) @ g
-            new = theta - step
-            ll_new, g_new, H_new = _scan(new)
-            halves = 0
-            while ll_new < ll - 1e-12 and halves < 20:
-                step = step / 2.0
-                new = theta - step
-                ll_new, g_new, H_new = _scan(new)
-                halves += 1
-            done = float(np.max(np.abs(new - theta))) < tol \
-                or abs(ll_new - ll) < tol
-            theta, ll, g, H = new, ll_new, g_new, H_new
-            if done:
-                converged = True
-                break
-        if tex is not None:
-            n_ev = float(en.sum())
-        else:
-            n_ev = float(sub.agg(F.sum(dl).alias("d")).collect()[0]["d"])
+        theta, ll, H, it, converged = newton_ascent(
+            _scan_np if d.arrays is not None else _scan_spark, theta,
+            max_iter, tol)
 
     cov = np.linalg.pinv(-H)
     se = np.sqrt(np.maximum(np.diag(cov), 0.0))
@@ -945,7 +880,7 @@ def weibull_aft(df: DataFrame, time: str, event: str,
         "stderr": se, "z": zv,
         "p_value": 2.0 * np.asarray(dist.norm_sf(np.abs(zv)))})
     sig = math.exp(float(theta[p]))
-    out.attrs.update({"loglik": ll, "n": float(chk["n"]),
+    out.attrs.update({"loglik": ll, "n": float(d.probe["n"]),
                       "n_events": n_ev, "scale": sig,
                       "shape": 1.0 / sig, "converged": converged,
                       "n_iter": it})

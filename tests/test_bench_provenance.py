@@ -29,3 +29,17 @@ def test_root_artifacts_are_not_dirty(path):
 ])
 def test_source_paths_are_dirty(path):
     assert not _is_artifact(path)
+
+
+def test_line_counts_read_tracked_files(tmp_path):
+    import pathlib
+
+    import bench
+
+    root = pathlib.Path(bench.__file__).parent
+    counts = bench._line_counts(str(root))
+    assert set(counts) == {"library", "entry", "tests"}
+    assert counts["entry"] == \
+        (root / "__spark_entry__.py").read_bytes().count(b"\n")
+    assert counts["library"] > 0 and counts["tests"] > 0
+    assert bench._line_counts(str(tmp_path)) == {}    # not a checkout

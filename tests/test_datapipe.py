@@ -1081,3 +1081,22 @@ def test_ppm_arbitrary_maxval():
     assert [r[0][0] for r in out16] == [0, 128, 255]
     with _pytest.raises(ValueError, match="maxval"):
         decode_ppm(b"P6\n1 1\n0\n\x00\x00\x00")
+
+
+@pytest.mark.parametrize("memory, edges", [
+    ("8g", 20_000_000),              # the session default: unchanged cutoff
+    ("8G", 20_000_000),
+    (" 8gb ", 20_000_000),
+    ("8192", 20_000_000),            # a bare number is MiB, as Spark reads it
+    ("512m", 1_250_000),
+    ("2t", 5_120_000_000),
+    ("1g", 2_500_000),
+])
+def test_cc_driver_cutoff_from_driver_memory(memory, edges):
+    assert dedup.driver_edge_cutoff(memory) == edges
+
+
+@pytest.mark.parametrize("memory", ["", "eight", "8x", "-1g", "1.5g"])
+def test_cc_driver_cutoff_rejects_non_sizes(memory):
+    with pytest.raises(ValueError, match="not a memory size"):
+        dedup.driver_edge_cutoff(memory)

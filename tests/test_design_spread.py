@@ -21,7 +21,6 @@ from pyspark import StorageLevel
 from pyspark.sql import functions as F
 
 from fast_causal_inference_spark.operators.design import (
-    persist_design,
     persisted,
     repartition_big_design,
 )
@@ -31,10 +30,9 @@ def _one_partition_design(spark, keep, n):
     df = spark.range(n).select(
         (F.col("id") % 97).cast("double").alias("yv"),
         (F.col("id") % 13).cast("double").alias("xv")).coalesce(1)
-    work, y, xs, off = persist_design(df, F.col("yv"), [F.col("xv")],
-                                      use_bias=True)
-    keep(work).count()
-    return work, y, xs
+    work = keep(df.persist(StorageLevel.MEMORY_AND_DISK))
+    work.count()
+    return work, F.col("yv"), [F.lit(1.0), F.col("xv")]
 
 
 def _spread(df):

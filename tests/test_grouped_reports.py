@@ -26,6 +26,29 @@ def test_srm_grouped_matches_solo(spark, ab_df):
         assert g.chisquare.iloc[0] == pytest.approx(solo.chisquare.iloc[0])
         assert g.p_value.iloc[0] == pytest.approx(solo.p_value.iloc[0])
 
+    # a NULL string arm, and a NULL and a NaN double arm: the arms keep
+    # srm()'s Spark ascending order (NULL first, NaN after every number)
+    # and the ratio aligns to it
+    rng = np.random.default_rng(8)
+    n = 1200
+    k = rng.integers(0, 5, n)
+    arms = spark.createDataFrame(pd.DataFrame({
+        "seg": rng.integers(0, 2, n), "k": k,
+        "x": rng.integers(1, 4, n).astype(float)})).selectExpr(
+        "seg", "x",
+        "CASE k WHEN 0 THEN NULL WHEN 1 THEN 'b' WHEN 2 THEN 'a' "
+        "ELSE 'c' END AS s",
+        "CASE k WHEN 0 THEN NULL WHEN 1 THEN CAST('NaN' AS DOUBLE) "
+        "WHEN 2 THEN 2.0 WHEN 3 THEN -1.0 ELSE 0.5 END AS d")
+    for arm, ratio in (("s", [1.0, 2.0, 3.0, 4.0]),
+                       ("d", [1.0, 2.0, 3.0, 4.0, 5.0])):
+        grouped = srm_grouped(arms, "x", arm, ["seg"], ratio=ratio)
+        for seg_val in (0, 1):
+            g = grouped[grouped.seg == seg_val].reset_index(drop=True)
+            solo = srm(arms.where(F.col("seg") == seg_val), "x", arm,
+                       ratio=ratio)
+            pd.testing.assert_frame_equal(g.drop(columns="seg"), solo)
+
 
 def test_srm_grouped_missing_arm_renormalizes(spark):
     from fast_causal_inference_spark.operators.srm import srm, srm_grouped

@@ -142,14 +142,19 @@ def _dedup_job_sizing_faults(source: str) -> list[str]:
 
 
 def test_dedup_sizes_no_job_from_shuffle_partitions():
+    """The dedup stages, the retrieval postings and the LM count
+    relations are cached, so they are sized to the cores.
+    ``training.shuffle`` keeps ``shuffle.partitions``: its shard count is
+    an output layout, set by its ``num_partitions`` argument."""
     import pathlib
 
     import fast_causal_inference_spark
 
     root = pathlib.Path(fast_causal_inference_spark.__file__).parent
-    faults = _dedup_job_sizing_faults(
-        (root / "datapipe" / "dedup.py").read_text())
-    assert not faults, faults
+    faults = {name: _dedup_job_sizing_faults(
+        (root / "datapipe" / name).read_text())
+        for name in ("dedup.py", "retrieval.py", "lm.py")}
+    assert not any(faults.values()), faults
 
 
 @pytest.mark.parametrize("source, n_faults", [
