@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from fast_causal_inference_spark import stats_distributions as dist
+from fast_causal_inference_spark.operators import ranks
 
 __all__ = ["anova_oneway", "bartlett_test", "dunnett_test",
            "kruskal_wallis_test"]
@@ -106,117 +107,38 @@ def bartlett_test(df: DataFrame, y: str, index: str) -> pd.DataFrame:
     }])
 
 
-_KW_SCHEMA = "pid long, arm string, n double, r_local double, ties double"
-
-
-def _kw_partition_stats(batches):
-    """Per range-partition: per-arm (count, local rank-sum) + tie term.
-    Rows arrive sorted by v with equal values co-located (range
-    partitioner), mirroring the Mann-Whitney pass."""
-    from pyspark import TaskContext
-
-    chunks = list(batches)
-    pdf = pd.concat(chunks) if chunks else None
-    pid = TaskContext.get().partitionId()
-    if pdf is None or len(pdf) == 0:
-        yield pd.DataFrame([{"pid": pid, "arm": None, "n": 0.0,
-                             "r_local": 0.0, "ties": 0.0}])
-        return
-    runs = pdf.groupby("v", sort=True).size()
-    t = runs.to_numpy(dtype=float)
-    start = t.cumsum() - t
-    avg_rank = pd.Series(start + (t + 1.0) / 2.0, index=runs.index)
-    pdf = pdf.assign(__r=pdf["v"].map(avg_rank))
-    per_arm = pdf.groupby("arm").agg(n=("__r", "size"),
-                                     r_local=("__r", "sum")).reset_index()
-    per_arm["pid"] = pid
-    per_arm["ties"] = 0.0
-    total = pd.DataFrame([{"pid": pid, "arm": None,
-                           "n": float(len(pdf)), "r_local": 0.0,
-                           "ties": float((t ** 3 - t).sum())}])
-    yield pd.concat([per_arm[["pid", "arm", "n", "r_local", "ties"]],
-                     total])
-
-
-def kruskal_wallis_test(df: DataFrame, y: str, index: str,
-                        num_partitions: int | None = None) -> pd.DataFrame:
+def kruskal_wallis_test(df: DataFrame, y: str, index: str) -> pd.DataFrame:
     """Kruskal-Wallis rank test across k arms — the nonparametric
     one-way ANOVA (k-arm Mann-Whitney), tie-corrected, chi-square null.
 
-    Scale shape mirrors ``mann_whitney_utest``: a single-split input runs
-    the fully relational distinct-value path (groupBy + one window
-    cumsum); larger inputs run ONE ``repartitionByRange`` rank pass where
-    every partition emits k+1 scalars and the driver merges with prefix
-    offsets.  Returns statistic, df, p_value, n, k."""
-    from fast_causal_inference_spark.operators.mann_whitney import (
-        estimate_scan_splits,
-    )
-    from fast_causal_inference_spark.serialization import (
-        ensure_udf_serializable,
-    )
-
+    The per-(value, arm) counts are joined to the average ranks of the
+    shared rank kernel (:mod:`ranks`) and summed per arm in ONE aggregate;
+    the tie term rides the same aggregate.  NULL and NaN values and NULL
+    arms are dropped.  Returns statistic, df, p_value, n, k."""
     idx = F.col(index) if index.isidentifier() else F.expr(index)
-    ycol = F.expr(y).cast("double")
-    sub = (df.select(idx.cast("string").alias("arm"), ycol.alias("v"))
-             .where(F.col("arm").isNotNull() & F.col("v").isNotNull()))
-    est = estimate_scan_splits(sub)
-    shuffle_p = int(
-        df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
-    p = num_partitions or (min(shuffle_p, est) if est else shuffle_p)
-
-    if p == 1:
-        from pyspark.sql import Window
-
-        d = sub.groupBy("v", "arm").agg(
-            F.count(F.lit(1)).cast("double").alias("c"))
-        tv = d.groupBy("v").agg(F.sum("c").alias("t"))
-        wspec = Window.orderBy("v").rowsBetween(Window.unboundedPreceding,
-                                                -1)
-        tv = tv.withColumn("before",
-                           F.coalesce(F.sum("t").over(wspec), F.lit(0.0)))
-        joined = d.join(tv, "v")
-        # fold the tie term into the SAME aggregation (grouping-sets
-        # style: the per-(v,arm) share c/t of each value's tie term sums
-        # to exactly t^3 - t overall) — a second tv.agg job re-evaluated
-        # the whole uncached groupBy/window chain, doubling the scan
-        arm_rows = (joined.groupBy("arm")
-                    .agg(F.sum("c").alias("n_a"),
-                         F.sum(F.col("c") * (F.col("before")
-                                             + (F.col("t") + 1.0) / 2.0))
-                         .alias("R"),
-                         F.sum((F.col("t") ** 3 - F.col("t"))
-                               * F.col("c") / F.col("t"))
-                         .alias("ties")).collect())
-        stats = {r["arm"]: (float(r["n_a"]), float(r["R"]))
-                 for r in arm_rows}
-        tie_sum = sum(float(r["ties"] or 0.0) for r in arm_rows)
-    else:
-        rp = sub.repartitionByRange(p, "v").sortWithinPartitions("v")
-        ensure_udf_serializable()
-        parts = rp.mapInPandas(_kw_partition_stats, _KW_SCHEMA).collect()
-        totals = sorted((r for r in parts if r["arm"] is None),
-                        key=lambda r: r["pid"])
-        offsets = {}
-        run = 0.0
-        for r in totals:
-            offsets[r["pid"]] = run
-            run += r["n"]
-        stats = {}
-        for r in parts:
-            if r["arm"] is None:
-                continue
-            n_a, R = stats.get(r["arm"], (0.0, 0.0))
-            stats[r["arm"]] = (n_a + r["n"],
-                               R + r["r_local"] + offsets[r["pid"]] * r["n"])
-        tie_sum = sum(r["ties"] for r in totals)
-
-    k = len(stats)
+    v = F.expr(y).cast("double")
+    counts = (df.select(idx.cast("string").alias("arm"), v.alias("__v"))
+                .where(F.col("arm").isNotNull() & ranks.observed(v))
+                .groupBy("__v", "arm")
+                .agg(F.count(F.lit(1)).cast("double").alias("c")))
+    t, c = ranks.col("t"), F.col("c")
+    with ranks.ranked(counts, weight="c") as r:
+        # the per-(v, arm) share c/t of each value's tie term sums to
+        # exactly t^3 - t over the arms
+        arm_rows = (counts.join(r, "__v").groupBy("arm")
+                    .agg(F.sum(c).alias("n_a"),
+                         F.sum(c * ranks.rbar()).alias("R"),
+                         F.sum((t ** 3 - t) * c / t).alias("ties"))
+                    .collect())
+    k = len(arm_rows)
     if k < 2:
         raise ValueError("need at least 2 arms")
-    n = sum(v[0] for v in stats.values())
-    h = 12.0 / (n * (n + 1.0)) * sum(R * R / n_a
-                                     for n_a, R in stats.values()) \
+    arm_rows.sort(key=lambda r: r["arm"])
+    n = sum(float(r["n_a"]) for r in arm_rows)
+    h = 12.0 / (n * (n + 1.0)) * sum(float(r["R"]) * float(r["R"])
+                                     / float(r["n_a"]) for r in arm_rows) \
         - 3.0 * (n + 1.0)
+    tie_sum = sum(float(r["ties"]) for r in arm_rows)
     denom = 1.0 - tie_sum / (n ** 3 - n) if n > 1 else 1.0
     if denom <= 0:
         raise ValueError("all values tied — statistic undefined")

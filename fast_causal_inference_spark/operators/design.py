@@ -106,7 +106,7 @@ def collect_columns(df: DataFrame) -> dict[str, np.ndarray]:
         return {nm: pdf[nm].to_numpy(dtype=float) for nm in pdf.columns}
 
 # Small-input cutoff for the iterative solvers (round 11) — the same
-# idea as the rank tests' small-input cutoff (mann_whitney.py:193): a
+# idea as the rank tests' small-input cutoff (ranks.ranked): a
 # design under the cutoff is at most a couple hundred MB of doubles, so
 # the solver collects it ONCE and iterates driver-side in numpy, paying
 # one Spark job instead of one per IRLS/Newton step (each step's job
@@ -431,8 +431,13 @@ def newton_ascent(scan: Callable[[np.ndarray],
     """Maximize a log-likelihood by Newton steps θ ← θ − H⁻¹g, where
     ``scan(θ)`` gives ``(ll, g, H)`` (H negative definite near the
     optimum).  A step that lowers ll or makes it non-finite is halved,
-    up to 20 times; the loop stops once the step or the ll change is
-    under ``tol``.  Returns ``(θ, ll, H, iterations, converged)``."""
+    up to 20 times; when every halving still lowers ll the loop stops
+    where it is, unconverged, and never takes a worse point.  It stops
+    converged once the step or the ll change is under ``tol``.  Returns
+    ``(θ, ll, H, iterations, converged)``."""
+    def worse(ll_new):
+        return not np.isfinite(ll_new) or ll_new < ll - 1e-12
+
     ll, g, H = scan(theta)
     converged = False
     it = 0
@@ -444,12 +449,13 @@ def newton_ascent(scan: Callable[[np.ndarray],
         new = theta - step
         ll_new, g_new, H_new = scan(new)
         halves = 0
-        while (not np.isfinite(ll_new) or ll_new < ll - 1e-12) \
-                and halves < 20:
+        while worse(ll_new) and halves < 20:
             step = step / 2.0
             new = theta - step
             ll_new, g_new, H_new = scan(new)
             halves += 1
+        if worse(ll_new):
+            break
         done = float(np.max(np.abs(new - theta))) < tol \
             or abs(ll_new - ll) < tol
         theta, ll, g, H = new, ll_new, g_new, H_new

@@ -1,104 +1,26 @@
-"""Mann-Whitney U test — distributed rank statistics without a global sort.
+"""Mann-Whitney U test over the shared rank kernel.
 
 Parity target: reference ``mann_whitney.h:44-295`` (rank/tie handling
 :104-139; normal approximation with tie correction and optional continuity
 correction).
 
-Scale design (SURVEY.md §7 "partition-wise rank merge"): a single
-``repartitionByRange`` + ``sortWithinPartitions`` puts each value range in one
-partition with ties co-located; every partition then emits FOUR scalars
-(count, treatment count, local rank-sum, tie term) and the driver merges them
-with prefix-count offsets. No window over a single partition, no full collect
-— the shuffled payload is the data itself (unavoidable for exact ranks) but
-the reduction is O(#partitions).
+Scale design: :mod:`ranks` reduces the input to its ranked distinct-value
+relation; U is ONE aggregate over it (Σ c1·rbar and the tie term) per test
+or per group, and the p-value math runs once per collected row on the
+driver — the grouped form finalizes its O(#groups) rows with the same
+function as the ungrouped test.
 """
 
 from __future__ import annotations
 
 import math
-from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from fast_causal_inference_spark import stats_distributions as dist
-from fast_causal_inference_spark.serialization import ensure_udf_serializable
-
-_SCHEMA = "pid long, n double, n1 double, r1_local double, ties double"
-
-_SPLIT_BYTES = 128 * 1024 * 1024       # spark.sql.files.maxPartitionBytes
-_SPLIT_ROWS = 1_000_000                # rows a "one split ⇒ p=1" path may hold
-
-
-def estimate_scan_splits(df) -> int:
-    """Estimated scan parallelism from the input file listing, 0 when
-    unknown.  A single FILE is not a single SPLIT — a 5 GB parquet file
-    scans as ~40 row-group splits — so local file sizes are checked
-    against the 128 MB default split size; non-file or remote sources
-    return 0 (callers fall back to the session shuffle parallelism).
-
-    Bytes alone are not a safe "small input" signal: one ≤128 MB
-    *compressed* parquet split can hold millions of rows of a numeric
-    column, and callers use ``est == 1`` to take a single-partition
-    window path.  For parquet sources the exact pre-filter row count is
-    free in the file footers, so the estimate is also floored at
-    ``ceil(rows / 1e6)`` — a million-row single file reports >1 split
-    and callers keep the partitioned rank pass."""
-    import math as _math
-    import os as _os
-    from urllib.parse import unquote, urlparse
-
-    files = df.inputFiles()
-    if not files:
-        return 0
-    total = 0
-    rows = 0
-    for f in files:
-        u = urlparse(f)
-        if u.scheme not in ("file", ""):
-            return 0
-        path = unquote(u.path)
-        try:
-            total += _os.path.getsize(path)
-        except OSError:
-            return 0
-        if rows is not None and path.endswith(".parquet"):
-            try:
-                import pyarrow.parquet as _pq
-                rows += _pq.ParquetFile(path).metadata.num_rows
-            except Exception:
-                rows = None                   # unknown → bytes-only estimate
-        else:
-            rows = None
-    est = max(len(files), _math.ceil(total / _SPLIT_BYTES))
-    if rows:
-        est = max(est, _math.ceil(rows / _SPLIT_ROWS))
-    return est
-
-
-def _partition_rank_stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    from pyspark import TaskContext
-
-    chunks = list(batches)
-    pdf = pd.concat(chunks) if chunks else None
-    pid = TaskContext.get().partitionId()
-    if pdf is None or len(pdf) == 0:
-        yield pd.DataFrame([{"pid": pid, "n": 0.0, "n1": 0.0,
-                             "r1_local": 0.0, "ties": 0.0}])
-        return
-    # rows arrive sorted by v; group tie-runs
-    grp = pdf.groupby("v", sort=True).agg(t=("g", "size"), g1=("g", "sum"))
-    t = grp["t"].to_numpy(dtype=float)
-    g1 = grp["g1"].to_numpy(dtype=float)
-    start = t.cumsum() - t                       # rows before each run (local)
-    avg_rank = start + (t + 1.0) / 2.0           # local 1-based average rank
-    r1_local = float((g1 * avg_rank).sum())
-    ties = float((t ** 3 - t).sum())
-    yield pd.DataFrame([{"pid": pid, "n": float(len(pdf)),
-                         "n1": float(g1.sum()), "r1_local": r1_local,
-                         "ties": ties}])
-
+from fast_causal_inference_spark.operators import ranks
 
 _EXACT_MAX_N = 50
 
@@ -130,118 +52,94 @@ def _exact_u_pvalue(u1: float, n0: int, n1: int, alternative: str) -> float:
     return min(2.0 * min(cdf, sf), 1.0)
 
 
-def mann_whitney_utest(df: DataFrame, data: str, index: str,
-                       alternative: str = "two-sided",
-                       continuity_correction: bool = True,
-                       treatment_values: tuple = (0, 1),
-                       num_partitions: int | None = None,
-                       method: str = "auto") -> pd.DataFrame:
-    """U statistic (treatment arm) + p-value.
+_FIELDS = ("u0", "u1", "z", "p_value", "n0", "n1")
 
-    ``method``: 'asymptotic' — tie-corrected normal approximation (the
-    reference engine's only mode, mann_whitney.h:148-165); 'exact' — exact
-    small-sample U distribution (no ties required); 'auto' — exact when
-    n ≤ 50 and tie-free, else asymptotic (scipy convention).
 
-    Returns a one-row pandas DataFrame: u0, u1, z, p_value, n0, n1.
-    """
-    if method not in ("auto", "exact", "asymptotic"):
-        raise ValueError(f"unknown method {method!r}")
-    idx = F.col(index) if index.isidentifier() else F.expr(index)
-    v0, v1 = treatment_values
-    vcol = F.expr(data).cast("double")
-    sub = (df.select((idx == F.lit(v1)).cast("int").alias("g"), vcol.alias("v"))
-             .where(idx.isin([v0, v1]) & vcol.isNotNull()
-                    & ~F.isnan(vcol)))     # see grouped variant's note
-    # Size the rank pass by the scan parallelism, not the session shuffle
-    # default: a small input (few splits) doesn't pay a 32-way range
-    # shuffle + its boundary-sampling job, while a big scan still fans
-    # out.  The probe is a driver-side file listing + size check
-    # (converting to RDD to count partitions costs a plan compile);
-    # unknown sources fall back to the shuffle default.  Single split →
-    # the fully-relational local path below.
-    est = estimate_scan_splits(sub)
-    shuffle_p = int(
-        df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
-    p = num_partitions or (min(shuffle_p, est) if est else shuffle_p)
-    if p == 1:
-        # small input: fully relational rank stats — groupBy(v) reduces to
-        # the distinct-value relation (map-side combined), one window
-        # cumsum over it, zero Python workers in the path.  The window's
-        # single partition is bounded by the (already small) input.
-        from pyspark.sql import Window
-
-        d = sub.groupBy("v").agg(F.count(F.lit(1)).cast("double").alias("t"),
-                                 F.sum("g").cast("double").alias("g1"))
-        wspec = Window.orderBy("v").rowsBetween(Window.unboundedPreceding, -1)
-        d = d.withColumn("before",
-                         F.coalesce(F.sum("t").over(wspec), F.lit(0.0)))
-        row = d.agg(
-            F.sum("t").alias("n"), F.sum("g1").alias("n1"),
-            F.sum(F.col("g1") * (F.col("before")
-                                 + (F.col("t") + 1.0) / 2.0)).alias("r1"),
-            F.sum(F.col("t") * F.col("t") * F.col("t")
-                  - F.col("t")).alias("ties")).collect()[0]
-        n = float(row["n"] or 0.0)
-        n1 = float(row["n1"] or 0.0)
-        n0 = n - n1
-        if n0 == 0 or n1 == 0:
-            raise ValueError("both groups must be non-empty")
-        r1 = float(row["r1"])
-        tie_sum = float(row["ties"])
-    else:
-        rp = sub.repartitionByRange(p, "v").sortWithinPartitions("v")
-        ensure_udf_serializable()
-        parts = rp.mapInPandas(_partition_rank_stats, _SCHEMA).collect()
-        parts.sort(key=lambda r: r["pid"])
-
-        n = sum(r["n"] for r in parts)
-        n1 = sum(r["n1"] for r in parts)
-        n0 = n - n1
-        if n0 == 0 or n1 == 0:
-            raise ValueError("both groups must be non-empty")
-        r1 = 0.0
-        offset = 0.0
-        tie_sum = 0.0
-        for r in parts:
-            r1 += r["r1_local"] + offset * r["n1"]
-            offset += r["n"]
-            tie_sum += r["ties"]
-
-    u1 = r1 - n1 * (n1 + 1.0) / 2.0
+def _u_test(row, alternative: str, continuity_correction: bool,
+            method: str) -> dict:
+    """U, z and p from one aggregated row (__n, __n1, __r1, __ties); NaN
+    when an arm is empty."""
+    n = float(row["__n"] or 0.0)
+    n1 = float(row["__n1"] or 0.0)
+    n0 = n - n1
+    if n0 == 0 or n1 == 0:
+        return {"u0": math.nan, "u1": math.nan, "z": math.nan,
+                "p_value": math.nan, "n0": n0, "n1": n1}
+    u1 = float(row["__r1"]) - n1 * (n1 + 1.0) / 2.0
     u0 = n0 * n1 - u1
+    tie_sum = float(row["__ties"])
     no_ties = tie_sum == 0.0
     if method == "exact" or (method == "auto" and no_ties
                              and n <= _EXACT_MAX_N):
         if not no_ties:
             raise ValueError("exact method requires tie-free data")
         if n > 2 * _EXACT_MAX_N:
-            raise ValueError(f"exact method limited to n <= {2 * _EXACT_MAX_N}")
-        p_val = _exact_u_pvalue(u1, int(n0), int(n1), alternative)
-        return pd.DataFrame([{
-            "u0": u0, "u1": u1, "z": float("nan"), "p_value": p_val,
-            "n0": n0, "n1": n1,
-        }])
+            # the DP table is O(n1 * n0*n1)
+            raise ValueError(f"exact method limited to n <= "
+                             f"{2 * _EXACT_MAX_N} (got n={int(n)})")
+        return {"u0": u0, "u1": u1, "z": math.nan,
+                "p_value": _exact_u_pvalue(u1, int(n0), int(n1),
+                                           alternative),
+                "n0": n0, "n1": n1}
     mu = n0 * n1 / 2.0
     sd = math.sqrt(n0 * n1 / 12.0 * ((n + 1.0) - tie_sum / (n * (n - 1.0))))
     cc = 0.5 if continuity_correction else 0.0
-    if alternative == "two-sided":
-        num = abs(u1 - mu)
-        z = (num - cc) / sd if sd > 0 else float("nan")
-        p_val = 2.0 * float(dist.norm_sf(z))
-    elif alternative == "greater":
-        z = (u1 - mu - cc) / sd if sd > 0 else float("nan")
-        p_val = float(dist.norm_sf(z)) if sd > 0 else float("nan")
-    elif alternative == "less":
-        z = (u1 - mu + cc) / sd if sd > 0 else float("nan")
-        p_val = float(dist.norm_cdf(z)) if sd > 0 else float("nan")
+    if sd > 0:
+        if alternative == "two-sided":
+            z = (abs(u1 - mu) - cc) / sd
+            p = min(1.0, 2.0 * float(dist.norm_sf(z)))
+        elif alternative == "greater":
+            z = (u1 - mu - cc) / sd
+            p = float(dist.norm_sf(z))
+        else:
+            z = (u1 - mu + cc) / sd
+            p = float(dist.norm_cdf(z))
     else:
-        raise ValueError(f"bad alternative {alternative!r}")
-    p_val = min(p_val, 1.0)
-    return pd.DataFrame([{
-        "u0": u0, "u1": u1, "z": z, "p_value": p_val,
-        "n0": n0, "n1": n1,
-    }])
+        z, p = math.nan, math.nan
+    return {"u0": u0, "u1": u1, "z": z, "p_value": p, "n0": n0, "n1": n1}
+
+
+def _rank_sums(df: DataFrame, data: str, index: str, treatment_values,
+               alternative: str, method: str, keys=()) -> list:
+    """One aggregated row (keys…, __n, __n1, __r1, __ties) per key."""
+    if alternative not in ("two-sided", "greater", "less"):
+        raise ValueError(f"unknown alternative {alternative!r}")
+    if method not in ("auto", "exact", "asymptotic"):
+        raise ValueError(f"unknown method {method!r}")
+    idx = F.col(index) if index.isidentifier() else F.expr(index)
+    v0, v1 = treatment_values
+    sub = (df.select(*keys, (idx == F.lit(v1)).cast("int").alias("__g"),
+                     F.expr(data).cast("double").alias("__v"))
+             .where(idx.isin([v0, v1])))
+    t, c1 = ranks.col("t"), ranks.col("c1")
+    with ranks.ranked(sub, keys) as r:
+        return r.groupBy(*keys).agg(
+            F.sum(t).alias("__n"), F.sum(c1).alias("__n1"),
+            F.sum(c1 * ranks.rbar()).alias("__r1"),
+            F.sum(t * t * t - t).alias("__ties")).collect()
+
+
+def mann_whitney_utest(df: DataFrame, data: str, index: str,
+                       alternative: str = "two-sided",
+                       continuity_correction: bool = True,
+                       treatment_values: tuple = (0, 1),
+                       method: str = "auto") -> pd.DataFrame:
+    """U statistic (treatment arm) + p-value.
+
+    ``method``: 'asymptotic' — tie-corrected normal approximation (the
+    reference engine's only mode, mann_whitney.h:148-165); 'exact' — exact
+    small-sample U distribution (no ties required); 'auto' — exact when
+    n ≤ 50 and tie-free, else asymptotic (scipy convention).  NULL and NaN
+    values are dropped.
+
+    Returns a one-row pandas DataFrame: u0, u1, z, p_value, n0, n1.
+    """
+    row, = _rank_sums(df, data, index, treatment_values, alternative,
+                      method)
+    out = _u_test(row, alternative, continuity_correction, method)
+    if out["n0"] == 0 or out["n1"] == 0:
+        raise ValueError("both groups must be non-empty")
+    return pd.DataFrame([out])
 
 
 def mann_whitney_utest_spark(df: DataFrame, *args, **kwargs) -> DataFrame:
@@ -256,88 +154,14 @@ def mann_whitney_utest_grouped(df: DataFrame, data: str, index: str,
                                treatment_values: tuple = (0, 1),
                                method: str = "auto") -> DataFrame:
     """GROUP BY variant (the reference's mannWhitneyUTest is an aggregate —
-    usable per group in SQL).  Each group's ranks are computed inside ONE
-    ``applyInPandas`` task: right when groups are report cells (thousands of
-    rows each); use :func:`mann_whitney_utest` for one globally-huge test.
-    """
-    from pyspark.sql import types as T
+    usable per group in SQL): every group ranks inside one window
+    partition, one aggregate row per group is collected, and each row is
+    finalized like :func:`mann_whitney_utest`.  A group with an empty arm
+    gets NaN statistics.  Returns one row per group: the group columns,
+    u0, u1, z, p_value, n0, n1."""
+    rows = _rank_sums(df, data, index, treatment_values, alternative,
+                      method, group_cols)
+    return ranks.per_group(
+        df, group_cols, rows, _FIELDS,
+        lambda r: _u_test(r, alternative, continuity_correction, method))
 
-    from fast_causal_inference_spark.serialization import (
-        ensure_udf_serializable,
-    )
-
-    if alternative not in ("two-sided", "greater", "less"):
-        raise ValueError(f"unknown alternative {alternative!r}")
-    if method not in ("auto", "exact", "asymptotic"):
-        raise ValueError(f"unknown method {method!r}")
-    idx = F.col(index) if index.isidentifier() else F.expr(index)
-    v0, v1 = treatment_values
-    vcol = F.expr(data).cast("double")
-    # NaN is not NULL: pandas' groupby would silently drop NaN keys in
-    # the rank pass while n still counted them — exclude up front
-    sub = (df.select(*group_cols,
-                     (idx == F.lit(v1)).cast("int").alias("__g"),
-                     vcol.alias("__v"))
-             .where(idx.isin([v0, v1]) & vcol.isNotNull()
-                    & ~F.isnan(vcol)))
-    keep = [f for f in sub.schema.fields if f.name in group_cols]
-    schema = T.StructType(keep + [
-        T.StructField(n, T.DoubleType())
-        for n in ("u0", "u1", "z", "p_value", "n0", "n1")])
-
-    def finalize(pdf: pd.DataFrame) -> pd.DataFrame:
-        import numpy as np
-
-        r = pdf["__v"].rank(method="average").to_numpy()
-        g = pdf["__g"].to_numpy()
-        n = float(len(pdf))
-        n1 = float(g.sum())
-        n0 = n - n1
-        out = {c: pdf[c].iloc[0] for c in group_cols}
-        if n0 == 0 or n1 == 0:
-            out.update({"u0": float("nan"), "u1": float("nan"),
-                        "z": float("nan"), "p_value": float("nan"),
-                        "n0": n0, "n1": n1})
-            return pd.DataFrame([out], columns=[f.name for f in schema.fields])
-        r1 = float(r[g == 1].sum())
-        u1 = r1 - n1 * (n1 + 1.0) / 2.0
-        u0 = n0 * n1 - u1
-        _, counts = np.unique(pdf["__v"].to_numpy(), return_counts=True)
-        ties = float((counts.astype(float) ** 3 - counts).sum())
-        no_ties = ties == 0.0
-        if method == "exact" or (method == "auto" and no_ties
-                                 and n <= _EXACT_MAX_N):
-            if not no_ties:
-                raise ValueError("exact method requires tie-free data")
-            if n > 2 * _EXACT_MAX_N:
-                # same cap as the non-grouped path: the DP table is
-                # O(n1 * n0*n1) — a large group would OOM the executor
-                raise ValueError(
-                    f"exact method limited to n <= {2 * _EXACT_MAX_N} "
-                    f"per group (group has n={int(n)})")
-            p_exact = _exact_u_pvalue(u1, int(n0), int(n1), alternative)
-            out.update({"u0": u0, "u1": u1, "z": float("nan"),
-                        "p_value": p_exact, "n0": n0, "n1": n1})
-            return pd.DataFrame([out],
-                                columns=[f.name for f in schema.fields])
-        mu = n0 * n1 / 2.0
-        sd = math.sqrt(n0 * n1 / 12.0 * ((n + 1.0) - ties / (n * (n - 1.0))))
-        cc = 0.5 if continuity_correction else 0.0
-        if sd > 0:
-            if alternative == "two-sided":
-                z = (abs(u1 - mu) - cc) / sd
-                p = min(1.0, 2.0 * float(dist.norm_sf(z)))
-            elif alternative == "greater":
-                z = (u1 - mu - cc) / sd
-                p = float(dist.norm_sf(z))
-            else:
-                z = (u1 - mu + cc) / sd
-                p = float(dist.norm_cdf(z))
-        else:
-            z, p = float("nan"), float("nan")
-        out.update({"u0": u0, "u1": u1, "z": z, "p_value": p,
-                    "n0": n0, "n1": n1})
-        return pd.DataFrame([out], columns=[f.name for f in schema.fields])
-
-    ensure_udf_serializable()
-    return sub.groupBy(*group_cols).applyInPandas(finalize, schema)

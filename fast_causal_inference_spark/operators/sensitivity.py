@@ -9,63 +9,31 @@ ratio-scale estimate.
 
 Scale design: the only row-scale work is (1) collapsing pairs to one
 diff each — a ``groupBy(pair)`` that shrinks the relation to #pairs —
-and (2) ranking |diff|, which reuses the Mann-Whitney partition-wise
-rank merge (``mann_whitney.py:80-100``): ``repartitionByRange`` +
-per-partition rank moments + an O(#partitions) driver merge.  The Γ
-grid itself is closed-form over THREE scalars (T⁺, ΣR, ΣR²), so the
-whole sensitivity curve costs one rank pass regardless of grid size.
+and (2) ranking |diff| with the shared rank kernel (:mod:`ranks`, the
+positive-diff sign as its arm), where T⁺, ΣR and ΣR² are one aggregate
+over the ranked distinct-value relation.  The Γ grid itself is
+closed-form over those THREE scalars, so the whole sensitivity curve
+costs one rank pass regardless of grid size.
 E-values are pure driver math on already-estimated effects.
 """
 
 from __future__ import annotations
 
 import math
-from collections.abc import Iterator, Sequence
+from collections.abc import Sequence
 
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from fast_causal_inference_spark import stats_distributions as dist
-from fast_causal_inference_spark.operators.mann_whitney import (
-    estimate_scan_splits,
-)
-from fast_causal_inference_spark.serialization import ensure_udf_serializable
-
-_SR_SCHEMA = ("pid long, n double, n_pos double, tpos_local double, "
-              "s1_local double, s2_local double")
-
-
-def _partition_signed_rank_stats(
-        batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    from pyspark import TaskContext
-
-    chunks = list(batches)
-    pdf = pd.concat(chunks) if chunks else None
-    pid = TaskContext.get().partitionId()
-    if pdf is None or len(pdf) == 0:
-        yield pd.DataFrame([{"pid": pid, "n": 0.0, "n_pos": 0.0,
-                             "tpos_local": 0.0, "s1_local": 0.0,
-                             "s2_local": 0.0}])
-        return
-    grp = pdf.groupby("v", sort=True).agg(t=("pos", "size"),
-                                          np_=("pos", "sum"))
-    t = grp["t"].to_numpy(dtype=float)
-    np_ = grp["np_"].to_numpy(dtype=float)
-    start = t.cumsum() - t
-    avg_rank = start + (t + 1.0) / 2.0       # local 1-based average rank
-    yield pd.DataFrame([{"pid": pid, "n": float(len(pdf)),
-                         "n_pos": float(np_.sum()),
-                         "tpos_local": float((np_ * avg_rank).sum()),
-                         "s1_local": float((t * avg_rank).sum()),
-                         "s2_local": float((t * avg_rank ** 2).sum())}])
+from fast_causal_inference_spark.operators import ranks
 
 
 def rosenbaum_bounds(df: DataFrame, y: str, treatment: str, pair: str,
                      gammas: Sequence[float] = (1.0, 1.25, 1.5, 2.0,
                                                 3.0, 4.0),
-                     treatment_values: tuple = (0, 1),
-                     num_partitions: int | None = None) -> pd.DataFrame:
+                     treatment_values: tuple = (0, 1)) -> pd.DataFrame:
     """Rosenbaum Γ sensitivity bounds for a matched-pairs design.
 
     For each Γ ≥ 1 (odds of differential treatment assignment within a
@@ -74,7 +42,8 @@ def rosenbaum_bounds(df: DataFrame, y: str, treatment: str, pair: str,
     under Γ the worst-case per-pair sign probability is λ = Γ/(1+Γ), so
     with average ranks R_s of |diff| the normal approximation gives
     E[T⁺] = λΣR, Var[T⁺] = λ(1−λ)ΣR² (Rosenbaum 2002, §4).  Γ=1 is the
-    ordinary signed-rank test.  Zero-diff pairs are dropped (standard).
+    ordinary signed-rank test.  Zero-diff pairs are dropped (standard),
+    and so are NULL and NaN outcomes before pairing.
 
     ``pair`` — the match identifier (e.g. ``match_index`` emitted by the
     matching operators); with 1:k matching the control side of each pair
@@ -93,7 +62,7 @@ def rosenbaum_bounds(df: DataFrame, y: str, treatment: str, pair: str,
     # match_index for them): grouping would collapse them all into one
     # bogus pseudo-pair whose systematically-large diff takes a top rank
     # and distorts every bound
-    diffs = (df.where(tcol.isin([v0, v1]) & ycol.isNotNull()
+    diffs = (df.where(tcol.isin([v0, v1]) & ranks.observed(ycol)
                       & F.expr(pair).isNotNull())
                .groupBy(F.expr(pair).alias("__pair"))
                .agg(F.avg(F.when(tcol == F.lit(v1), ycol)).alias("yt"),
@@ -101,48 +70,17 @@ def rosenbaum_bounds(df: DataFrame, y: str, treatment: str, pair: str,
                .where(F.col("yt").isNotNull() & F.col("yc").isNotNull())
                .select((F.col("yt") - F.col("yc")).alias("d"))
                .where(F.col("d") != 0)
-               .select(F.abs("d").alias("v"),
-                       (F.col("d") > 0).cast("int").alias("pos")))
-    if num_partitions:
-        p = int(num_partitions)      # skip the file-listing estimate
-    else:
-        est = estimate_scan_splits(df)
-        shuffle_p = int(
-            df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
-        p = min(shuffle_p, est) if est else shuffle_p
-    if p == 1:
-        from pyspark.sql import Window
-
-        g = diffs.groupBy("v").agg(
-            F.count(F.lit(1)).cast("double").alias("t"),
-            F.sum("pos").cast("double").alias("np_"))
-        wspec = Window.orderBy("v").rowsBetween(Window.unboundedPreceding,
-                                                -1)
-        g = g.withColumn("before",
-                         F.coalesce(F.sum("t").over(wspec), F.lit(0.0)))
-        rbar = F.col("before") + (F.col("t") + 1.0) / 2.0
-        row = g.agg(F.sum("t").alias("n"),
-                    F.sum(F.col("np_") * rbar).alias("tplus"),
-                    F.sum(F.col("t") * rbar).alias("s1"),
-                    F.sum(F.col("t") * rbar * rbar).alias("s2")).collect()[0]
-        n = float(row["n"] or 0.0)
-        t_plus, s1, s2 = (float(row["tplus"] or 0.0),
-                          float(row["s1"] or 0.0), float(row["s2"] or 0.0))
-    else:
-        rp = diffs.repartitionByRange(p, "v").sortWithinPartitions("v")
-        ensure_udf_serializable()
-        parts = rp.mapInPandas(_partition_signed_rank_stats,
-                               _SR_SCHEMA).collect()
-        parts.sort(key=lambda r: r["pid"])
-        n = t_plus = s1 = s2 = 0.0
-        off = 0.0
-        for r in parts:
-            t_plus += r["tpos_local"] + off * r["n_pos"]
-            s1 += r["s1_local"] + off * r["n"]
-            s2 += (r["s2_local"] + 2.0 * off * r["s1_local"]
-                   + off * off * r["n"])
-            off += r["n"]
-            n += r["n"]
+               .select(F.abs("d").alias("__v"),
+                       (F.col("d") > 0).cast("int").alias("__g")))
+    t, rbar = ranks.col("t"), ranks.rbar()
+    with ranks.ranked(diffs) as r:
+        row = r.agg(F.sum(t).alias("n"),
+                    F.sum(ranks.col("c1") * rbar).alias("tplus"),
+                    F.sum(t * rbar).alias("s1"),
+                    F.sum(t * rbar * rbar).alias("s2")).collect()[0]
+    n = float(row["n"] or 0.0)
+    t_plus, s1, s2 = (float(row["tplus"] or 0.0),
+                      float(row["s1"] or 0.0), float(row["s2"] or 0.0))
     if n == 0:
         raise ValueError("no informative (non-zero-diff) pairs")
     rows = []

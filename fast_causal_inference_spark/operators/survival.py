@@ -334,7 +334,9 @@ def _cox_grouped_scan(sub: DataFrame, k: int, beta: np.ndarray,
     aggs += sym_aggs(k, "swxx", lambda i, j: w * xs[i] * xs[j])
     if efron:
         aggs += sym_aggs(k, "swxxe", lambda i, j: e * w * xs[i] * xs[j])
-    return sub.groupBy("__t").agg(*aggs).orderBy(F.desc("__t")).collect()
+    # ≤ #distinct-times rows: sorted on the driver, not by a range job
+    return sorted(sub.groupBy("__t").agg(*aggs).collect(),
+                  key=lambda r: r["__t"], reverse=True)
 
 
 def _cox_rows(d: Prepared, k: int):

@@ -110,7 +110,8 @@ def _kw_hand(groups):
     return h
 
 
-def test_kruskal_matches_hand_with_ties(spark):
+def test_kruskal_matches_hand_with_ties(spark, monkeypatch):
+    from fast_causal_inference_spark.operators import ranks
     from fast_causal_inference_spark.operators.anova import (
         kruskal_wallis_test,
     )
@@ -119,11 +120,13 @@ def test_kruskal_matches_hand_with_ties(spark):
     rows = [{"arm": f"g{i}", "y": float(v)}
             for i, vs in enumerate(groups) for v in vs]
     d = spark.createDataFrame(pd.DataFrame(rows)).repartition(3)
+    monkeypatch.setattr(ranks, "estimate_scan_splits", lambda df: 1)
     out = kruskal_wallis_test(d, "y", "arm")
     assert out.statistic[0] == pytest.approx(_kw_hand(groups), rel=1e-9)
     assert out.k[0] == 3
     # distributed path must agree with the relational one
-    out2 = kruskal_wallis_test(d, "y", "arm", num_partitions=4)
+    monkeypatch.setattr(ranks, "estimate_scan_splits", lambda df: 4)
+    out2 = kruskal_wallis_test(d, "y", "arm")
     assert out2.statistic[0] == pytest.approx(out.statistic[0], rel=1e-9)
 
 
@@ -145,7 +148,8 @@ def test_kruskal_two_arms_equals_mw_z_squared(spark, ab_df):
     assert kw.p_value[0] == pytest.approx(float(mw.p_value[0]), rel=1e-6)
 
 
-def test_kruskal_distributed_matches_relational_big(spark):
+def test_kruskal_distributed_matches_relational_big(spark, monkeypatch):
+    from fast_causal_inference_spark.operators import ranks
     from fast_causal_inference_spark.operators.anova import (
         kruskal_wallis_test,
     )
@@ -156,8 +160,10 @@ def test_kruskal_distributed_matches_relational_big(spark):
         "y": np.round(rng.normal(size=5000), 2),   # rounded → heavy ties
     })
     d = spark.createDataFrame(pdf).repartition(6)
-    a = kruskal_wallis_test(d, "y", "arm", num_partitions=1)
-    b = kruskal_wallis_test(d, "y", "arm", num_partitions=8)
+    monkeypatch.setattr(ranks, "estimate_scan_splits", lambda df: 1)
+    a = kruskal_wallis_test(d, "y", "arm")
+    monkeypatch.setattr(ranks, "estimate_scan_splits", lambda df: 8)
+    b = kruskal_wallis_test(d, "y", "arm")
     assert a.statistic[0] == pytest.approx(b.statistic[0], rel=1e-9)
 
 

@@ -19,6 +19,7 @@ picked up, and released, by the next.
 """
 import ast
 import pathlib
+from unittest import mock
 
 import numpy as np
 import pandas as pd
@@ -28,7 +29,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.classic.dataframe import DataFrame as ClassicDataFrame
 
 import fast_causal_inference_spark
-from fast_causal_inference_spark.operators import design
+from fast_causal_inference_spark.operators import design, ranks
 from fast_causal_inference_spark.operators.glm import glm, glm_grouped
 from fast_causal_inference_spark.operators.kstest import (
     kolmogorov_smirnov_test,
@@ -60,6 +61,15 @@ def _frame(spark, n=400, seed=5, **overrides):
     return spark.createDataFrame(pd.DataFrame(cols))
 
 
+def _range_path(test):
+    """``test`` run on the rank kernel's range path (which caches)."""
+    def run(*args):
+        with mock.patch.object(ranks, "estimate_scan_splits",
+                               lambda df: 4):
+            return test(*args)
+    return run
+
+
 def _forest():
     return CausalForest(["x1", "x2"], "y", "t", num_trees=2, max_depth=2,
                         min_node_size=20, seed=7)
@@ -70,9 +80,8 @@ LEAKED = {
         lambda s: permutation(_frame(s, t=np.zeros(400, dtype=int)),
                               "avg(y)", "t", permutation_num=10)),
     "kstest-one-group": (
-        lambda s: kolmogorov_smirnov_test(
-            _frame(s, t=np.zeros(400, dtype=int)), "y", "t",
-            num_partitions=4)),
+        lambda s: _range_path(kolmogorov_smirnov_test)(
+            _frame(s, t=np.zeros(400, dtype=int)), "y", "t")),
     "causal-forest-1-2-coding": (
         lambda s: _forest().fit(_frame(s, t=1 + np.arange(400) % 2))),
 }

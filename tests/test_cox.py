@@ -283,3 +283,32 @@ def test_weibull_aft_validation(spark, aft_pdf):
     out = weibull_aft(sdf.withColumn("ev", F.lit(1.0)), "t_obs", "ev",
                       ["x1"])
     assert out.attrs["n_events"] == out.attrs["n"]
+
+
+def test_cox_distributed_step_runs_two_jobs(spark):
+    """One distributed Newton step is the per-time aggregate alone (its
+    map stage and its result): the ≤ #distinct-times rows are sorted on
+    the driver, where a descending ``orderBy`` added a range-sampling
+    job and a sort shuffle (4 jobs)."""
+    from fast_causal_inference_spark.operators.survival import (
+        _cox_grouped_scan,
+    )
+
+    rng = np.random.default_rng(3)
+    n = 600
+    x = rng.normal(size=n)
+    sub = spark.createDataFrame(pd.DataFrame({
+        "__t": np.round(rng.exponential(5.0, n), 1) + 0.1,
+        "__e": (rng.uniform(size=n) < 0.7).astype(float),
+        "__x0": x})).repartition(4).cache()
+    sub.count()
+    sc = spark.sparkContext
+    sc.setJobGroup("cox_one_step", "")
+    try:
+        rows = _cox_grouped_scan(sub, 1, np.array([0.3]), efron=True)
+    finally:
+        sc.setJobGroup("default", "")
+        sub.unpersist()
+    assert len(sc.statusTracker().getJobIdsForGroup("cox_one_step")) == 2
+    times = [r["__t"] for r in rows]
+    assert times == sorted(times, reverse=True)

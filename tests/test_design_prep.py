@@ -182,3 +182,33 @@ def test_ascent_halves_non_finite_steps():
         scan, np.array([0.0]), 50, 1e-12)
     assert np.isfinite(ll) and converged
     assert abs(theta[0] - 1.0) < 1e-6
+
+
+def test_weibull_ascent_never_ends_below_its_start(spark, monkeypatch):
+    """Exponential event times whose OLS start has an indefinite Hessian:
+    every full Newton step, and each of its 20 halvings, lowers the
+    log-likelihood.  The ascent stops unconverged at its start instead of
+    taking the 20th halving (which ended 0.9 below the start after 50
+    such iterations)."""
+    from fast_causal_inference_spark.operators import survival
+
+    rng = np.random.default_rng(0)
+    n = 3000
+    x1 = rng.normal(0, 1, n)
+    x2 = rng.normal(0, 2, n)
+    tev = rng.exponential(1.0 / (0.1 * np.exp(0.7 * x1 - 0.2 * x2)))
+    tcen = rng.exponential(15.0, n)
+    df = spark.createDataFrame(pd.DataFrame({
+        "x1": x1, "x2": x2, "tt": np.round(np.minimum(tev, tcen), 1) + 0.1,
+        "ee": (tev <= tcen).astype(float)}))
+    seen = {}
+    ascent = survival.newton_ascent
+
+    def recorded(scan, theta, max_iter, tol):
+        seen["start"] = scan(theta)[0]
+        return ascent(scan, theta, max_iter, tol)
+
+    monkeypatch.setattr(survival, "newton_ascent", recorded)
+    out = weibull_aft(df, "tt", "ee", ["x1", "x2"])
+    assert out.attrs["loglik"] >= seen["start"]
+    assert not out.attrs["converged"]

@@ -523,3 +523,105 @@ def test_causal_forest_fit_plans(spark, ab_df, monkeypatch):
     assert enrich, plans
     for ln in enrich:
         assert max(_case_when_sizes(ln), default=0) <= cf.max_depth, ln
+
+
+_PYTHON_NODES = ("MapInPandas", "FlatMapGroupsInPandas", "ArrowEvalPython")
+
+
+def _rank_calls(df):
+    from fast_causal_inference_spark.operators.anova import (
+        kruskal_wallis_test,
+    )
+    from fast_causal_inference_spark.operators.kstest import (
+        kolmogorov_smirnov_test,
+        kolmogorov_smirnov_test_grouped,
+    )
+    from fast_causal_inference_spark.operators.mann_whitney import (
+        mann_whitney_utest,
+        mann_whitney_utest_grouped,
+    )
+    from fast_causal_inference_spark.operators.sensitivity import (
+        rosenbaum_bounds,
+    )
+
+    seg = df.withColumn("seg", F.expr("x3 > 1"))
+    return {
+        "mann_whitney": lambda: mann_whitney_utest(df, "y", "treatment"),
+        "kruskal_wallis": lambda: kruskal_wallis_test(df, "y", "treatment"),
+        "kolmogorov_smirnov": lambda: kolmogorov_smirnov_test(
+            df, "y", "treatment"),
+        "rosenbaum": lambda: rosenbaum_bounds(
+            df.withColumn("pair", F.floor(F.col("x1") * 50)), "y",
+            "treatment", "pair"),
+        "mann_whitney_grouped": lambda: mann_whitney_utest_grouped(
+            seg, "y", "treatment", ["seg"]),
+        "kolmogorov_smirnov_grouped": lambda: (
+            kolmogorov_smirnov_test_grouped(seg, "y", "treatment",
+                                            ["seg"])),
+    }
+
+
+@pytest.mark.parametrize("splits", [1, 4], ids=["single", "range"])
+def test_rank_tests_run_no_python_worker(spark, ab_df, monkeypatch,
+                                         splits):
+    """Every rank test, ungrouped on both kernel paths and grouped, runs
+    its ranks and statistics in the JVM: no executed plan holds a pandas
+    or Arrow Python node."""
+    from fast_causal_inference_spark.operators import ranks
+
+    monkeypatch.setattr(ranks, "estimate_scan_splits", lambda df: splits)
+    for name, call in _rank_calls(ab_df).items():
+        with monkeypatch.context() as m:
+            plans = _collected_plans(m, ab_df)
+            out = call()
+        if hasattr(out, "_jdf"):                  # a grouped result
+            plans.append(_plan(out))
+        assert plans, name
+        for plan in plans:
+            assert not any(node in plan for node in _PYTHON_NODES), \
+                (name, plan)
+
+
+_RANK_MODULES = ("mann_whitney.py", "anova.py", "kstest.py",
+                 "sensitivity.py")
+_RANK_MECHANICS = {"repartitionByRange", "estimate_scan_splits"}
+
+
+def _rank_mechanics(source: str) -> list[str]:
+    """Names, attributes and imports of the rank kernel's size rule and
+    range mechanics in ``source``."""
+    import ast
+
+    found = []
+    for n in ast.walk(ast.parse(source)):
+        name = n.id if isinstance(n, ast.Name) else \
+            n.attr if isinstance(n, ast.Attribute) else \
+            n.name if isinstance(n, ast.alias) else None
+        if name in _RANK_MECHANICS:
+            found.append(f"{n.lineno if hasattr(n, 'lineno') else '?'}: "
+                         f"{name}")
+    return found
+
+
+def test_only_the_rank_kernel_sizes_rank_passes():
+    import pathlib
+
+    import fast_causal_inference_spark
+
+    ops = pathlib.Path(fast_causal_inference_spark.__file__).parent \
+        / "operators"
+    assert _rank_mechanics((ops / "ranks.py").read_text())
+    stray = {m: _rank_mechanics((ops / m).read_text())
+             for m in _RANK_MODULES}
+    assert not any(stray.values()), stray
+
+
+@pytest.mark.parametrize("source, n", [
+    ("sub.repartitionByRange(p, 'v')", 1),
+    ("from x import estimate_scan_splits", 1),
+    ("est = estimate_scan_splits(sub)", 1),
+    ("# estimate_scan_splits in a comment", 0),
+    ("doc = 'repartitionByRange'", 0),
+])
+def test_rank_mechanics_guard_flags(source, n):
+    assert len(_rank_mechanics(source)) == n

@@ -1,4 +1,5 @@
-"""Mann-Whitney / KS / xexpt / bootstrap / permutation vs pandas-numpy oracles."""
+"""Mann-Whitney / KS / xexpt / bootstrap / permutation vs pandas-numpy
+oracles; the rank kernel's size estimate."""
 
 import math
 
@@ -6,8 +7,14 @@ import numpy as np
 import pandas as pd
 import pytest
 
+from pyspark.sql import functions as F
+
+from fast_causal_inference_spark.operators import ranks as kernel
 from fast_causal_inference_spark.operators.kstest import kolmogorov_smirnov_test
-from fast_causal_inference_spark.operators.mann_whitney import mann_whitney_utest
+from fast_causal_inference_spark.operators.mann_whitney import (
+    mann_whitney_utest,
+    mann_whitney_utest_grouped,
+)
 from fast_causal_inference_spark.operators.resample import (
     boot_strap,
     boot_strap_summary,
@@ -358,13 +365,6 @@ def test_mann_whitney_auto_uses_asymptotic_with_ties(spark):
 
 
 def test_mann_whitney_grouped_matches_global(spark, ab_df):
-    from pyspark.sql import functions as F
-
-    from fast_causal_inference_spark.operators.mann_whitney import (
-        mann_whitney_utest,
-        mann_whitney_utest_grouped,
-    )
-
     grouped = mann_whitney_utest_grouped(
         ab_df.withColumn("seg", F.expr("x3 > 1")),
         "y", "treatment", ["seg"]).orderBy("seg").toPandas()
@@ -375,6 +375,67 @@ def test_mann_whitney_grouped_matches_global(spark, ab_df):
         assert row.u1 == pytest.approx(single.u1)
         assert row.z == pytest.approx(single.z, rel=1e-9)
         assert row.p_value == pytest.approx(single.p_value, rel=1e-9)
+
+
+def test_mann_whitney_grouped_exact_matches_single(spark):
+    """The grouped form honors method='exact' on tiny tie-free groups."""
+    small = pd.DataFrame({
+        "v": np.random.default_rng(3).permutation(16).astype(float),
+        "t": [0, 1] * 8, "g": [0] * 8 + [1] * 8})
+    sdf = spark.createDataFrame(small)
+    grouped = mann_whitney_utest_grouped(sdf, "v", "t", ["g"],
+                                         method="exact") \
+        .orderBy("g").toPandas()
+    for _, row in grouped.iterrows():
+        single = mann_whitney_utest(sdf.where(F.col("g") == row.g),
+                                    "v", "t", method="exact").iloc[0]
+        assert row.p_value == pytest.approx(single.p_value, rel=1e-12)
+
+
+def test_mann_whitney_guards(spark):
+    pdf = pd.DataFrame({"v": np.arange(300, dtype=float),
+                        "t": np.tile([0, 1], 150), "g": ["a"] * 300})
+    df = spark.createDataFrame(pdf)
+    with pytest.raises(ValueError, match="method"):
+        mann_whitney_utest(df, "v", "t", method="Exact")
+    with pytest.raises(ValueError, match="alternative"):
+        mann_whitney_utest_grouped(df, "v", "t", ["g"],
+                                   alternative="two_sided")
+    with pytest.raises(Exception, match="exact method limited"):
+        mann_whitney_utest_grouped(df, "v", "t", ["g"],
+                                   method="exact").collect()
+
+
+def test_mann_whitney_one_sided_all_tied(spark):
+    """One-sided branches guard sd == 0."""
+    pdf = pd.DataFrame({"v": [1.0] * 20, "g": [0, 1] * 10})
+    df = spark.createDataFrame(pdf)
+    for alt in ("greater", "less", "two-sided"):
+        out = mann_whitney_utest(df, "v", "g", alternative=alt)
+        assert math.isnan(out["z"].iloc[0])
+
+
+def test_kolmogorov_sf_small_lambda():
+    assert dist.kolmogorov_sf(0.005) == pytest.approx(1.0, abs=1e-9)
+    assert dist.kolmogorov_sf(0.01) == pytest.approx(1.0, abs=1e-9)
+    # continuity across the 0.4 series/dual seam (the two
+    # expansions agree to machine precision at the switch point)
+    assert dist.kolmogorov_sf(0.4 - 1e-9) == pytest.approx(
+        dist.kolmogorov_sf(0.4 + 1e-9), abs=1e-9)
+    assert dist.kolmogorov_sf(1.0) == pytest.approx(0.2699996716, abs=1e-8)
+
+
+def test_scan_splits_row_floor(spark, tmp_path, monkeypatch):
+    """The split estimate is floored by the parquet-footer row count, so
+    a single compressed split with many rows keeps the range path."""
+    path = str(tmp_path / "many_rows")
+    spark.range(0, 5000).coalesce(1).write.mode("overwrite").parquet(path)
+    df = spark.read.parquet(path)
+    # one tiny file: bytes-only estimate says 1 split
+    assert kernel.estimate_scan_splits(df) == 1
+    # row floor: same file, 1k-row split budget → >1 estimated splits
+    monkeypatch.setattr(kernel, "_SPLIT_ROWS", 1000)
+    assert kernel.estimate_scan_splits(df) >= 5
 
 
 def test_xexpt_grouped_drilldown(spark, ab_df):

@@ -394,20 +394,6 @@ def test_merge_stats_single_row_arm():
     np.testing.assert_allclose(m.cov, np.cov(all_vals.T, ddof=1))
 
 
-def test_kolmogorov_sf_small_lambda():
-    from fast_causal_inference_spark.stats_distributions import (
-        kolmogorov_sf,
-    )
-
-    assert kolmogorov_sf(0.005) == pytest.approx(1.0, abs=1e-9)
-    assert kolmogorov_sf(0.01) == pytest.approx(1.0, abs=1e-9)
-    # continuity across the 0.4 series/dual seam (the two
-    # expansions agree to machine precision at the switch point)
-    assert kolmogorov_sf(0.4 - 1e-9) == pytest.approx(
-        kolmogorov_sf(0.4 + 1e-9), abs=1e-9)
-    assert kolmogorov_sf(1.0) == pytest.approx(0.2699996716, abs=1e-8)
-
-
 def test_t_ppf_extreme_quantiles():
     from fast_causal_inference_spark.stats_distributions import t_ppf
 
@@ -518,27 +504,6 @@ def test_matrix_multiplication_complete_case(spark):
         matrix_multiplication(
             spark.createDataFrame(pdf).where("y IS NULL AND x IS NULL"),
             "x", "y")
-
-
-def test_mann_whitney_guards(spark):
-    import pandas as pd
-
-    from fast_causal_inference_spark.operators.mann_whitney import (
-        mann_whitney_utest,
-        mann_whitney_utest_grouped,
-    )
-
-    pdf = pd.DataFrame({"v": np.arange(300, dtype=float),
-                        "t": np.tile([0, 1], 150), "g": ["a"] * 300})
-    df = spark.createDataFrame(pdf)
-    with pytest.raises(ValueError, match="method"):
-        mann_whitney_utest(df, "v", "t", method="Exact")
-    with pytest.raises(ValueError, match="alternative"):
-        mann_whitney_utest_grouped(df, "v", "t", ["g"],
-                                   alternative="two_sided")
-    with pytest.raises(Exception, match="exact method limited"):
-        mann_whitney_utest_grouped(df, "v", "t", ["g"],
-                                   method="exact").collect()
 
 
 def test_kstest_mode_guards(spark):

@@ -271,23 +271,6 @@ def test_domain_mixture_nested_domain_col(spark):
     assert "__rate" not in out.columns
 
 
-def test_rosenbaum_null_pairs_excluded(spark):
-    """Unmatched rows (NULL match_index) must not collapse into a bogus
-    pseudo-pair that outranks every real pair."""
-    from fast_causal_inference_spark.operators.sensitivity import (
-        rosenbaum_bounds,
-    )
-
-    pdf = pd.DataFrame({
-        "pair": [0, 0, 1, 1, 2, 2, None, None, None, None],
-        "t":    [1, 0, 1, 0, 1, 0, 1, 1, 0, 0],
-        "y":    [3.0, 1.0, 2.5, 1.5, 4.0, 2.0, 99.0, 98.0, 1.0, 2.0],
-    })
-    out = rosenbaum_bounds(spark.createDataFrame(pdf), "y", "t", "pair",
-                           gammas=(1.0,))
-    assert out.iloc[0]["n_pairs"] == 3          # not 4
-
-
 def test_cusum_null_series_key_monitored(spark):
     """A NULL group key is a real series: estimated-params mode must keep
     its rows (the equi-join dropped them; explicit params kept them)."""

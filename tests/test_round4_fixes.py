@@ -5,9 +5,7 @@
 2. KS 'exact' with ties warns + falls back (covered in test_advice_fixes).
 3. multimodal strict mode: corrupt uncompressed payloads re-raise their
    original error; only unsupported codecs get the PIL/cv2 message.
-4. estimate_scan_splits floors the estimate with the parquet-footer row
-   count, so a single compressed split with many rows keeps p > 1.
-5. sessionize preserves sub-second durations.
+4. sessionize preserves sub-second durations.
 """
 
 import datetime
@@ -71,19 +69,6 @@ def test_image_strict_corrupt_bmp_not_masked(spark):
     with pytest.raises(Exception) as e:
         image_resize(d_corrupt, width=4, height=4, strict=True).collect()
     assert "requires PIL/cv2" not in str(e.value)
-
-
-def test_scan_splits_row_floor(spark, tmp_path, monkeypatch):
-    import fast_causal_inference_spark.operators.mann_whitney as mw
-
-    path = str(tmp_path / "many_rows")
-    spark.range(0, 5000).coalesce(1).write.mode("overwrite").parquet(path)
-    df = spark.read.parquet(path)
-    # one tiny file: bytes-only estimate says 1 split
-    assert mw.estimate_scan_splits(df) == 1
-    # row floor: same file, 1k-row split budget → >1 estimated splits
-    monkeypatch.setattr(mw, "_SPLIT_ROWS", 1000)
-    assert mw.estimate_scan_splits(df) >= 5
 
 
 def test_sessionize_subsecond_duration(spark):

@@ -6,6 +6,7 @@ import numpy as np
 import pandas as pd
 import pytest
 
+from fast_causal_inference_spark.operators import ranks
 from fast_causal_inference_spark.operators.sensitivity import (
     e_value,
     e_value_from_smd,
@@ -55,12 +56,13 @@ def pairs_pdf():
     return pd.DataFrame(rows)
 
 
-def test_rosenbaum_matches_numpy_and_both_paths(spark, pairs_pdf):
+def test_rosenbaum_matches_numpy_and_both_paths(spark, pairs_pdf,
+                                                monkeypatch):
     sdf = spark.createDataFrame(pairs_pdf).repartition(8)
-    out1 = rosenbaum_bounds(sdf, "y", "tr", "pid", gammas=(1.0, 1.5, 2.0),
-                            num_partitions=1)
-    out4 = rosenbaum_bounds(sdf, "y", "tr", "pid", gammas=(1.0, 1.5, 2.0),
-                            num_partitions=4)
+    monkeypatch.setattr(ranks, "estimate_scan_splits", lambda df: 1)
+    out1 = rosenbaum_bounds(sdf, "y", "tr", "pid", gammas=(1.0, 1.5, 2.0))
+    monkeypatch.setattr(ranks, "estimate_scan_splits", lambda df: 4)
+    out4 = rosenbaum_bounds(sdf, "y", "tr", "pid", gammas=(1.0, 1.5, 2.0))
     diffs = (pairs_pdf.pivot_table(index="pid", columns="tr", values="y")
              .pipe(lambda t: (t[1] - t[0]).to_numpy()))
     for out in (out1, out4):
@@ -127,3 +129,16 @@ def test_e_value_from_smd():
         lim + math.sqrt(lim * (lim - 1)))
     with pytest.raises(ValueError, match="non-negative"):
         e_value_from_smd(0.5, se=-1)
+
+
+def test_rosenbaum_null_pairs_excluded(spark):
+    """Unmatched rows (NULL match_index) must not collapse into a bogus
+    pseudo-pair that outranks every real pair."""
+    pdf = pd.DataFrame({
+        "pair": [0, 0, 1, 1, 2, 2, None, None, None, None],
+        "t":    [1, 0, 1, 0, 1, 0, 1, 1, 0, 0],
+        "y":    [3.0, 1.0, 2.5, 1.5, 4.0, 2.0, 99.0, 98.0, 1.0, 2.0],
+    })
+    out = rosenbaum_bounds(spark.createDataFrame(pdf), "y", "t", "pair",
+                           gammas=(1.0,))
+    assert out.iloc[0]["n_pairs"] == 3          # not 4
