@@ -24,6 +24,8 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from fast_causal_inference_spark.session import in_job_group
+
 
 # Lazy-DataFrame memo: one (session, dir, table) → DataFrame plan.  Every
 # family gate re-called ``spark.read.parquet`` for its base tables, and each
@@ -1376,11 +1378,11 @@ def q_t_learner(spark: SparkSession, sf_dir: str) -> DataFrame:
     # still waited on phase 1's slowest member.
     nursery = ThreadPoolExecutor(max_workers=2)
     try:
-        pm_f = nursery.submit(
-            lambda: PropensityModel(["l_quantity"], "arm").fit(li))
-        om_f = nursery.submit(
+        pm_f = nursery.submit(in_job_group(
+            lambda: PropensityModel(["l_quantity"], "arm").fit(li)))
+        om_f = nursery.submit(in_job_group(
             lambda: ols_grouped(li, "l_extendedprice ~ l_quantity",
-                                "CAST((arm) AS DOUBLE)"))
+                                "CAST((arm) AS DOUBLE)")))
         (t_rows, s_rows, to_rows, conf_rows, cvt_df, retro_df, x_df,
          prop_df, r_df, dr_df) = _concurrent([
             lambda: _avg_ite_rows(
@@ -4367,7 +4369,8 @@ def _concurrent(fns):
     if len(fns) == 1:
         return [fns[0]()]
     with ThreadPoolExecutor(max_workers=min(8, len(fns))) as ex:
-        return [f.result() for f in [ex.submit(fn) for fn in fns]]
+        return [f.result()
+                for f in [ex.submit(in_job_group(fn)) for fn in fns]]
 
 
 def _long_rows(spark: SparkSession, rows: list[dict]) -> DataFrame:

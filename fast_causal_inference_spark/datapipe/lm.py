@@ -51,12 +51,14 @@ def _spawn_action(res: dict, key, fn) -> "threading.Thread":
     concurrent-materialization mechanism for both LM trainers."""
     import threading
 
+    from fast_causal_inference_spark.session import in_job_group
+
     def go():
         try:
             res[key] = fn()
         except BaseException as exc:          # noqa: BLE001 — re-raised
             res[key] = exc
-    th = threading.Thread(target=go)
+    th = threading.Thread(target=in_job_group(go))
     th.start()
     return th
 

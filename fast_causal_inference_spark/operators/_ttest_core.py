@@ -1,4 +1,4 @@
-"""Shared numpy core for t-test finalizers (driver- or pandas-UDF-side).
+"""Shared numpy core of the driver-side t-test finalizers.
 
 Implements the reference's CUPED (control-variate) math — θ estimated from the
 POOLED sample, per-arm means shifted by θ·(f_X(μ_arm) − f_X(μ_pool)) and
@@ -29,14 +29,12 @@ def arm_mean_var(stats: NumStats, ynode: Node,
     var = stats.delta_var(ynode)
     if xnodes:
         assert pooled is not None and theta is not None
-        k = len(stats.means)
         x_arm = np.array([n_.value(list(stats.means)) for n_ in xnodes])
         x_pool = np.array([n_.value(list(pooled.means)) for n_ in xnodes])
         mean = mean - float(theta @ (x_arm - x_pool))
         cov_xx = np.array([[stats.delta_cov(a, b) for b in xnodes] for a in xnodes])
         cov_xy = np.array([stats.delta_cov(ynode, a) for a in xnodes])
         var = var + float(theta @ cov_xx @ theta) - 2.0 * float(theta @ cov_xy)
-        _ = k
     return mean, var
 
 

@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 
 from fast_causal_inference_spark import stats_distributions as dist
 from fast_causal_inference_spark.operators import ranks
+from fast_causal_inference_spark.operators.design import persisted
 
 __all__ = ["anova_oneway", "bartlett_test", "dunnett_test",
            "kruskal_wallis_test"]
@@ -113,23 +114,31 @@ def kruskal_wallis_test(df: DataFrame, y: str, index: str) -> pd.DataFrame:
 
     The per-(value, arm) counts are joined to the average ranks of the
     shared rank kernel (:mod:`ranks`) and summed per arm in ONE aggregate;
-    the tie term rides the same aggregate.  NULL and NaN values and NULL
-    arms are dropped.  Returns statistic, df, p_value, n, k."""
+    the tie term rides the same aggregate.  The counts are cached, one
+    partition per core (AQE does not coalesce a cached relation), so the
+    ranking and the join back read the source once; every sum is exact
+    (counts and half-integer ranks), so the partitioning cannot move H.
+    NULL and NaN values and NULL arms are dropped.  Returns statistic,
+    df, p_value, n, k."""
     idx = F.col(index) if index.isidentifier() else F.expr(index)
     v = F.expr(y).cast("double")
-    counts = (df.select(idx.cast("string").alias("arm"), v.alias("__v"))
-                .where(F.col("arm").isNotNull() & ranks.observed(v))
-                .groupBy("__v", "arm")
-                .agg(F.count(F.lit(1)).cast("double").alias("c")))
     t, c = ranks.col("t"), F.col("c")
-    with ranks.ranked(counts, weight="c") as r:
-        # the per-(v, arm) share c/t of each value's tie term sums to
-        # exactly t^3 - t over the arms
-        arm_rows = (counts.join(r, "__v").groupBy("arm")
-                    .agg(F.sum(c).alias("n_a"),
-                         F.sum(c * ranks.rbar()).alias("R"),
-                         F.sum((t ** 3 - t) * c / t).alias("ties"))
-                    .collect())
+    with persisted() as keep:
+        counts = keep(
+            df.select(idx.cast("string").alias("arm"), v.alias("__v"))
+            .where(F.col("arm").isNotNull() & ranks.observed(v))
+            .groupBy("__v", "arm")
+            .agg(F.count(F.lit(1)).cast("double").alias("c"))
+            .coalesce(df.sparkSession.sparkContext.defaultParallelism)
+            .persist())
+        with ranks.ranked(counts, weight="c") as r:
+            # the per-(v, arm) share c/t of each value's tie term sums to
+            # exactly t^3 - t over the arms
+            arm_rows = (counts.join(r, "__v").groupBy("arm")
+                        .agg(F.sum(c).alias("n_a"),
+                             F.sum(c * ranks.rbar()).alias("R"),
+                             F.sum((t ** 3 - t) * c / t).alias("ties"))
+                        .collect())
     k = len(arm_rows)
     if k < 2:
         raise ValueError("need at least 2 arms")

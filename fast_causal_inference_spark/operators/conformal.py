@@ -125,10 +125,12 @@ def conformal_fit(df: DataFrame, Y: str, T: str, X: list[str],
         if fold_expr is None:
             from concurrent.futures import ThreadPoolExecutor
 
+            from fast_causal_inference_spark.session import in_job_group
+
             pool = ThreadPoolExecutor(max_workers=1)
-            guard_fut = pool.submit(
+            guard_fut = pool.submit(in_job_group(
                 lambda: work.agg(F.countDistinct(
-                    *[F.expr(c) for c in X])).collect()[0][0])
+                    *[F.expr(c) for c in X])).collect()[0][0]))
         def _check_guard() -> None:
             n_cells = guard_fut.result()
             if n_cells < 20:

@@ -133,6 +133,8 @@ def callaway_santanna(df: DataFrame, Y: str, unit: str, time: str,
         # one aggregate buffer)
         from concurrent.futures import ThreadPoolExecutor
 
+        from fast_causal_inference_spark.session import in_job_group
+
         def _chk():
             return (cells.groupBy("__u")
                     .agg(F.countDistinct("__a").alias("kd"),
@@ -150,7 +152,8 @@ def callaway_santanna(df: DataFrame, Y: str, unit: str, time: str,
                 F.sort_array(F.collect_set("__a")).alias("groups")).collect()[0]
 
         with ThreadPoolExecutor(max_workers=2) as pool:
-            chk_f, dom_f = pool.submit(_chk), pool.submit(_dom)
+            chk_f = pool.submit(in_job_group(_chk))
+            dom_f = pool.submit(in_job_group(_dom))
             chk, dom = chk_f.result(), dom_f.result()
         if int(chk["bad"] or 0) > 0:
             raise ValueError(

@@ -424,13 +424,32 @@ def formula_design(keep: Callable[[DataFrame], DataFrame], df: DataFrame,
     return Design(prep.work, xs, y, off, prep.probe, arrays)
 
 
+def _levenberg(H: np.ndarray) -> np.ndarray:
+    """H itself when it is negative definite (or not finite); otherwise
+    H − λI with λ doubling from max(1, max|Hᵢᵢ|) until −(H − λI) has a
+    Cholesky factor (a Levenberg shift).  Starting at the Hessian's scale
+    keeps the step short: a λ just past the top eigenvalue would leave a
+    near-singular matrix and a huge step."""
+    lam, A = max(1.0, float(np.max(np.abs(np.diag(H))))), H
+    while np.all(np.isfinite(H)):
+        try:
+            np.linalg.cholesky(-A)
+            break
+        except np.linalg.LinAlgError:
+            A = H - lam * np.eye(len(H))
+            lam *= 2.0
+    return A
+
+
 def newton_ascent(scan: Callable[[np.ndarray],
                                  tuple[float, np.ndarray, np.ndarray]],
                   theta: np.ndarray, max_iter: int, tol: float,
                   ) -> tuple[np.ndarray, float, np.ndarray, int, bool]:
     """Maximize a log-likelihood by Newton steps θ ← θ − H⁻¹g, where
     ``scan(θ)`` gives ``(ll, g, H)`` (H negative definite near the
-    optimum).  A step that lowers ll or makes it non-finite is halved,
+    optimum).  Where H is not negative definite (an indefinite start) it
+    is shifted to H − λI first (:func:`_levenberg`), so the step points
+    uphill.  A step that lowers ll or makes it non-finite is halved,
     up to 20 times; when every halving still lowers ll the loop stops
     where it is, unconverged, and never takes a worse point.  It stops
     converged once the step or the ll change is under ``tol``.  Returns
@@ -443,7 +462,7 @@ def newton_ascent(scan: Callable[[np.ndarray],
     it = 0
     for it in range(1, max_iter + 1):
         try:
-            step = np.linalg.solve(H, g)
+            step = np.linalg.solve(_levenberg(H), g)
         except np.linalg.LinAlgError:
             step = np.linalg.pinv(H) @ g
         new = theta - step

@@ -145,11 +145,14 @@ def aipw_estimator(df: DataFrame, Y: str, T: str, X: list[str],
     from concurrent.futures import ThreadPoolExecutor
 
     from fast_causal_inference_spark.operators.ols import ols_grouped
+    from fast_causal_inference_spark.session import in_job_group
 
     with ThreadPoolExecutor(max_workers=2) as pool:
-        mu_f = pool.submit(ols_grouped, work, f"__y ~ {rhs}", "__t")
+        mu_f = pool.submit(in_job_group(ols_grouped), work, f"__y ~ {rhs}",
+                           "__t")
         e_f = pool.submit(
-            (logistic_regression if propensity == "logistic" else ols),
+            in_job_group(logistic_regression if propensity == "logistic"
+                         else ols),
             work, f"__t ~ {rhs}")
         mus, e_model = mu_f.result(), e_f.result()
     missing = [v for v in (1.0, 0.0) if v not in mus]

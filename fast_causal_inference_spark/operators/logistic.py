@@ -72,8 +72,7 @@ class LogisticModel:
 
 
 def logistic_regression(df: DataFrame, formula: str, use_bias: bool = True,
-                        max_iter: int = 25, tol: float = 1e-8,
-                        use_mllib: bool = False) -> LogisticModel:
+                        max_iter: int = 25, tol: float = 1e-8) -> LogisticModel:
     """Fit ``'y ~ x1 + x2'`` (y ∈ {0,1}) by IRLS driver loop.
 
     Fits on complete cases, like every GLM here: rows with a NULL outcome
@@ -91,8 +90,6 @@ def logistic_regression(df: DataFrame, formula: str, use_bias: bool = True,
     from fast_causal_inference_spark.operators.ols import parse_r_formula
 
     y_expr, feats = parse_r_formula(formula)
-    if use_mllib:
-        return _mllib_logistic(df, y_expr, feats, use_bias, max_iter, tol)
     rule = _family_rule("binomial")
     with persisted() as keep:
         d = formula_design(keep, df, y_expr, feats, use_bias=use_bias)
@@ -102,27 +99,6 @@ def logistic_regression(df: DataFrame, formula: str, use_bias: bool = True,
     stderr = np.sqrt(np.maximum(np.diag(np.linalg.inv(A)), 0.0))
     return LogisticModel(feature_exprs=feats, use_bias=use_bias, beta=beta, y_expr=y_expr,
                          stderr=stderr, n=n, n_iter=it, converged=converged)
-
-
-def _mllib_logistic(df, y_expr, feats, use_bias, max_iter, tol) -> LogisticModel:
-    from pyspark.ml.classification import LogisticRegression
-    from pyspark.ml.feature import VectorAssembler
-
-    prepared = df.select(F.expr(y_expr).cast("double").alias("__label"),
-                         *[F.expr(e).cast("double").alias(f"__f{i}")
-                           for i, e in enumerate(feats)])
-    va = VectorAssembler(inputCols=[f"__f{i}" for i in range(len(feats))],
-                         outputCol="__features")
-    lr = LogisticRegression(featuresCol="__features", labelCol="__label",
-                            maxIter=max_iter, tol=tol, fitIntercept=use_bias,
-                            regParam=0.0)
-    m = lr.fit(va.transform(prepared))
-    beta = np.array(([m.intercept] if use_bias else []) +
-                    list(m.coefficients.toArray()))
-    return LogisticModel(feature_exprs=feats, use_bias=use_bias, beta=beta, y_expr=y_expr,
-                         stderr=np.full(len(beta), np.nan),
-                         n=float(prepared.count()),
-                         n_iter=m.summary.totalIterations, converged=True)
 
 
 def auc(df: DataFrame, score: str, label: str) -> float:

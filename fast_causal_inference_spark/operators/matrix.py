@@ -10,6 +10,9 @@ from __future__ import annotations
 import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from fast_causal_inference_spark.result import driver_frame
 
 
 def matrix_multiplication(df: DataFrame, *cols: str, std: bool = False,
@@ -62,10 +65,12 @@ def matrix_multiplication_df(df: DataFrame, *cols: str, std: bool = False,
                              weight: str | None = None) -> DataFrame:
     """Spark-DataFrame form: one row per (i, j) entry (for the oracle gate)."""
     m = matrix_multiplication(df, *cols, std=std, invert=invert, weight=weight)
-    spark = df.sparkSession
     rows = [(i, j, float(m[i, j])) for i in range(m.shape[0])
             for j in range(m.shape[1])]
-    return spark.createDataFrame(rows, "i int, j int, value double")
+    return driver_frame(df.sparkSession,
+                        [T.StructField("i", T.IntegerType()),
+                         T.StructField("j", T.IntegerType())],
+                        [T.StructField("value", T.DoubleType())], rows)
 
 
 def pearsonr(df, x: str, y: str, group_cols: list[str] | None = None):

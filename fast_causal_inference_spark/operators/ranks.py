@@ -37,6 +37,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from fast_causal_inference_spark.operators.design import persisted
+from fast_causal_inference_spark.result import driver_frame
 
 _SPLIT_BYTES = 128 * 1024 * 1024       # spark.sql.files.maxPartitionBytes
 _SPLIT_ROWS = 1_000_000                # rows a "one split ⇒ p=1" path may hold
@@ -168,15 +169,14 @@ def _range_partitions(df: DataFrame) -> int:
 
 def per_group(df: DataFrame, group_cols: Sequence[str], rows: list,
               fields: Sequence[str], finalize) -> DataFrame:
-    """A grouped test's result frame: each aggregated row's group columns
-    (with their input types) and the double ``fields`` of
-    ``finalize(row)``."""
-    schema = T.StructType(
-        df.select(*group_cols).schema.fields
-        + [T.StructField(f, T.DoubleType()) for f in fields])
+    """A grouped test's result frame (`result.driver_frame`): each
+    aggregated row's group columns (with their input types) and the
+    double ``fields`` of ``finalize(row)``."""
     data = []
     for r in rows:
         out = finalize(r)
         data.append(tuple(r[c] for c in group_cols)
                     + tuple(float(out[f]) for f in fields))
-    return df.sparkSession.createDataFrame(data, schema)
+    return driver_frame(df.sparkSession, df.select(*group_cols).schema.fields,
+                        [T.StructField(f, T.DoubleType()) for f in fields],
+                        data)

@@ -7,39 +7,37 @@ plays the role of the UDAFs' update/merge/serialize cycle, stays inside
 whole-stage codegen, and shuffles only O(k²) doubles per group — which is what
 makes one pass over 100 TB feasible.
 
-Two aggregation shapes:
+One batch shape, keyed (`keyed_stats`, `arm_cells`): every batch two-arm
+readout — the t-test family grouped or not, post-stratified or not, the
+scorecard, xexpt, permutation — drops incomplete rows and rows outside both
+arms in ONE filter and runs ``groupBy(group columns…, arm)`` with plain
+sums, (k+1)(k+2)/2 aggregates, none conditional; an ungrouped call is the
+same pass with no group columns.  The driver pairs the arms of each report
+cell (`collect_keyed`, `by_arm`).  The arm key costs one hash probe per
+row: at k = 1 the keyed pass is ~10% slower than a wide one, at k = 10 the
+wide one took 3.5× as long (SCALE.md).
 
-* **Arm-keyed** (`arm_stats`, `keyed_stats`): the ungrouped two-arm readouts
-  (t-test family, scorecard, xexpt, permutation) compute the arm once per
-  row, drop incomplete rows in ONE filter, and ``groupBy(arm)`` with plain
-  sums — (k+1)(k+2)/2 aggregates, none conditional.  The per-arm statistics
-  come back to the driver as one small row per arm.  The arm key costs one
-  hash probe per row: for k = 10 the wide pass took 3.5× as long, at k = 1
-  the arm-keyed one is ~10% slower (SCALE.md).
-* **Wide conditional** (`suffstat_agg_columns` with ``cond``): both arms as
-  ``g0_``/``g1_`` columns of ONE row, each sum wrapped in
-  ``CASE WHEN arm AND complete``.  Twice the aggregates, each with a CASE,
-  but it is the shape the grouped, post-stratified and streaming paths
-  need: their ``mapInPandas``/``applyInPandas``/columnar (`StatView`)
-  finalizers see both arms of a report group on one row without a second
-  shuffle.
-
-Both shapes add the same values in the same per-partition order, so their
-statistics are bit-identical (see :func:`keyed_stats` for the one input
-shape where the order differs).
+The wide conditional row (`suffstat_agg_columns` with ``cond``: both arms
+as ``g0_``/``g1_`` columns of ONE row, each sum under ``CASE WHEN arm AND
+complete``) serves streaming only (``streaming/ops.py``): a stateful
+windowed aggregation cannot pair two keyed rows.  Both shapes add the same
+values in the same per-partition order, so their statistics are
+bit-identical (see :func:`keyed_stats` for the one input shape where the
+order differs).
 
 Two finalization paths:
 
 * **Columnar** (`StatView`): means / covariances / delta-method variances are
-  rendered back as Column expressions — zero driver involvement, works for
-  millions of groups.
-* **Driver / pandas** (`row_to_stats`): a collected Row (or pandas row) is
-  unpacked to numpy ``(n, means, cov)`` for finalizers that need matrix
-  inverses (CUPED, OLS, …).
+  rendered back as Column expressions — zero driver involvement; the
+  streaming readouts, the delta method and the bootstrap replicas use it.
+* **Driver** (`row_to_stats`): a collected Row is unpacked to numpy
+  ``(n, means, cov)`` for finalizers that need matrix inverses (CUPED,
+  OLS, …).
 """
 
 from __future__ import annotations
 
+from collections.abc import Sequence
 from dataclasses import dataclass
 
 import numpy as np
@@ -84,8 +82,8 @@ def suffstat_agg_columns(base_exprs: list[str], prefix: str = "",
     """Aggregate columns for (n, Σxᵢ, Σxᵢxⱼ) of the given SQL expressions.
 
     ``cond`` restricts the statistics to matching rows (the wide two-arm
-    row of the grouped paths — see the module docstring; ungrouped
-    readouts use :func:`arm_stats`).  ``weight`` produces weighted sums
+    row of the streaming readouts — see the module docstring; batch
+    readouts use :func:`arm_cells`).  ``weight`` produces weighted sums
     (WLS; n becomes Σw).
 
     Rows where any base expression is NULL are skipped entirely (n excluded
@@ -100,25 +98,83 @@ def suffstat_agg_columns(base_exprs: list[str], prefix: str = "",
     return _sum_columns(xs, one, prefix)
 
 
-def keyed_stats(df: DataFrame, base_exprs: list[str], key: Column,
-                weight: Column | None = None) -> DataFrame:
-    """One (n, Σxᵢ, Σxᵢxⱼ) row per non-NULL ``key`` value (column
-    ``__key``), over the complete-case rows only.
-
-    The complete-case guard is a ``where``, not a CASE inside every
-    aggregate, so the sums are plain.  Each row holds exactly the values
-    of ``suffstat_agg_columns(base_exprs, cond=key == value, weight=…)``.
-    Order assumption: the filter can be pushed below the plan of ``df``;
-    over a round-robin ``repartition`` of a derived column that moves rows
-    between partitions, which regroups the float partials (low bits may
-    differ from the wide form).  Scans, parquet and cached inputs keep the
-    partition contents, and the results are bit-identical.
+def keyed_stats(df: DataFrame, base_exprs: list[str], key: Column | None,
+                weight: Column | None = None,
+                group_cols: Sequence[str | Column] = ()) -> DataFrame:
+    """One (n, Σxᵢ, Σxᵢxⱼ) row per (``group_cols``…, ``key``) value over
+    the complete-case rows; ``key`` is the column ``__key`` and its NULL
+    rows drop out (a NULL group key stays one group).  ``key=None`` keys by
+    the group columns alone.  The complete-case guard is a ``where``, not
+    a CASE inside every aggregate, so the sums are plain.  Each row holds
+    exactly the values of ``suffstat_agg_columns(base_exprs, cond=<its
+    key>, weight=…)``.  Order assumption: the filter can be pushed below
+    the plan of ``df``; over a round-robin ``repartition`` of a derived
+    column that moves rows between partitions, which regroups the float
+    partials (low bits may differ from the wide form).  Scans, parquet and
+    cached inputs keep the partition contents, and the results are
+    bit-identical.
     """
     xs = [F.expr(e).cast("double") for e in base_exprs]
-    keep = _complete(xs, key.isNotNull())
+    keys = list(group_cols)
+    if key is not None:
+        keys.append(key.alias("__key"))
+    keep = _complete(xs, None if key is None else key.isNotNull())
     one = None if weight is None else weight.cast("double")
-    return (df.where(keep).groupBy(key.alias("__key"))
+    return (df.where(keep).groupBy(*keys)
             .agg(*_sum_columns(xs, one, "")))
+
+
+_NAN = float("nan")
+
+
+def collect_keyed(agg: DataFrame, n_keys: int, limit: int | None = None
+                  ) -> tuple[list, list[tuple[tuple, object]]]:
+    """Collect a keyed aggregate whose first ``n_keys`` columns are group
+    columns: their StructFields and a (cell key, row) pair per row, at
+    most ``limit`` rows.  Every NaN in a key becomes one object, so NaN
+    keys pair in a dict the way ``groupBy`` pairs them (two NaN floats are
+    neither equal nor, since Python 3.10, of equal hash)."""
+    rows = (agg if limit is None else agg.limit(limit)).collect()
+    fields = agg.schema.fields[:n_keys] if n_keys else []
+    return fields, [
+        (tuple(_NAN if isinstance(v, float) and v != v else v
+               for v in r[:n_keys]), r) for r in rows]
+
+
+def by_arm(rows: list[tuple[tuple, object]], grouped: bool
+           ) -> dict[tuple, dict]:
+    """``{cell key: {arm: row}}`` of (cell key, row) pairs whose rows carry
+    the arm as ``__key``, in arrival order.  Without group columns the one
+    cell ``()`` is always there, even when no row came back."""
+    cells: dict[tuple, dict] = {} if grouped else {(): {}}
+    for cell, r in rows:
+        cells.setdefault(cell, {})[r["__key"]] = r
+    return cells
+
+
+def arm_cells(df: DataFrame, base_exprs: list[str], idx: Column, v0, v1,
+              group_cols: Sequence[str | Column] = (),
+              weight: Column | None = None, limit: int | None = None
+              ) -> tuple[list, dict[tuple, tuple[NumStats, NumStats]]]:
+    """Both arms' statistics per report cell from ONE pass keyed by
+    (``group_cols``…, arm) (see the module docstring): the arm is ``0``
+    where ``idx == v0`` and ``1`` where ``idx == v1``; other rows drop out.
+
+    Returns the group columns' StructFields and ``{cell key: (s0, s1)}``;
+    a cell missing an arm gets the all-NaN arm (see :func:`by_arm` for
+    the order and the ungrouped cell).  ``limit`` bounds the rows
+    collected (two per cell at most).
+    """
+    check_distinct_arms(v0, v1)
+    arm = F.when(idx == F.lit(v0), 0).when(idx == F.lit(v1), 1)
+    fields, rows = collect_keyed(
+        keyed_stats(df, base_exprs, arm, weight, group_cols),
+        len(group_cols), limit)
+    k = len(base_exprs)
+    return fields, {
+        cell: tuple(row_to_stats(a[i], k) if i in a else _missing_arm(k)
+                    for i in (0, 1))
+        for cell, a in by_arm(rows, bool(group_cols)).items()}
 
 
 def check_distinct_arms(v0, v1) -> None:
@@ -182,20 +238,6 @@ class StatView:
             return F.lit(0.0)
         return out / F.nullif(self.n, F.lit(0.0))
 
-    def cov_of_formula_means(self, a: Node, b: Node) -> Column:
-        """Delta-method Cov[f(x̄), g(x̄)] as a Column expression."""
-        mus = self.mus()
-        ga = a.gradient(self.k)
-        gb = b.gradient(self.k)
-        out: Column | None = None
-        for i in sorted(a.symbols()):
-            for j in sorted(b.symbols()):
-                term = ga[i].value(mus) * gb[j].value(mus) * self.cov(i, j)
-                out = term if out is None else out + term
-        if out is None:
-            return F.lit(0.0)
-        return out / F.nullif(self.n, F.lit(0.0))
-
     def value(self, node: Node) -> Column:
         return node.value(self.mus())
 
@@ -254,17 +296,9 @@ def row_to_stats(row, k: int, prefix: str = "") -> NumStats:
 
 def arm_stats(df: DataFrame, base_exprs: list[str], idx: Column, v0, v1,
               weight: Column | None = None) -> tuple[NumStats, NumStats]:
-    """Both arms' statistics in ONE arm-keyed pass (see the module
-    docstring): the arm is ``0`` where ``idx == v0`` and ``1`` where
-    ``idx == v1``, other rows drop out.  A missing arm comes back all-NaN,
-    like the NULL sums of the wide conditional row."""
-    check_distinct_arms(v0, v1)
-    arm = F.when(idx == F.lit(v0), 0).when(idx == F.lit(v1), 1)
-    rows = {r["__key"]: r
-            for r in keyed_stats(df, base_exprs, arm, weight).collect()}
-    k = len(base_exprs)
-    return tuple(row_to_stats(rows[a], k) if a in rows else _missing_arm(k)
-                 for a in (0, 1))
+    """Both arms' statistics of the whole frame: :func:`arm_cells` with no
+    group columns."""
+    return arm_cells(df, base_exprs, idx, v0, v1, weight=weight)[1][()]
 
 
 def _missing_arm(k: int) -> NumStats:

@@ -1,13 +1,13 @@
 """t-test family: one/two-sample with CUPED, classic student/welch, z-test.
 
-Pattern (SURVEY.md §2.6): ONE native aggregation computes both arms'
-sufficient statistics in a single pass.  Ungrouped readouts key it by arm
-(`suffstats.arm_stats`: plain sums, two small rows to the driver); grouped
-and post-stratified reports keep both arms on one row per group
-(conditional ``g0_``/``g1_`` sums — no per-arm shuffle), and a vectorized
-Arrow finalizer turns that tiny relation into estimates / stderr / t / p /
-CI. All row-scale work stays JVM-side; Python only ever sees O(#groups)
-rows.
+Pattern (SURVEY.md §2.6): every batch readout is ONE native aggregation
+keyed by (group columns…, arm) (:func:`suffstats.arm_cells`: plain sums over
+the complete-case rows; the one-sample test keys by the group columns
+alone); an ungrouped call is the same pass with no group columns.  The
+driver pairs each report cell's arms, finalizes them with the closed-form
+:mod:`_ttest_core` math and returns an eager :func:`result.driver_frame`;
+no Python worker runs.  (The wide ``g0_``/``g1_`` row is kept only by
+``streaming/ops.py``: a streaming aggregation cannot pair two keyed rows.)
 
 Behavioral parity targets (reference, /root/reference):
 ``ttest_1samp.h:215-250``, ``ttest_2samp.h:359-427``, ``ttest_common.h:42-241``.
@@ -15,10 +15,9 @@ Behavioral parity targets (reference, /root/reference):
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+import math
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -27,18 +26,25 @@ from fast_causal_inference_spark.formula import parse_formulas
 from fast_causal_inference_spark import stats_distributions as dist
 from fast_causal_inference_spark.operators import _ttest_core as core
 from fast_causal_inference_spark.operators.suffstats import (
+    arm_cells,
     arm_stats,
+    by_arm,
     check_distinct_arms,
+    collect_keyed,
+    keyed_stats,
     merge_stats,
     row_to_stats,
     suffstat_agg_columns,
 )
-from fast_causal_inference_spark.serialization import ensure_udf_serializable
+from fast_causal_inference_spark.result import driver_frame
 
 _RESULT_2SAMP = ["n0", "n1", "mean0", "mean1", "estimate", "stderr",
                  "t_stat", "p_value", "lower", "upper"]
 _RESULT_1SAMP = ["n", "mean", "estimate", "stderr",
                  "t_stat", "p_value", "lower", "upper"]
+_RESULT_MOMENT = ["n0", "n1", "mean0", "mean1", "estimate", "stderr",
+                  "t_stat", "df", "p_value"]
+_NAN = float("nan")
 
 
 def _split_cuped(X: str | None) -> list[str]:
@@ -52,29 +58,26 @@ def _split_cuped(X: str | None) -> list[str]:
     return [p for p in x.split("+") if p.strip()]
 
 
-def _finalize_local(spark, pdf: pd.DataFrame, finalize,
-                    schema: T.StructType) -> DataFrame:
-    """Ungrouped reports aggregate to a HANDFUL of rows — finalize on the
-    driver instead of shipping a pandas-UDF closure (pickle-by-value of the
-    package + Python-worker round trip cost ~2 s per call; the distributed
-    mapInPandas path remains for grouped reports with many groups)."""
-    out = pd.concat(list(finalize(iter([pdf]))), ignore_index=True)
-    return spark.createDataFrame(out[[f.name for f in schema.fields]], schema)
+def _parse(Y: str, X: str | None):
+    """(metric node, CUPED covariate nodes or None, base expressions)."""
+    nodes, base = parse_formulas([Y] + _split_cuped(X))
+    return nodes[0], nodes[1:] or None, base
 
 
-def _local_result(spark, rows: list[dict], schema: T.StructType) -> DataFrame:
-    """Spark frame of driver-finalized result rows (ungrouped readouts)."""
-    out = pd.DataFrame(rows, columns=[f.name for f in schema.fields])
-    return spark.createDataFrame(out, schema)
+def _col(expr: str):
+    return F.col(expr) if expr.isidentifier() else F.expr(expr)
 
 
-def _result_schema(agged: DataFrame | None, group_cols: list[str],
-                   fields: list[str], extra: list[T.StructField] | None = None
-                   ) -> T.StructType:
-    keep = ([f for f in agged.schema.fields if f.name in group_cols]
-            if group_cols else [])
-    res = [T.StructField(n, T.DoubleType()) for n in fields]
-    return T.StructType((extra or []) + keep + res)
+def _doubles(names: list[str]) -> list[T.StructField]:
+    return [T.StructField(n, T.DoubleType()) for n in names]
+
+
+def _frame(df: DataFrame, keys: list, fields: list[T.StructField],
+           rows: list[tuple[tuple, dict]]) -> DataFrame:
+    """Result frame of (cell key, result dict) rows (`result.driver_frame`)."""
+    return driver_frame(df.sparkSession, keys, fields,
+                        [(*cell, *(res[f.name] for f in fields))
+                         for cell, res in rows])
 
 
 def ttest_2samp(df: DataFrame, Y: str, index: str,
@@ -92,6 +95,8 @@ def ttest_2samp(df: DataFrame, Y: str, index: str,
     ``pse`` a discrete column for post-stratification (strata combined with
     weights n_s/n — mean: Σw·m_s, variance: Σw²·v_s — matching the reference
     ``ttest_2samp.h:292-358``; single-arm/singleton strata are skipped).
+    ``group_cols`` gives one row per group (a group with no complete row
+    in either arm has none; a group missing one arm gets NaN statistics).
 
     ``edgeworth=True`` applies the one-term Edgeworth skewness
     correction to the one-sided p-value (the gateway's trailing
@@ -99,59 +104,46 @@ def ttest_2samp(df: DataFrame, Y: str, index: str,
     costs one extra aggregation pass for the per-arm third central
     moments of the delta-method influence values.  Ungrouped only.
     """
-    check_distinct_arms(*treatment_values)
-    if pse is not None:
-        if edgeworth:
-            raise ValueError("edgeworth is not supported with pse")
-        return _ttest_2samp_pse(df, Y, index, alternative, X, alpha,
-                                treatment_values, group_cols, pse)
+    keys, rows = _ttest_2samp_rows(df, Y, index, alternative, X, alpha,
+                                   treatment_values, group_cols, pse,
+                                   edgeworth)
+    return _frame(df, keys, _doubles(_RESULT_2SAMP), rows)
+
+
+def _ttest_2samp_rows(df: DataFrame, Y: str, index: str, alternative: str,
+                      X: str | None, alpha: float, treatment_values: tuple,
+                      group_cols: list[str] | None, pse: str | None,
+                      edgeworth: bool) -> tuple[list, list[tuple[tuple, dict]]]:
+    """:func:`ttest_2samp`'s group fields and (cell key, result) rows."""
     if alternative not in core.ALTERNATIVES:
         raise ValueError(f"alternative must be one of {core.ALTERNATIVES}")
+    if edgeworth and pse is not None:
+        raise ValueError("edgeworth is not supported with pse")
     if edgeworth and group_cols:
         raise ValueError("edgeworth correction is ungrouped-only")
     group_cols = list(group_cols or [])
-    x_parts = _split_cuped(X)
-    nodes, base = parse_formulas([Y] + x_parts)
-    ynode, xnodes = nodes[0], nodes[1:]
-    k = len(base)
-
-    idx = F.col(index) if index.isidentifier() else F.expr(index)
+    ynode, xnodes, base = _parse(Y, X)
+    idx = _col(index)
     v0, v1 = treatment_values
+    if pse is not None:
+        return _pse_rows(df, base, idx, v0, v1, group_cols, _col(pse),
+                         ynode, xnodes, alternative, alpha)
 
-    if not group_cols:
-        s0, s1 = arm_stats(df, base, idx, v0, v1)
-        res = core.ttest_2samp_result(s0, s1, ynode, xnodes or None,
-                                      alternative, alpha)
-        if edgeworth:
-            # two-sided: the first-order Edgeworth term provably
-            # cancels (edgeworth_p returns the plain p), so skip the
-            # extra full-table third-moment pass entirely
-            gam = 0.0 if alternative == "two-sided" else \
-                _edgeworth_gamma(df, base, idx, v0, v1, s0, s1,
-                                 ynode, xnodes or None, res["stderr"])
-            res["p_value"] = core.edgeworth_p(res["t_stat"], gam,
-                                              alternative)
-        return _local_result(df.sparkSession, [res],
-                             _result_schema(None, [], _RESULT_2SAMP))
-
-    aggs = (suffstat_agg_columns(base, "g0_", idx == F.lit(v0))
-            + suffstat_agg_columns(base, "g1_", idx == F.lit(v1)))
-    agged = df.groupBy(*group_cols).agg(*aggs)
-    schema = _result_schema(agged, group_cols, _RESULT_2SAMP)
-
-    def finalize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for _, r in pdf.iterrows():
-                s0 = row_to_stats(r, k, "g0_")
-                s1 = row_to_stats(r, k, "g1_")
-                res = core.ttest_2samp_result(s0, s1, ynode, xnodes or None,
-                                              alternative, alpha)
-                rows.append({**{g: r[g] for g in group_cols}, **res})
-            yield pd.DataFrame(rows, columns=[f.name for f in schema.fields])
-
-    ensure_udf_serializable()
-    return agged.mapInPandas(finalize, schema)
+    keys, cells = arm_cells(df, base, idx, v0, v1, group_cols)
+    rows = [(cell, core.ttest_2samp_result(s0, s1, ynode, xnodes,
+                                           alternative, alpha))
+            for cell, (s0, s1) in cells.items()]
+    if edgeworth:
+        # two-sided: the first-order Edgeworth term provably cancels
+        # (edgeworth_p returns the plain p), so skip the extra
+        # full-table third-moment pass entirely
+        (s0, s1), = cells.values()
+        (_, res), = rows
+        gam = 0.0 if alternative == "two-sided" else \
+            _edgeworth_gamma(df, base, idx, v0, v1, s0, s1,
+                             ynode, xnodes, res["stderr"])
+        res["p_value"] = core.edgeworth_p(res["t_stat"], gam, alternative)
+    return keys, rows
 
 
 def _edgeworth_moments(df: DataFrame, base: list[str], idx, v0, v1,
@@ -159,8 +151,8 @@ def _edgeworth_moments(df: DataFrame, base: list[str], idx, v0, v1,
                        ) -> tuple[list[float], list[float], list[float]] | None:
     """Per-arm (n, μ3, population variance) of the delta-method
     INFLUENCE value h = ∇g(μ_arm)·(b − μ_arm) (CUPED: minus θ·∇x),
-    evaluated in ONE aggregation pass whose complete-case mask mirrors
-    ``suffstat_agg_columns``.  Returns None on degenerate inputs."""
+    evaluated in ONE aggregation pass over the complete-case rows of
+    each arm.  Returns None on degenerate inputs."""
     k = len(base)
     grads_y = ynode.gradient(k)
     theta = None
@@ -210,8 +202,6 @@ def _edgeworth_gamma(df: DataFrame, base: list[str], idx, v0, v1,
     delta-method estimate: (μ3₁/n1² − μ3₀/n0²) / stderr³ (see
     :func:`_edgeworth_moments`).  Returns 0.0 (no correction) on
     degenerate inputs."""
-    import math
-
     if not stderr or math.isnan(stderr) or stderr <= 0:
         return 0.0
     m = _edgeworth_moments(df, base, idx, v0, v1, s0, s1, ynode, xnodes)
@@ -247,140 +237,103 @@ def edgeworth_components(df: DataFrame, Y: str, index: str,
     """
     if alternative not in core.ALTERNATIVES:
         raise ValueError(f"alternative must be one of {core.ALTERNATIVES}")
-    x_parts = _split_cuped(X)
-    nodes, base = parse_formulas([Y] + x_parts)
-    ynode, xnodes = nodes[0], nodes[1:]
-
-    idx = F.col(index) if index.isidentifier() else F.expr(index)
+    ynode, xnodes, base = _parse(Y, X)
+    idx = _col(index)
     v0, v1 = treatment_values
     s0, s1 = arm_stats(df, base, idx, v0, v1)
-    res = core.ttest_2samp_result(s0, s1, ynode, xnodes or None,
-                                  alternative, alpha)
-    mom = _edgeworth_moments(df, base, idx, v0, v1, s0, s1,
-                             ynode, xnodes or None)
+    res = core.ttest_2samp_result(s0, s1, ynode, xnodes, alternative, alpha)
+    mom = _edgeworth_moments(df, base, idx, v0, v1, s0, s1, ynode, xnodes)
     stderr, t = res["stderr"], res["t_stat"]
     if mom is None or not stderr or stderr <= 0:
-        ns, skews, gam = [float("nan")] * 2, [float("nan")] * 2, 0.0
+        ns, skews, gam = [_NAN] * 2, [_NAN] * 2, 0.0
     else:
         ns, mu3, varp = mom
-        skews = [m3 / vp ** 1.5 if vp > 0 else float("nan")
+        skews = [m3 / vp ** 1.5 if vp > 0 else _NAN
                  for m3, vp in zip(mu3, varp)]
         gam = float((mu3[1] / ns[1] ** 2 - mu3[0] / ns[0] ** 2)
                     / stderr ** 3)
-    poly = gam * (2.0 * t * t + 1.0) / 6.0
-    out = pd.DataFrame([{
-        "n0": ns[0], "n1": ns[1], "skew0": skews[0], "skew1": skews[1],
-        "gamma_eff": gam, "stderr": stderr, "t_stat": t,
-        "poly_term": poly,
-        "p_value": core.edgeworth_p(t, gam, alternative),
-    }])
-    schema = T.StructType([T.StructField(c, T.DoubleType())
-                           for c in out.columns])
-    return df.sparkSession.createDataFrame(out, schema)
+    out = {"n0": ns[0], "n1": ns[1], "skew0": skews[0], "skew1": skews[1],
+           "gamma_eff": gam, "stderr": stderr, "t_stat": t,
+           "poly_term": gam * (2.0 * t * t + 1.0) / 6.0,
+           "p_value": core.edgeworth_p(t, gam, alternative)}
+    return _frame(df, [], _doubles(list(out)), [((), out)])
 
 
-def _ttest_2samp_pse(df: DataFrame, Y: str, index: str, alternative: str,
-                     X: str | None, alpha: float, treatment_values: tuple,
-                     group_cols: list[str] | None, pse: str) -> DataFrame:
-    """Post-stratified two-sample t-test (see ttest_2samp docstring)."""
-    import math
+def _ascending(v) -> tuple:
+    """Sort key of one group-key value in Spark's ascending order: NULL
+    first, NaN above every number."""
+    return (0, 0) if v is None else (2, 0) if v != v else (1, v)
 
-    if alternative not in core.ALTERNATIVES:
-        raise ValueError(f"alternative must be one of {core.ALTERNATIVES}")
-    group_cols = list(group_cols or [])
-    x_parts = _split_cuped(X)
-    nodes, base = parse_formulas([Y] + x_parts)
-    ynode, xnodes = nodes[0], nodes[1:]
-    k = len(base)
 
-    idx = F.col(index) if index.isidentifier() else F.expr(index)
-    psec = F.col(pse) if pse.isidentifier() else F.expr(pse)
-    v0, v1 = treatment_values
-    aggs = (suffstat_agg_columns(base, "g0_", idx == F.lit(v0))
-            + suffstat_agg_columns(base, "g1_", idx == F.lit(v1)))
-    agged = df.groupBy(*group_cols, psec.alias("__pse")).agg(*aggs)
+def _pse_rows(df: DataFrame, base: list[str], idx, v0, v1,
+              group_cols: list[str], psec, ynode, xnodes, alternative: str,
+              alpha: float) -> tuple[list, list[tuple[tuple, dict]]]:
+    """Post-stratified rows (see :func:`ttest_2samp`): one pass keyed by
+    (groups…, stratum, arm); each group's strata combine on the driver in
+    ascending stratum order, so the float sums do not depend on the
+    order the shuffle returns the strata in."""
+    keys, cells = arm_cells(df, base, idx, v0, v1,
+                            [*group_cols, psec.alias("__pse")])
+    strata: dict[tuple, list] = {} if group_cols else {(): []}
+    for cell in sorted(cells, key=lambda c: _ascending(c[-1])):
+        strata.setdefault(cell[:-1], []).append(cells[cell])
+    return keys[:-1], [
+        (g, _post_stratified(ss, ynode, xnodes, alternative, alpha))
+        for g, ss in strata.items()]
 
-    schema = _result_schema(agged, group_cols, _RESULT_2SAMP)
 
-    def finalize(pdf: pd.DataFrame) -> pd.DataFrame:
-        total = 0.0
-        strata = []
-        for _, r in pdf.iterrows():
-            s0 = row_to_stats(r, k, "g0_")
-            s1 = row_to_stats(r, k, "g1_")
-            if s0.n < 2 or s1.n < 2 or np.isnan(s0.n) or np.isnan(s1.n):
-                continue
-            strata.append((s0, s1))
-            total += s0.n + s1.n
-        mean0 = mean1 = var0 = var1 = 0.0
-        n0 = n1 = 0.0
-        for s0, s1 in strata:
-            if xnodes:
-                pooled = merge_stats(s0, s1)
-                theta = core.cuped_theta(pooled, ynode, xnodes)
-                m0, vv0 = core.arm_mean_var(s0, ynode, xnodes, pooled, theta)
-                m1, vv1 = core.arm_mean_var(s1, ynode, xnodes, pooled, theta)
-            else:
-                m0, vv0 = core.arm_mean_var(s0, ynode, None)
-                m1, vv1 = core.arm_mean_var(s1, ynode, None)
-            w = (s0.n + s1.n) / total
-            mean0 += m0 * w
-            mean1 += m1 * w
-            var0 += vv0 * w * w
-            var1 += vv1 * w * w
-            n0 += s0.n
-            n1 += s1.n
-        estimate = mean1 - mean0
-        stderr = math.sqrt(var0 + var1) if strata else float("nan")
-        t_stat = estimate / stderr if stderr and stderr > 0 else float("nan")
-        lower, upper = core.confidence_interval(
-            estimate, stderr, n0 + n1, alpha, alternative)
-        rows = [{**{g: pdf[g].iloc[0] for g in group_cols},
-                 "n0": n0, "n1": n1, "mean0": mean0, "mean1": mean1,
-                 "estimate": estimate, "stderr": stderr, "t_stat": t_stat,
-                 "p_value": core.p_value(t_stat, alternative),
-                 "lower": lower, "upper": upper}]
-        return pd.DataFrame(rows, columns=[f.name for f in schema.fields])
-
-    if not group_cols:
-        out = finalize(agged.toPandas())
-        return df.sparkSession.createDataFrame(
-            out[[f.name for f in schema.fields]], schema)
-    ensure_udf_serializable()
-    return agged.groupBy(*group_cols).applyInPandas(finalize, schema)
+def _post_stratified(cells: list, ynode, xnodes, alternative: str,
+                     alpha: float) -> dict:
+    """One group's strata (s0, s1) combined with weights n_s/n; strata
+    with fewer than two rows in an arm are skipped."""
+    strata = [(s0, s1) for s0, s1 in cells
+              if not (s0.n < 2 or s1.n < 2 or np.isnan(s0.n)
+                      or np.isnan(s1.n))]
+    total = sum(s0.n + s1.n for s0, s1 in strata)
+    mean0 = mean1 = var0 = var1 = 0.0
+    n0 = n1 = 0.0
+    for s0, s1 in strata:
+        if xnodes:
+            pooled = merge_stats(s0, s1)
+            theta = core.cuped_theta(pooled, ynode, xnodes)
+            m0, vv0 = core.arm_mean_var(s0, ynode, xnodes, pooled, theta)
+            m1, vv1 = core.arm_mean_var(s1, ynode, xnodes, pooled, theta)
+        else:
+            m0, vv0 = core.arm_mean_var(s0, ynode, None)
+            m1, vv1 = core.arm_mean_var(s1, ynode, None)
+        w = (s0.n + s1.n) / total
+        mean0 += m0 * w
+        mean1 += m1 * w
+        var0 += vv0 * w * w
+        var1 += vv1 * w * w
+        n0 += s0.n
+        n1 += s1.n
+    estimate = mean1 - mean0
+    stderr = math.sqrt(var0 + var1) if strata else _NAN
+    t_stat = estimate / stderr if stderr and stderr > 0 else _NAN
+    lower, upper = core.confidence_interval(
+        estimate, stderr, n0 + n1, alpha, alternative)
+    return {"n0": n0, "n1": n1, "mean0": mean0, "mean1": mean1,
+            "estimate": estimate, "stderr": stderr, "t_stat": t_stat,
+            "p_value": core.p_value(t_stat, alternative),
+            "lower": lower, "upper": upper}
 
 
 def ttest_1samp(df: DataFrame, Y: str, alternative: str = "two-sided",
                 mu: float = 0.0, X: str | None = None, alpha: float = 0.05,
                 group_cols: list[str] | None = None) -> DataFrame:
-    """One-sample delta-method t-test of a metric formula against ``mu``."""
+    """One-sample delta-method t-test of a metric formula against ``mu``:
+    one pass keyed by the group columns (ungrouped: one global row)."""
     if alternative not in core.ALTERNATIVES:
         raise ValueError(f"alternative must be one of {core.ALTERNATIVES}")
     group_cols = list(group_cols or [])
-    x_parts = _split_cuped(X)
-    nodes, base = parse_formulas([Y] + x_parts)
-    ynode, xnodes = nodes[0], nodes[1:]
-    k = len(base)
-
-    agged = ((df.groupBy(*group_cols) if group_cols else df.groupBy())
-             .agg(*suffstat_agg_columns(base)))
-    schema = _result_schema(agged, group_cols, _RESULT_1SAMP)
-
-    def finalize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for _, r in pdf.iterrows():
-                s = row_to_stats(r, k)
-                res = core.ttest_1samp_result(s, ynode, xnodes or None,
-                                              mu, alternative, alpha)
-                rows.append({**{g: r[g] for g in group_cols}, **res})
-            yield pd.DataFrame(rows, columns=[f.name for f in schema.fields])
-
-    if not group_cols:
-        return _finalize_local(df.sparkSession, agged.toPandas(),
-                               finalize, schema)
-    ensure_udf_serializable()
-    return agged.mapInPandas(finalize, schema)
+    ynode, xnodes, base = _parse(Y, X)
+    keys, rows = collect_keyed(
+        keyed_stats(df, base, None, group_cols=group_cols), len(group_cols))
+    return _frame(df, keys, _doubles(_RESULT_1SAMP), [
+        (cell, core.ttest_1samp_result(row_to_stats(r, len(base)), ynode,
+                                       xnodes, mu, alternative, alpha))
+        for cell, r in rows])
 
 
 def ttests_2samp(df: DataFrame, Y: str, index: str,
@@ -396,45 +349,16 @@ def ttests_2samp(df: DataFrame, Y: str, index: str,
     for a in alternatives:
         if a not in core.ALTERNATIVES:
             raise ValueError(f"bad alternative {a!r}")
-    check_distinct_arms(*treatment_values)
-    group_cols = list(group_cols or [])
-    x_parts = _split_cuped(X)
-    nodes, base = parse_formulas([Y] + x_parts)
-    ynode, xnodes = nodes[0], nodes[1:]
-    k = len(base)
-
-    idx = F.col(index) if index.isidentifier() else F.expr(index)
+    ynode, xnodes, base = _parse(Y, X)
     v0, v1 = treatment_values
-    alt_field = [T.StructField("alternative", T.StringType())]
-
-    def result_rows(s0, s1, keys: dict) -> list[dict]:
-        return [{"alternative": alt, **keys,
-                 **core.ttest_2samp_result(s0, s1, ynode, xnodes or None,
-                                           alt, alpha)}
-                for alt in alternatives]
-
-    if not group_cols:
-        s0, s1 = arm_stats(df, base, idx, v0, v1)
-        return _local_result(
-            df.sparkSession, result_rows(s0, s1, {}),
-            _result_schema(None, [], _RESULT_2SAMP, extra=alt_field))
-
-    aggs = (suffstat_agg_columns(base, "g0_", idx == F.lit(v0))
-            + suffstat_agg_columns(base, "g1_", idx == F.lit(v1)))
-    agged = df.groupBy(*group_cols).agg(*aggs)
-    schema = _result_schema(agged, group_cols, _RESULT_2SAMP, extra=alt_field)
-
-    def finalize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for _, r in pdf.iterrows():
-                rows += result_rows(row_to_stats(r, k, "g0_"),
-                                    row_to_stats(r, k, "g1_"),
-                                    {g: r[g] for g in group_cols})
-            yield pd.DataFrame(rows, columns=[f.name for f in schema.fields])
-
-    ensure_udf_serializable()
-    return agged.mapInPandas(finalize, schema)
+    keys, cells = arm_cells(df, base, _col(index), v0, v1,
+                            list(group_cols or []))
+    return _frame(
+        df, [T.StructField("alternative", T.StringType()), *keys],
+        _doubles(_RESULT_2SAMP),
+        [((alt, *cell), core.ttest_2samp_result(s0, s1, ynode, xnodes, alt,
+                                                alpha))
+         for cell, (s0, s1) in cells.items() for alt in alternatives])
 
 
 # ---------------------------------------------------------------------------
@@ -443,20 +367,50 @@ def ttests_2samp(df: DataFrame, Y: str, index: str,
 # ---------------------------------------------------------------------------
 
 
-def _two_group_moments(df: DataFrame, value: str, index: str,
-                       treatment_values: tuple,
-                       group_cols: list[str]) -> DataFrame:
-    x = F.expr(value).cast("double")
-    idx = F.col(index) if index.isidentifier() else F.expr(index)
-    v0, v1 = treatment_values
-    aggs = []
-    for tag, v in (("0", v0), ("1", v1)):
-        c = idx == F.lit(v)
-        w = F.when(c, x)
-        aggs += [F.count(w).alias(f"n{tag}"),
-                 F.avg(w).alias(f"m{tag}"),
-                 F.var_samp(w).alias(f"v{tag}")]
-    return (df.groupBy(*group_cols) if group_cols else df.groupBy()).agg(*aggs)
+def _moment_result(r0, r1, kind: str, alternative: str,
+                   var_x: float | None, var_y: float | None) -> dict:
+    """One cell of :func:`_moment_test` from its two arms' (n, m, v) rows
+    (None: the arm has no rows)."""
+    (n0, m0, s0), (n1, m1, s1) = (
+        (0.0, _NAN, _NAN) if r is None else
+        tuple(_NAN if r[c] is None else float(r[c]) for c in "nmv")
+        for r in (r0, r1))
+    est = m1 - m0
+    need = 1 if kind == "meanz" else 2
+    if n0 < need or n1 < need:
+        # degenerate arm: degrade to NaN like the delta-method path (a
+        # grouped call must not fail on one tiny report cell); the
+        # known-variance z-test is defined from n=1, the
+        # variance-estimating tests need n>=2 per arm
+        return {"n0": n0, "n1": n1, "mean0": m0, "mean1": m1,
+                "estimate": est, "stderr": _NAN, "t_stat": _NAN,
+                "df": _NAN, "p_value": _NAN}
+    if kind == "student":
+        sp = (((n0 - 1) * s0 + (n1 - 1) * s1) / (n0 + n1 - 2))
+        se = (sp * (1 / n0 + 1 / n1)) ** 0.5
+        dof = n0 + n1 - 2
+    elif kind == "welch":
+        a, b = s0 / n0, s1 / n1
+        se = (a + b) ** 0.5
+        dof = (a + b) ** 2 / (a * a / (n0 - 1) + b * b / (n1 - 1))
+    else:  # z-test with known variances
+        se = (var_x / n0 + var_y / n1) ** 0.5
+        dof = float("inf")
+    t = est / se if se > 0 else _NAN
+    if kind == "meanz" or not np.isfinite(dof):
+        sf = float(dist.norm_sf(abs(t)))
+        cdf_t = float(dist.norm_cdf(t))
+    else:
+        sf = float(dist.t_sf(abs(t), dof))
+        cdf_t = float(dist.t_cdf(t, dof))
+    if alternative == "two-sided":
+        p = 2 * sf
+    elif alternative == "less":
+        p = cdf_t
+    else:
+        p = 1 - cdf_t
+    return {"n0": n0, "n1": n1, "mean0": m0, "mean1": m1, "estimate": est,
+            "stderr": se, "t_stat": t, "df": dof, "p_value": p}
 
 
 def _moment_test(df: DataFrame, value: str, index: str, kind: str,
@@ -464,70 +418,22 @@ def _moment_test(df: DataFrame, value: str, index: str, kind: str,
                  group_cols: list[str] | None,
                  var_x: float | None = None, var_y: float | None = None,
                  ) -> DataFrame:
+    """count/avg/var_samp of the value per (groups…, arm) in one pass."""
+    check_distinct_arms(*treatment_values)
     group_cols = list(group_cols or [])
-    agged = _two_group_moments(df, value, index, treatment_values, group_cols)
-    fields = ["n0", "n1", "mean0", "mean1", "estimate", "stderr",
-              "t_stat", "df", "p_value"]
-    schema = _result_schema(agged, group_cols, fields)
-
-    def finalize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for _, r in pdf.iterrows():
-                n0, n1 = float(r["n0"]), float(r["n1"])
-                m0, m1 = float(r["m0"]), float(r["m1"])
-                s0, s1 = float(r["v0"]), float(r["v1"])
-                est = m1 - m0
-                need = 1 if kind == "meanz" else 2
-                if n0 < need or n1 < need:
-                    # degenerate arm: degrade to NaN like the delta-method
-                    # path (a grouped call must not crash the whole job on
-                    # one tiny report cell); the known-variance z-test is
-                    # defined from n=1, the variance-estimating tests
-                    # need n>=2 per arm
-                    rows.append({**{g: r[g] for g in group_cols},
-                                 "n0": n0, "n1": n1, "mean0": m0,
-                                 "mean1": m1, "estimate": est,
-                                 "stderr": float("nan"),
-                                 "t_stat": float("nan"),
-                                 "df": float("nan"),
-                                 "p_value": float("nan")})
-                    continue
-                if kind == "student":
-                    sp = (((n0 - 1) * s0 + (n1 - 1) * s1) / (n0 + n1 - 2))
-                    se = (sp * (1 / n0 + 1 / n1)) ** 0.5
-                    dof = n0 + n1 - 2
-                elif kind == "welch":
-                    a, b = s0 / n0, s1 / n1
-                    se = (a + b) ** 0.5
-                    dof = (a + b) ** 2 / (a * a / (n0 - 1) + b * b / (n1 - 1))
-                else:  # z-test with known variances
-                    se = (var_x / n0 + var_y / n1) ** 0.5
-                    dof = float("inf")
-                t = est / se if se > 0 else float("nan")
-                if kind == "meanz" or not np.isfinite(dof):
-                    sf = float(dist.norm_sf(abs(t)))
-                    cdf_t = float(dist.norm_cdf(t))
-                else:
-                    sf = float(dist.t_sf(abs(t), dof))
-                    cdf_t = float(dist.t_cdf(t, dof))
-                if alternative == "two-sided":
-                    p = 2 * sf
-                elif alternative == "less":
-                    p = cdf_t
-                else:
-                    p = 1 - cdf_t
-                rows.append({**{g: r[g] for g in group_cols},
-                             "n0": n0, "n1": n1, "mean0": m0, "mean1": m1,
-                             "estimate": est, "stderr": se, "t_stat": t,
-                             "df": dof, "p_value": p})
-            yield pd.DataFrame(rows, columns=[f.name for f in schema.fields])
-
-    if not group_cols:
-        return _finalize_local(df.sparkSession, agged.toPandas(),
-                               finalize, schema)
-    ensure_udf_serializable()
-    return agged.mapInPandas(finalize, schema)
+    x = F.expr(value).cast("double")
+    idx = _col(index)
+    v0, v1 = treatment_values
+    arm = F.when(idx == F.lit(v0), 0).when(idx == F.lit(v1), 1)
+    agg = (df.where(arm.isNotNull() & x.isNotNull())
+             .groupBy(*group_cols, arm.alias("__key"))
+             .agg(F.count(x).alias("n"), F.avg(x).alias("m"),
+                  F.var_samp(x).alias("v")))
+    keys, rows = collect_keyed(agg, len(group_cols))
+    return _frame(df, keys, _doubles(_RESULT_MOMENT), [
+        (cell, _moment_result(a.get(0), a.get(1), kind, alternative,
+                              var_x, var_y))
+        for cell, a in by_arm(rows, bool(group_cols)).items()])
 
 
 def student_ttest(df: DataFrame, value: str, index: str,
@@ -558,17 +464,6 @@ def mean_z_test(df: DataFrame, value: str, index: str,
                         treatment_values, group_cols, var_x=var_x, var_y=var_y)
 
 
-def _norm_sf_col(z):
-    """Normal survival function as a Column (Arrow-vectorized; built
-    lazily — a module-level pandas_udf would demand a live SparkContext
-    at import time)."""
-    @F.pandas_udf("double")
-    def sf(s: pd.Series) -> pd.Series:
-        return pd.Series(np.asarray(dist.norm_sf(s.to_numpy(dtype=float))))
-
-    return sf(z.cast("double"))
-
-
 def equivalence_ttest_2samp(df: DataFrame, Y: str, index: str,
                             margin: float, alternative: str = "equivalence",
                             X: str | None = None, alpha: float = 0.05,
@@ -582,10 +477,11 @@ def equivalence_ttest_2samp(df: DataFrame, Y: str, index: str,
     (−m, +m).  ``alternative='noninferiority'``: one-sided H0: Δ ≤ −m vs
     H1: Δ > −m (treatment no worse than control by more than the margin).
 
-    Pure post-processing of the delta-method :func:`ttest_2samp` columns
-    (same single suff-stats scan, CUPED and grouping included): adds
-    z_lower = (Δ+m)/se, z_upper = (Δ−m)/se, p_equiv, and the boolean
-    decision at ``alpha``.
+    Pure post-processing of the delta-method :func:`ttest_2samp` rows
+    (same single suff-stats scan, CUPED and grouping included), on the
+    driver: adds z_lower = (Δ+m)/se, z_upper = (Δ−m)/se, p_equiv, and the
+    boolean decision at ``alpha``.  A cell whose stderr is NULL or zero
+    gets NULL z-scores, p_equiv and decision.
 
     NOTE: by the TOST convention the BASE test runs at ``2*alpha``, so
     the inherited alpha-dependent columns (``lower``/``upper``/
@@ -603,28 +499,30 @@ def equivalence_ttest_2samp(df: DataFrame, Y: str, index: str,
     if alternative not in ("equivalence", "noninferiority"):
         raise ValueError(
             "alternative must be 'equivalence' or 'noninferiority'")
-    ensure_udf_serializable()
-    base = ttest_2samp(df, Y, index, alternative="two-sided", X=X,
-                       alpha=2 * alpha, treatment_values=treatment_values,
-                       group_cols=group_cols)
-    est, se = F.col("estimate"), F.col("stderr")
-    zl = (est + F.lit(float(margin))) / se
-    zu = (est - F.lit(float(margin))) / se
-    p_low = _norm_sf_col(zl)              # P(reject Δ ≤ −m) complement
-    p_high = _norm_sf_col(-zu)
-    if alternative == "equivalence":
-        p = F.greatest(p_low, p_high)
-        crit = float(dist.norm_ppf(1 - alpha))
-        decision = (zl > crit) & (zu < -crit)
-    else:
-        p = p_low
-        crit = float(dist.norm_ppf(1 - alpha))
-        decision = zl > crit
-    return (base.withColumn("margin", F.lit(float(margin)))
-            .withColumn("z_lower", zl).withColumn("z_upper", zu)
-            .withColumn("p_equiv", p)
-            .withColumn("equivalent" if alternative == "equivalence"
-                        else "noninferior", decision))
+    keys, rows = _ttest_2samp_rows(df, Y, index, "two-sided", X, 2 * alpha,
+                                   treatment_values, group_cols, None, False)
+    m = float(margin)
+    crit = float(dist.norm_ppf(1 - alpha))
+    decision = ("equivalent" if alternative == "equivalence"
+                else "noninferior")
+    for _, res in rows:
+        est, se = res["estimate"], res["stderr"]
+        zl = (est + m) / se if se > 0 else _NAN
+        zu = (est - m) / se if se > 0 else _NAN
+        res.update(margin=m, z_lower=zl, z_upper=zu, p_equiv=_NAN)
+        res[decision] = None
+        if zl == zl and zu == zu:
+            p_low = float(dist.norm_sf(zl))    # P(reject Δ ≤ −m) complement
+            if alternative == "equivalence":
+                res["p_equiv"] = max(p_low, float(dist.norm_sf(-zu)))
+                res[decision] = bool(zl > crit and zu < -crit)
+            else:
+                res["p_equiv"] = p_low
+                res[decision] = bool(zl > crit)
+    return _frame(df, keys,
+                  _doubles(_RESULT_2SAMP + ["margin", "z_lower", "z_upper",
+                                            "p_equiv"])
+                  + [T.StructField(decision, T.BooleanType())], rows)
 
 
 def winsorized_ttest_2samp(df: DataFrame, Y: str, index: str,
@@ -705,9 +603,7 @@ def cluster_ttest_2samp(df: DataFrame, Y: str, index: str, cluster: str,
     cluster seen in both arms raises at execution time (``raise_error``
     wired into the consumed ``__idx`` column — no extra scan or job).
     """
-    from fast_causal_inference_spark.formula import parse_formulas
-
-    idx = F.col(index) if index.isidentifier() else F.expr(index)
+    idx = _col(index)
     nodes, base = parse_formulas([Y])
     ctl, trt = treatment_values
     m = len(base)
@@ -793,9 +689,6 @@ def cupac_ttest_2samp(df: DataFrame, Y: str, index: str,
     from fast_causal_inference_spark.operators.ols import (
         OlsModel,
         _fit_from_row,
-    )
-    from fast_causal_inference_spark.operators.suffstats import (
-        suffstat_agg_columns,
     )
 
     if cv < 2:

@@ -31,11 +31,11 @@ from fast_causal_inference_spark import stats_distributions as dist
 from fast_causal_inference_spark.formula import parse_formulas
 from fast_causal_inference_spark.operators import _ttest_core as core
 from fast_causal_inference_spark.operators.suffstats import (
+    arm_cells,
     arm_stats,
     check_distinct_arms,
     keyed_stats,
     row_to_stats,
-    suffstat_agg_columns,
 )
 
 N_BUCKETS = 128
@@ -290,8 +290,9 @@ def _xexpt_grouped(df: DataFrame, group_cols: list[str], numerator: str,
                    v0, v1, max_cells: int = 10_000):
     """Drill-down report — ONE aggregation pass for ALL cells.
 
-    avg: ``groupBy(*group_cols)`` with both arms' conditional sufficient
-    statistics (same shape as the grouped t-test).  sum: ``groupBy(
+    avg: the grouped t-test's pass keyed by (group_cols…, arm)
+    (:func:`suffstats.arm_cells`; at most two rows per cell, so
+    ``2·max_cells + 1`` collected rows bound the fetch).  sum: ``groupBy(
     *group_cols, arm, bucket)`` bucket sums, then a tiny second aggregation
     to per-(cell, arm) stats.  Missing buckets need no grid zero-fill: a
     zero bucket adds nothing to any sum or cross-sum, the forced n=128
@@ -303,31 +304,28 @@ def _xexpt_grouped(df: DataFrame, group_cols: list[str], numerator: str,
 
     from fast_causal_inference_spark.operators.suffstats import NumStats
 
-    # O(k²)-wide stat rows come to the driver — one per (cell[, arm]).  A
+    # O(k²)-wide stat rows come to the driver — at most two per cell.  A
     # high-cardinality group key (a user-level column passed by mistake)
     # must raise, not silently materialize millions of rows; LIMIT n+1
     # bounds the fetch itself, so the guard costs nothing extra.
-    def _bounded(agg_df, cap: int, per_cell: int) -> pd.DataFrame:
-        out = agg_df.limit(cap * per_cell + 1).toPandas()
-        if len(out) > cap * per_cell:
+    cap = 2 * max_cells + 1          # rows: one per (cell, arm)
+
+    def _check(n_cells: float) -> None:
+        if n_cells > max_cells:
             raise ValueError(
-                f"group_cols {group_cols} produce more than {cap} report "
-                f"cells; pass a coarser drill-down key or raise max_cells")
-        return out
+                f"group_cols {group_cols} produce more than {max_cells} "
+                f"report cells; pass a coarser drill-down key or raise "
+                f"max_cells")
 
     if metric_type == "avg":
-        aggs = (suffstat_agg_columns(base, "g0_", idx == F.lit(v0))
-                + suffstat_agg_columns(base, "g1_", idx == F.lit(v1)))
-        pdf = _bounded(df.groupBy(*group_cols).agg(*aggs), max_cells, 1)
-        rows = []
-        for _, r in pdf.iterrows():
-            s0 = row_to_stats(r, k, "g0_")
-            s1 = row_to_stats(r, k, "g1_")
-            rep = _report_from_stats(
-                s0, s1, ynode, xnodes or None, base, numerator, denominator,
-                metric_type, group_buckets, alpha, mde, power, v0, v1)
-            rows.append({**{g: r[g] for g in group_cols}, **rep})
-        return pd.DataFrame(rows)
+        _, cells = arm_cells(df, base, idx, v0, v1, group_cols, limit=cap)
+        _check(len(cells))
+        return pd.DataFrame([
+            {**dict(zip(group_cols, cell)),
+             **_report_from_stats(s0, s1, ynode, xnodes or None, base,
+                                  numerator, denominator, metric_type,
+                                  group_buckets, alpha, mde, power, v0, v1)}
+            for cell, (s0, s1) in cells.items()])
 
     # sum metric
     ucol = F.col(uin) if uin.isidentifier() else F.expr(uin)
@@ -347,8 +345,9 @@ def _xexpt_grouped(df: DataFrame, group_cols: list[str], numerator: str,
         for j in others[ai:]:
             aggs2.append(F.sum(F.col(f"b{i}") * F.col(f"b{j}"))
                          .alias(f"c{i}_{j}"))
-    per_arm = _bounded(b.groupBy(*group_cols, "arm").agg(*aggs2),
-                       max_cells, 2)
+    per_arm = (b.groupBy(*group_cols, "arm").agg(*aggs2)
+               .limit(cap).toPandas())
+    _check(len(per_arm) / 2)
 
     ratios = (float(group_buckets[0]) / N_BUCKETS,
               float(group_buckets[1]) / N_BUCKETS)

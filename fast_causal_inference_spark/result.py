@@ -1,14 +1,54 @@
-"""Rich result objects mirroring the reference's ``testResult`` API.
+"""Result frames of the driver-finalized readouts, and rich result objects
+mirroring the reference's ``testResult`` API.
+
+**The result contract.**  A readout runs one small aggregation pass, collects
+its O(#groups) statistics rows and finishes the closed-form math on the
+driver (the reference parses its UDAFs' strings on the client the same way).
+:func:`driver_frame` hands the finished rows back as a Spark DataFrame:
+
+* it is eager — every Spark job of the readout ran during the call;
+* it is a plain DataFrame built from one driver-side Arrow batch, so reading
+  it (``toPandas``, ``collect``, joins, SQL) starts no Python worker;
+* key columns keep their input types and values (a NaN key stays NaN); a NaN
+  statistic is stored as NULL, which ``toPandas`` reads back as NaN.
 
 The reference parses engine strings into objects exposing ``.estimate``,
 ``.stderr``, ``.t_statistic``, ``.p_value``, ``.confidence_interval`` …
 (``dataframe/format.py:131-228``). Here results are born structured (rows of
-a DataFrame), so this is a thin attribute view + pretty printer over a row.
+a DataFrame), so :class:`TestResult` is a thin attribute view + pretty
+printer over a row.
 """
 
 from __future__ import annotations
 
-from collections.abc import Mapping
+import datetime
+from collections.abc import Mapping, Sequence
+
+from pyspark.sql import DataFrame, Row
+
+
+def driver_frame(spark, keys: Sequence, fields: Sequence,
+                 rows: Sequence[Sequence]) -> DataFrame:
+    """A Spark DataFrame of driver-finalized result rows (see the module
+    docstring).  ``keys`` and ``fields`` are ``StructField`` lists; each
+    row holds the key values, then the field values."""
+    import pyarrow as pa
+    from pyspark.sql import types as T
+    from pyspark.sql.pandas.types import to_arrow_type
+
+    schema = T.StructType([*keys, *fields])
+    cols = list(zip(*rows)) if rows else [()] * len(schema.fields)
+    arrays = []
+    for i, (f, col) in enumerate(zip(schema.fields, cols)):
+        if i >= len(keys):
+            col = [None if v != v else v for v in col]      # NaN → NULL
+        elif isinstance(f.dataType, T.TimestampType):
+            # collect() returns naive local times; Arrow reads naive as UTC
+            col = [v if v is None else v.astimezone(datetime.timezone.utc)
+                   for v in col]
+        arrays.append(pa.array(col, type=to_arrow_type(f.dataType)))
+    return spark.createDataFrame(
+        pa.Table.from_arrays(arrays, names=schema.names), schema)
 
 
 class TestResult(Mapping):
@@ -77,8 +117,6 @@ class TestResult(Mapping):
 
 def test_result(df_or_row) -> "TestResult | list[TestResult]":
     """Wrap a 1-row (or n-row) statistical result DataFrame/Row."""
-    from pyspark.sql import DataFrame, Row
-
     if isinstance(df_or_row, DataFrame):
         rows = df_or_row.collect()
         out = [TestResult(r.asDict()) for r in rows]

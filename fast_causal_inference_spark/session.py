@@ -75,6 +75,19 @@ def tune_driver_allocator() -> None:
         pass
 
 
+def in_job_group(fn):
+    """``fn`` wrapped to run on another thread with the calling thread's
+    Spark local properties (job group, description, scheduler pool), which
+    a new thread does not inherit, so its jobs count toward the caller's
+    group; they are captured here, at wrap time."""
+    from pyspark import inheritable_thread_target
+
+    wrap = inheritable_thread_target(SparkSession.active())
+    # with PYSPARK_PIN_THREAD=false PySpark hands the session back: the
+    # Python threads then share one JVM thread and its properties anyway
+    return fn if isinstance(wrap, SparkSession) else wrap(fn)
+
+
 def configure_session(builder: SparkSession.Builder) -> SparkSession.Builder:
     """Apply engine defaults to an existing builder."""
     tune_driver_allocator()

@@ -53,6 +53,7 @@ from pyspark.sql import functions as F
 
 from fast_causal_inference_spark.operators.design import persisted
 from fast_causal_inference_spark.serialization import ensure_udf_serializable
+from fast_causal_inference_spark.session import in_job_group
 
 
 def _with_fine_bins(df: DataFrame,
@@ -273,7 +274,7 @@ class CausalForest:
             fcols = [f"__feat{i}" for i in range(len(self.features))]
             fwork = df.select(*[F.expr(f).cast("double").alias(c)
                                 for f, c in zip(self.features, fcols)])
-            warm = threading.Thread(target=base.count)
+            warm = threading.Thread(target=in_job_group(base.count))
             warm.start()
             # candidate thresholds need no sub-0.1% precision (grf SAMPLES its
             # candidates); 0.005 halves the sketch-job cost on wide inputs

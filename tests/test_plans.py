@@ -456,17 +456,20 @@ def _aggregate_functions(plan: str) -> list[str]:
             for ln in plan.split("\n") if "HashAggregate(" in ln]
 
 
-@pytest.mark.parametrize("op", ["experiment_scorecard", "ttest_2samp"])
+@pytest.mark.parametrize("op", ["experiment_scorecard", "ttest_2samp",
+                                "ttest_2samp_grouped", "ttest_2samp_pse"])
 def test_two_arm_readout_is_arm_keyed(spark, events, monkeypatch, op):
-    """Ungrouped two-arm readouts run ONE arm-keyed aggregation: the table
-    is scanned once and no aggregate carries a per-arm CASE WHEN (the
-    complete-case/arm guard is a filter and a grouping key instead)."""
+    """Two-arm readouts, grouped, post-stratified or not, run ONE
+    arm-keyed aggregation: the table is scanned once and no aggregate
+    carries a per-arm CASE WHEN (the complete-case/arm guard is a filter
+    and a grouping key instead)."""
     from fast_causal_inference_spark.operators.scorecard import (
         experiment_scorecard,
     )
     from fast_causal_inference_spark.operators.ttest import ttest_2samp
 
-    ev = events.withColumn("treatment", (F.col("user_id") % 2).cast("int"))
+    ev = (events.withColumn("treatment", (F.col("user_id") % 2).cast("int"))
+          .withColumn("g", F.col("user_id") % 3))
     plans = _collected_plans(monkeypatch, ev)
     if op == "experiment_scorecard":
         experiment_scorecard(
@@ -474,7 +477,9 @@ def test_two_arm_readout_is_arm_keyed(spark, events, monkeypatch, op):
             "treatment", X="avg(event_id % 5)")
     else:
         ttest_2samp(ev, "avg(value)/avg(1 + event_id % 7)", "treatment",
-                    X="avg(event_id % 5)")
+                    X="avg(event_id % 5)",
+                    group_cols=["g"] if op.endswith("grouped") else None,
+                    pse="event_id % 3" if op.endswith("pse") else None)
     assert len(plans) == 1, plans
     plan = plans[0]
     assert plan.count("FileScan") == 1, plan

@@ -76,12 +76,6 @@ def test_logistic_irls_matches_numpy(spark, hte_pdf, hte_df):
         assert abs(est - true) < 4 * se
 
 
-def test_logistic_mllib_agrees(spark, hte_df):
-    m1 = logistic_regression(hte_df, "t ~ x1 + x2")
-    m2 = logistic_regression(hte_df, "t ~ x1 + x2", use_mllib=True)
-    assert m2.beta == pytest.approx(m1.beta, rel=1e-3)
-
-
 def test_auc(spark, hte_pdf, hte_df):
     scored = hte_df.withColumn("score", F.col("g_true"))
     got = auc(scored, "score", "t")
